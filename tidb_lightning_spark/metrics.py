@@ -1,11 +1,14 @@
 """Prometheus-format progress metrics (M6).
 
-Mirrors the reference's metric surface (lightning/metric/metric.go:49-199):
-counter vecs ``lightning_tables{state,result}``, ``lightning_engines``,
-``lightning_chunks{state}``, ``lightning_bytes{state}``, the
-``lightning_import_seconds`` histogram (same 0.125*2^k buckets,
-metric.go:101-108) and the ``lightning_idle_workers`` gauge — exposed in
-the Prometheus text exposition format by :func:`Registry.render`, which
+Mirrors the part of the reference's metric surface
+(lightning/metric/metric.go:49-199) that the pipeline emits: counter vecs
+``lightning_tables{state,result}``, ``lightning_chunks{state}``,
+``lightning_bytes{state}`` and the ``lightning_import_seconds`` histogram
+(same 0.125*2^k buckets, metric.go:101-108). The reference's
+``lightning_engines`` and ``lightning_idle_workers`` are not declared:
+Spark schedules engines and workers, so nothing here would emit them.
+Exposed in the Prometheus text exposition format by
+:func:`Registry.render`, which
 ``GET /metrics`` on the status server serves (lightning.go:129 uses
 promhttp; here the format is emitted directly, no client library needed).
 
@@ -18,18 +21,11 @@ from __future__ import annotations
 import threading
 from typing import Iterable
 
-# label states mirroring metric.go:23-46
-TABLE_STATE_PENDING = "pending"
-TABLE_STATE_WRITTEN = "written"
-TABLE_STATE_IMPORTED = "imported"
-TABLE_STATE_CHECKSUM = "checksum"
+# label states mirroring metric.go:23-46 (the ones the pipeline emits)
 TABLE_STATE_COMPLETED = "completed"
 TABLE_RESULT_SUCCESS = "success"
 TABLE_RESULT_FAILURE = "failure"
-CHUNK_STATE_ESTIMATED = "estimated"
-CHUNK_STATE_PENDING = "pending"
 CHUNK_STATE_FINISHED = "finished"
-CHUNK_STATE_FAILED = "failed"
 BYTE_STATE_ESTIMATED = "estimated"
 BYTE_STATE_FINISHED = "finished"
 
@@ -167,9 +163,6 @@ REGISTRY = Registry()
 TABLES = REGISTRY.counter(
     "lightning_tables", "count number of tables processed", ["state", "result"]
 )
-ENGINES = REGISTRY.counter(
-    "lightning_engines", "count number of engines processed", ["state", "result"]
-)
 CHUNKS = REGISTRY.counter(
     "lightning_chunks", "count number of chunks processed", ["state"]
 )
@@ -178,9 +171,6 @@ IMPORT_SECONDS = REGISTRY.histogram(
     "lightning_import_seconds",
     "time needed to import a table",
     exponential_buckets(0.125, 2, 6),
-)
-IDLE_WORKERS = REGISTRY.gauge(
-    "lightning_idle_workers", "counting idle workers", ["name"]
 )
 
 # driver-side task progress snapshot for GET /progress/task
