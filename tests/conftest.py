@@ -47,3 +47,21 @@ def duck():
         )
     yield con
     con.close()
+
+
+def pytest_terminal_summary(terminalreporter):
+    """Name the reference-golden suite when it skips for want of the
+    reference checkout, instead of leaving it as unnamed `s` marks."""
+    golden = [
+        r for r in terminalreporter.stats.get("skipped", [])
+        if "test_reference_golden.py::" in r.nodeid
+    ]
+    if not golden:
+        return
+    from tests.test_reference_golden import REF
+
+    if not os.path.isdir(REF):
+        terminalreporter.write_line(
+            f"reference-golden suite (tests/test_reference_golden.py): "
+            f"{len(golden)} tests skipped, {REF} is missing"
+        )

@@ -13,9 +13,8 @@
 3. `cli curate`'s summary applies the same `_SUCCESS` filter as
    `read_table`: a table dir holding only a partial current-batch dir
    reports rows_total=0 instead of crashing (r9 ADVICE item 1).
-4. Remote SQL whole-file cell cap dropped to 256 MiB (overridable via
-   TLS_REMOTE_SQL_MAX_BYTES) and the decode avoids the intermediate
-   bytes() copy (r9 ADVICE item 2).
+4. Remote SQL whole-file cell cap dropped to 256 MiB and the decode
+   avoids the intermediate bytes() copy (r9 ADVICE item 2).
 """
 
 from __future__ import annotations
@@ -249,36 +248,6 @@ def test_cli_curate_partial_batch_reports_zero(spark, tmp_path, capsys):
     assert payload["ok"] is True
     assert payload["rows_total"] == 0
     assert payload["batches"] == 0
-
-
-def test_remote_sql_cap_env_override():
-    """The remote whole-file cell cap defaults to 256 MiB and follows
-    TLS_REMOTE_SQL_MAX_BYTES (r9 ADVICE item 2). Probed in a fresh
-    interpreter: importlib.reload()-ing the module in-process rebinds
-    SQLDumpError in the shared module globals, so previously-imported
-    parser functions raise the NEW class while earlier-collected tests
-    still compare against the OLD one — pytest.raises in
-    test_sqldump.py stops catching (observed as an order-dependent
-    suite failure)."""
-    import subprocess
-    import sys
-
-    from tidb_lightning_spark.sources import sqldump_source as M
-
-    assert M.REMOTE_SQL_MAX_BYTES == 256 << 20
-    probe = (
-        "from tidb_lightning_spark.sources import sqldump_source as M;"
-        "print(M.REMOTE_SQL_MAX_BYTES)"
-    )
-    out = subprocess.run(
-        [sys.executable, "-c", probe],
-        env={**os.environ, "TLS_REMOTE_SQL_MAX_BYTES": str(1 << 20)},
-        capture_output=True,
-        text=True,
-        cwd="/root/repo",
-        check=True,
-    )
-    assert out.stdout.strip() == str(1 << 20)
 
 
 def test_fresh_checkpoint_against_folded_plain_table_raises(

@@ -148,8 +148,8 @@ def test_chunked_read_matches_whole_file(spark, tmp_path):
     p = str(tmp_path / "big.sql")
     _make_dump(p, 3000)
 
-    whole = read_sql_files(spark, [p], 3, chunk_bytes=1 << 30)
-    chunked = read_sql_files(spark, [p], 3, chunk_bytes=20_000)
+    whole, _ = read_sql_files(spark, [p], 3, chunk_bytes=1 << 30)
+    chunked, _ = read_sql_files(spark, [p], 3, chunk_bytes=20_000)
     assert chunked.rdd.getNumPartitions() > 1
     w = sorted((r["_c0"], r["_c1"], r["_c2"]) for r in whole.collect())
     c = sorted((r["_c0"], r["_c1"], r["_c2"]) for r in chunked.collect())
@@ -191,3 +191,73 @@ def test_restore_split_dump_same_checksum(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(sq, "SQL_CHUNK_BYTES", 15_000)
     ck_split = run(str(tmp_path / "wh_split"))
     assert ck_whole == ck_split
+
+
+def test_restore_sqldump_exact_row_ids(spark, tmp_path, monkeypatch):
+    """Row ids of a SQL-dump restore are pinned VALUE BY VALUE, not just
+    for uniqueness: each file reserves size // (n_cols + 2) + 1 ids in
+    file order, each chunk starts at its byte offset // (n_cols + 2)
+    inside that range, and a checkpoint written by an earlier build
+    resumes only while these values stay put. The dump covers a file
+    split into several chunks, a gz file (reserved from its
+    DECOMPRESSED size), a single-chunk file and a second file group
+    whose INSERT column list differs (its own divisor)."""
+    import gzip
+    import os as _os
+
+    import tidb_lightning_spark.sources.sqldump_source as sq
+    from tidb_lightning_spark.config import Config
+    from tidb_lightning_spark.pipeline import Restorer
+
+    d = str(tmp_path / "dump")
+    _os.makedirs(d)
+    with open(f"{d}/s-schema-create.sql", "w") as f:
+        f.write("CREATE DATABASE s;")
+    with open(f"{d}/s.t-schema.sql", "w") as f:
+        f.write("CREATE TABLE t (a INT, b VARCHAR(20), c INT);")
+
+    def stmts(lo, hi, cols=""):
+        return "".join(
+            f"INSERT INTO `t`{cols} VALUES ({a}, 'r{a}', {a * 3}),"
+            f" ({a + 1}, 'r{a + 1}', {a * 3 + 1});\n"
+            for a in range(lo, hi, 2)
+        )
+
+    with open(f"{d}/s.t.000.sql", "w") as f:
+        f.write(stmts(0, 24))
+    with gzip.open(f"{d}/s.t.001.sql.gz", "wt") as f:
+        f.write(stmts(100, 106))
+    with open(f"{d}/s.t.002.sql", "w") as f:
+        f.write(stmts(200, 202))
+    with open(f"{d}/s.t.003.sql", "w") as f:
+        f.write("".join(
+            f"INSERT INTO `t` (`a`, `b`) VALUES ({a}, 'q{a}');\n"
+            for a in range(300, 304)
+        ))
+    monkeypatch.setattr(sq, "SQL_CHUNK_BYTES", 200)
+    assert len(sq.split_sql_file(f"{d}/s.t.000.sql", 200)) >= 3
+    assert len(sq.split_sql_file(f"{d}/s.t.002.sql", 200)) == 1
+
+    target = str(tmp_path / "wh")
+    cfg = Config.from_toml(
+        None, source_dir=d, target_dir=target, checkpoint_enable=False
+    )
+    rep = Restorer(spark, cfg).run()
+    assert rep.ok, [t.error for t in rep.tables]
+    got = [
+        (r["a"], r["_tidb_rowid"])
+        for r in spark.read.parquet(f"{target}/s/t")
+        .select("a", "_tidb_rowid").orderBy("a").collect()
+    ]
+    assert [a for a, _ in got] == (
+        list(range(24)) + list(range(100, 106)) + list(range(200, 202))
+        + list(range(300, 304))
+    )
+    assert [rid for _, rid in got] == [
+        1, 2, 3, 4, 5, 6, 7, 8,  # s.t.000.sql, chunk 1
+        42, 43, 44, 45, 46, 47, 48, 49,  # chunk 2
+        87, 88, 89, 90, 91, 92, 93, 94,  # chunk 3
+        134, 135, 136, 137, 138, 139,  # s.t.001.sql.gz
+        172, 173,  # s.t.002.sql
+        185, 186, 187, 188,  # s.t.003.sql, (`a`, `b`) group
+    ]

@@ -191,12 +191,23 @@ def test_fast_path_differential_property(rows):
     assert with_fast == scanner_only
 
 
-def _frames_concat(S, text, n_cols):
+def _parse(S, text, n_cols, vector=True):
+    """_row_batches (the production parse face) as one pandas frame,
+    rows numbered from 100. vector=False forces the scanner tiers by
+    disabling tier 0, the way the fast-path tests disable _fast_rows."""
     import pandas as pd
+    import pyarrow as pa
 
-    return pd.concat(
-        list(S._row_frames(text, n_cols, 100, "t.sql")), ignore_index=True
-    )
+    orig = S._vector_rows_table
+    if not vector:
+        S._vector_rows_table = lambda *a: None
+    try:
+        batches = list(S._row_batches(text, n_cols, 100, "t.sql"))
+    finally:
+        S._vector_rows_table = orig
+    if not batches:
+        return pd.DataFrame()
+    return pa.Table.from_batches(batches).to_pandas()
 
 
 def test_vector_tier_engages_and_matches_scanner():
@@ -219,16 +230,10 @@ def test_vector_tier_engages_and_matches_scanner():
 
     S.parse_insert_statements = boom
     try:
-        got = _frames_concat(S, text, 4)
+        got = _parse(S, text, 4)
     finally:
         S.parse_insert_statements = orig
-    want = None
-    old = S._SQL_VECTOR
-    S._SQL_VECTOR = False
-    try:
-        want = _frames_concat(S, text, 4)
-    finally:
-        S._SQL_VECTOR = old
+    want = _parse(S, text, 4, vector=False)
     assert got.equals(want)
     assert got["_row_seq"].tolist() == [100, 101, 102, 103]
     assert got.iloc[0, 1] == "a b" and got.iloc[2, 1] == "x,y(z)"
@@ -260,18 +265,9 @@ def test_vector_tier_bails_to_scanner_on_transforming_literals():
         "INSERT INTO t VALUES (-0x41,'x'),(2,'y');",
         "INSERT INTO t VALUES (-0b11,'x'),(2,'y');",
     ]
-    old = S._SQL_VECTOR
     for text in cases:
-        S._SQL_VECTOR = True
-        try:
-            got = _frames_concat(S, text, 2)
-        finally:
-            S._SQL_VECTOR = old
-        S._SQL_VECTOR = False
-        try:
-            want = _frames_concat(S, text, 2)
-        finally:
-            S._SQL_VECTOR = old
+        got = _parse(S, text, 2)
+        want = _parse(S, text, 2, vector=False)
         assert got.equals(want), text
 
 
@@ -283,20 +279,15 @@ def test_vector_tier_signed_null_raises_like_scanner():
     from tidb_lightning_spark.sources import sqldump_source as S
 
     text = "INSERT INTO t VALUES (-NULL,'x'),(2,'y');"
-    old = S._SQL_VECTOR
     for vec in (True, False):
-        S._SQL_VECTOR = vec
-        try:
-            with pytest.raises(Exception, match="(?i)sign.*null"):
-                _frames_concat(S, text, 2)
-        finally:
-            S._SQL_VECTOR = old
+        with pytest.raises(Exception, match="(?i)sign.*null"):
+            _parse(S, text, 2, vector=vec)
 
 
 @settings(max_examples=200, deadline=None)
 @given(rows=rows_strategy)
 def test_vector_tier_differential_property(rows):
-    """Generated mydumper-style dumps through _row_frames with the
+    """Generated mydumper-style dumps through _row_batches with the
     vector tier on vs off: frames must be identical whether the chunk
     takes the vectorized, regex-token, or scanner tier."""
     from tidb_lightning_spark.sources import sqldump_source as S
@@ -305,16 +296,8 @@ def test_vector_tier_differential_property(rows):
     n_cols = len(rows[0])
     if any(len(r) != n_cols for r in rows):
         return  # mixed arity raises in both paths; covered elsewhere
-    S._SQL_VECTOR = True
-    try:
-        got = _frames_concat(S, text, n_cols)
-    finally:
-        S._SQL_VECTOR = True
-    S._SQL_VECTOR = False
-    try:
-        want = _frames_concat(S, text, n_cols)
-    finally:
-        S._SQL_VECTOR = True
+    got = _parse(S, text, n_cols)
+    want = _parse(S, text, n_cols, vector=False)
     assert got.equals(want)
 
 
@@ -322,7 +305,7 @@ def test_vector_tier_differential_property(rows):
 @given(rows=rows_strategy, n_stmts=st.integers(1, 4))
 def test_vector_tier_multi_statement_noise_differential(rows, n_stmts):
     """Generated dumps with mysqldump noise BETWEEN statements through
-    _row_frames, vector tier on vs off: identical frames (the vector
+    _row_batches, vector tier on vs off: identical frames (the vector
     tier must either skip the noise exactly like the scanner or bail —
     never mis-attribute rows across statement boundaries)."""
     from tidb_lightning_spark.sources import sqldump_source as S
@@ -337,16 +320,8 @@ def test_vector_tier_multi_statement_noise_differential(rows, n_stmts):
     text = noise + noise.join(
         render_insert("t", rows) for _ in range(n_stmts)
     )
-    S._SQL_VECTOR = True
-    try:
-        got = _frames_concat(S, text, n_cols)
-    finally:
-        S._SQL_VECTOR = True
-    S._SQL_VECTOR = False
-    try:
-        want = _frames_concat(S, text, n_cols)
-    finally:
-        S._SQL_VECTOR = True
+    got = _parse(S, text, n_cols)
+    want = _parse(S, text, n_cols, vector=False)
     assert got.equals(want)
     assert len(got) == n_stmts * len(rows)
 
@@ -355,82 +330,27 @@ def test_empty_tuple_and_default_keyword_take_defaults():
     """`VALUES ()` and the DEFAULT keyword produce DEFAULT_SENTINEL
     datums (expanded to column defaults by the transform), identically
     with the vector tier on and off (DEFAULT bails tier-0; `()` never
-    matches the row grammar)."""
+    matches the row grammar), and the scanner tier's direct-to-Arrow
+    buffering keeps NULLs, decoded literals and _row_seq alongside."""
     from tidb_lightning_spark.operators.transform import DEFAULT_SENTINEL
     from tidb_lightning_spark.sources import sqldump_source as S
 
-    text = (
-        "INSERT INTO t VALUES (), (1, DEFAULT), (DEFAULT, 'x');\n"
-        "INSERT INTO t () VALUES ();\n"
-    )
-    old = S._SQL_VECTOR
-    frames = {}
-    for vec in (True, False):
-        S._SQL_VECTOR = vec
-        try:
-            frames[vec] = _frames_concat(S, text, 2)
-        finally:
-            S._SQL_VECTOR = old
-    assert frames[True].equals(frames[False])
-    got = frames[True]
     d = DEFAULT_SENTINEL
-    assert list(zip(got["_c0"], got["_c1"])) == [
-        (d, d), ("1", d), (d, "x"), (d, d)
+    cases = [
+        (
+            "INSERT INTO t VALUES (), (1, DEFAULT), (DEFAULT, 'x');\n"
+            "INSERT INTO t () VALUES ();\n",
+            [(d, d), ("1", d), (d, "x"), (d, d)],
+        ),
+        (
+            "INSERT INTO t VALUES (), (1, DEFAULT), (DEFAULT, 'x'), "
+            "(NULL, 0x41);\n",
+            [(d, d), ("1", d), (d, "x"), (None, "A")],
+        ),
     ]
-
-
-def _batches_concat(S, text, n_cols):
-    """_row_batches output as one pandas frame, same dtypes as
-    _frames_concat for direct .equals comparison."""
-    import pandas as pd
-    import pyarrow as pa
-
-    batches = list(S._row_batches(text, n_cols, 100, "t.sql"))
-    if not batches:
-        return pd.DataFrame()
-    return pa.Table.from_batches(batches).to_pandas()
-
-
-@settings(max_examples=150, deadline=None)
-@given(rows=rows_strategy)
-def test_row_batches_matches_row_frames_property(rows):
-    """r13 mapInArrow parse face: _row_batches (Arrow RecordBatches, the
-    production scan path) must produce byte-identical rows to
-    _row_frames (the pandas reference the other differentials pin),
-    whichever tier the chunk takes — same columns, same _row_seq
-    continuity, same null cells."""
-    import pandas as pd
-
-    from tidb_lightning_spark.sources import sqldump_source as S
-
-    n_cols = len(rows[0])
-    if any(len(r) != n_cols for r in rows):
-        return
-    text = render_insert("t", rows)
-    want = _frames_concat(S, text, n_cols)
-    got = _batches_concat(S, text, n_cols)
-    pd.testing.assert_frame_equal(
-        got, want, check_dtype=False, check_like=False
-    )
-
-
-def test_row_batches_scanner_tier_matches_frames():
-    """Force the scanner tier (vector off): _row_batches' direct-to-
-    Arrow row buffering must equal _row_frames' pandas path, including
-    DEFAULT sentinels and NULLs."""
-    import pandas as pd
-
-    from tidb_lightning_spark.sources import sqldump_source as S
-
-    text = (
-        "INSERT INTO t VALUES (), (1, DEFAULT), (DEFAULT, 'x'), "
-        "(NULL, 0x41);\n"
-    )
-    old = S._SQL_VECTOR
-    S._SQL_VECTOR = False
-    try:
-        want = _frames_concat(S, text, 2)
-        got = _batches_concat(S, text, 2)
-    finally:
-        S._SQL_VECTOR = old
-    pd.testing.assert_frame_equal(got, want, check_dtype=False)
+    for text, want in cases:
+        frames = {vec: _parse(S, text, 2, vector=vec) for vec in (True, False)}
+        assert frames[True].equals(frames[False])
+        got = frames[True]
+        assert list(zip(got["_c0"], got["_c1"])) == want
+        assert got["_row_seq"].tolist() == list(range(100, 100 + len(want)))

@@ -92,9 +92,8 @@ def permute_columns(
 def assign_row_ids(df: DataFrame, base: int = 0, dense: bool = False) -> DataFrame:
     """Deterministic row ids (SURVEY.md §2.D1, region.go:208-286).
 
-    Three strategies, cheapest that suffices:
-    * `_row_seq`+file base when the reader provides one (SQL dumps):
-      exact per-file ranges, zero extra work — the reference's scheme.
+    Two strategies, cheapest that suffices (SQL dumps need neither: the
+    reader numbers their rows itself, see transform_table):
     * dense=False: `monotonically_increasing_id()` — unique and stable for
       a given (input, split conf); ids are sparse (partition-striped).
       Fine when the id is internal (sort key for PK-less tables).
@@ -104,10 +103,6 @@ def assign_row_ids(df: DataFrame, base: int = 0, dense: bool = False) -> DataFra
       pre-allocated ranges), then ids = base[pid] + row_number-in-partition.
       One extra scan, no shuffle of the data itself.
     """
-    if "_row_seq" in df.columns and "_file_base" in df.columns:
-        return df.withColumn(
-            ROWID_COL, (F.col("_file_base") + F.col("_row_seq") + 1 + base)
-        ).drop("_row_seq", "_file_base")
     if not dense:
         return df.withColumn(
             ROWID_COL, F.monotonically_increasing_id() + F.lit(base + 1)
@@ -415,7 +410,12 @@ def transform_table(
         c.auto_increment or c.auto_random_bits for c in info.columns
     )
     out = permute_columns(df, info, file_columns)
-    out = assign_row_ids(out, rowid_base, dense=needs_dense)
+    if "_row_seq" in df.columns:
+        # the SQL-dump reader's absolute 0-based row number, from ranges
+        # it reserved per file (sqldump_source module docstring)
+        out = out.withColumn(ROWID_COL, F.col("_row_seq") + 1).drop("_row_seq")
+    else:
+        out = assign_row_ids(out, rowid_base, dense=needs_dense)
     out = cast_columns(
         out, info, strict=strict, binary_encoding=binary_encoding,
         unescape_cols=unescape_cols, present=present,

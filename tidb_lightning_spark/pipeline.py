@@ -1848,8 +1848,7 @@ class Restorer:
             # lz4 dumps: no JVM codec reads the lz4 frame format, and the
             # range reader wants seekable plain text — materialize ONCE
             # driver-side (same contract as the transcode step above;
-            # no-op when nothing is .lz4). The base mapping below keys on
-            # the path the scan actually reads, so rewrite before it.
+            # no-op when nothing is .lz4).
             mat = csv_source.materialize_lz4(
                 [actual[f.path] for f in local_sql]
             )
@@ -1873,63 +1872,28 @@ class Restorer:
             for (key, is_remote, group_cs), files in groups.items():
                 file_cols = list(key) if key else None
                 n_cols = len(file_cols) if file_cols else len(info.columns)
-                # per-file row-id bases from file sizes (region.go:252-286);
-                # keys are the paths the scan actually read (= _src_file).
-                # The divisor MUST match the reader's (n_cols + 2, the
-                # file's arity): chunk bases inside a file go up to
-                # size // that divisor, so reserving less here would let a
-                # split file's sequence overrun the next file's base.
-                bases, acc = {}, rowid_base
+                # the readers reserve each file's row-id range and return
+                # the next free base (sqldump_source module docstring)
                 if is_remote:
                     # whole-file tasks through the Hadoop binaryFile
                     # connector (read_sql_files_remote docstring; parity:
                     # the reference never splits .sql mid-file either,
-                    # region.go:131-234). Plain .sql only — the guard
-                    # above — so the observed byte length IS the text
-                    # size the divisor bound needs.
-                    df, sizes = sqldump_source.read_sql_files_remote(
+                    # region.go:131-234). Plain .sql only — compressed
+                    # remote dumps were spooled above.
+                    df, rowid_base = sqldump_source.read_sql_files_remote(
                         self.spark,
                         [f.path for f in files],
                         n_cols,
                         group_cs,
+                        rowid_base=rowid_base,
                     )
-                    for p in sorted(sizes):
-                        bases[p] = acc
-                        acc += sizes[p] // (n_cols + 2) + 1
                 else:
-                    df = sqldump_source.read_sql_files(
+                    df, rowid_base = sqldump_source.read_sql_files(
                         self.spark,
                         [actual[f.path] for f in files],
                         n_cols,
-                        "utf-8",
+                        rowid_base=rowid_base,
                     )
-                    # Sizes come from the DECOMPRESSED/transcoded text the
-                    # scan actually parses (decompressed_size), not
-                    # f.file_size: a gz dump's decompressed rows can exceed
-                    # compressed_size // divisor, overrunning the next
-                    # base -> duplicate row ids.
-                    for f in files:
-                        ap = os.path.abspath(actual[f.path])
-                        bases[ap] = acc
-                        acc += (
-                            sqldump_source.decompressed_size(ap)
-                            // (n_cols + 2) + 1
-                        )
-                rowid_base = acc
-                mapping = F.create_map(
-                    *[
-                        x
-                        for path, b in bases.items()
-                        for x in (F.lit(path), F.lit(b))
-                    ]
-                )
-                # _src_file is the plain abspath the range reader was
-                # handed (NOT a percent-encoded URI — the reader emits the
-                # path it opened), so the lookup is a direct match even
-                # for exotic filenames
-                df = df.withColumn(
-                    "_file_base", mapping[F.col("_src_file")]
-                ).drop("_src_file")
                 part = transform_table(
                     df,
                     info,

@@ -484,7 +484,7 @@ def upsert_table(
     db: str,
     table: str,
     key_columns: list[str],
-    keys_unique: bool = False,
+    _keys_unique: bool = False,
 ) -> CommitResult:
     """MERGE-by-key into an existing files-backend table, copy-on-write:
     rows whose key exists take the update's values, new keys insert,
@@ -501,10 +501,12 @@ def upsert_table(
     Updates must be unique on the key (checked) — a nondeterministic
     dropDuplicates winner could never be re-derived on retry; callers
     with multi-version batches pre-reduce (e.g. max-by ingest sequence)
-    before calling. A caller whose plan makes uniqueness structural
-    (e.g. a row_number()==1 filter over a per-key window) may pass
-    `keys_unique=True` to skip the duplicate-probe job — the probe
-    would be a whole extra action that can never fire.
+    before calling. `_keys_unique=True` skips that check (the probe is
+    a whole extra action) and is private to callers whose plan makes
+    uniqueness structural. Precondition: pass it ONLY when a
+    `row_number() == 1` reduction over a per-key window precedes this
+    call; on any other batch a duplicate key goes undetected and the
+    merge winner is arbitrary.
 
     Scale shape: ONE anti-join keyed on the PK (both sides hash-
     partition on the key; the update side is usually broadcast-sized
@@ -539,7 +541,7 @@ def upsert_table(
             f"upsert into `{db}`.`{table}` needs key columns — the table "
             "has no primary key in _tls_meta.json; pass --key explicitly"
         )
-    dup = 0 if keys_unique else (
+    dup = 0 if _keys_unique else (
         updates.groupBy(*key_columns)
         .count()
         .filter("count > 1")

@@ -6,16 +6,15 @@ reader exists for this, so it's the one place we drop to Python on the
 executors — but Spark-first in shape:
 
     driver: split files into statement-aligned byte ranges
-      -> DataFrame of (path, start, end, rowid_base), 1 task per range
-      -> mapInPandas(seek + read range + parse)           # Arrow-batched
+      -> DataFrame of (path, start, end, chunk_base), 1 task per range
+      -> mapInArrow(seek + read range + parse)     # Arrow RecordBatches
 
 The pre-split mirrors the reference's chunk machinery (ReadChunks
 parser.go:538-571, region splitting region.go:131-234): a multi-GiB dump
-becomes many bounded tasks instead of one whole-file task, and each
-chunk's row-id range is pre-allocated from its byte offset exactly like
-Chunk{PrevRowIDMax}. Executors open source paths directly (local FS /
-fuse mounts); remote object stores should mount or pre-stage, or extend
-`parse_batches` with an fsspec opener.
+becomes many bounded tasks instead of one whole-file task. Executors
+open local paths (local FS / fuse mounts) directly; scheme'd paths
+(s3a://, hdfs://, ...) go through `read_sql_files_remote`, which reads
+them with Spark's own Hadoop connectors.
 
 Value domain mirrors parser.go:468-518: every scalar is emitted as a
 STRING datum (typing happens at cast time, like the CSV path):
@@ -24,8 +23,15 @@ STRING datum (typing happens at cast time, like the CSV path):
   X'..'/0x.. hex -> latin-1-decoded byte string (byte-preserving),
   b'..'/0b.. bit -> decimal integer string.
 
-A `_row_seq` column (0-based row index within the file) rides along for
-deterministic row-id assignment (SURVEY.md §2.D1).
+Row ids (SURVEY.md §2.D1) are owned here, nowhere else. Both readers
+take the table's next free `rowid_base` and walk the files in a fixed
+order (local: as given; remote: sorted by path), reserving
+`text_size // (n_columns + 2) + 1` ids per file: a row of n columns
+takes at least n + 2 bytes of text (the reference's bytes-per-row bound,
+region.go:208-286). A chunk starting at byte offset `o` of a file with
+base `b` numbers its rows from `b + o // (n_columns + 2)`. The absolute
+number rides along as the `_row_seq` column, and the readers return the
+next free base for whatever the caller reads after them.
 
 The statement column list (if any) is read driver-side via `peek_columns`
 — mydumper emits one form per file; the executor parser asserts
@@ -170,7 +176,6 @@ class _Scanner:
             return self.quoted_string(ch)
         if ch == "`":
             return self.ident()  # unusual but tolerated
-        start = self.pos
         w = self.word()
         if not w:
             raise SQLDumpError(f"expected value at offset {self.pos}")
@@ -237,12 +242,41 @@ class _Scanner:
                     f"bad exponent after {w!r} at offset {self.pos}"
                 )
             return w + sign + exp
-        if ch in "+-":
-            # sign came through word()? word() doesn't consume signs
-            pass
-        if w:
-            return w
-        raise SQLDumpError(f"bad value at offset {start}")
+        return w
+
+    def insert_header(self) -> tuple[str, list[str] | None, str]:
+        """The rest of an INSERT/REPLACE header after its first word,
+        through the VALUES keyword: (table, column list or None, the
+        upper-cased keyword). INTO is OPTIONAL in MySQL (`INSERT
+        [IGNORE] [INTO] tbl`; reference golden tests/exotic_filenames
+        dumps omit it); `db`.`tbl` keeps the table part."""
+        nxt = self.word()
+        if nxt.upper() == "IGNORE":
+            nxt = self.word()
+        if nxt.upper() == "INTO" or not nxt:
+            table = self.ident()
+        else:
+            table = nxt  # unquoted table name, INTO omitted
+        if self.try_char("."):
+            table = self.ident()
+        elif "." in table:
+            table = table.rsplit(".", 1)[1]  # unquoted db.tbl
+        self.skip_ws_comments()
+        columns: list[str] | None = None
+        if self.peek() == "(":
+            self.expect("(")
+            columns = []
+            if not self.try_char(")"):
+                while True:
+                    columns.append(self.ident())
+                    if self.try_char(","):
+                        continue
+                    self.expect(")")
+                    break
+        kw = self.word().upper()
+        if kw not in ("VALUES", "VALUE", "SET"):
+            raise SQLDumpError(f"expected VALUES, got {kw!r}")
+        return table, columns, kw
 
     def signed_number(self) -> str:
         self.skip_ws_comments()
@@ -389,36 +423,9 @@ def parse_insert_statements(text: str) -> Iterator[Statement]:
     while not sc.eof():
         w = sc.word().upper()
         if w in ("INSERT", "REPLACE"):
-            # INTO is OPTIONAL in MySQL (`INSERT [IGNORE] [INTO] tbl`;
-            # reference golden tests/exotic_filenames dumps omit it)
-            nxt = sc.word()
-            if nxt.upper() == "IGNORE":
-                nxt = sc.word()
-            if nxt.upper() == "INTO" or not nxt:
-                table = sc.ident()
-            else:
-                table = nxt  # unquoted table name, INTO omitted
-            if sc.try_char("."):
-                table = sc.ident()  # `db`.`tbl`: keep table part
-            elif "." in table:
-                table = table.rsplit(".", 1)[1]  # unquoted db.tbl
-            sc.skip_ws_comments()
-            columns: list[str] | None = None
-            if sc.peek() == "(":
-                sc.expect("(")
-                columns = []
-                if not sc.try_char(")"):
-                    while True:
-                        columns.append(sc.ident())
-                        if sc.try_char(","):
-                            continue
-                        sc.expect(")")
-                        break
-            kw = sc.word().upper()
+            table, columns, kw = sc.insert_header()
             if kw == "SET":
                 raise SQLDumpError("INSERT ... SET form not supported")
-            if kw not in ("VALUES", "VALUE"):
-                raise SQLDumpError(f"expected VALUES, got {kw!r}")
             sc.skip_ws_comments()
             fast = _fast_rows(sc.text, sc.pos)
             if fast is not None:
@@ -467,30 +474,7 @@ def _peek_insert_header(text: str, complete: bool) -> list[str] | None:
         while not sc.eof():
             w = sc.word().upper()
             if w in ("INSERT", "REPLACE"):
-                nxt = sc.word()
-                if nxt.upper() == "IGNORE":
-                    nxt = sc.word()
-                if nxt.upper() == "INTO" or not nxt:
-                    sc.ident()
-                # else: nxt was the unquoted table name (INTO omitted)
-                if sc.try_char("."):
-                    sc.ident()
-                sc.skip_ws_comments()
-                columns: list[str] | None = None
-                if sc.peek() == "(":
-                    sc.expect("(")
-                    columns = []
-                    if not sc.try_char(")"):
-                        while True:
-                            columns.append(sc.ident())
-                            if sc.try_char(","):
-                                continue
-                            sc.expect(")")
-                            break
-                kw = sc.word().upper()
-                if kw not in ("VALUES", "VALUE", "SET"):
-                    raise SQLDumpError(f"expected VALUES, got {kw!r}")
-                return columns
+                return sc.insert_header()[1]
             # non-INSERT statement: skip to its terminator
             end = sc.text.find(";", sc.pos)
             if end < 0:
@@ -509,27 +493,31 @@ def _peek_insert_header(text: str, complete: bool) -> list[str] | None:
         raise _Truncated() from None
 
 
-def peek_columns(
-    path: str, encoding: str = "utf-8", spark=None
-) -> list[str] | None:
-    """Driver-side: column list of the first INSERT (None = positional).
-    Compressed dumps are peeked through the shared decompressing opener;
-    scheme'd (s3a://, viewfs://...) paths through the Hadoop FS stream
-    (pass `spark`). The read window starts small and grows until one
-    complete statement HEADER parses — immune to first statements longer
-    than the window."""
+def _peek(path: str, encoding: str, spark, parse):
+    """Driver-side head read: `parse(text, complete)` over a window that
+    starts at 64 KiB and grows 4x for as long as it raises _Truncated —
+    immune to first statements longer than the window. Compressed dumps
+    are read through the shared decompressing opener; scheme'd
+    (s3a://, viewfs://...) paths through the Hadoop FS stream (pass
+    `spark`)."""
     from tidb_lightning_spark.sources.csv_source import _decompress_open
 
     size = 1 << 16
     while True:
         with _decompress_open(path, spark=spark) as f:
             head = f.read(size)
-        complete = len(head) < size
-        text = _peek_decode(head, encoding)
         try:
-            return _peek_insert_header(text, complete)
+            return parse(_peek_decode(head, encoding), len(head) < size)
         except _Truncated:
             size *= 4
+
+
+def peek_columns(
+    path: str, encoding: str = "utf-8", spark=None
+) -> list[str] | None:
+    """Driver-side: column list of the first INSERT (None = positional),
+    parsing only its header (`_peek`)."""
+    return _peek(path, encoding, spark, _peek_insert_header)
 
 
 def _peek_decode(head: bytes, encoding: str) -> str:
@@ -553,6 +541,19 @@ def _peek_decode(head: bytes, encoding: str) -> str:
     return head.decode(low, errors="replace")
 
 
+def _first_arity(text: str, complete: bool) -> int | None:
+    try:
+        for stmt in parse_insert_statements(text):
+            for row in stmt.rows:
+                if row:  # skip () all-defaults rows: arity 0 says
+                    return len(row)  # nothing about the table
+    except SQLDumpError:
+        pass
+    if complete:
+        return None
+    raise _Truncated()
+
+
 def peek_arity(
     path: str, encoding: str = "utf-8", spark=None
 ) -> int | None:
@@ -560,27 +561,8 @@ def peek_arity(
     row parses) — the no-schema fallback when a dump has no column list
     (the reference reads names from the target database there,
     restore.go no-schema path; without one we synthesize c0..cN).
-    Same growing-window contract as peek_columns."""
-    from tidb_lightning_spark.sources.csv_source import _decompress_open
-
-    size = 1 << 16
-    while True:
-        with _decompress_open(path, spark=spark) as f:
-            head = f.read(size)
-        complete = len(head) < size
-        text = _peek_decode(head, encoding)
-        try:
-            for stmt in parse_insert_statements(text):
-                for row in stmt.rows:
-                    if row:  # skip () all-defaults rows: arity 0 says
-                        return len(row)  # nothing about the table
-            if complete:
-                return None
-            size *= 4
-        except SQLDumpError:
-            if complete:
-                return None
-            size *= 4
+    Same growing window as peek_columns (`_peek`)."""
+    return _peek(path, encoding, spark, _first_arity)
 
 
 # chunk target for splitting large dump files (reference max-region-size,
@@ -691,23 +673,33 @@ def split_sql_file(path: str, chunk_bytes: int = SQL_CHUNK_BYTES) -> list[tuple[
     return list(zip(bounds, bounds[1:]))
 
 
+def _out_schema(n_columns: int) -> T.StructType:
+    return T.StructType(
+        [T.StructField(f"_c{i}", T.StringType(), True) for i in range(n_columns)]
+        + [T.StructField("_row_seq", T.LongType(), False)]
+    )
+
+
 def read_sql_files(
     spark: SparkSession,
     paths: list[str],
     n_columns: int,
     encoding: str = "utf-8",
-    chunk_bytes: int | None = None,  # None -> module SQL_CHUNK_BYTES
-) -> DataFrame:
-    """paths -> DataFrame of `_c0.._cN` strings + `_row_seq` + `_src_file`.
+    chunk_bytes: int | None = None,  # None -> adaptive_chunk_bytes
+    rowid_base: int = 0,
+) -> tuple[DataFrame, int]:
+    """paths -> (DataFrame of `_c0.._cN` strings + `_row_seq`, next free
+    row-id base).
 
     Large files are pre-split driver-side into statement-aligned byte
     ranges (one task per range — a multi-GiB dump is no longer one task
     holding the whole file in memory); each task reads ONLY its range.
-    `_row_seq` is the chunk's pre-allocated row-id base (range_start //
-    (n_columns + 2), the reference's bytes-per-row lower bound,
-    region.go:208-225) plus the in-chunk row index: unique and
-    deterministic within the file regardless of how it was split, and
-    bounded by file_size // divisor so per-file bases never collide.
+    Files reserve their row-id ranges in the order given, each from its
+    DECOMPRESSED size (`decompressed_size`): a gz dump's rows can exceed
+    compressed_size // divisor, which would overrun the next file's
+    range. `_row_seq` is the file's base plus the chunk's offset //
+    (n_columns + 2) plus the in-chunk row index, so it is the same
+    however the file was split.
 
     All statements in a group must agree on column-list arity with
     `n_columns` (the caller derives it from peek_columns / table schema).
@@ -723,15 +715,8 @@ def read_sql_files(
             except OSError:
                 cb = SQL_CHUNK_BYTES
         for start, end in split_sql_file(ap, cb):
-            ranges.append((ap, start, end, start // divisor))
-
-    out_schema = T.StructType(
-        [T.StructField(f"_c{i}", T.StringType(), True) for i in range(n_columns)]
-        + [
-            T.StructField("_row_seq", T.LongType(), False),
-            T.StructField("_src_file", T.StringType(), False),
-        ]
-    )
+            ranges.append((ap, start, end, rowid_base + start // divisor))
+        rowid_base += decompressed_size(ap) // divisor + 1
 
     from tidb_lightning_spark._shipping import ensure_shipped
 
@@ -741,10 +726,12 @@ def read_sql_files(
     ).repartition(max(len(ranges), 1))
 
     def parse_batches(batches):
-        for rb in batches:  # pyarrow.RecordBatch of (path,start,end,base)
+        for rb in batches:
             for path, start, end, cbase in zip(
-                rb.column(0).to_pylist(), rb.column(1).to_pylist(),
-                rb.column(2).to_pylist(), rb.column(3).to_pylist(),
+                rb.column("path").to_pylist(),
+                rb.column("start").to_pylist(),
+                rb.column("end").to_pylist(),
+                rb.column("chunk_base").to_pylist(),
             ):
                 if _is_compressed(path):
                     from tidb_lightning_spark.sources.csv_source import (
@@ -755,10 +742,10 @@ def read_sql_files(
                         data = f.read()
                 else:
                     with open(path, "rb") as f:
-                        f.seek(int(start))
-                        data = f.read(int(end) - int(start))
+                        f.seek(start)
+                        data = f.read(end - start)
                 content = data.decode(encoding, errors="replace")
-                yield from _row_batches(content, n_columns, int(cbase), path)
+                yield from _row_batches(content, n_columns, cbase, path)
 
     # mapInArrow, not mapInPandas: tier-0 already produces an Arrow
     # table, and the pandas hop converted every string cell to a Python
@@ -767,7 +754,10 @@ def read_sql_files(
     # text per chunk for nothing (guide §4: shrink the Python boundary).
     # The scanner fallback tiers still build rows in Python; they
     # convert once, straight to Arrow.
-    return rdf.mapInArrow(parse_batches, schema=out_schema)
+    return (
+        rdf.mapInArrow(parse_batches, schema=_out_schema(n_columns)),
+        rowid_base,
+    )
 
 
 # --------------------------------------------------------------------------
@@ -783,7 +773,7 @@ def read_sql_files(
 # surfaces — remain those of the fuzz-tested scanner. All-or-nothing per
 # chunk: nothing is yielded until the full chunk parses AND validates, so
 # a bail can never duplicate rows.
-_SQL_VECTOR = os.environ.get("TLS_SQL_VECTOR", "1") != "0"
+
 # gap between statements: whitespace and terminated comments, exactly the
 # set _Scanner.skip_ws_comments consumes (an UNTERMINATED /* stays
 # unconsumed -> the caller bails so the scanner can raise)
@@ -844,7 +834,7 @@ def _vector_rows_table(content: str, n_columns: int):
     deliberate trade: yielding before the whole chunk validates would
     break the all-or-nothing bail contract (a mid-chunk bail after a
     yield would re-emit rows through the scanner)."""
-    if not _SQL_VECTOR or "\\" in content or "''" in content:
+    if "\\" in content or "''" in content:
         return None
     bodies: list[str] = []
     pos, n = 0, len(content)
@@ -927,11 +917,13 @@ def _vector_rows_table(content: str, n_columns: int):
 
 
 def _row_batches(content: str, n_columns: int, base: int, src: str):
-    """Parse one chunk into pyarrow RecordBatches (the mapInArrow face
-    of _row_frames). Tier 0's Arrow table is sliced and shipped AS IS —
-    zero pandas materialization; the scanner tiers build their bounded
-    row buffers in Python as before and convert once, directly to
-    Arrow."""
+    """Parse one chunk into pyarrow RecordBatches of `_c0.._cN` +
+    `_row_seq` (numbered from `base`). Tier 0's Arrow table is sliced
+    and shipped AS IS — zero pandas materialization. The scanner tiers
+    yield in bounded slices instead of one chunk-sized batch: the Arrow
+    stream ships each slice to the JVM while Python keeps parsing, so
+    the cast/persist work OVERLAPS the parse — and peak memory is a
+    slice, not the whole chunk. `src` only names the chunk in errors."""
     import numpy as np
     import pyarrow as pa
 
@@ -939,83 +931,26 @@ def _row_batches(content: str, n_columns: int, base: int, src: str):
     if vec is not None:
         n = vec.num_rows
         tbl = vec.append_column(
-            "_row_seq",
-            pa.array(np.arange(base, base + n, dtype="int64"),
-                     type=pa.int64()),
-        ).append_column("_src_file", pa.repeat(pa.scalar(src), n))
+            "_row_seq", pa.array(np.arange(base, base + n, dtype="int64"))
+        )
         yield from tbl.to_batches(max_chunksize=16384)
         return
 
-    names = [f"_c{i}" for i in range(n_columns)] + ["_row_seq", "_src_file"]
+    from tidb_lightning_spark.operators.transform import DEFAULT_SENTINEL
+
     schema = pa.schema(
-        [pa.field(c, pa.string()) for c in names[:n_columns]]
-        + [pa.field("_row_seq", pa.int64()),
-           pa.field("_src_file", pa.string())]
+        [(f"_c{i}", pa.string()) for i in range(n_columns)]
+        + [("_row_seq", pa.int64())]
     )
+
+    def flush() -> pa.RecordBatch:
+        return pa.RecordBatch.from_arrays(
+            [pa.array(c, type=f.type) for c, f in zip(zip(*buf), schema)],
+            schema=schema,
+        )
+
     seq = base
     buf: list[list] = []
-    from tidb_lightning_spark.operators.transform import DEFAULT_SENTINEL
-
-    def flush(rows: list[list]) -> pa.RecordBatch:
-        cols = list(zip(*rows))
-        arrays = [
-            pa.array(cols[i], type=pa.string()) for i in range(n_columns)
-        ] + [
-            pa.array(cols[n_columns], type=pa.int64()),
-            pa.array(cols[n_columns + 1], type=pa.string()),
-        ]
-        return pa.RecordBatch.from_arrays(arrays, schema=schema)
-
-    for stmt in parse_insert_statements(content):
-        for row in stmt.rows:
-            if len(row) != n_columns:
-                if len(row) == 0:
-                    row = [DEFAULT_SENTINEL] * n_columns
-                else:
-                    raise SQLDumpError(
-                        f"row arity {len(row)} != expected {n_columns} "
-                        f"in {src}"
-                    )
-            buf.append(row + [seq, src])
-            seq += 1
-        if len(buf) >= 16384:
-            yield flush(buf)
-            buf = []
-    if buf:
-        yield flush(buf)
-
-
-def _row_frames(content: str, n_columns: int, base: int, src: str):
-    """Parse one chunk's statement text into bounded pandas frames.
-
-    Tier 0 (_vector_rows_table) parses the whole chunk C-side and yields
-    Arrow-native slices. The scanner tiers below yield in bounded slices
-    instead of one chunk-sized frame: the Arrow stream ships each slice
-    to the JVM while Python keeps parsing, so the cast/persist work
-    OVERLAPS the parse instead of serializing after it — and peak memory
-    is a slice, not the whole chunk."""
-    import numpy as np
-    import pandas as pd
-
-    vec = _vector_rows_table(content, n_columns)
-    if vec is not None:
-        for off in range(0, vec.num_rows, 16384):
-            sl = vec.slice(off, 16384)
-            pdf = sl.to_pandas()
-            pdf["_row_seq"] = np.arange(
-                base + off, base + off + sl.num_rows, dtype="int64"
-            )
-            pdf["_src_file"] = src
-            yield pdf
-        return
-
-    all_names = [f"_c{i}" for i in range(n_columns)] + [
-        "_row_seq", "_src_file",
-    ]
-    seq = base
-    buf: list[list] = []
-    from tidb_lightning_spark.operators.transform import DEFAULT_SENTINEL
-
     for stmt in parse_insert_statements(content):
         for row in stmt.rows:
             if len(row) != n_columns:
@@ -1029,13 +964,13 @@ def _row_frames(content: str, n_columns: int, base: int, src: str):
                         f"row arity {len(row)} != expected {n_columns} "
                         f"in {src}"
                     )
-            buf.append(row + [seq, src])
+            buf.append(row + [seq])
             seq += 1
         if len(buf) >= 16384:
-            yield pd.DataFrame(buf, columns=all_names)
+            yield flush()
             buf = []
     if buf:
-        yield pd.DataFrame(buf, columns=all_names)
+        yield flush()
 
 
 # binaryFile ships a file's bytes as ONE Arrow cell; Spark caps a single
@@ -1044,27 +979,13 @@ def _row_frames(content: str, n_columns: int, base: int, src: str):
 # 2-4x the byte size), so remote whole-file tasks are bounded to the
 # same 256 MiB the "mydumper -F 256" remedy already prescribes — a
 # worst-case task then needs ~1.25 GiB of Python heap, not ~5 GiB.
-# Overridable for one-off restores of oversized dumps on big executors.
-REMOTE_SQL_MAX_BYTES = int(
-    os.environ.get("TLS_REMOTE_SQL_MAX_BYTES", str(256 << 20))
-)
-
-
-def _remote_out_schema(n_columns: int) -> T.StructType:
-    return T.StructType(
-        [
-            T.StructField(f"_c{i}", T.StringType(), True)
-            for i in range(n_columns)
-        ]
-        + [
-            T.StructField("_row_seq", T.LongType(), False),
-            T.StructField("_src_file", T.StringType(), False),
-        ]
-    )
+# Larger files take the ranged reader (utf-8) or are spooled to local
+# storage by the pipeline (other charsets).
+REMOTE_SQL_MAX_BYTES = 256 << 20
 
 
 def _read_sql_file_ranged(
-    spark: SparkSession, path: str, n_columns: int, length: int
+    spark: SparkSession, path: str, n_columns: int, length: int, base: int
 ) -> DataFrame:
     """One OVERSIZED remote dump file -> rows, with statement-aligned
     byte-range splitting done by the JVM connector itself: Hadoop
@@ -1074,10 +995,11 @@ def _read_sql_file_ranged(
     statement's text, the LineRecordReader reads past its split boundary
     to finish its last record and skips the partial first one (the same
     contract the local splitter implements by hand, region.go analog),
-    and the record KEY is the statement's byte offset. Row ids:
-    offset // (n_columns + 2) is the statement's base — statements never
-    overlap byte ranges, so bases never collide (the identical
-    bytes-per-row bound as the local chunk splitter, region.go:208-225).
+    and the record KEY is the statement's byte offset. Row ids: the
+    file's `base` plus offset // (n_columns + 2) starts each statement —
+    statements never overlap byte ranges, so their ranges never collide
+    (the identical bytes-per-row bound as the local chunk splitter,
+    region.go:208-225).
 
     This retires the r9 whole-file cap for utf-8 dumps: no single Arrow
     cell ever holds the file; peak task memory is one statement
@@ -1102,17 +1024,17 @@ def _read_sql_file_ranged(
     def parse_batches(batches):
         for rb in batches:
             for off, stmt in zip(
-                rb.column(0).to_pylist(), rb.column(1).to_pylist()
+                rb.column("_off").to_pylist(), rb.column("_stmt").to_pylist()
             ):
                 # the delimiter strips the terminating ';' — the scanner
                 # treats it as optional at EOF, so no re-append needed
                 yield from _row_batches(
-                    stmt, n_columns, int(off) // divisor, path
+                    stmt, n_columns, base + off // divisor, path
                 )
 
     # mapInArrow for the same reason as read_sql_files: tier-0 output is
     # already Arrow; the pandas hop double-copied every string cell
-    return sdf.mapInArrow(parse_batches, schema=_remote_out_schema(n_columns))
+    return sdf.mapInArrow(parse_batches, schema=_out_schema(n_columns))
 
 
 def read_sql_files_remote(
@@ -1120,10 +1042,14 @@ def read_sql_files_remote(
     paths: list[str],
     n_columns: int,
     encoding: str = "utf-8",
-) -> tuple[DataFrame, dict[str, int]]:
+    rowid_base: int = 0,
+) -> tuple[DataFrame, int]:
     """Scheme'd (s3a://, viewfs://, hdfs://...) SQL dumps -> the same
-    `_c0.._cN` + `_row_seq` + `_src_file` frame as `read_sql_files`, plus
-    {observed_path: byte_size} for the caller's row-id base reservation.
+    (`_c0.._cN` + `_row_seq` frame, next free row-id base) as
+    `read_sql_files`. Files reserve their row-id ranges sorted by their
+    observed path, each from its observed byte length (plain files only:
+    the pipeline spools compressed remote dumps to local storage first,
+    so the length IS the text size the divisor bound needs).
 
     Files up to REMOTE_SQL_MAX_BYTES come through Spark's `binaryFile`
     source — the SAME Hadoop connector the CSV/parquet executor scans use
@@ -1137,20 +1063,11 @@ def read_sql_files_remote(
     fails fast with the remedy). Parity: the reference streams any file
     size through its storage abstraction (mydump/reader.go:140-179) but
     also never splits .sql mid-file (region.go:131-234) — the ranged
-    path is strictly more parallel than both.
-
-    Row ids: whole files are one chunk with in-file base 0; ranged files
-    reserve per-statement bases from byte offsets — both bounded by
-    size // (n_cols+2), so the caller's per-file reservation is
-    unchanged."""
+    path is strictly more parallel than both."""
     bdf = spark.read.format("binaryFile").load(paths)
     # column-pruned to file status only — no content read for the guard
-    meta = bdf.select("path", "length").collect()
-    big = sorted(
-        (r["path"], r["length"])
-        for r in meta
-        if r["length"] > REMOTE_SQL_MAX_BYTES
-    )
+    meta = sorted({tuple(r) for r in bdf.select("path", "length").collect()})
+    big = [(p, ln) for p, ln in meta if ln > REMOTE_SQL_MAX_BYTES]
     if big and encoding.lower().replace("-", "") not in ("utf8", "ascii"):
         raise SQLDumpError(
             f"remote SQL dump file(s) in charset {encoding!r} exceed "
@@ -1161,6 +1078,10 @@ def read_sql_files_remote(
             "to local/shared storage, where the statement-aligned range "
             "splitter handles any size and charset."
         )
+    bases: dict[str, int] = {}
+    for p, ln in meta:
+        bases[p] = rowid_base
+        rowid_base += ln // (n_columns + 2) + 1
 
     from tidb_lightning_spark._shipping import ensure_shipped
 
@@ -1168,8 +1089,8 @@ def read_sql_files_remote(
 
     def parse_batches(batches):
         for rb in batches:
-            paths_col = rb.column(0)
-            content_col = rb.column(1)
+            paths_col = rb.column("path")
+            content_col = rb.column("content")
             for i in range(rb.num_rows):
                 # decode straight off the Arrow binary buffer view —
                 # same zero-intermediate-copy property the old
@@ -1177,9 +1098,8 @@ def read_sql_files_remote(
                 text = str(
                     content_col[i].as_buffer(), encoding, "replace"
                 )
-                yield from _row_batches(
-                    text, n_columns, 0, paths_col[i].as_py()
-                )
+                path = paths_col[i].as_py()
+                yield from _row_batches(text, n_columns, bases[path], path)
 
     parts: list[DataFrame] = []
     if len(big) < len(meta):
@@ -1190,12 +1110,12 @@ def read_sql_files_remote(
             small = bdf.filter(F.col("length") <= REMOTE_SQL_MAX_BYTES)
         parts.append(
             small.select("path", "content").mapInArrow(
-                parse_batches, schema=_remote_out_schema(n_columns)
+                parse_batches, schema=_out_schema(n_columns)
             )
         )
     for p, ln in big:
-        parts.append(_read_sql_file_ranged(spark, p, n_columns, ln))
+        parts.append(_read_sql_file_ranged(spark, p, n_columns, ln, bases[p]))
     out = parts[0]
     for extra in parts[1:]:
         out = out.unionByName(extra)
-    return out, {r["path"]: r["length"] for r in meta}
+    return out, rowid_base
