@@ -31,26 +31,17 @@ def entry(spark: SparkSession) -> DataFrame:
 # ``queries()``, so this list rotates the verification window onto the
 # STALEST names — THE RULE (permanent, r9 verdict item 4): new/changed
 # entries first, then every registry query ordered stalest-first by the
-# round of its latest CORRECTNESS_r{N}.json appearance (the registry at
-# 128 entries outgrew two 50-slot windows, so full two-round coverage
-# is no longer possible — priority order is what matters). Current
-# window (r12): the kn_bigram trio (changed oracle + 2 new diagnostic
-# twins), then the 29 r9-vintage names (r11 verdict item 2), then
-# r10-vintage fill — all green in tests/test_oracle_parity.py (the
-# identical DuckDB compare).
+# round of its latest CORRECTNESS_r{N}.json appearance (the registry's
+# 128 entries outgrow two 50-slot windows, so full two-round coverage
+# is not possible — priority order is what matters). Current window:
+# kn_bigram_lm (oracle text changed), the r12 operators, then the 29
+# r9-vintage names (r11 verdict item 2), then r10-vintage fill — all
+# green in tests/test_oracle_parity.py (the identical DuckDB compare).
 _DRIVER_PRIORITY = [
-    # r12 CHANGED + NEW — grade first. kn_bigram_lm: the two-round red
-    # row's root cause was found mechanically (its oracle's c1 was the
-    # registry's ONLY HUGEINT-typed output column — a pandas/Arrow
-    # fetch stringifies HUGEINT as float64/decimal128, diverging from
-    # Spark's long under a strict hash while fetchall()-based local
-    # mimics stay bit-exact); the oracle now CASTs the SUM. The two
-    # diagnostic twins bisect if it somehow stays red: inputs red =
-    # tokenize/count stage, inputs green + kn red = scoring arithmetic
-    # or typing (r11 verdict item 1).
+    # CHANGED — grade first. kn_bigram_lm's oracle now builds on the
+    # shared _KN_COUNTS_SQL head (same rows and column types as the
+    # standalone text it replaces, whose HUGEINT-safe CAST it keeps).
     "kn_bigram_lm",
-    "kn_bigram_inputs",
-    "kn_bigram_singlediv",
     # r12 NEW operators
     "dedup_duplicate_lines",
     "inverted_index_postings",

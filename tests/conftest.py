@@ -7,11 +7,25 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from pyspark.sql import types as T
+
 from tidb_lightning_spark.session import get_spark
 
 TESTDATA = os.environ.get("SPARK_GRAFT_TESTDATA", "/root/testdata")
 SF_SMOKE = f"{TESTDATA}/sf0.001"
 SF_CORRECTNESS = f"{TESTDATA}/sf0.01"
+
+# Column layout of the events table as the streaming tests feed it.
+EVENT_SCHEMA = T.StructType(
+    [
+        T.StructField("event_id", T.LongType()),
+        T.StructField("ts", T.TimestampType()),
+        T.StructField("user_id", T.LongType()),
+        T.StructField("event_type", T.StringType()),
+        T.StructField("value", T.DoubleType()),
+        T.StructField("props", T.StringType()),
+    ]
+)
 
 # Soak-class tests (multi-minute streaming-state / compaction / crash-
 # recovery end-to-end runs — the 10 slowest were 30 of the suite's 49

@@ -1,48 +1,8 @@
-"""Salted join: identical results to the plain join on a pathologically
-skewed key distribution, for both inner and left joins."""
+"""Near-duplicate candidate search: banded MinHash LSH keeps popular
+shingles from flooding one bucket, and near-dup clusters close
+transitively."""
 
 from __future__ import annotations
-
-from pyspark.sql import functions as F
-
-from tidb_lightning_spark.functions.skew import salted_join
-
-
-def _skewed(spark):
-    # 90% of fact rows share key 1; dim has keys 1..5 (3 unmatched facts)
-    fact = spark.range(0, 1000).select(
-        F.when(F.col("id") < 900, F.lit(1)).otherwise((F.col("id") % 7) + 2)
-        .cast("bigint").alias("k"),
-        F.col("id").alias("v"),
-    )
-    dim = spark.createDataFrame(
-        [(i, f"d{i}") for i in range(1, 6)], "k bigint, name string"
-    )
-    return fact, dim
-
-
-def _norm(df):
-    return sorted(tuple(r) for r in df.collect())
-
-
-def test_salted_inner_matches_plain(spark):
-    fact, dim = _skewed(spark)
-    plain = fact.join(dim, ["k"], "inner").select("k", "v", "name")
-    salted = salted_join(fact, dim, ["k"], "inner", n_salts=8).select(
-        "k", "v", "name"
-    )
-    assert _norm(salted) == _norm(plain)
-
-
-def test_salted_left_matches_plain(spark):
-    fact, dim = _skewed(spark)
-    plain = fact.join(dim, ["k"], "left").select("k", "v", "name")
-    salted = salted_join(fact, dim, ["k"], "left", n_salts=8).select(
-        "k", "v", "name"
-    )
-    got, want = _norm(salted), _norm(plain)
-    assert len(got) == len(want) == 1000  # unmatched rows kept exactly once
-    assert got == want
 
 
 def test_banded_lsh_bounds_popular_shingle_buckets(spark):

@@ -608,22 +608,6 @@ def test_containment_no_posting_list_reexplode(spark):
     assert "array_intersect" in plan
 
 
-def test_kn_bigram_twins_share_the_lm_plan_shape(spark):
-    """kn_bigram_inputs / kn_bigram_singlediv (r12 diagnostic twins):
-    built on the same _kn_counts machinery, they must keep the LM's
-    plan contract — ONE parquet scan through the cached bigram table,
-    broadcast stats, no sort-merge or cartesian legs."""
-    import re
-
-    for name in ("kn_bigram_inputs", "kn_bigram_singlediv"):
-        plan = plan_of(spark, name)
-        assert "CartesianProduct" not in plan, name
-        assert "SortMergeJoin" not in plan, name
-        assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 1, name
-        assert "InMemoryTableScan" in plan, name
-        assert n_exchanges(plan) <= 5, name
-
-
 def test_dedup_duplicate_lines_no_window_no_join_skew(spark):
     """dedup_duplicate_lines (r12): the keep-first sweep is pure
     map-side-combinable aggregation — NO row_number window over the

@@ -28,6 +28,8 @@ import pytest
 from tidb_lightning_spark.streaming import curation as C
 from tidb_lightning_spark.streaming import events as S
 
+from .conftest import EVENT_SCHEMA
+
 
 def _write_event_files(src: str, n_files: int, rows_per_file: int = 2):
     """n_files single-parquet-file event batches, one file = one
@@ -76,6 +78,15 @@ def _write_event_files(src: str, n_files: int, rows_per_file: int = 2):
     return rows
 
 
+def _event_stream(spark, src: str):
+    """One file per micro-batch."""
+    return (
+        spark.readStream.schema(EVENT_SCHEMA)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+    )
+
+
 def _table_rows(spark, table_dir):
     return {
         (r["event_id"], r["user_id"], r["event_type"], r["props"])
@@ -98,7 +109,7 @@ def test_plain_sink_compacts_and_stays_exact(spark, tmp_path):
         for r in _write_event_files(src, 24)
     }
 
-    stream = S.read_event_stream(spark, src, max_files_per_trigger=1)
+    stream = _event_stream(spark, src)
     S.stream_to_warehouse(stream, tbl, ckpt, compact_every=4, max_deltas=3)
 
     names = os.listdir(tbl)
@@ -113,7 +124,7 @@ def test_plain_sink_compacts_and_stays_exact(spark, tmp_path):
     assert _table_rows(spark, tbl) == want
 
     # second drain with nothing new: no new batches, contents unchanged
-    stream = S.read_event_stream(spark, src, max_files_per_trigger=1)
+    stream = _event_stream(spark, src)
     S.stream_to_warehouse(stream, tbl, ckpt, compact_every=4, max_deltas=3)
     assert _table_rows(spark, tbl) == want
 
@@ -129,7 +140,7 @@ def test_plain_sink_compacts_and_stays_exact(spark, tmp_path):
     crc = os.path.join(commits, f".{last}.crc")
     if os.path.exists(crc):
         os.remove(crc)
-    stream = S.read_event_stream(spark, src, max_files_per_trigger=1)
+    stream = _event_stream(spark, src)
     S.stream_to_warehouse(stream, tbl, ckpt, compact_every=4, max_deltas=3)
     assert _table_rows(spark, tbl) == want
 

@@ -1,93 +1,25 @@
 """Regression tests for the round-6 ADVICE.md defects.
 
-1. streaming_distinct_users: null user_id (arriving as pandas NaN) must
-   not kill the query AND must fold into the same phantom NULL register
-   the batch operator/SQL twin use (stream == batch on null keys).
-2. corpus_temperature_sample: keep-threshold quantized to 2^-30 + capped
+1. corpus_temperature_sample: keep-threshold quantized to 2^-30 + capped
    at 1 (pure-integer compare; no cross-libm pow dependence, no bigint
    overflow for rates > 1).
-3. JSONL no-schema peek: >1 MiB first lines parse; malformed first lines
+2. JSONL no-schema peek: >1 MiB first lines parse; malformed first lines
    raise IngestError with remediation, not a raw JSONDecodeError.
-4. zorder_value: bit budget stays inside a signed long (auto-reduce),
+3. zorder_value: bit budget stays inside a signed long (auto-reduce),
    impossible budgets raise cleanly.
-5. _footer_num_rows: file:-scheme'd URIs normalize; foreign schemes get
-   a Spark-side fallback instead of a bogus local-IO result.
+4. _footer_num_rows: file:-scheme'd URIs normalize; foreign schemes get
+   a Spark-side fallback instead of a bogus local-IO result; the footer
+   helpers walk nested `k=v/` partition dirs.
 """
 
 from __future__ import annotations
 
-from .conftest import slow_soak
-
-import datetime
-import os
-
 import pytest
-from pyspark.sql import Row
 from pyspark.sql import functions as F
 
-from tidb_lightning_spark.functions import sketch as SK
-from tidb_lightning_spark.streaming import events as S
-
 
 # ---------------------------------------------------------------------------
-# 1. streaming HLL on null user_id
-# ---------------------------------------------------------------------------
-@slow_soak
-def test_streaming_hll_null_user_ids_match_batch(spark, tmp_path):
-    ts = datetime.datetime(2024, 1, 1)
-    rows = [
-        Row(
-            event_id=i,
-            ts=ts,
-            user_id=(None if i % 3 == 0 else i % 7),
-            event_type="view" if i % 2 == 0 else "click",
-            value=1.0,
-            props="{}",
-        )
-        for i in range(30)
-    ]
-    d = str(tmp_path / "events_nulls")
-    spark.createDataFrame(rows, S.EVENT_SCHEMA).repartition(3).write.mode(
-        "overwrite"
-    ).parquet(d)
-
-    stream = S.read_event_stream(spark, d, max_files_per_trigger=1)
-    S.run_to_memory(
-        S.streaming_distinct_users(stream), "hll_nulls_stream", "update"
-    )
-    final: dict = {}
-    for r in spark.table("hll_nulls_stream").collect():
-        cur = final.get(r["event_type"])
-        if cur is None or r["registers_hit"] >= cur[1]:
-            final[r["event_type"]] = (r["est_distinct"], r["registers_hit"])
-
-    batch = {
-        r["event_type"]: (r["est_distinct"], r["registers_hit"])
-        for r in SK.hll_distinct(
-            spark.read.parquet(d), "user_id", ["event_type"]
-        ).collect()
-    }
-    assert set(final) == set(batch)
-    for k in batch:
-        # registers_hit must count the phantom NULL register identically
-        assert final[k][1] == batch[k][1], f"{k}: registers_hit diverged"
-        assert abs(final[k][0] - batch[k][0]) <= 1, f"{k}: estimate diverged"
-
-
-def test_streaming_hll_state_widens_from_pre_null_slot_checkpoint(spark):
-    # the state-widening branch: HLL_M-byte state (pre-fix checkpoint)
-    # must load and keep accumulating, not IndexError on the null slot
-    from tidb_lightning_spark.functions.sketch import HLL_M
-
-    regs = bytearray(HLL_M)
-    if len(regs) == HLL_M:  # the exact branch in update()
-        regs.append(0)
-    assert len(regs) == HLL_M + 1
-    regs[HLL_M] = 51  # writable
-
-
-# ---------------------------------------------------------------------------
-# 2. temperature-sample threshold: integer, capped
+# 1. temperature-sample threshold: integer, capped
 # ---------------------------------------------------------------------------
 def test_temperature_threshold_integer_and_capped(spark):
     from tidb_lightning_spark.plans import queries as Q
@@ -106,7 +38,7 @@ def test_temperature_threshold_integer_and_capped(spark):
 
 
 # ---------------------------------------------------------------------------
-# 3. JSONL peek error contract
+# 2. JSONL peek error contract
 # ---------------------------------------------------------------------------
 def _peek_table(tmp_path, content: bytes):
     from tidb_lightning_spark.sources.loader import (
@@ -169,7 +101,7 @@ def test_jsonl_peek_non_object_first_line(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# 4. z-order bit budget
+# 3. z-order bit budget
 # ---------------------------------------------------------------------------
 def test_zorder_many_columns_stays_positive(spark):
     from tidb_lightning_spark.sinks.files_sink import zorder_value
@@ -199,7 +131,7 @@ def test_zorder_impossible_budget_raises(spark):
 
 
 # ---------------------------------------------------------------------------
-# 5. scheme-aware footer count
+# 4. scheme-aware footer count
 # ---------------------------------------------------------------------------
 def test_footer_num_rows_file_scheme(spark):
     from tidb_lightning_spark.plans.queries import _footer_num_rows
@@ -216,3 +148,31 @@ def test_footer_num_rows_foreign_scheme_needs_spark():
 
     with pytest.raises(ValueError, match="SparkSession"):
         _footer_num_rows("s3a://bucket/t.parquet")
+
+
+def test_footer_counts_walk_nested_partition_dirs(spark, tmp_path):
+    """A Hive-partitioned table dir (`k=v/part.parquet`) holds its part
+    files below the top level: the footer helpers walk it, so widen()
+    clamps by the real row-group count and the row count is exact."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from tidb_lightning_spark.plans import queries as Q
+
+    sf = tmp_path / "sf"
+    tbl = sf / "t.parquet"
+    for k in (0, 1):
+        part = tbl / f"k={k}"
+        part.mkdir(parents=True)
+        pq.write_table(
+            pa.table({"v": list(range(30))}), str(part / "part-0.parquet"),
+            row_group_size=10,
+        )
+    (tbl / "_SUCCESS").write_text("")
+    assert Q._footer_num_row_groups(str(tbl)) == 6
+    assert Q._footer_num_rows(str(tbl)) == 60
+    assert Q._first_parquet_batch(str(tbl), ["v"]).num_rows == 1
+
+    Q.widen(spark, str(sf), "t")
+    key = (spark.sparkContext.applicationId, str(sf), "t")
+    assert Q._ROW_GROUPS_MEMO[key] == 6

@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 
 from tidb_lightning_spark.plans import queries as Q
 
-from .conftest import SF_CORRECTNESS
+from .conftest import EVENT_SCHEMA, SF_CORRECTNESS
 
 
 def test_rfm_hist_cells_partition_customers(spark, duck):
@@ -46,8 +46,6 @@ def test_sessionize_known_gaps(spark, tmp_path, monkeypatch):
             value=1.0,
             props="{}",
         )
-
-    from tidb_lightning_spark.streaming.events import EVENT_SCHEMA
 
     rows = [
         ev(1, 1, 0), ev(2, 1, 10), ev(3, 1, 100),  # gap 90 min -> 2 sess

@@ -1,16 +1,15 @@
-"""Streaming operator tests: file-source replay of the events table must
-agree with the batch twins (availableNow trigger -> memory sink)."""
+"""Stream drain tests: exactly-once warehouse batches, continuous
+restore and CDC apply over file-source replays (availableNow trigger)."""
 
 from __future__ import annotations
 
 import os
 
 import pytest
-from pyspark.sql import functions as F
 
 from tidb_lightning_spark.streaming import events as S
 
-from .conftest import SF_SMOKE
+from .conftest import EVENT_SCHEMA, SF_SMOKE
 
 
 @pytest.fixture(scope="module")
@@ -25,154 +24,18 @@ def _prepare(spark, d):
         from tidb_lightning_spark.sources.parquet_source import read_table
 
         ev = read_table(spark, f"{SF_SMOKE}/events.parquet")
-        ev.select(*[f.name for f in S.EVENT_SCHEMA.fields]).repartition(
+        ev.select(*[f.name for f in EVENT_SCHEMA.fields]).repartition(
             4
         ).write.mode("overwrite").parquet(d)
     return d
 
 
-def test_windowed_counts_match_batch(spark, stream_dir):
-    d = _prepare(spark, stream_dir)
-    stream = S.read_event_stream(spark, d)
-    # complete mode: append would hold back windows newer than the final
-    # watermark (they are still "open" when the replay ends)
-    S.run_to_memory(S.windowed_counts(stream), "win_counts", "complete")
-    got = {
-        (r["bucket"], r["event_type"]): (r["n_events"], str(r["sum_value"]))
-        for r in spark.table("win_counts").collect()
-    }
-
-    from tidb_lightning_spark.sources.parquet_source import read_table
-
-    batch = (
-        read_table(spark, f"{SF_SMOKE}/events.parquet")
-        .groupBy(
-            F.date_trunc("hour", F.col("ts")).alias("bucket"), F.col("event_type")
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast("decimal(18,4)"))
-            .cast("decimal(38,4)")
-            .alias("sum_value"),
-        )
+def _event_stream(spark, d):
+    return (
+        spark.readStream.schema(EVENT_SCHEMA)
+        .option("maxFilesPerTrigger", 8)
+        .parquet(d)
     )
-    want = {
-        (r["bucket"], r["event_type"]): (r["n_events"], str(r["sum_value"]))
-        for r in batch.collect()
-    }
-    assert got == want
-
-
-def test_sessionize_stream_total_events(spark, stream_dir):
-    d = _prepare(spark, stream_dir)
-    stream = S.read_event_stream(spark, d)
-    S.run_to_memory(S.sessionize(stream), "sessions", "complete")
-    rows = spark.table("sessions").collect()
-    assert sum(r["n_events"] for r in rows) == 1000  # sf0.001 events count
-    assert all(r["n_events"] >= 1 for r in rows)
-
-
-def test_dedup_stream(spark, stream_dir, tmp_path):
-    d = str(tmp_path / "dup_events")
-    from tidb_lightning_spark.sources.parquet_source import read_table
-
-    ev = read_table(spark, f"{SF_SMOKE}/events.parquet").select(
-        *[f.name for f in S.EVENT_SCHEMA.fields]
-    )
-    # write the same events twice -> duplicated ids across files
-    ev.write.mode("overwrite").parquet(d)
-    ev.write.mode("append").parquet(d)
-    stream = S.read_event_stream(spark, d)
-    S.run_to_memory(S.dedup_stream(stream), "deduped")
-    n = spark.table("deduped").count()
-    assert n == 1000
-
-
-def test_running_user_totals_stateful(spark, stream_dir):
-    d = _prepare(spark, stream_dir)
-    # one file per micro-batch so state must survive across batches
-    stream = S.read_event_stream(spark, d, max_files_per_trigger=1)
-    S.run_to_memory(S.running_user_totals(stream), "running_totals", "update")
-    # update mode emits one row per user per micro-batch that touched it;
-    # the LAST emission per user carries the accumulated state
-    rows = spark.table("running_totals").collect()
-    assert len(rows) > len({r["user_id"] for r in rows})  # multi-batch emissions
-    final = {}
-    for r in rows:  # memory sink preserves batch order
-        final[r["user_id"]] = (r["n_events"], r["total_value"], r["last_ts"])
-
-    from tidb_lightning_spark.sources.parquet_source import read_table
-
-    batch = (
-        read_table(spark, f"{SF_SMOKE}/events.parquet")
-        .groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("value").alias("total"),
-            F.max("ts").alias("last_ts"),
-        )
-    )
-    want = {r["user_id"]: (r["n"], r["total"], r["last_ts"]) for r in batch.collect()}
-    assert set(final) == set(want)
-    for uid, (n, total, last) in want.items():
-        gn, gtotal, glast = final[uid]
-        assert gn == n, uid
-        assert abs(gtotal - (total or 0.0)) < 1e-6, uid
-        assert glast == last, uid
-
-
-def test_stream_static_enrichment_matches_batch(spark, stream_dir):
-    """Stream-static broadcast join per micro-batch == the batch join."""
-    from tidb_lightning_spark.sources.parquet_source import read_table
-
-    d = _prepare(spark, stream_dir)
-    dim = read_table(spark, f"{SF_SMOKE}/customer.parquet").select(
-        "c_custkey", "c_mktsegment"
-    )
-    enriched = S.enrich_with_dim(S.read_event_stream(spark, d), dim)
-    agg = enriched.groupBy("c_mktsegment").agg(
-        F.count(F.lit(1)).alias("n")
-    )
-    S.run_to_memory(agg, "enriched_counts", output_mode="complete")
-    got = {
-        r["c_mktsegment"]: r["n"]
-        for r in spark.table("enriched_counts").collect()
-    }
-    ev = read_table(spark, f"{SF_SMOKE}/events.parquet")
-    want = {
-        r["c_mktsegment"]: r["n"]
-        for r in ev.join(dim, ev.user_id == dim.c_custkey, "left")
-        .groupBy("c_mktsegment")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-    assert got == want
-
-
-def test_stream_stream_interval_join_matches_batch(spark, stream_dir):
-    """correlate_streams over a replay must equal the same interval join
-    done in batch (stream-stream state handling changes nothing)."""
-    d = _prepare(spark, stream_dir)
-    left = S.read_event_stream(spark, d)
-    right = S.read_event_stream(spark, d)
-    out = S.correlate_streams(left, right, "click", "purchase", "30 minutes")
-    S.run_to_memory(out, "ss_join")
-    got = spark.table("ss_join").count()
-
-    ev = spark.read.schema(S.EVENT_SCHEMA).parquet(d)
-    l = ev.where(F.col("event_type") == "click").selectExpr(
-        "user_id AS l_user", "event_id AS l_event", "ts AS l_ts"
-    )
-    r = ev.where(F.col("event_type") == "purchase").selectExpr(
-        "user_id AS r_user", "event_id AS r_event", "ts AS r_ts"
-    )
-    want = l.join(
-        r,
-        (F.col("l_user") == F.col("r_user"))
-        & (F.col("l_ts") <= F.col("r_ts"))
-        & (F.col("r_ts") <= F.col("l_ts") + F.expr("INTERVAL 30 minutes")),
-    ).count()
-    assert got == want > 0
 
 
 def test_stream_to_warehouse_idempotent_batches(spark, stream_dir, tmp_path):
@@ -182,13 +45,13 @@ def test_stream_to_warehouse_idempotent_batches(spark, stream_dir, tmp_path):
     tbl = str(tmp_path / "wh_events")
     ckpt = str(tmp_path / "ckpt")
 
-    src = spark.read.schema(S.EVENT_SCHEMA).parquet(d)
-    S.stream_to_warehouse(S.read_event_stream(spark, d), tbl, ckpt)
+    src = spark.read.schema(EVENT_SCHEMA).parquet(d)
+    S.stream_to_warehouse(_event_stream(spark, d), tbl, ckpt)
     first = spark.read.parquet(tbl)
     assert first.count() == src.count()
 
     # second run: checkpoint says everything is committed -> no new rows
-    S.stream_to_warehouse(S.read_event_stream(spark, d), tbl, ckpt)
+    S.stream_to_warehouse(_event_stream(spark, d), tbl, ckpt)
     spark.catalog.refreshByPath(tbl)
     assert spark.read.parquet(tbl).count() == src.count()
 
@@ -199,7 +62,7 @@ def test_stream_to_warehouse_idempotent_batches(spark, stream_dir, tmp_path):
     crc = os.path.join(ckpt, "commits", ".0.crc")  # hadoop checksum sidecar
     if os.path.exists(crc):
         os.remove(crc)
-    S.stream_to_warehouse(S.read_event_stream(spark, d), tbl, ckpt)
+    S.stream_to_warehouse(_event_stream(spark, d), tbl, ckpt)
     spark.catalog.refreshByPath(tbl)
     assert spark.read.parquet(tbl).count() == src.count()
     assert [p for p in os.listdir(tbl) if p.startswith("_batch_id=")] == [

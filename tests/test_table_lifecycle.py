@@ -134,3 +134,23 @@ def test_zero_row_import_warns(spark, tmp_path, caplog, backend):
     assert rep.ok, [t.error for t in rep.tables]
     assert rep.tables[0].rows == 0
     assert any("imported 0 rows" in r.getMessage() for r in caplog.records)
+
+
+@pytest.mark.parametrize(
+    "policy, winner", [("replace", "later"), ("ignore", "early")]
+)
+def test_jdbc_on_duplicate_orders_by_row_id(spark, tmp_path, policy, winner):
+    """The JDBC sink's `on_duplicate` keeps the row id through the read on
+    an integer-PK table, so first/last among duplicate keys follows the
+    source order: replace keeps the later row, ignore the earlier one
+    (REPLACE INTO / INSERT IGNORE, tidb.go:80-88)."""
+    d = people_dump(str(tmp_path / "dump"))
+    os.remove(f"{d}/shop.people.csv")
+    write(f"{d}/shop.people.1.csv", "id,name\n1,early\n2,bob\n3,cara\n")
+    write(f"{d}/shop.people.2.csv", "id,name\n1,later\n")
+    cfg = config("jdbc", d, tmp_path, on_duplicate=policy)
+    rep = Restorer(spark, cfg).run()
+    assert rep.ok, [t.error for t in rep.tables]
+    live = spark.read.jdbc(cfg.jdbc_url, "shop.people", properties=PROPS)
+    got = {r["id"]: r["name"] for r in live.collect()}
+    assert got == {1: winner, 2: "bob", 3: "cara"}

@@ -75,18 +75,6 @@ def checksum(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
     return df.agg(*checksum_aggs(cols))
 
 
-def checksum_sql(table: str, cols: list[str]) -> str:
-    """The same triple as ANSI SQL (DuckDB-runnable oracle)."""
-    parts = ", ".join(f'coalesce(cast("{c}" as varchar), \'\\N\') ' for c in cols)
-    canon = f"concat_ws('{SEP}', {parts})"
-    return (
-        f"SELECT count(*) AS kvs, "
-        f"CAST(sum(length({canon})) AS BIGINT) AS total_bytes, "
-        f"bit_xor(CAST(concat('0x', substr(md5({canon}), 1, 15)) AS BIGINT)) AS checksum "
-        f"FROM {table}"
-    )
-
-
 class Checksum:
     """Driver-side mergeable checksum value (mirrors verification.KVChecksum.Add)."""
 

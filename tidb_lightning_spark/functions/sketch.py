@@ -121,8 +121,7 @@ def hll_register_vectors(
     df: DataFrame, key: Column | str, group_cols: list[str]
 ) -> DataFrame:
     """(group_cols..., regs: array<int> of length HLL_M + 1): the
-    per-group HLL register maxima as a MERGEABLE vector — the batch
-    analog of the streaming state (streaming/events.py), and the
+    per-group HLL register maxima as a MERGEABLE vector — the
     standard warehouse surface: sketch each partition/table/day once,
     persist the ~1 KiB vector, union later with hll_merge instead of
     rescanning raw data. Slot HLL_M is the phantom NULL-key register

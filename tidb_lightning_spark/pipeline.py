@@ -410,7 +410,6 @@ class _FilesTarget(_Target):
 
     def __init__(self, r, tbl, sig):
         super().__init__(r, tbl, sig)
-        self.duplicate_policy = r.cfg.duplicate_resolution
         self.part_cols = None
 
     def replay_view(self, view) -> None:
@@ -436,7 +435,7 @@ class _FilesTarget(_Target):
         groups = self.r._plan_engines(self.tbl.data_files)
         if (
             len(groups) > 1
-            and self.duplicate_policy == "none"
+            and self.r.duplicate_policy == "none"
             and self.part_cols is None
         ):
             self.groups = groups
@@ -587,7 +586,6 @@ class _JDBCTarget(_Target):
     def __init__(self, r, tbl, sig):
         super().__init__(r, tbl, sig)
         self.sink = r.jdbc_sink
-        self.duplicate_policy = r.cfg.on_duplicate
         self.dbname = f"{r.cfg.jdbc_table_prefix}{tbl.db}"
         self.dbtable = f"{self.dbname}.{tbl.name}"
         self.staging = f"{tbl.name}__tls_stg"
@@ -855,6 +853,13 @@ class Restorer:
             self.jdbc_sink = JDBCSink(
                 cfg.jdbc_url, properties=props, on_duplicate=cfg.on_duplicate
             )
+        # the active sink's PK-conflict policy (tidb.go:80-88 names): it
+        # picks the winner among duplicate keys and, unless "none", keeps
+        # the row id on read as the first/last ordering key
+        self.duplicate_policy = (
+            cfg.duplicate_resolution if self.jdbc_sink is None
+            else cfg.on_duplicate
+        )
         # per-db cache of TARGET-fetched table models (no-schema + jdbc)
         self._remote_models: dict[str, dict] = {}
         # resolve trash dirs stranded by a crash between Import's renames
@@ -1230,9 +1235,9 @@ class Restorer:
         # PK-conflict resolution (tidb.go:80-88 policy names; the row id
         # orders first/last) BEFORE the checksum observation, so the
         # ingest checksum covers exactly the delivered rows
-        if target.duplicate_policy != "none" and info.primary_key:
+        if self.duplicate_policy != "none" and info.primary_key:
             df = apply_duplicate_policy(
-                df, info.primary_key, target.duplicate_policy,
+                df, info.primary_key, self.duplicate_policy,
                 order_col=ROWID_COL,
             )
         if ROWID_COL in df.columns and not (
@@ -1576,9 +1581,7 @@ class Restorer:
         parts: list[DataFrame] = []
         # duplicate resolution needs the row id downstream as the
         # deterministic first/last ordering key
-        keep_rowid = (
-            True if self.cfg.duplicate_resolution != "none" else None
-        )
+        keep_rowid = True if self.duplicate_policy != "none" else None
 
         csv_files = [f for f in data_files if f.type == "csv"]
         sql_files = [f for f in data_files if f.type == "sql"]

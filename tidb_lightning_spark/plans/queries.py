@@ -64,6 +64,12 @@ def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     return df
 
 
+# widen()'s row-group count per table, under load()'s key: footer reads
+# cost one file open per part file, and the count never changes for a
+# table handle load() already serves
+_ROW_GROUPS_MEMO: dict[tuple[str, str, str], int] = {}
+
+
 def dec(col: str, p: int = 18, s: int = 2):
     return F.col(col).cast(f"decimal({p},{s})")
 
@@ -80,30 +86,23 @@ def widen(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     learn a number the planner derives from the same math.
     """
     import math
-    import os
+
+    from tidb_lightning_spark.paths import file_uri_to_path
 
     df = load(spark, sf_dir, table)
     cores = spark.sparkContext.defaultParallelism
-    path = f"{sf_dir}/{table}.parquet"
-    from tidb_lightning_spark.paths import file_uri_to_path
-
-    path = file_uri_to_path(path)
+    path = file_uri_to_path(f"{sf_dir}/{table}.parquet")
     if "://" in path:
         # scheme'd (object-store) corpus: size the peek through the same
         # Hadoop FS walk discovery uses (sources.loader._walk) — the
-        # os.path branch below would silently report 0 bytes and force
+        # os.path listing below would silently report 0 bytes and force
         # the repartition branch on every remote table
         from tidb_lightning_spark.sources.loader import _walk
 
         size = sum(sz for _, sz in _walk(path, spark=spark))
-    elif os.path.isfile(path):
-        size = os.path.getsize(path)
     else:
-        size = sum(
-            os.path.getsize(os.path.join(r, f))
-            for r, _, fs in os.walk(path)
-            for f in fs
-        )
+        size = sum(os.path.getsize(p) for p in _part_files(path))
+
     def conf_bytes(key: str, default: int) -> int:
         # unset size confs stringify with a unit suffix ("134217728b",
         # "128MB") on vanilla sessions — parse, don't int()
@@ -125,9 +124,15 @@ def widen(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     # harness's fixtures; also the tail files of any real table) yields
     # ONE working task and n_parts-1 empty ones — byte math alone would
     # wrongly conclude the scan is already wide. At scale the cap is
-    # bytes/~128 MiB >> cores and this clamp never binds.
+    # bytes/~128 MiB >> cores and this clamp never binds. The byte term
+    # stays: the scan's width is the smaller of the two, and a small
+    # table with many row groups still gets only as many splits as its
+    # bytes allow.
     if "://" not in path:
-        n_parts = min(n_parts, _footer_num_row_groups(path))
+        key = (spark.sparkContext.applicationId, sf_dir, table)
+        if key not in _ROW_GROUPS_MEMO:
+            _ROW_GROUPS_MEMO[key] = _footer_num_row_groups(path)
+        n_parts = min(n_parts, _ROW_GROUPS_MEMO[key])
     if n_parts < cores:
         return df.repartition(cores)
     return df
@@ -140,9 +145,6 @@ def _footer_num_rows(path: str, spark: SparkSession | None = None) -> int:
     so it falls back to a Spark count — still footer-driven (parquet
     count(*) reads row-group metadata, not data pages), just executed by
     the cluster's filesystem connector instead of local pyarrow."""
-    import glob as _glob
-    import re as _re
-
     import pyarrow.parquet as _pq
 
     from tidb_lightning_spark.paths import file_uri_to_path
@@ -155,12 +157,7 @@ def _footer_num_rows(path: str, spark: SparkSession | None = None) -> int:
                 f"footer count"
             )
         return spark.read.parquet(path).count()
-    if os.path.isdir(path):
-        return sum(
-            _pq.ParquetFile(p).metadata.num_rows
-            for p in sorted(_glob.glob(os.path.join(path, "*.parquet")))
-        )
-    return _pq.ParquetFile(path).metadata.num_rows
+    return sum(_pq.ParquetFile(p).metadata.num_rows for p in _part_files(path))
 
 
 def _footer_num_row_groups(path: str) -> int:
@@ -168,27 +165,36 @@ def _footer_num_row_groups(path: str) -> int:
     side footer metadata only (the scan-parallelism cap widen() clamps
     its byte-split estimate with). Local paths only; callers keep the
     byte estimate for scheme'd URIs."""
-    import glob as _glob
-
     import pyarrow.parquet as _pq
 
-    if os.path.isdir(path):
-        return sum(
-            _pq.ParquetFile(p).metadata.num_row_groups
-            for p in sorted(_glob.glob(os.path.join(path, "*.parquet")))
-        ) or 1
-    return _pq.ParquetFile(path).metadata.num_row_groups or 1
+    return sum(
+        _pq.ParquetFile(p).metadata.num_row_groups for p in _part_files(path)
+    ) or 1
 
 
 def _first_parquet_batch(path: str, columns: list[str]):
     """One tiny record batch from the first part file (file or dir)."""
-    import glob as _glob
-
     import pyarrow.parquet as _pq
 
-    if os.path.isdir(path):
-        path = sorted(_glob.glob(os.path.join(path, "*.parquet")))[0]
-    return next(_pq.ParquetFile(path).iter_batches(batch_size=1, columns=columns))
+    first = _part_files(path)[0]
+    return next(_pq.ParquetFile(first).iter_batches(batch_size=1, columns=columns))
+
+
+def _part_files(path: str) -> list[str]:
+    """A local parquet table's data files in sorted order: the file
+    itself, or every `*.parquet` under a directory at any depth (Hive
+    `k=v/` partition dirs included), skipping the `_`/`.`-prefixed
+    names Spark's reader treats as hidden."""
+    if not os.path.isdir(path):
+        return [path]
+    out = []
+    for root, dirs, files in os.walk(path):
+        dirs[:] = sorted(d for d in dirs if not d.startswith(("_", ".")))
+        out += [
+            os.path.join(root, f) for f in sorted(files)
+            if f.endswith(".parquet") and not f.startswith(("_", "."))
+        ]
+    return out
 
 
 @dataclass(frozen=True)
@@ -1051,9 +1057,8 @@ def knn_cosine_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """30-minute-gap sessionization — the batch twin of the streaming
-    session window (streaming module uses session_window on the same
-    semantics)."""
+    """30-minute-gap sessionization: per-user sessions split by the
+    lag-gap flag + running sum."""
     e = load(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     # Gap test: ts is TIMESTAMP_NTZ, which Spark refuses to cast to BIGINT
@@ -5111,8 +5116,7 @@ def events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch sessionization (30-minute inactivity gap): per-user event
     streams split into sessions by the classic lag-gap flag + running
     sum, then rolled into one summary row (session count, events and
-    seconds per session) — the batch twin of the streaming session
-    windows in streaming/events.py.
+    seconds per session).
 
     Scale shape: both windows partition by user_id — the same single
     keyed shuffle, no global sort; per-session durations are integer
@@ -7253,10 +7257,7 @@ KN_SCALE = 10**12  # fixed-point unit for the smoothed probability
 KN_TOPK = 25
 
 
-def _kn_bigram_oracle() -> str:
-    toks = TX.SQL_TOKENS.format(col="lower(text)")
-    s = KN_SCALE
-    return f"""
+_KN_COUNTS_SQL = """
     WITH toks AS (
       SELECT {toks} AS t FROM documents
     ), pairs AS (
@@ -7282,17 +7283,26 @@ def _kn_bigram_oracle() -> str:
       FROM big GROUP BY w2
     ), tot AS (
       SELECT CAST(count(*) AS BIGINT) AS nbb FROM big
-    ), scored AS (
-      SELECT big.w1, big.w2, big.c, lft.c1, lft.n1r, rgt.n1l,
-             CAST(
-               ({s} * (4 * big.c - 3)) // (4 * lft.c1)
-               + ({s} * 3 * lft.n1r * rgt.n1l)
-                 // (4 * lft.c1 * tot.nbb)
-               AS BIGINT) AS p_scaled
+    ), joined AS (
+      SELECT big.w1, big.w2, big.c, lft.c1, lft.n1r, rgt.n1l, tot.nbb
       FROM big
       JOIN lft USING (w1)
       JOIN rgt USING (w2)
       CROSS JOIN tot
+    )
+"""
+
+
+def _kn_bigram_oracle() -> str:
+    head = _KN_COUNTS_SQL.format(toks=TX.SQL_TOKENS.format(col="lower(text)"))
+    s = KN_SCALE
+    return f"""{head}, scored AS (
+      SELECT w1, w2, c, c1, n1r, n1l,
+             CAST(
+               ({s} * (4 * c - 3)) // (4 * c1)
+               + ({s} * 3 * n1r * n1l) // (4 * c1 * nbb)
+               AS BIGINT) AS p_scaled
+      FROM joined
     )
     SELECT w1, w2, c, c1, n1r, n1l, p_scaled, rank
     FROM (
@@ -7362,8 +7372,8 @@ def kn_bigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _kn_counts(spark: SparkSession, sf_dir: str):
-    """Shared KN count machinery: the bigram table joined with its
-    margins — (w1, w2, c, c1, n1r, n1l, nbb). Returns (joined, big);
+    """KN count machinery (the Spark side of _KN_COUNTS_SQL): the bigram
+    table joined with its margins — (w1, w2, c, c1, n1r, n1l, nbb). Returns (joined, big);
     the caller owns releasing `big` (cache_acquire'd here)."""
     d = load(spark, sf_dir, "documents")
     toks = d.select(TX.tokens(F.lower(F.col("text"))).alias("t"))
@@ -7401,132 +7411,6 @@ def _kn_counts(spark: SparkSession, sf_dir: str):
         .crossJoin(F.broadcast(tot))
     )
     return joined, big
-
-
-_KN_COUNTS_SQL = """
-    WITH toks AS (
-      SELECT {toks} AS t FROM documents
-    ), pairs AS (
-      SELECT t[i] AS w1, t[i + 1] AS w2
-      FROM toks, UNNEST(range(1, len(t))) AS u(i)
-      WHERE len(t) >= 2
-    ), big AS (
-      SELECT w1, w2, CAST(count(*) AS BIGINT) AS c
-      FROM pairs GROUP BY w1, w2
-    ), lft AS (
-      SELECT w1, CAST(SUM(c) AS BIGINT) AS c1,
-             CAST(count(*) AS BIGINT) AS n1r
-      FROM big GROUP BY w1
-    ), rgt AS (
-      SELECT w2, CAST(count(*) AS BIGINT) AS n1l
-      FROM big GROUP BY w2
-    ), tot AS (
-      SELECT CAST(count(*) AS BIGINT) AS nbb FROM big
-    ), joined AS (
-      SELECT big.w1, big.w2, big.c, lft.c1, lft.n1r, rgt.n1l, tot.nbb
-      FROM big
-      JOIN lft USING (w1)
-      JOIN rgt USING (w2)
-      CROSS JOIN tot
-    )
-"""
-
-
-def _kn_inputs_oracle() -> str:
-    toks = TX.SQL_TOKENS.format(col="lower(text)")
-    head = _KN_COUNTS_SQL.format(toks=toks)
-    return f"""{head}
-    SELECT w1, w2, c, c1, n1r, n1l, nbb, rank
-    FROM (
-      SELECT *, CAST(row_number() OVER (
-        ORDER BY c DESC, w1, w2) AS INT) AS rank
-      FROM joined
-    )
-    WHERE rank <= {KN_TOPK}
-    ORDER BY rank
-    """
-
-
-@register("kn_bigram_inputs", _kn_inputs_oracle())
-def kn_bigram_inputs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Diagnostic twin of kn_bigram_lm (r11 verdict item 1): the RAW
-    integer inputs only — the top bigrams by (c DESC, w1, w2)
-    with every margin the KN formula consumes and ZERO division — so a
-    driver-red kn_bigram_lm bisects: this row red = the tokenize/count
-    stage diverges; this green + kn red = the scoring arithmetic (or
-    its output typing) is the culprit. Row selection keys on raw
-    counts, never on a computed score, so the emitted row SET cannot
-    depend on the suspect stage."""
-    joined, big = _kn_counts(spark, sf_dir)
-    w_rank = Window.orderBy(F.col("c").desc(), F.asc("w1"), F.asc("w2"))
-    out = (
-        joined.withColumn(
-            "rank", F.row_number().over(w_rank).cast("int")
-        )
-        .filter(F.col("rank") <= KN_TOPK)
-        .select("w1", "w2", "c", "c1", "n1r", "n1l", "nbb", "rank")
-        .orderBy("rank")
-    )
-    out = D._unpersist_on_gc(out, big)
-    D.cache_release(big)
-    return out
-
-
-# single-floor-div twin runs at a smaller fixed point: the combined
-# numerator S*(nbb*(4c-3) + 3*n1r*n1l) carries an extra nbb factor, so
-# 10^12 would overflow int64 already at nbb*c ~ 2.3e6 — 10^6 keeps the
-# gate-scale headroom above 10^6x in both engines
-KN_SCALE_1DIV = 10**6
-
-
-def _kn_singlediv_oracle() -> str:
-    toks = TX.SQL_TOKENS.format(col="lower(text)")
-    head = _KN_COUNTS_SQL.format(toks=toks)
-    s = KN_SCALE_1DIV
-    return f"""{head}
-    SELECT w1, w2, c, p1_scaled, rank
-    FROM (
-      SELECT w1, w2, c,
-             CAST(({s} * (nbb * (4 * c - 3) + 3 * n1r * n1l))
-                  // (4 * c1 * nbb) AS BIGINT) AS p1_scaled,
-             CAST(row_number() OVER (
-               ORDER BY c DESC, w1, w2) AS INT) AS rank
-      FROM joined
-    )
-    WHERE rank <= {KN_TOPK}
-    ORDER BY rank
-    """
-
-
-@register("kn_bigram_singlediv", _kn_singlediv_oracle())
-def kn_bigram_singlediv(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Second diagnostic twin of kn_bigram_lm (r11 verdict item 1): the
-    same smoothed probability as ONE floor-division —
-    (S*(nbb*(4c-3) + 3*n1r*n1l)) DIV (4*c1*nbb) — over the same
-    count-keyed row set as kn_bigram_inputs. kn red + inputs green +
-    this green convicts the two-term DIV sum specifically; this red
-    too convicts integer division at large. Fixed point is
-    KN_SCALE_1DIV (see above) for int64 headroom with the extra nbb
-    factor in the numerator."""
-    s = KN_SCALE_1DIV
-    joined, big = _kn_counts(spark, sf_dir)
-    w_rank = Window.orderBy(F.col("c").desc(), F.asc("w1"), F.asc("w2"))
-    out = (
-        joined.select(
-            "w1", "w2", "c",
-            F.expr(
-                f"({s} * (nbb * (4 * c - 3) + 3 * n1r * n1l))"
-                f" DIV (4 * c1 * nbb)"
-            ).cast("long").alias("p1_scaled"),
-        )
-        .withColumn("rank", F.row_number().over(w_rank).cast("int"))
-        .filter(F.col("rank") <= KN_TOPK)
-        .select("w1", "w2", "c", "p1_scaled", "rank")
-        .orderBy("rank")
-    )
-    out = D._unpersist_on_gc(out, big)
-    D.cache_release(big)
-    return out
 
 
 # ---------------------------------------------------------------------------

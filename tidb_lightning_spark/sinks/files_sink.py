@@ -34,6 +34,59 @@ TARGET_FILE_BYTES = 96 * 1024 * 1024  # reference target region size
 ENGINE_MANIFEST = "_tls_engine.json"  # closed-engine marker inside staging
 
 
+def _n_ranges(spark, source_bytes: int) -> int:
+    """Range count for a sorted write: 96 MiB target files at scale
+    (first term wins on big tables); floor at cluster parallelism for
+    small inputs so the sort+write isn't single-threaded (second term,
+    local bench / tail tables — 2 MiB floor keeps every core busy; on a
+    shared cluster ingesting many tables concurrently, idle cores do
+    other tables, so the 96 MiB term is what governs at scale). More,
+    smaller range partitions are still globally non-overlapping —
+    correctness is unaffected."""
+    cores = spark.sparkContext.defaultParallelism
+    return max(
+        (source_bytes + TARGET_FILE_BYTES - 1) // TARGET_FILE_BYTES,
+        min(cores, max(1, source_bytes // (2 * 1024 * 1024))),
+        1,
+    )
+
+
+def _range_sorted(
+    df: DataFrame,
+    sort_columns: list[str] | None,
+    source_bytes: int,
+    observation=None,
+    observe_aggs: list | None = None,
+    n_ranges: int | None = None,
+) -> DataFrame:
+    """The write plan of a table or engine: range-partition on
+    `sort_columns`, then sort each partition, with `observation` (if
+    any) attached so that only the write job evaluates it.
+
+    One shuffle: Spark's external sort handles spill (the SST/pebble
+    analog). repartitionByRange SAMPLES its input, re-executing the
+    read+transform chain once to pick bounds. That extra scan is
+    deliberately NOT avoided with persist(): measured at 37 MiB and
+    373 MiB, caching the parsed rows costs 2-3x more (cache build +
+    columnar re-read) than re-parsing, and at 100 TB a full-input
+    persist is a second copy of the dataset on executor disks while the
+    sampling scan remains a ~1x read with pruning intact."""
+    out = df
+    if sort_columns:
+        n = n_ranges or _n_ranges(df.sparkSession, source_bytes)
+        if n > 1:
+            out = out.repartitionByRange(n, *sort_columns)
+    # metrics node ABOVE the exchange: the range sampler executes the
+    # exchange INPUT, so metrics attached below it would accumulate twice
+    # (count 2x, xor self-cancelling); above it, only the write job
+    # evaluates them — one exact accumulation with zero extra scans.
+    if observation is not None:
+        out = out.observe(observation, *observe_aggs)
+    if sort_columns:
+        out = out.sortWithinPartitions(*sort_columns)
+    return out
+
+
 @dataclass
 class CommitResult:
     path: str
@@ -127,47 +180,9 @@ class FilesSink:
         if os.path.exists(staging):
             shutil.rmtree(staging)
 
-        out = df
-        if sort_columns:
-            # Range count: 96 MiB target files at scale (first term wins on
-            # big tables); floor at cluster parallelism for small inputs so
-            # the sort+write isn't single-threaded (second term, local
-            # bench / tail tables — 2 MiB floor keeps every core busy; on a
-            # shared cluster ingesting many tables concurrently, idle cores
-            # do other tables, so the 96 MiB term is what governs at scale).
-            # More, smaller range partitions are still globally
-            # non-overlapping — correctness is unaffected.
-            spark = df.sparkSession
-            cores = spark.sparkContext.defaultParallelism
-            n = n_ranges or max(
-                (source_bytes + TARGET_FILE_BYTES - 1) // TARGET_FILE_BYTES,
-                min(cores, max(1, source_bytes // (2 * 1024 * 1024))),
-                1,
-            )
-            # one shuffle: range-partition on the PK, then local sort —
-            # Spark's external sort handles spill (the SST/pebble analog).
-            # repartitionByRange SAMPLES its input, re-executing the
-            # read+transform chain once to pick bounds. That extra scan is
-            # deliberately NOT avoided with persist(): measured at 37 MiB
-            # and 373 MiB, caching the parsed rows costs 2-3x more (cache
-            # build + columnar re-read) than re-parsing, and at 100 TB a
-            # full-input persist is a second copy of the dataset on
-            # executor disks while the sampling scan remains a ~1x read
-            # with pruning intact.
-            if n > 1:
-                out = out.repartitionByRange(n, *sort_columns)
-            # metrics node ABOVE the exchange: the range sampler executes
-            # the exchange INPUT, so metrics attached below it would
-            # accumulate twice (count 2x, xor self-cancelling); above it,
-            # only the write job evaluates them — one exact accumulation
-            # with zero extra scans.
-            if observation is not None:
-                out = out.observe(observation, *observe_aggs)
-                observation = None
-            out = out.sortWithinPartitions(*sort_columns)
-        if observation is not None:  # unsorted path: write job is the only job
-            out = out.observe(observation, *observe_aggs)
-
+        out = _range_sorted(
+            df, sort_columns, source_bytes, observation, observe_aggs, n_ranges
+        )
         writer = out.write.mode("overwrite").format(self.fmt)
         if partition_columns:
             writer = writer.partitionBy(*partition_columns)
@@ -290,23 +305,9 @@ class FilesSink:
         if os.path.exists(staging):
             shutil.rmtree(staging)
 
-        out = df
-        if sort_columns:
-            spark = df.sparkSession
-            cores = spark.sparkContext.defaultParallelism
-            n = max(
-                (source_bytes + TARGET_FILE_BYTES - 1) // TARGET_FILE_BYTES,
-                min(cores, max(1, source_bytes // (2 * 1024 * 1024))),
-                1,
-            )
-            if n > 1:
-                out = out.repartitionByRange(n, *sort_columns)
-            if observation is not None:  # above the exchange — see write_table
-                out = out.observe(observation, *observe_aggs)
-                observation = None
-            out = out.sortWithinPartitions(*sort_columns)
-        if observation is not None:
-            out = out.observe(observation, *observe_aggs)
+        out = _range_sorted(
+            df, sort_columns, source_bytes, observation, observe_aggs
+        )
         out.write.mode("overwrite").format(self.fmt).save(staging)
         if manifest is not None:
             # closed-engine manifest: written AFTER the data files, so a
@@ -462,11 +463,7 @@ def write_zordered(
 
     z = zorder_value(df, zorder_columns, bits=bits)
     tagged = df.withColumn("_zv", z)
-    n = max(
-        1, (source_bytes + TARGET_FILE_BYTES - 1) // TARGET_FILE_BYTES
-    )
-    cores = df.sparkSession.sparkContext.defaultParallelism
-    n = max(n, min(cores, max(1, source_bytes // (2 * 1024 * 1024))))
+    n = _n_ranges(df.sparkSession, source_bytes)
     out = (
         tagged.repartitionByRange(n, F.col("_zv"))
         .sortWithinPartitions("_zv")

@@ -38,6 +38,7 @@ from pyspark.sql import types as T
 
 from tidb_lightning_spark.schema.ddl import TableInfo
 from tidb_lightning_spark.sources.csv_source import CSVConfig
+from tidb_lightning_spark.streaming.events import drain_available
 
 
 def _allocate_batch_base(checkpoint_dir: str, batch_id: int, n_rows: int) -> int:
@@ -136,31 +137,30 @@ def stream_restore(
     file_columns: list[str] | None = None,
     pinned_timestamp: str = "1970-01-01 00:00:00",
     strict: bool = False,
-    available_now: bool = True,
     max_files_per_trigger: int | None = None,
     fmt: str = "csv",
-    compact_every: int | None = 16,
+    compact_every: int = 16,
 ):
     """Incrementally restore new data files matching `source_glob` into
     `table_dir`. Each call drains everything currently available
     (trigger availableNow) and returns; re-running with the same
     `checkpoint_dir` ingests only files that arrived since — the
-    continuous-restore loop. Set available_now=False for an always-on
-    query (caller manages the handle). fmt: "csv" or "jsonl".
+    continuous-restore loop. fmt: "csv" or "jsonl".
 
     Per-batch `_batch_id=N` dirs are tier-compacted like the generic
     streaming sink (curation.TieredCompactor) so a long-running restore
     keeps a bounded dir count; read a folded table back with
     `streaming.curation.read_table` (`cli sql` routes folded tables
-    through it automatically). `compact_every=None`, or a scheme'd
-    remote `table_dir`, keeps the legacy flat layout."""
+    through it automatically). A scheme'd remote `table_dir` keeps the
+    flat per-batch layout: the fold's atomic rename is local-filesystem
+    IO."""
     from tidb_lightning_spark.operators.transform import (
         ERR_COL,
         transform_table,
     )
 
     compactor = None
-    if compact_every and "://" not in table_dir:
+    if "://" not in table_dir:
         from tidb_lightning_spark.streaming.curation import TieredCompactor
 
         compactor = TieredCompactor(
@@ -220,18 +220,4 @@ def stream_restore(
             compactor.run(batch_id)
         out.write.mode("overwrite").parquet(f"{table_dir}/_batch_id={batch_id}")
 
-    writer = stream.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    q = writer.start()
-    if available_now:
-        q.awaitTermination()
-        import time as _time
-
-        for _ in range(200):
-            if all(a.id != q.id for a in spark.streams.active):
-                break
-            _time.sleep(0.05)
-    return q
+    return drain_available(stream, write_batch, checkpoint_dir)
