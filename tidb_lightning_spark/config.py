@@ -51,7 +51,11 @@ class Config:
     jdbc_url: str = ""
     jdbc_driver: str = ""  # JDBC driver class (e.g. Derby embedded)
     jdbc_table_prefix: str = ""
-    on_duplicate: str = "replace"  # replace | ignore | error (jdbc backend)
+    # replace | ignore | error (jdbc backend). "Later"/"earlier" follow the
+    # row id: within a file that is line order; across CSV/Parquet files
+    # it is Spark's scan order, which packs the largest split first
+    # (SQL-dump row ids follow file order)
+    on_duplicate: str = "replace"
     # files-backend PK-conflict resolution (reference duplicate-resolution
     # knob): none = write as-is (fastest), else resolve via on_duplicate
     # semantics before the sort-write

@@ -4,27 +4,25 @@ The reference accumulates per-chunk checksums `{bytes, kvs, crc64-ecma xor}`
 and merges them associatively (lightning/verification/checksum.go:27-93);
 XOR makes the aggregate order-independent, so it parallelizes perfectly.
 
-We keep the same algebra but define the per-row hash over *logical row
-content* (we have no TiKV key bytes): a canonical string serialization of
-the row -> md5 -> first 15 hex chars -> int64. 60 bits keeps the value
-inside a signed BIGINT in every engine (Spark, DuckDB, MySQL), which makes
-the checksum reproducible by the judge's oracle with plain ANSI SQL:
+We keep the same algebra over the row's TYPED column values (we have no
+TiKV key bytes, and like the reference we never render a row as text):
 
-    SELECT count(*)                                   AS kvs,
-           sum(length(<canon>))                       AS total_bytes,
-           bit_xor(CAST(conv(substr(md5(<canon>),1,15),16,10) AS BIGINT))
-                                                      AS checksum
-    FROM t
+  * kvs         = row count;
+  * total_bytes = sum of typed widths: the octet length of every string
+    and binary value, Spark's fixed `defaultSize` for every other type
+    (INT 4, BIGINT 8, DATE 4, DECIMAL(p<=18) 8, ...); a NULL counts 0;
+  * checksum    = bit_xor of xxhash64 over the columns, in the delivered
+    frame's order, followed by a null mask (one bit per column, 63
+    columns per BIGINT term). xxhash64 skips NULL arguments, so without
+    the mask rows (NULL, 5) and (5, NULL) would hash alike and a NULL
+    that moved to another column would go unseen.
 
-Canonical serialization rules (must match `canonical_sql_expr` below):
-  * column order = explicit list passed by the caller (sorted by name when
-    omitted) so both sides agree without schema reflection;
-  * every column cast to string; floats must be pre-rounded/cast by the
-    caller if bit-stable text is required;
-  * NULL -> literal '\\N' (the reference CSV null sentinel,
-    lightning/mydump/csv_parser.go:108-117);
-  * fields joined with '\\x1f' (unit separator — cannot appear in TPC-H-ish
-    text columns).
+Both sides of the comparison are Spark frames of the same schema (the
+ingest observe, the readback and the recompute from source), so a typed
+hash suffices; a JDBC readback is cast to the ingest schema first.
+`HASH_KIND` names this construction in stored checkpoint records, so a
+value recorded under another construction is never merged into one
+computed under this one.
 
 Everything here is built-in Catalyst expressions — no Python UDF, the whole
 aggregation stays inside whole-stage codegen and merges map-side.
@@ -34,45 +32,81 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-SEP = "\x1f"
-NULL_SENTINEL = "\\N"
+HASH_KIND = "xxhash64-typed"
+
+# Spark's DataType.defaultSize for the flat scalar types the import
+# model produces (schema/types.py); strings and binary count octets
+_WIDTHS = {
+    T.ByteType: 1,
+    T.ShortType: 2,
+    T.IntegerType: 4,
+    T.LongType: 8,
+    T.FloatType: 4,
+    T.DoubleType: 8,
+    T.DateType: 4,
+    T.TimestampType: 8,
+    T.TimestampNTZType: 8,
+}
 
 
-def canonical_row(cols: list[str]) -> Column:
-    """Canonical string serialization of a row (Spark side)."""
-    parts = [F.coalesce(F.col(c).cast("string"), F.lit(NULL_SENTINEL)) for c in cols]
-    return F.concat_ws(SEP, *parts)
+def _quote(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"
 
 
-def row_hash64(cols: list[str]) -> Column:
-    """60-bit stable row hash as BIGINT (Spark side)."""
-    canon = canonical_row(cols)
-    return F.conv(F.substring(F.md5(canon), 1, 15), 16, 10).cast("bigint")
+def _width_sql(f: T.StructField) -> str:
+    c, t = _quote(f.name), f.dataType
+    if isinstance(t, (T.StringType, T.BinaryType)):
+        return f"coalesce(octet_length({c}), 0)"
+    if isinstance(t, T.DecimalType):
+        width = 8 if t.precision <= 18 else 16
+    elif type(t) in _WIDTHS:
+        width = _WIDTHS[type(t)]
+    else:
+        raise TypeError(f"checksum: no fixed width for column {f.name!r} of type {t}")
+    return f"if({c} IS NULL, 0, {width})"
 
 
-def checksum_aggs(cols: list[str]) -> list[Column]:
-    """The triple as aggregate Columns — usable in df.agg() or as
-    df.observe() metrics (accumulated DURING the sink's write job, the
-    exact accumulate-while-delivering shape of the reference's per-chunk
-    checksum, restore.go:2325-2332, with no extra source scan)."""
-    canon = canonical_row(cols)
+def _balanced(op: str, terms: list[str]) -> str:
+    """`a op b op ...` as a balanced tree, so a wide table's expression
+    stays log-deep for the analyzer and codegen."""
+    while len(terms) > 1:
+        terms = [
+            f"({terms[i]} {op} {terms[i + 1]})" if i + 1 < len(terms) else terms[i]
+            for i in range(0, len(terms), 2)
+        ]
+    return terms[0]
+
+
+def checksum_aggs(fields: list[T.StructField]) -> list[Column]:
+    """The triple as aggregate Columns over the typed `fields` — usable in
+    df.agg() or as df.observe() metrics (accumulated DURING the sink's
+    write job, the exact accumulate-while-delivering shape of the
+    reference's per-chunk checksum, restore.go:2325-2332, with no extra
+    source scan)."""
+    names = [_quote(f.name) for f in fields]
+    masks = [
+        _balanced("|", [
+            f"if({c} IS NULL, {1 << j}L, 0L)" for j, c in enumerate(names[i:i + 63])
+        ])
+        for i in range(0, len(names), 63)
+    ]
     return [
         F.count(F.lit(1)).alias("kvs"),
-        F.sum(F.length(canon)).cast("bigint").alias("total_bytes"),
-        F.bit_xor(row_hash64(cols)).alias("checksum"),
+        F.expr(f"sum({_balanced('+', [_width_sql(f) for f in fields])})").alias("total_bytes"),
+        F.expr(f"bit_xor(xxhash64({', '.join(names + masks)}))").alias("checksum"),
     ]
 
 
-def checksum(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
+def checksum(df: DataFrame, fields: list[T.StructField] | None = None) -> DataFrame:
     """(kvs, total_bytes, checksum) — the reference's verification triple.
 
     Mirrors lightning/verification/checksum.go:39-93: count, byte size and
     an XOR-merged per-row hash. Computed at ingest time AND re-computed on
     the written table; equality = verified load (restore.go:2194-2213).
     """
-    cols = cols or sorted(df.columns)
-    return df.agg(*checksum_aggs(cols))
+    return df.agg(*checksum_aggs(fields or df.schema.fields))
 
 
 class Checksum:

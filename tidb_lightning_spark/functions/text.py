@@ -11,7 +11,8 @@ hash-match values. Shared determinism rules:
     pattern string feeds Spark `split` and DuckDB `string_split_regex`
     (neither engine's string literal eats the backslashes);
   * all hashes derive from md5 -> first 15 hex chars -> BIGINT (60-bit),
-    the same construction as functions/checksum.py;
+    the same construction as the `checksum_lineitem` registry entry
+    (plans/queries.py);
   * ratios are single IEEE divisions of exact integer counts — bit-equal
     across engines.
 """

