@@ -32,7 +32,7 @@ def entry(spark: SparkSession) -> DataFrame:
 # STALEST names — THE RULE (permanent, r9 verdict item 4): new/changed
 # entries first, then every registry query ordered stalest-first by the
 # round of its latest CORRECTNESS_r{N}.json appearance (the registry's
-# 128 entries outgrow two 50-slot windows, so full two-round coverage
+# 119 entries outgrow two 50-slot windows, so full two-round coverage
 # is not possible — priority order is what matters). Current window:
 # kn_bigram_lm (oracle text changed), the r12 operators, then the 29
 # r9-vintage names (r11 verdict item 2), then r10-vintage fill — all
@@ -77,7 +77,7 @@ _DRIVER_PRIORITY = [
     "embedding_norm_profile",
     "vocab_token_ids",
     # r10-vintage fill for the rest of the ~50-slot window (stalest
-    # next; the registry at 128 entries outgrew two 50-slot windows,
+    # next; the registry at 119 entries outgrows two 50-slot windows,
     # so the rule is strictly "new/changed first, then stalest")
     "events_hourly_rollup",
     "checksum_lineitem",
@@ -88,23 +88,20 @@ _DRIVER_PRIORITY = [
     "doc_rare_tokens",
     "corpus_clean_pipeline",
     "near_dup_clusters",
-    "near_dup_embeddings",
     "near_dup_embeddings_lsh",
-    "knn_cosine_lsh",
-    "knn_cosine_ivf",
     "customers_without_orders",
-    "events_distinct_users_hll",
     "events_distinct_users_hll_merged",
-    "funnel_view_click_purchase",
     "funnel_signup_4stage",
 ]
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md §2,
-    driver-unverified entries first (see _DRIVER_PRIORITY)."""
+    driver-unverified entries first (see _DRIVER_PRIORITY). A priority
+    name missing from the registry raises KeyError rather than silently
+    shrinking the verify window."""
     reg = Q.registry()
-    ordered = [n for n in _DRIVER_PRIORITY if n in reg] + [
+    ordered = _DRIVER_PRIORITY + [
         n for n in reg if n not in _DRIVER_PRIORITY
     ]
     return {name: reg[name].spark for name in ordered}

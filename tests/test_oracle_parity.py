@@ -77,3 +77,20 @@ def test_entry_smoke(spark):
     rows = df.collect()
     assert len(rows) > 0
     assert len(entrymod.queries()) >= len(SPECS)
+
+
+def test_hand_kept_name_lists_name_registry_entries():
+    """Name lists kept by hand beside the registry must name real
+    entries: a stale name would shrink the driver's verify window, lose
+    `explain`'s eager-construction note or drop an always-run parity
+    case, each without an error."""
+    import __spark_entry__ as entrymod
+
+    from tidb_lightning_spark import cli
+
+    reg = set(Q.registry())
+    prio = entrymod._DRIVER_PRIORITY
+    assert len(prio) == len(set(prio)), "duplicate _DRIVER_PRIORITY names"
+    assert set(prio) <= reg, sorted(set(prio) - reg)
+    assert cli._EAGER <= reg, sorted(cli._EAGER - reg)
+    assert _ALWAYS <= reg, sorted(_ALWAYS - reg)

@@ -182,24 +182,30 @@ def test_pack_sequences_single_exchange(spark):
 
 
 def test_hll_shuffles_registers_not_keys(spark):
-    """events_distinct_users_hll: the sketch side aggregates on
-    (event_type, register) — its exchanges carry at most 1024 rows per
-    group, plus the exact-side countDistinct for calibration. Budget: 6
-    exchanges static (register agg 2, exact distinct 2+1, final join 1);
-    AQE broadcast-collapses most at runtime."""
-    plan = plan_of(spark, "events_distinct_users_hll")
-    assert n_exchanges(plan) <= 6, plan
+    """events_distinct_users_hll_merged: every exchange after the scan
+    is keyed on a group (event_type, day) or (event_type, register) —
+    at most 1025 rows per group, never the user keys. Static count is
+    exactly 5:
+      1. per-(event_type, day, register) rho max (hll_register_vectors);
+      2. collect those entries into one vector per (event_type, day);
+      3. per-(event_type, register) max over the exploded day vectors
+         (hll_merge);
+      4. collect the merged entries into one vector per event_type;
+      5. the final orderBy(event_type) range exchange.
+    hll_estimate is map-only on the vectors."""
+    plan = plan_of(spark, "events_distinct_users_hll_merged")
+    assert n_exchanges(plan) == 5, plan
     schema_line = plan.split("ReadSchema")[1].split("\n")[0]
     assert "props" not in schema_line and "value" not in schema_line, (
-        "hll should read only event_type+user_id: " + schema_line
+        "hll should read only event_type+user_id+ts: " + schema_line
     )
 
 
 def test_funnel_all_stages_key_on_user(spark):
-    """funnel_view_click_purchase: every join/agg keys on user_id; the
+    """funnel_signup_4stage: every join/agg keys on user_id; the
     final summary is a 1-row agg. No cartesian, no window over the
     whole table."""
-    plan = plan_of(spark, "funnel_view_click_purchase")
+    plan = plan_of(spark, "funnel_signup_4stage")
     assert "CartesianProduct" not in plan
     schema_line = plan.split("ReadSchema")[1].split("\n")[0]
     assert "props" not in schema_line, (
@@ -248,11 +254,14 @@ def test_13gram_no_cartesian_and_pruned_scan(spark):
 
 
 def test_sessionize_windows_keyed_on_user(spark):
-    """events_sessionize: both windows hash-partition on user_id; the
-    only single-partition work is the 1-row summary agg."""
-    plan = plan_of(spark, "events_sessionize")
+    """sessionize_events: both windows hash-partition on user_id and
+    share that one exchange; the per-session agg keys on (user_id,
+    session_seq), which the window partitioning already satisfies. No
+    single-partition work anywhere."""
+    plan = plan_of(spark, "sessionize_events")
     assert "ntile" not in plan
-    assert plan.count("SinglePartition") == 1
+    assert plan.count("SinglePartition") == 0
+    assert n_exchanges(plan) == 1, plan
     assert re.search(r"hashpartitioning\(user_id", plan), plan
 
 

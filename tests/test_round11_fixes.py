@@ -233,14 +233,15 @@ def test_bpe_sampled_trainer_contract(spark, tmp_path):
         "n_chars long",
     ).write.mode("overwrite").parquet(f"{d}/documents.parquet")
 
-    def table(fn):
+    def table(df):
         return [
             (r["step"], r["left"], r["right"], r["merged"])
-            for r in fn(spark, d).collect()
+            for r in df.collect()
         ]
 
-    full = table(Q.bpe_train_merges)
-    samp = table(Q.bpe_train_merges_sampled)
+    # the full-corpus reference: the same trainer over every doc
+    full = table(Q._bpe_train_loop(Q.load(spark, d, "documents")))
+    samp = table(Q.bpe_train_merges_sampled(spark, d))
     assert full == samp, (full, samp)
     # the separated pairs dominate the merge order
     assert [m[3] for m in full][:3] == ["zq", "xw", "vk"]
@@ -249,7 +250,7 @@ def test_bpe_sampled_trainer_contract(spark, tmp_path):
     sf = "/root/testdata/sf0.001"
     full_fx = [
         (r["left"], r["right"])
-        for r in Q.bpe_train_merges(spark, sf).collect()
+        for r in Q._bpe_train_loop(Q.load(spark, sf, "documents")).collect()
     ]
     samp_fx = [
         (r["left"], r["right"])
@@ -340,8 +341,10 @@ def test_containment_catches_excerpt_jaccard_misses(spark, tmp_path):
 
 def test_hard_negatives_respect_band(spark):
     """Hard-negative mining: every mined pair's cosine sits inside
-    [floor, ceiling]; pairs the plain ANN ranks above the ceiling
-    (likely positives/duplicates) are excluded."""
+    [floor, ceiling]; pairs the plain ANN (the same IVF call without
+    the band) ranks above the ceiling (likely positives/duplicates) are
+    excluded."""
+    from tidb_lightning_spark.functions.similarity import knn_ivf
     from tidb_lightning_spark.plans import queries as Q
 
     sf = "/root/testdata/sf0.01"
@@ -349,7 +352,10 @@ def test_hard_negatives_respect_band(spark):
     hard = Q.hard_negative_mining(spark, sf).collect()
     assert hard, "band too narrow: no negatives mined on the fixture"
     assert all(lo <= r["cosine"] <= hi for r in hard)
-    knn = Q.knn_cosine_ivf(spark, sf).collect()
+    knn = knn_ivf(
+        Q.load(spark, sf, "embeddings"), "vec_id", "embedding",
+        lambda c: c < 10, k=Q.HN_K, n_lists=8, n_probe=3,
+    ).collect()
     above = {
         (r["query_id"], r["neighbor_id"])
         for r in knn if r["cosine"] > hi
@@ -450,11 +456,12 @@ def test_cli_explain(capsys):
     physical plan for a named query; unknown names get a close-match
     hint and exit 1."""
     from tidb_lightning_spark import cli
+    from tidb_lightning_spark.plans import queries as Q
 
     rc = cli.main(["explain"])
     assert rc == 0
     names = capsys.readouterr().out.split()
-    assert "q1_pricing_summary" in names and len(names) >= 125
+    assert "q1_pricing_summary" in names and names == sorted(Q.registry())
 
     rc = cli.main(["explain", "q1_pricing_summry"])  # typo
     assert rc == 1

@@ -64,12 +64,17 @@ def test_sessionize_known_gaps(spark, tmp_path, monkeypatch):
         lambda sp, sf, t: sp.read.parquet(d) if t == "events"
         else orig(sp, sf, t),
     )
-    r = QQ.events_sessionize(spark, SF_CORRECTNESS).collect()[0]
-    assert r["n_sessions"] == 4
-    assert r["n_events"] == 7
-    assert r["max_session_events"] == 3
-    # session seconds: u1a=600, u1b=0, u2=0, u3=1740 -> mean 585
-    assert r["mean_session_seconds"] == pytest.approx(585.0)
+    got = {
+        (r["user_id"], r["session_start"]): (r["n_events"], r["sum_value"])
+        for r in QQ.sessionize_events(spark, SF_CORRECTNESS).collect()
+    }
+    at = lambda m: t0 + datetime.timedelta(minutes=m)  # noqa: E731
+    assert got == {
+        (1, at(0)): (2, 2.0),
+        (1, at(100)): (1, 1.0),
+        (2, at(0)): (1, 1.0),
+        (3, at(0)): (3, 3.0),
+    }
 
 
 def test_int8_quantization_bounds_and_recall_range(spark):

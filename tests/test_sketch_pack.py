@@ -198,7 +198,7 @@ def test_bpe_train_merges_are_monotone_and_composed(spark):
 
     from .conftest import SF_CORRECTNESS
 
-    rows = Q.bpe_train_merges(spark, SF_CORRECTNESS).collect()
+    rows = Q.bpe_train_merges_sampled(spark, SF_CORRECTNESS).collect()
     assert len(rows) == Q.BPE_MERGES
     ns = [r["n_occurrences"] for r in rows]
     assert all(a >= b for a, b in zip(ns, ns[1:])), ns

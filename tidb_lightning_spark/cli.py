@@ -1115,6 +1115,16 @@ def _cdc(args) -> int:
     return 0
 
 
+# registry entries that MATERIALIZE during construction (driver-side
+# collects or a streaming drain): `explain` warns that building the plan
+# runs real work and that the printed plan is the final presentation step
+_EAGER = {
+    "streaming_cdc_replay",
+    "bpe_train_merges_sampled",
+    "bpe_encode_corpus",
+    "bpe_fertility_by_source",
+}
+
 
 def _explain(args) -> int:
     """Print a registry query's physical plan (explain formatted) — the
@@ -1140,12 +1150,6 @@ def _explain(args) -> int:
 
     spark = get_spark(app_name="tls-explain")
     spark.sparkContext.setLogLevel("ERROR")
-    # entries that MATERIALIZE during construction (driver-side collects
-    # or a streaming drain): warn that building the plan runs real work
-    # and that the printed plan is the final presentation step only
-    _EAGER = {"streaming_cdc_replay", "bpe_train_merges",
-              "bpe_train_merges_sampled", "bpe_encode_corpus",
-              "bpe_fertility_by_source"}
     if args.query in _EAGER:
         print(
             f"note: {args.query} executes during plan construction "

@@ -9,9 +9,9 @@ has an ANSI-SQL twin for the DuckDB oracle.
 
 Scale notes (100 TB): MinHash/SimHash signatures are one linear scan with
 map-side-only work; the LSH band join shuffles (band_hash) pairs — a few
-hundred bytes per doc, not the corpus; the exact all-pairs embedding join
-exists as the correctness baseline while `knn_cosine_lsh` in
-functions/similarity.py is the scale path.
+hundred bytes per doc, not the corpus. Embedding-cosine pairs are mined by
+the hyperplane LSH in functions/similarity.py (lsh_near_dup_pairs), never
+by an all-pairs join.
 """
 
 from __future__ import annotations

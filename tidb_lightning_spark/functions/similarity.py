@@ -1,23 +1,27 @@
 """Similarity search over embedding columns.
 
-Brute-force cosine top-k (plans.queries.knn_cosine_bruteforce) is the
-correctness baseline; this module adds the scale path: random-hyperplane
-LSH bucketing. Buckets come from sign bits of dot products against
-hyperplanes derived deterministically from md5 (driver-side constants), so
-the plan is pure Catalyst expressions and reproducible across runs.
+Two scale paths sit next to the exact brute-force top-k
+(plans.queries.knn_cosine_bruteforce):
+
+- random-hyperplane LSH for near-duplicate PAIR mining
+  (lsh_near_dup_pairs). Buckets come from sign bits of dot products
+  against hyperplanes derived deterministically from md5 (driver-side
+  constants, see _plane), so every run and the DuckDB oracle see the
+  same buckets;
+- IVF (k-means lists + n_probe search) for per-query kNN (knn_ivf) and
+  semantic dedup (semdedup).
 
 The LSH index is MULTI-TABLE (the OR-of-ANDs construction, same shape as
 the MinHash banding in functions.dedup): `n_tables` independent tables of
-`n_planes` sign bits each; a corpus row is a candidate for a query if it
-shares ALL bits of ANY table. Recall for a pair with per-plane agreement
-probability p = 1 - angle/pi is 1 - (1 - p^n_planes)^n_tables — a single
-table (the r4 design) gave 4% recall on the test corpus because p^6 is
-tiny when neighbors sit near 60-70 degrees; OR-ing tables is the standard
-repair and is measured by tests/test_similarity.py against brute force.
+`n_planes` sign bits each; two rows are a candidate pair if they share
+ALL bits of ANY table. Recall for a pair with per-plane agreement
+probability p = 1 - angle/pi is 1 - (1 - p^n_planes)^n_tables — one table
+of 6 planes recalls few pairs whose angle is 60-70 degrees (p^6 is
+small); OR-ing tables is the standard repair.
 
-At 100 TB the corpus is scanned once to attach its bucket ids, the join
-hashes (table, bucket) keys against the broadcast queries, and only
-candidate pairs pay the full dot product — the classic recall/cost trade.
+Every cosine here and in the SQL oracles uses one left-to-right dot fold
+(see dot), which is what lets the oracles replay whole pipelines
+bit-for-bit.
 """
 
 from __future__ import annotations
@@ -28,12 +32,14 @@ import struct
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-N_PLANES = 12
-N_TABLES = 1
-
 
 def _plane(p: int, dim: int, table: int = 0) -> list[float]:
-    """Deterministic pseudo-random unit-free hyperplane from md5."""
+    """Deterministic pseudo-random unit-free hyperplane from md5: a pure
+    function of (table, p, d), so the Spark side and the SQL oracles
+    embed the same constants (repr() of each double round-trips exactly
+    into a DuckDB or Spark literal). Same planes plus the shared fold
+    order of `dot` give the same buckets, candidates and re-rank in both
+    engines — the bit-match argument every LSH oracle relies on."""
     out = []
     seed = p if table == 0 else f"{table}.{p}"
     for d in range(dim):
@@ -44,13 +50,26 @@ def _plane(p: int, dim: int, table: int = 0) -> list[float]:
 
 
 def dot(a: Column, b: Column) -> Column:
+    """Dot product as a left-to-right fold: `acc = acc + a_d * b_d` for
+    d = 1..dim, one IEEE multiply and one add per dimension.
+
+    This is the fold order every engine here shares: Catalyst's
+    aggregate(zip_with) below, DuckDB's list_dot_product, the
+    driver-side _py_dot, and the numpy paths (attach_buckets_df,
+    lsh_near_dup_pairs), which accumulate dimension by dimension
+    vectorized ACROSS rows or pairs, never within one. Same order, same
+    rounding, so results are bit-identical: a bucket sign could flip only
+    if |dot| were below one ulp, and two ranks swap only if
+    |sim_a - sim_b| is below ~1e-13 — measure-zero on real-valued
+    embeddings. Never use pairwise or compensated summation on a path
+    an oracle replays."""
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
     )
 
 
 def bucket_expr(
-    vec: Column, dim: int, n_planes: int = N_PLANES, table: int = 0
+    vec: Column, dim: int, n_planes: int, table: int = 0
 ) -> Column:
     """Pack sign bits of `n_planes` hyperplane dot products into an int.
 
@@ -78,8 +97,8 @@ def attach_buckets_df(
     """(_id, _v, _norm, _t, _b): every hash table's bucket id attached in
     ONE Arrow-batched pass. Buckets and norms use the numpy dim-by-dim
     accumulation — bit-identical to the Catalyst/DuckDB left-to-right
-    fold (allpairs_cosine_topk numerics note), so downstream exact
-    re-ranks and the SQL oracles agree. Building the buckets as Catalyst
+    fold (see dot), so downstream exact re-ranks and the SQL oracles
+    agree. Building the buckets as Catalyst
     expressions instead (n_tables*n_planes*dim literal nodes) spent more
     time in the analyzer than in execution — measured seconds of plan
     overhead at any data size.
@@ -99,7 +118,7 @@ def attach_buckets_df(
             [_plane(p, dim, t) for p in range(n_planes)]
             for t in range(n_tables)
         ]
-    ).reshape(max(n_tables * n_planes, 1), -1)
+    ).reshape(n_tables * n_planes, dim)
     pw = plane_mat.T  # (dim, n_tables*n_planes)
     weights = (1 << np.arange(n_planes)).astype("int64")
 
@@ -113,17 +132,12 @@ def attach_buckets_df(
                 ).to_numpy()
             )
             norm2 = np.zeros(len(V))
-            if n_planes > 0:
-                acc = np.zeros((len(V), n_tables * n_planes))
-                for d in range(dim):
-                    acc += np.outer(V[:, d], pw[d])
-                    norm2 += V[:, d] * V[:, d]
-                bits = (acc > 0).reshape(len(V), n_tables, n_planes)
-                buckets = (bits * weights).sum(axis=2)  # (N, n_tables)
-            else:  # degeneration: one bucket per table == brute force
-                for d in range(dim):
-                    norm2 += V[:, d] * V[:, d]
-                buckets = np.zeros((len(V), n_tables), dtype="int64")
+            acc = np.zeros((len(V), n_tables * n_planes))
+            for d in range(dim):
+                acc += np.outer(V[:, d], pw[d])
+                norm2 += V[:, d] * V[:, d]
+            bits = (acc > 0).reshape(len(V), n_tables, n_planes)
+            buckets = (bits * weights).sum(axis=2)  # (N, n_tables)
             yield pd.DataFrame(
                 {
                     "_id": np.repeat(pdf[id_col].to_numpy(), n_tables),
@@ -143,141 +157,6 @@ def attach_buckets_df(
     )
 
 
-def knn_lsh(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    query_filter,
-    dim: int,
-    k: int = 5,
-    n_planes: int = N_PLANES,
-    n_tables: int = N_TABLES,
-) -> DataFrame:
-    """ANN top-k: a candidate shares all `n_planes` sign bits of at least
-    one of the `n_tables` hash tables; exact cosine re-ranks candidates.
-    Returns (query_id, neighbor_id, rank, cosine); queries whose buckets
-    are empty in every table simply return fewer neighbors.
-
-    Scale shape: ONE corpus-wide Arrow pass attaches all table buckets
-    (plus a second pass over only the filter-pruned query rows), feeding
-    a broadcast hash join on the (table, bucket) key — the corpus never
-    self-joins and is never attached twice.
-    Duplicate candidates (pairs colliding in several tables) are folded
-    by a fixed-width (query_id, neighbor_id, sim) aggregation BEFORE the
-    top-k window, so the only shuffles carry scored id pairs, never
-    vectors. n_planes=0 puts everything in one bucket per table — exact
-    brute force (the degeneration the unit test pins)."""
-    from pyspark.sql import Window
-
-    ex = attach_buckets_df(df, id_col, vec_col, dim, n_planes, n_tables)
-
-    # The broadcast-query side must NOT re-run the corpus-wide attach: a
-    # shared `ex` is referenced by both join inputs, and without a
-    # persist each reference executes the full Arrow+numpy pass. Attach
-    # buckets to the pre-filtered query rows instead — the filter pushes
-    # to the scan, so this second pass reads only the query vectors.
-    q = attach_buckets_df(
-        df.filter(query_filter(F.col(id_col))),
-        id_col, vec_col, dim, n_planes, n_tables,
-    ).select(
-        F.col("_id").alias("query_id"),
-        F.col("_v").alias("_qv"),
-        F.col("_norm").alias("_qnorm"),
-        F.col("_t").alias("_qt"),
-        F.col("_b").alias("_qb"),
-    )
-    scored = ex.join(
-        F.broadcast(q),
-        (F.col("_t") == F.col("_qt"))
-        & (F.col("_b") == F.col("_qb"))
-        & (F.col("_id") != F.col("query_id")),
-    ).select(
-        "query_id",
-        F.col("_id").alias("neighbor_id"),
-        (dot(F.col("_qv"), F.col("_v")) / (F.col("_qnorm") * F.col("_norm"))).alias(
-            "sim"
-        ),
-    )
-    # fold multi-table collisions (sims are identical per pair)
-    pairs = scored.groupBy("query_id", "neighbor_id").agg(
-        F.max("sim").alias("sim")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), "neighbor_id")
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", F.round("sim", 4).alias("cosine"))
-    )
-
-
-def sql_knn_lsh(
-    table: str,
-    id_col: str,
-    vec_col: str,
-    query_where: str,
-    dim: int,
-    k: int = 5,
-    n_planes: int = N_PLANES,
-    n_tables: int = N_TABLES,
-) -> str:
-    """DuckDB twin of knn_lsh — the FULL pipeline, not a reference
-    answer: hyperplanes are deterministic md5-derived constants, so the
-    oracle embeds the same plane literals and recomputes buckets,
-    candidates, exact re-rank. Bit-match holds because DuckDB's
-    list_dot_product is the same left-to-right fold as the Catalyst
-    aggregate (see allpairs_cosine_topk numerics note); sign flips would
-    need |dot| below one ulp, and rank swaps |sim_a-sim_b| below ~1e-13
-    — measure-zero on real-valued embeddings. This makes the LSH scale
-    path driver-verified instead of rows-only."""
-
-    def plane_lit(p: int, t: int) -> str:
-        return "[" + ", ".join(repr(v) for v in _plane(p, dim, t)) + "]"
-
-    bucket_cols = ",\n             ".join(
-        "("
-        + " + ".join(
-            f"(CASE WHEN list_dot_product(e, {plane_lit(p, t)}) > 0 "
-            f"THEN {1 << p} ELSE 0 END)"
-            for p in range(n_planes)
-        )
-        + f") AS b{t}"
-        for t in range(n_tables)
-    )
-    b_list = ", ".join(f"b{t}" for t in range(n_tables))
-    return f"""
-    WITH v AS (
-      SELECT {id_col} AS id, CAST({vec_col} AS DOUBLE[]) AS e FROM {table}
-    ), bkt AS (
-      SELECT id, e, sqrt(list_dot_product(e, e)) AS norm,
-             {bucket_cols}
-      FROM v
-    ), ex AS (
-      SELECT id, unnest(generate_series(0, {n_tables - 1})) AS t,
-             unnest([{b_list}]) AS b
-      FROM bkt
-    ), q AS (
-      SELECT id AS query_id, t, b FROM ex WHERE {query_where}
-    ), cand AS (
-      SELECT DISTINCT q.query_id, c.id AS neighbor_id
-      FROM q JOIN ex c ON c.t = q.t AND c.b = q.b AND c.id <> q.query_id
-    ), scored AS (
-      SELECT cand.query_id, cand.neighbor_id,
-             list_dot_product(qv.e, nv.e) / (qv.norm * nv.norm) AS sim
-      FROM cand
-        JOIN bkt qv ON qv.id = cand.query_id
-        JOIN bkt nv ON nv.id = cand.neighbor_id
-    ), ranked AS (
-      SELECT query_id, neighbor_id, sim,
-             row_number() OVER (
-               PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rank
-      FROM scored
-    )
-    SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank,
-           round(sim, 4) AS cosine
-    FROM ranked WHERE rank <= {k}
-    """
-
-
 def lsh_near_dup_pairs(
     df: DataFrame,
     id_col: str,
@@ -287,14 +166,14 @@ def lsh_near_dup_pairs(
     n_planes: int = 3,
     n_tables: int = 12,
 ) -> DataFrame:
-    """Top near-duplicate embedding PAIRS via multi-table LSH — the scale
-    twin of the exact all-pairs baseline (near_dup_embeddings).
+    """Top near-duplicate embedding PAIRS via multi-table LSH — the one
+    pair miner: it never scores the O(n^2) all-pairs cross product.
 
     Shape: one scan attaches every table's bucket id; ONE exchange
     shuffles (id, vector) rows to their (table, bucket) groups; each
     bucket scores its intra-bucket pairs with the numpy dim-by-dim
     accumulation (bit-identical to the Catalyst/DuckDB left-to-right
-    fold — see allpairs_cosine_topk numerics note) and emits only its
+    fold — see dot) and emits only its
     local top-k_top; a fixed-width (a, b, cosine) dedup + global top-k
     finishes. Per-bucket top-k is LOSSLESS for the global top-k: a
     global-top pair outranked by 20 pairs inside its own bucket is
@@ -363,7 +242,7 @@ def sql_lsh_near_dup_pairs(
     n_tables: int = 12,
 ) -> str:
     """DuckDB twin of lsh_near_dup_pairs (full pipeline, same plane
-    constants — see sql_knn_lsh for the bit-match argument)."""
+    constants — see _plane and dot for the bit-match argument)."""
 
     def plane_lit(p: int, t: int) -> str:
         return "[" + ", ".join(repr(v) for v in _plane(p, dim, t)) + "]"
@@ -406,95 +285,6 @@ def sql_lsh_near_dup_pairs(
     """
 
 
-def allpairs_cosine_topk(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    k: int = 20,
-    n_blocks: int = 8,
-) -> DataFrame:
-    """Exact top-k closest pairs over the whole corpus, block-parallel.
-
-    The classic blocked all-pairs scheme: rows are hashed into `n_blocks`
-    groups by id; every unordered block pair (i <= j) becomes one task
-    holding the two blocks, which scores its cross product with
-    numpy-vectorized math and keeps a local top-k; the global top-k is a
-    k-row sort. Replication factor is n_blocks copies of the corpus
-    (each block participates in n_blocks pairs), against n_blocks^2/2-way
-    parallelism — at 100 TB pick n_blocks so one block fits an executor.
-
-    Numerics: the dot product accumulates dimension-by-dimension
-    (`acc += a_d * b_d`, one IEEE multiply-add per dim, vectorized ACROSS
-    pairs, not within one), i.e. the exact left-to-right fold DuckDB's
-    list_dot_product and Catalyst's F.aggregate(zip_with) use — results
-    stay bit-identical to the scalar oracle while running ~50x faster
-    than per-pair higher-order functions.
-    """
-    base = df.select(
-        F.col(id_col).cast("long").alias("_id"),
-        F.transform(vec_col, lambda x: x.cast("double")).alias("_v"),
-    ).withColumn("_blk", F.pmod(F.col("_id"), F.lit(n_blocks)).cast("int"))
-    # a row in block b is the LEFT side of pairs (b, j>=b) and the RIGHT
-    # side of pairs (i<=b, b); group (b, b) takes only the left copy
-    left = base.select(
-        "_id",
-        "_v",
-        F.col("_blk").alias("pi"),
-        F.explode(F.sequence(F.col("_blk"), F.lit(n_blocks - 1))).alias("pj"),
-        F.lit(0).alias("side"),
-    )
-    right = base.select(
-        "_id",
-        "_v",
-        F.explode(F.sequence(F.lit(0), F.col("_blk"))).alias("pi"),
-        F.col("_blk").alias("pj"),
-        F.lit(1).alias("side"),
-    )
-
-    def score(pdf):
-        import numpy as np
-        import pandas as pd
-
-        empty = pd.DataFrame({"a": [], "b": [], "cosine": []}).astype(
-            {"a": "int64", "b": "int64", "cosine": "float64"}
-        )
-        same = pdf["pi"].iat[0] == pdf["pj"].iat[0]
-        lrows = pdf[pdf["side"] == 0]
-        rrows = lrows if same else pdf[pdf["side"] == 1]
-        if lrows.empty or rrows.empty:
-            return empty
-        A = np.stack(lrows["_v"].to_numpy())
-        B = np.stack(rrows["_v"].to_numpy())
-        dim = A.shape[1]
-        dotm = np.zeros((len(A), len(B)))
-        na = np.zeros(len(A))
-        nb = np.zeros(len(B))
-        for d in range(dim):  # left-to-right fold, vectorized across pairs
-            dotm += np.outer(A[:, d], B[:, d])
-            na += A[:, d] * A[:, d]
-            nb += B[:, d] * B[:, d]
-        cos = dotm / np.outer(np.sqrt(na), np.sqrt(nb))
-        aid = lrows["_id"].to_numpy()
-        bid = rrows["_id"].to_numpy()
-        ii, jj = np.meshgrid(np.arange(len(A)), np.arange(len(B)), indexing="ij")
-        ii, jj = ii.ravel(), jj.ravel()
-        a, b = aid[ii], bid[jj]
-        keep = a < b if same else a != b
-        a, b, c = a[keep], b[keep], cos.ravel()[keep]
-        lo, hi = np.minimum(a, b), np.maximum(a, b)  # orient cross-block pairs
-        out = pd.DataFrame({"a": lo, "b": hi, "cosine": c})
-        return out.sort_values(
-            ["cosine", "a", "b"], ascending=[False, True, True]
-        ).head(k)
-
-    pairs = (
-        left.unionByName(right)
-        .groupBy("pi", "pj")
-        .applyInPandas(score, schema="a long, b long, cosine double")
-    )
-    return pairs.orderBy(F.col("cosine").desc(), "a", "b").limit(k)
-
-
 # ---------------------------------------------------------------------------
 # IVF (inverted-file) ANN — the second scale path next to LSH
 # ---------------------------------------------------------------------------
@@ -512,10 +302,9 @@ IVF_QUANT = 1e6
 
 def _py_dot(a: list[float], b: list[float]) -> float:
     """Driver-side left-fold dot product — the SAME rounding sequence as
-    the Catalyst `dot` fold and DuckDB's list_dot_product (their parity
-    is what makes the LSH full-pipeline oracle bit-stable; see
-    sql_knn_lsh). Used for centroid norm constants, so never math.fsum
-    here — pairwise/compensated summation would break the parity."""
+    the Catalyst `dot` fold and DuckDB's list_dot_product (see dot).
+    Used for centroid norm constants, so never math.fsum here —
+    pairwise/compensated summation would break the parity."""
     acc = 0.0
     for x, y in zip(a, b):
         acc = acc + x * y
@@ -748,7 +537,7 @@ def sql_knn_ivf(
       ranking — the hard-negative-mining face;
     - assignment distance: ||c||^2 - 2*dot(v,c), where dot is the same
       left-to-right fold in Catalyst, Python (centroid constants) and
-      DuckDB's list_dot_product (parity established by sql_knn_lsh);
+      DuckDB's list_dot_product (see dot);
     - centroid means: exact BIGINT sums of floor(x*1e6), divided as
       CAST(s AS DOUBLE)/(1e6*n) — order-independent, so Spark's
       partition-parallel aggregate equals DuckDB's serial one bit-for-bit

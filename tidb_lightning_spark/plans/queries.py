@@ -587,12 +587,10 @@ def text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def knn_cosine_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Brute-force cosine top-k (baseline ANN; SURVEY 'similarity search').
-
-    ORACLE ANCHOR — cost is O(corpus x queries). Scale twins: use
-    knn_cosine_lsh or knn_cosine_ivf beyond ~1M corpus rows; both are
-    hash-verified against full-pipeline SQL oracles and recall-floored
-    against this baseline.
+    """Brute-force cosine top-k (SURVEY 'similarity search'): the exact
+    kNN, O(corpus x queries). tests/test_similarity.py pins the IVF ANN
+    (similarity.knn_ivf, run by hard_negative_mining) equal to it at
+    full probe and floors IVF recall against it at 3 of 8 lists probed.
 
     The query set is broadcast; each partition of the corpus scores its
     vectors against all queries (no shuffle of the corpus), then a per-query
@@ -916,35 +914,6 @@ def ngram_jaccard_vs_first_doc(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "near_dup_embeddings",
-    """
-    WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
-    pairs AS (
-      SELECT a.vec_id AS a, b.vec_id AS b,
-             list_dot_product(a.e, b.e)
-               / (sqrt(list_dot_product(a.e, a.e)) * sqrt(list_dot_product(b.e, b.e))) AS cosine
-      FROM v a JOIN v b ON a.vec_id < b.vec_id
-    )
-    SELECT a, b, cosine FROM pairs
-    ORDER BY cosine DESC, a, b
-    LIMIT 20
-    """,
-)
-def near_dup_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-cosine near-dup: exact top-20 closest pairs via the
-    blocked all-pairs operator (numpy-vectorized block tasks, bit-identical
-    fold order to the SQL oracle — see allpairs_cosine_topk docstring).
-
-    ORACLE ANCHOR — cost is O(n^2) pairs. Scale twin: use
-    near_dup_embeddings_lsh beyond ~1M rows (bucket join carries ids
-    only; hash-verified against the same-constants SQL oracle)."""
-    from tidb_lightning_spark.functions.similarity import allpairs_cosine_topk
-
-    e = load(spark, sf_dir, "embeddings")
-    return allpairs_cosine_topk(e, "vec_id", "embedding", k=20, n_blocks=8)
-
-
 def _corpus_dim() -> int | None:
     """Embedding dimension of the driver's correctness corpus, probed
     from one parquet page at registration time; None when the corpus is
@@ -960,25 +929,11 @@ def _corpus_dim() -> int | None:
         return None
 
 
-def _knn_lsh_oracle() -> str | None:
-    # The LSH pipeline is a pure function of md5-derived plane constants,
-    # so the oracle replays the WHOLE pipeline in SQL (buckets ->
-    # candidates -> exact re-rank). Plane literals need the embedding
-    # dimension at registration time: probe it, and return None
-    # (rows-only check) when it isn't the 64 the Spark side will discover
-    # at run time.
-    if _corpus_dim() != 64:
-        return None
-    from tidb_lightning_spark.functions.similarity import sql_knn_lsh
-
-    return sql_knn_lsh(
-        "embeddings", "vec_id", "embedding", "id < 10",
-        dim=64, k=5, n_planes=3, n_tables=12,
-    )
-
-
 def _near_dup_lsh_oracle() -> str | None:
-    if _corpus_dim() != 64:  # same plane-literal constraint as knn_lsh
+    # The oracle replays the WHOLE LSH pipeline with md5-derived plane
+    # literals, which need the embedding dimension at registration time:
+    # rows-only (None) when the corpus isn't the 64 the Spark side uses.
+    if _corpus_dim() != 64:
         return None
     from tidb_lightning_spark.functions.similarity import (
         sql_lsh_near_dup_pairs,
@@ -991,75 +946,16 @@ def _near_dup_lsh_oracle() -> str | None:
 
 @register("near_dup_embeddings_lsh", _near_dup_lsh_oracle())
 def near_dup_embeddings_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scale twin of near_dup_embeddings: top near-dup pairs via
-    multi-table LSH instead of the quadratic all-pairs join. The
-    self-join carries (id, table, bucket) keys only; vectors are joined
-    back by id once per side. Driver-verified against the full-pipeline
-    SQL oracle (sql_lsh_near_dup_pairs) — same deterministic plane
-    constants in both engines."""
+    """Top near-dup embedding pairs via multi-table LSH instead of the
+    quadratic all-pairs join: vectors shuffle once to their (table,
+    bucket) groups and each bucket keeps its local top-k (see
+    lsh_near_dup_pairs). Driver-verified against the full-pipeline SQL
+    oracle (sql_lsh_near_dup_pairs) — same deterministic plane constants
+    in both engines."""
     from tidb_lightning_spark.functions.similarity import lsh_near_dup_pairs
 
     e = load(spark, sf_dir, "embeddings")
     return lsh_near_dup_pairs(e, "vec_id", "embedding", dim=64, k_top=20)
-
-
-@register("knn_cosine_lsh", _knn_lsh_oracle())
-def knn_cosine_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Random-hyperplane LSH ANN (the 100 TB path: bucket once, join
-    within buckets). Driver-verified against a full-pipeline SQL oracle
-    (sql_knn_lsh) — the hyperplanes are deterministic constants, so
-    DuckDB recomputes the same buckets, candidates and re-rank; recall
-    vs brute force is additionally floored in tests/test_similarity.py."""
-    from tidb_lightning_spark.functions.similarity import knn_lsh
-
-    e = load(spark, sf_dir, "embeddings")
-    # Dimension probe: one parquet page on the driver (pyarrow), not a
-    # Spark job — keeps knn_cosine_lsh a single job end-to-end.
-    _batch = _first_parquet_batch(
-        f"{sf_dir}/embeddings.parquet", ["embedding"]
-    )
-    dim = len(_batch.column("embedding")[0])
-    # 3 planes x 12 tables (OR-of-ANDs): measured recall@5 = 0.98 vs
-    # brute force on the sf0.01 corpus (tests/test_similarity.py pins a
-    # 0.8 floor). More planes per table = higher precision but lower
-    # recall; more tables buy recall back — tune per corpus geometry.
-    return knn_lsh(
-        e, "vec_id", "embedding", lambda c: c < 10, dim=dim, k=5,
-        n_planes=3, n_tables=12,
-    )
-
-
-def _knn_ivf_oracle() -> str | None:
-    # Training is bit-stable across engines (md5 seeding, BIGINT-quantized
-    # means, one shared distance formula — see
-    # similarity.train_ivf_centroids), so the oracle replays the ENTIRE
-    # pipeline in SQL: unrolled Lloyd iterations -> list assignment ->
-    # probe -> exact re-rank. Same dim-literal constraint as the LSH
-    # oracles: rows-only fallback when the corpus isn't dim-64.
-    if _corpus_dim() != 64:
-        return None
-    from tidb_lightning_spark.functions.similarity import sql_knn_ivf
-
-    return sql_knn_ivf(
-        "embeddings", "vec_id", "embedding", "v.id < 10",
-        dim=64, k=5, n_lists=8, n_probe=3, iters=2,
-    )
-
-
-@register("knn_cosine_ivf", _knn_ivf_oracle())
-def knn_cosine_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF ANN (the second scale path: k-means lists + n_probe search).
-    Deterministically seeded distributed Lloyd training with
-    BIGINT-quantized centroid means — bit-stable across engines, so the
-    driver verifies the FULL pipeline (training included) against the
-    sql_knn_ivf DuckDB twin. n_probe==n_lists degrades to exact search
-    and recall vs brute force is floored in tests/test_similarity.py."""
-    from tidb_lightning_spark.functions.similarity import knn_ivf
-
-    e = load(spark, sf_dir, "embeddings")
-    return knn_ivf(
-        e, "vec_id", "embedding", lambda c: c < 10, k=5, n_lists=8, n_probe=3
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -1848,54 +1744,6 @@ def cube_orders_status_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "quantiles_by_returnflag",
-    """
-    SELECT l_returnflag,
-           quantile_cont(l_quantity, 0.5) AS median_qty,
-           quantile_cont(l_quantity, 0.25) AS q1_qty,
-           quantile_cont(l_quantity, 0.9) AS p90_qty,
-           quantile_cont(l_extendedprice, 0.95) AS p95_price,
-           count(*) AS n
-    FROM lineitem
-    GROUP BY l_returnflag
-    ORDER BY l_returnflag
-    """,
-)
-def quantiles_by_returnflag(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ordered-set aggregates (exact percentile with linear interpolation —
-    both engines sort-and-interpolate identically, so doubles bit-match).
-
-    ORACLE ANCHOR ONLY — each exact percentile() aggregate buffers every
-    group value, so with a handful of groups a 100x scale-up puts
-    billions of doubles in single agg buffers (driver-class OOM, not a
-    slow query). Scale twin: quantiles_by_returnflag_hist (same output
-    shape, O(histogram) memory per group, error <= one bucket width).
-    The three l_quantity percentiles share ONE array-argument aggregate —
-    each percentile() expression buffers every group value, so folding
-    them cuts per-group agg memory 3x (same values, one sort)."""
-    l = load(spark, sf_dir, "lineitem")
-    return (
-        l.groupBy("l_returnflag")
-        .agg(
-            F.expr(
-                "percentile(l_quantity, array(0.5D, 0.25D, 0.9D))"
-            ).alias("qs"),
-            F.expr("percentile(l_extendedprice, 0.95D)").alias("p95_price"),
-            F.count(F.lit(1)).alias("n"),
-        )
-        .select(
-            "l_returnflag",
-            F.col("qs")[0].alias("median_qty"),
-            F.col("qs")[1].alias("q1_qty"),
-            F.col("qs")[2].alias("p90_qty"),
-            "p95_price",
-            "n",
-        )
-        .orderBy("l_returnflag")
-    )
-
-
 def _hist_quantile_sql() -> str:
     """DuckDB twin of quantiles_by_returnflag_hist — the same histogram
     arithmetic (floor-bucket counts, running sum, ceil-rank pick), so
@@ -1991,12 +1839,12 @@ def _hist_quantiles(
 
 @register("quantiles_by_returnflag_hist", _hist_quantile_sql())
 def quantiles_by_returnflag_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scale twin of quantiles_by_returnflag: fixed-width-histogram
-    quantile estimates (bucket width 0.5 for l_quantity, 64 for
-    l_extendedprice) instead of exact percentile()'s
-    buffer-every-group-value aggregate. Per-group state is the bucket
-    histogram — O(value range / width), independent of row count — so
-    the 100x scale-up that OOMs the exact form stays flat here. Accuracy
+    """Quantiles per return flag from fixed-width histograms (bucket
+    width 0.5 for l_quantity, 64 for l_extendedprice) instead of exact
+    percentile()'s buffer-every-group-value aggregate. Per-group state is
+    the bucket histogram — O(value range / width), independent of row
+    count — so a 100x scale-up stays flat where an exact percentile()
+    holds billions of doubles in a handful of agg buffers. Accuracy
     guarantee: within half a bucket of the rank-ceil(p*n) ORDER
     STATISTIC (property-tested); vs the interpolated percentile the gap
     also stays inside one bucket whenever values are denser than the
@@ -3154,45 +3002,6 @@ def dedup_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 from tidb_lightning_spark.functions import sketch as SK  # noqa: E402
 
 
-def _hll_users_oracle() -> str:
-    inner = SK.sql_hll_distinct("events", "user_id", ["event_type"])
-    return f"""
-    WITH hll AS ({inner}),
-    ex AS (
-      SELECT event_type, count(DISTINCT user_id) AS exact_users
-      FROM events GROUP BY event_type
-    )
-    SELECT hll.event_type,
-           hll.est_distinct AS est_users,
-           hll.registers_hit,
-           ex.exact_users
-    FROM hll JOIN ex ON ex.event_type = hll.event_type
-    ORDER BY hll.event_type
-    """
-
-
-@register("events_distinct_users_hll", _hll_users_oracle())
-def events_distinct_users_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distinct users per event type via the deterministic HLL sketch
-    (functions.sketch), with the exact count alongside as calibration —
-    the minhash_calibration pattern. At 100 TB the exact column is the
-    part you drop: the sketch's shuffle is m=1024 longs per group
-    regardless of row count, while count(DISTINCT) shuffles every
-    distinct key. Oracle-verified INCLUDING the estimates: md5-derived
-    hashing, a comparison-ladder rho, and integer register sums are
-    bit-identical in DuckDB (no engine-private HLL internals)."""
-    e = load(spark, sf_dir, "events")
-    hll = SK.hll_distinct(e, "user_id", ["event_type"]).select(
-        "event_type",
-        F.col("est_distinct").alias("est_users"),
-        "registers_hit",
-    )
-    exact = e.groupBy("event_type").agg(
-        F.countDistinct("user_id").cast("long").alias("exact_users")
-    )
-    return hll.join(exact, "event_type").orderBy("event_type")
-
-
 @register(
     "events_distinct_users_hll_merged",
     SK.sql_hll_distinct("events", "user_id", ["event_type"])
@@ -3416,18 +3225,9 @@ def sql_funnel(
     )
 
 
-FUNNEL_3STAGE = [("view", None), ("click", 1), ("purchase", 24)]
 FUNNEL_4STAGE = [
     ("signup", None), ("view", 24), ("click", 1), ("purchase", 24),
 ]
-
-
-@register("funnel_view_click_purchase", sql_funnel(FUNNEL_3STAGE))
-def funnel_view_click_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """first view -> first click after it (1 h) -> first purchase after
-    that (24 h); see funnel_stages_df for semantics and scale shape."""
-    e = load(spark, sf_dir, "events").select("user_id", "event_type", "ts")
-    return funnel_stages_df(e, FUNNEL_3STAGE)
 
 
 @register("funnel_signup_4stage", sql_funnel(FUNNEL_4STAGE))
@@ -3812,8 +3612,8 @@ def corpus_temperature_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     keep-everything since hash60 < 2^60): pow()
     is a libm transcendental whose last ulp may differ between the JVM
     and DuckDB, and thresholding the raw double would make the verified
-    integer n_kept depend on cross-libm parity (the IVF_QUANT rule,
-    functions/similarity.py:510).
+    integer n_kept depend on cross-libm parity (the rule behind
+    functions/similarity.IVF_QUANT).
 
     Scale shape: one tiny per-source count agg, rates broadcast back,
     one filtered scan; per-doc work is a hash compare. Returns the
@@ -4109,69 +3909,6 @@ def doclen_quantiles_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "customer_rfm_segments",
-    """
-    WITH base AS (
-      SELECT o_custkey,
-             max(o_orderdate) AS last_order,
-             count(*) AS freq,
-             CAST(sum(CAST(o_totalprice AS DECIMAL(18,2)))
-                  AS DECIMAL(38,2)) AS money
-      FROM orders GROUP BY o_custkey
-    ), scored AS (
-      SELECT o_custkey,
-             ntile(5) OVER (ORDER BY last_order, o_custkey) AS r,
-             ntile(5) OVER (ORDER BY freq, o_custkey) AS f,
-             ntile(5) OVER (ORDER BY money, o_custkey) AS m
-      FROM base
-    )
-    SELECT CAST(r AS INT) AS r, CAST(f AS INT) AS f, CAST(m AS INT) AS m,
-           count(*) AS n_customers
-    FROM scored GROUP BY r, f, m
-    ORDER BY r, f, m
-    """,
-)
-def customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RFM segmentation: customers quintiled on recency (last order
-    date), frequency (order count) and monetary (decimal-exact spend),
-    reported as segment-cell sizes. Tie-breaking every ntile ordering by
-    the customer key makes the quintile assignment a deterministic total
-    order — identical across engines and runs, where a bare ORDER BY
-    metric would tie-split arbitrarily.
-
-    ORACLE ANCHOR ONLY — the three ntile windows are single-partition
-    global sorts over the per-customer table; at 100 TB run
-    customer_rfm_segments_hist (histogram-boundary quintiles, O(buckets)
-    state, no global sort) — same output contract. This exact form
-    exists to pin the twin's accuracy and for driver verification."""
-    o = load(spark, sf_dir, "orders")
-    base = o.groupBy("o_custkey").agg(
-        F.max("o_orderdate").alias("last_order"),
-        F.count(F.lit(1)).alias("freq"),
-        F.sum(dec("o_totalprice")).cast("decimal(38,2)").alias("money"),
-    )
-    scored = base.select(
-        "o_custkey",
-        F.ntile(5)
-        .over(Window.orderBy("last_order", "o_custkey"))
-        .alias("r"),
-        F.ntile(5).over(Window.orderBy("freq", "o_custkey")).alias("f"),
-        F.ntile(5).over(Window.orderBy("money", "o_custkey")).alias("m"),
-    )
-    return (
-        scored.groupBy("r", "f", "m")
-        .agg(F.count(F.lit(1)).alias("n_customers"))
-        .select(
-            F.col("r").cast("int").alias("r"),
-            F.col("f").cast("int").alias("f"),
-            F.col("m").cast("int").alias("m"),
-            "n_customers",
-        )
-        .orderBy("r", "f", "m")
-    )
-
-
 def _rfm_hist_oracle() -> str:
     """DuckDB twin of customer_rfm_segments_hist — identical integer
     bucket/boundary arithmetic, so segment counts hash-match."""
@@ -4225,7 +3962,9 @@ def _rfm_hist_oracle() -> str:
 
 @register("customer_rfm_segments_hist", _rfm_hist_oracle())
 def customer_rfm_segments_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scale twin of customer_rfm_segments: quintile BOUNDARIES come from
+    """RFM segmentation: customers quintiled on recency (last order
+    date), frequency (order count) and monetary (decimal-exact spend),
+    reported as segment-cell sizes. Quintile BOUNDARIES come from
     fixed-width integer histograms (recency = days-since-epoch, frequency
     = the raw order count, monetary = cents >> 15, i.e. $327.68 buckets —
     a shift, not a division, so the bucket id is exact in both engines),
@@ -4235,12 +3974,12 @@ def customer_rfm_segments_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same estimator contract as quantiles_by_returnflag_hist — and the
     boundary row (12 longs) broadcasts back onto the per-customer table.
 
-    vs the exact ntile form: customers sharing a bucket share a segment
+    vs an exact ntile(5): customers sharing a bucket share a segment
     (a histogram cannot split ties inside one bucket), so cell counts
     differ from ntile's equal-size split by at most one bucket's
     population per boundary; the segmentation contract (5x5x5 cells,
-    monotone in each metric) is preserved. This is the form to run at
-    100 TB; customer_rfm_segments is its exact oracle anchor."""
+    monotone in each metric) is preserved. ntile would need three
+    single-partition global sorts of the per-customer table."""
     o = load(spark, sf_dir, "orders")
     base = o.groupBy("o_custkey").agg(
         F.datediff(
@@ -4769,16 +4508,12 @@ BPE_SAMPLE_NUM = 1 << 59
 BPE_SAMPLE_SALT = ":bpetrain-v1"
 
 
-def _bpe_train_oracle(
-    n_merges: int = BPE_MERGES, sample: bool = False
-) -> str:
+def _bpe_train_oracle(n_merges: int = BPE_MERGES) -> str:
     s, s2 = BPE_SEP, BPE_SEP + BPE_SEP
-    src = "documents"
-    if sample:
-        h = TX.sql_hash60(
-            f"concat(CAST(doc_id AS VARCHAR), '{BPE_SAMPLE_SALT}')"
-        )
-        src = f"(SELECT * FROM documents WHERE {h} < {BPE_SAMPLE_NUM})"
+    h = TX.sql_hash60(
+        f"concat(CAST(doc_id AS VARCHAR), '{BPE_SAMPLE_SALT}')"
+    )
+    src = f"(SELECT * FROM documents WHERE {h} < {BPE_SAMPLE_NUM})"
     toks = TX.SQL_TOKENS.format(
         col=f"translate(lower(text), '{s}', '')"
     )
@@ -4831,41 +4566,7 @@ def _bpe_train_oracle(
     )
 
 
-@register("bpe_train_merges", _bpe_train_oracle())
-def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distributed BPE tokenizer training — the first BPE_MERGES merges
-    (Sennrich et al. 2016) learned over the corpus, returned as the
-    merge table (step, left, right, merged, n_occurrences): the actual
-    artifact a tokenizer ships. Each step counts adjacent segment pairs
-    corpus-wide, takes the argmax under the deterministic
-    (count desc, left, right) order, and applies the merge EXACTLY as
-    canonical left-to-right BPE does.
-
-    The merge-application trick: words are segment strings with DOUBLE
-    separators ('{SEP}{SEP}' at every boundary) and each merge is one
-    plain string replace of '{SEP}l{SEP}{SEP}r{SEP}' with
-    '{SEP}lr{SEP}' — the pattern consumes one separator from each
-    boundary and the replacement restores them, so consecutive and
-    overlapping-run occurrences merge with canonical greedy LTR
-    semantics in a single linear scan, identical in Spark and DuckDB
-    (the full k-step training replays in the SQL oracle, scalar-subquery
-    argmax per step — the same replay-the-training standard as the IVF
-    k-means oracle).
-
-    Scale shape: each step is one (left, right) count agg with map-side
-    combine (pair alphabet bounds the shuffle) + one map-only replace;
-    k steps = k linear scans of the cached segment column — BPE's
-    inherent shape. STEERING: this full-corpus form is the
-    oracle-checkable demonstrator (BPE_MERGES=6 here); a real 32k-merge
-    vocab would mean 32k corpus passes, so at scale use
-    bpe_train_merges_sampled — train the merge table on a capped
-    deterministic sample, then encode the FULL corpus with it
-    (bpe_encode_corpus), which is exactly what production tokenizer
-    trainers do. Driver state is one (l, r, n) row per step."""
-    return _bpe_train_loop(load(spark, sf_dir, "documents"))
-
-
-@register("bpe_train_merges_sampled", _bpe_train_oracle(sample=True))
+@register("bpe_train_merges_sampled", _bpe_train_oracle())
 def bpe_train_merges_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sample-then-train BPE: the merge table is learned on a capped
     DETERMINISTIC sample (salted-hash thresholding per doc — the
@@ -4876,7 +4577,8 @@ def bpe_train_merges_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     separate), and it bounds training cost at k passes over the SAMPLE
     instead of the corpus. tests/test_round11_fixes.py pins the
     guarantee precisely: on a margin-separated corpus the sampled
-    trainer reproduces the full trainer's merge table EXACTLY, and on
+    trainer reproduces the full-corpus merge table (_bpe_train_loop over
+    every doc) EXACTLY, and on
     the near-uniform synthetic fixture (the adversarial flat-pair-
     distribution case — real Zipfian text has far larger margins) the
     merge SET still matches with order swaps only at count near-ties.
@@ -4900,7 +4602,7 @@ def _bpe_words(d: DataFrame) -> DataFrame:
 
 def _bpe_seg0(w):
     """The double-separator segment string of a word: one char per
-    segment, '{SEP}{SEP}' at every boundary (see bpe_train_merges)."""
+    segment, '{SEP}{SEP}' at every boundary (see _bpe_train_loop)."""
     s2 = BPE_SEP + BPE_SEP
     return F.concat(
         F.lit(s2),
@@ -4989,6 +4691,27 @@ def _bpe_vocab_merges(vocab: DataFrame):
 
 
 def _bpe_train_loop(d: DataFrame) -> DataFrame:
+    """Distributed BPE tokenizer training over the docs in `d` — the
+    first BPE_MERGES merges (Sennrich et al. 2016), returned as the merge
+    table (step, left, right, merged, n_occurrences): the artifact a
+    tokenizer ships. Each step counts adjacent segment pairs, takes the
+    argmax under the deterministic (count desc, left, right) order, and
+    applies the merge EXACTLY as canonical left-to-right BPE does.
+
+    The merge-application trick: words are segment strings with DOUBLE
+    separators ('{SEP}{SEP}' at every boundary) and each merge is one
+    plain string replace of '{SEP}l{SEP}{SEP}r{SEP}' with
+    '{SEP}lr{SEP}' — the pattern consumes one separator from each
+    boundary and the replacement restores them, so consecutive and
+    overlapping-run occurrences merge with canonical greedy LTR
+    semantics in a single linear scan, identical in Spark and DuckDB
+    (_bpe_train_oracle replays the k-step training with a scalar-subquery
+    argmax per step).
+
+    Scale shape: each step is one (left, right) count agg over the
+    distinct-word vocabulary (pair alphabet bounds the shuffle) plus one
+    map-only replace — k passes, BPE's inherent shape. Driver state is
+    one (l, r, n) row per step."""
     spark = d.sparkSession
     vocab = (
         _bpe_words(d)
@@ -5116,92 +4839,6 @@ def top_tokens_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("cms_n").cast("long").alias("cms_n"),
         (F.col("cms_n") - F.col("n")).cast("long").alias("inflation"),
     ).orderBy(F.col("exact_n").desc(), "token")
-
-
-@register(
-    "events_sessionize",
-    """
-    WITH seq AS (
-      SELECT user_id, event_id, ts,
-             CASE WHEN lag(ts) OVER w IS NULL
-                       OR ts - lag(ts) OVER w > INTERVAL 30 MINUTE
-                  THEN 1 ELSE 0 END AS new_s
-      FROM events
-      WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-    ), sess AS (
-      SELECT user_id, ts,
-             sum(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                              ROWS UNBOUNDED PRECEDING) AS sid
-      FROM seq
-    ), per AS (
-      SELECT user_id, sid, count(*) AS n_events,
-             date_diff('second', min(ts), max(ts)) AS dur_s
-      FROM sess GROUP BY user_id, sid
-    )
-    SELECT CAST(count(*) AS BIGINT) AS n_sessions,
-           CAST(sum(n_events) AS BIGINT) AS n_events,
-           CAST(sum(n_events) AS DOUBLE) / count(*) AS events_per_session,
-           CAST(sum(dur_s) AS DOUBLE) / count(*) AS mean_session_seconds,
-           CAST(max(n_events) AS BIGINT) AS max_session_events
-    FROM per
-    """,
-)
-def events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch sessionization (30-minute inactivity gap): per-user event
-    streams split into sessions by the classic lag-gap flag + running
-    sum, then rolled into one summary row (session count, events and
-    seconds per session).
-
-    Scale shape: both windows partition by user_id — the same single
-    keyed shuffle, no global sort; per-session durations are integer
-    second boundary counts (identical truncation in both engines), the
-    two means are single double divisions over exact integer sums."""
-    e = load(spark, sf_dir, "events").select("user_id", "event_id", "ts")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    seq = e.select(
-        "user_id",
-        "event_id",
-        "ts",
-        F.when(
-            F.lag("ts").over(w).isNull()
-            | (
-                F.col("ts")
-                > F.lag("ts").over(w) + F.expr("INTERVAL 30 MINUTE")
-            ),
-            1,
-        )
-        .otherwise(0)
-        .alias("new_s"),
-    )
-    # the running sum must use the SAME total order as the lag flag:
-    # ordering by ts alone would let tied timestamps permute between
-    # engines/runs and flip which session a tied row lands in
-    ws = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    sess = seq.select(
-        "user_id", "ts", F.sum("new_s").over(ws).alias("sid")
-    )
-    per = sess.groupBy("user_id", "sid").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        (
-            F.max("ts").cast("timestamp").cast("long")
-            - F.min("ts").cast("timestamp").cast("long")
-        ).alias("dur_s"),
-    )
-    return per.agg(
-        F.count(F.lit(1)).cast("long").alias("n_sessions"),
-        F.sum("n_events").cast("long").alias("n_events"),
-        (
-            F.sum("n_events").cast("double") / F.count(F.lit(1))
-        ).alias("events_per_session"),
-        (F.sum("dur_s").cast("double") / F.count(F.lit(1))).alias(
-            "mean_session_seconds"
-        ),
-        F.max("n_events").cast("long").alias("max_session_events"),
-    )
 
 
 @register(
@@ -5933,7 +5570,7 @@ def dedup_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 RP_DIM = 16  # random-projection target dimensionality (JL sketch)
-RP_SEED_TABLE = 7  # plane family disjoint from knn_lsh's tables 0..2
+RP_SEED_TABLE = 7  # similarity._plane seed table of the projection planes
 
 
 def _rp_oracle() -> str:
@@ -5995,8 +5632,8 @@ def _rp_oracle() -> str:
 def embedding_rp_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Random-projection dimensionality reduction (Johnson-Lindenstrauss
     sketch) with a top-k fidelity check: every 64-d vector projects onto
-    16 deterministic md5-derived hyperplanes (the knn_lsh plane family,
-    disjoint seed), and per query the top-10 by exact cosine is compared
+    16 deterministic md5-derived hyperplanes (similarity._plane, seed
+    table RP_SEED_TABLE), and per query the top-10 by exact cosine is compared
     against the top-10 by PROJECTED cosine. recall_at_10 is the number a
     100 TB store checks before keeping a 4x-smaller float sketch for
     first-pass retrieval. On THIS synthetic corpus the number comes out
@@ -6013,7 +5650,7 @@ def embedding_rp_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORACLE ANCHOR on the ranking side (queries x corpus, like
     knn_cosine_bruteforce / embedding_int8_recall); cross-engine
     bit-match holds because projection and cosine are the same
-    left-to-right double folds in both engines (see sql_knn_lsh note).
+    left-to-right double folds in both engines (see similarity.dot).
     """
     from tidb_lightning_spark.functions.similarity import _plane
 
@@ -6369,9 +6006,10 @@ def _semdedup_oracle() -> str | None:
 def semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semantic dedup (Abbas et al. 2023, SemDeDup): k-means the
     embeddings (same deterministic, BIGINT-quantized Lloyd trainer as
-    knn_cosine_ivf), rank each cluster by ascending centroid cosine
-    (least-prototypical member first — the paper's keeper preference),
-    and prune any vector with a tau-close earlier-ranked clustermate.
+    knn_ivf / hard_negative_mining), rank each cluster by ascending
+    centroid cosine (least-prototypical member first — the paper's
+    keeper preference), and prune any vector with a tau-close
+    earlier-ranked clustermate.
     Returns every vector with its cluster, centroid cosine, and a 0/1
     keep flag. Fourth dedup tier: exact docs, MinHash (lexical
     near-dup), exact substrings, and this — semantic duplicates that
@@ -6824,13 +6462,13 @@ def _bpe_encode_oracle(n_merges: int = BPE_MERGES) -> str:
 def bpe_encode_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BPE ENCODING — the other half of the tokenizer lifecycle: train
     the BPE_MERGES-step merge table (identical procedure and argmax
-    order to bpe_train_merges) and APPLY every merge to the whole
+    order to _bpe_train_loop) and APPLY every merge to the whole
     corpus, yielding each document's post-BPE token count and
     compression (chars per BPE token) — the numbers a training pipeline
     needs for sequence budgeting and packing. Encoding uses the same
     double-separator replace as training (one linear-scan string replace
     per merge, canonical greedy left-to-right semantics — see
-    bpe_train_merges), with doc_id riding along so per-doc stats drop
+    _bpe_train_loop), with doc_id riding along so per-doc stats drop
     out of one aggregation at the end.
 
     The SQL oracle replays the FULL pipeline — training AND encoding —
@@ -6973,7 +6611,8 @@ def bm25_retrieval_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     query document's term set and keep the top-10 — the lexical
     retrieval primitive behind decontamination-by-retrieval and
     similarity-to-target data selection, complementing the dense paths
-    (knn_cosine_*) with exact sparse matching.
+    (knn_cosine_bruteforce, hard_negative_mining) with exact sparse
+    matching.
 
     Integer-exact scoring, order-independent by construction: with
     k1 = 6/5 and b = 3/4 the per-term score
@@ -8506,7 +8145,8 @@ def _kmv_oracle() -> str:
 @register("kmv_distinct_setops", _kmv_oracle())
 def kmv_distinct_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """KMV / theta-style distinct sketches per event type WITH set
-    operations — the capability HLL (events_distinct_users_hll) lacks:
+    operations — the capability HLL (events_distinct_users_hll_merged)
+    lacks:
     k-minimum-values sketches compose under union (the k smallest of
     K(A) ∪ K(B) IS the union's sketch, Beyer et al. 2007), and the
     Jaccard estimator |K(∪) ∩ K(A) ∩ K(B)| / k turns that into
@@ -9196,14 +8836,16 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     recipe): for each query, the top-k candidates whose cosine falls in
     a BAND — below the positive ceiling (too similar = likely a true
     positive/duplicate, poisonous as a negative) and above the easy
-    floor (random negatives teach nothing). Rides the IVF ANN path, so
-    mining cost is the ANN probe, not a corpus scan per query; the
-    DuckDB oracle replays the full pipeline (k-means training included)
-    with the same band filter.
+    floor (random negatives teach nothing). Rides the IVF ANN path
+    (knn_ivf, 8 lists, 3 probed — the registry's one IVF entry; without
+    sim_band the same call is the plain ANN), so mining cost is the ANN
+    probe, not a corpus scan per query; the DuckDB oracle (sql_knn_ivf)
+    replays the full pipeline (k-means training included) with the same
+    band filter.
 
-    Scale shape: identical to knn_cosine_ivf — one corpus scan
-    attaches list ids (centroids broadcast), queries broadcast, exact
-    cosine only on probed candidates; the band is a filter on the
+    Scale shape: one corpus scan attaches list ids (centroids
+    broadcast), queries broadcast, exact cosine only on probed
+    candidates; the band is a filter on the
     already-computed similarity, adding zero exchanges. At true 100 TB
     the band would ALSO be the top-k guard against dense near-dup
     regions (ANN-mined negatives must dodge the duplicate cloud —
