@@ -306,17 +306,23 @@ class Pauser:
         # retry wrapper / between-jobs driver work can't resurrect it
         self.cancel_flag = os.path.join(target_dir, "_tls_cancel")
         self.poll_s = poll_s
+        self.cancelled = False
 
     def check_cancelled(self) -> None:
         # the flag is consumed when honored; it must NOT be cleared at
         # run start — a cancel issued while the task's Spark session is
         # still starting up lands before run() begins, and eating it
-        # there completes the very task the user just cancelled
-        if os.path.exists(self.cancel_flag):
+        # there completes the very task the user just cancelled. Once
+        # honored it sticks for this run: with tables restoring on
+        # several threads, only one of them can consume the file, and
+        # every other table must stop at its next boundary too
+        if not self.cancelled and os.path.exists(self.cancel_flag):
             try:
                 os.remove(self.cancel_flag)
             except OSError:
                 pass
+            self.cancelled = True
+        if self.cancelled:
             raise IngestError("task cancelled (DELETE /tasks of the running task)")
 
     def wait_if_paused(self) -> None:
@@ -1019,19 +1025,41 @@ class Restorer:
             return rep
 
         # driver-side table parallelism (reference table-concurrency,
-        # worker.go:23-65): Spark schedules jobs from N threads
-        # concurrently; small-table-first submission order is preserved in
-        # the report. Spark already parallelizes within a table, so >1
-        # only helps many-small-tables workloads.
-        conc = max(1, int(self.cfg.table_concurrency or 1))
-        if conc == 1:
+        # worker.go:23-65): up to N tables restore from worker threads
+        # whose Spark jobs the FIFO scheduler interleaves, so one table's
+        # plan construction, DDL and checkpoint writes overlap another's
+        # tasks. Serially, a 3-table JDBC import kept the executors busy
+        # 10% of its wall time (pipeline.executor_busy_ratio 0.10, 4
+        # cores); at 6 it read 0.20. Submission stays small-table-first
+        # and the report keeps that order. A one-table import stays on
+        # the calling thread.
+        conc = min(self.cfg.table_concurrency, len(tables))
+        if conc <= 1:
             for tbl in tables:
                 report.tables.append(_restore_one(tbl))
         else:
             from concurrent.futures import ThreadPoolExecutor
 
+            from pyspark.util import inheritable_thread_target
+
+            def carried(fn):
+                # pool threads start with empty Spark local properties.
+                # Each table's target is wrapped HERE, on the calling
+                # thread, so it runs with the caller's job group (server
+                # tasks cancel through it), description and tags, in its
+                # own copy: one copy shared by the pool would let a
+                # property one table sets label the other tables' jobs.
+                # With pinned-thread mode off (PYSPARK_PIN_THREAD=false)
+                # PySpark hands the session back instead of a wrapper;
+                # local properties are not per thread there at all
+                wrap = inheritable_thread_target(self.spark)
+                return fn if wrap is self.spark else wrap(fn)
+
             with ThreadPoolExecutor(max_workers=conc) as ex:
-                report.tables.extend(ex.map(_restore_one, tables))
+                futures = [
+                    ex.submit(carried(_restore_one), tbl) for tbl in tables
+                ]
+                report.tables.extend(f.result() for f in futures)
         report.seconds = time.time() - t0
         if report.ok:
             # task finished: retire the task meta so the NEXT import
@@ -1927,7 +1955,9 @@ class Restorer:
                 # table commits) — spilled to executor disk, the same
                 # per-table on-disk footprint as the reference's SST
                 # intermediates (backend/local.go memtable->SST), not a
-                # new cost class.
+                # new cost class. Tables restore concurrently (up to
+                # table_concurrency, default 6), so up to that many
+                # tables' parsed rows can be persisted at once.
                 from pyspark import StorageLevel
 
                 part = part.persist(StorageLevel.MEMORY_AND_DISK)
