@@ -294,13 +294,14 @@ def test_interval_join_matches_naive_range_join(spark):
 
 
 def test_sqldump_cache_registry_is_thread_local(spark, tmp_path):
-    """table_concurrency > 1 over SQL-dump tables: each worker thread
-    owns its own cache registry, so one table's engine-commit sweep /
-    finally can no longer unpersist another in-flight table's parsed-
-    rows cache (instance-level lists raced; engine index k collides
-    across tables). Engine-granular plan on both tables (tiny
-    engine_bytes -> one file per engine) to exercise the slice
-    bookkeeping concurrently."""
+    """table_concurrency > 1 over SQL-dump tables: the parsed-row
+    caches belong to the `_import_rows` call that imports each table,
+    one list per engine, so one table's engine-commit release or final
+    release can never unpersist another in-flight table's parsed-rows
+    cache (instance-level lists raced; engine index k collides across
+    tables). Engine-granular plan on both tables (tiny engine_bytes ->
+    one file per engine) to exercise the per-engine release
+    concurrently."""
     from tidb_lightning_spark.config import Config
     from tidb_lightning_spark.pipeline import Restorer
 

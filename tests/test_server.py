@@ -13,6 +13,7 @@ import json
 import os
 import threading
 import urllib.error
+import urllib.parse
 import urllib.request
 
 import pytest
@@ -271,6 +272,29 @@ def test_progress_tables_lists_all(server, tmp_path):
     # the page itself references the endpoint and renders table rows
     _, page = _req(base, "/web")
     assert "/progress/tables" in page
+
+
+def test_progress_tables_leaves_out_task_record(spark, server, tmp_path):
+    """While an import runs (or after it failed) the store also holds
+    the task record; /progress/tables lists only real tables."""
+    from tidb_lightning_spark.config import Config
+    from tidb_lightning_spark.pipeline import Restorer
+
+    base, *_ = server
+    src = tmp_path / "dump"
+    src.mkdir()
+    # opening a task pins its timestamp in the task record
+    r = Restorer(spark, Config.from_toml(
+        None, source_dir=str(src), target_dir=str(tmp_path)
+    ))
+    r.checkpoints.update("mydb", "people", "loaded", signature="abc")
+    _, body = _req(base, "/progress/tables")
+    assert json.loads(body) == {
+        "mydb.people": {"status": "loaded", "rows": None}
+    }
+    key = urllib.parse.quote("`mydb`.`people`")
+    _, body = _req(base, f"/progress/table?t={key}")
+    assert json.loads(body)["status"] == "loaded"
 
 
 # ---------------------------------------------------------------------------

@@ -287,3 +287,47 @@ def test_checkpoint_store_keeps_every_table_under_many_threads(
     assert {k: r["status"] for k, r in recs.items()} == {
         f"`many`.`{t}`": STATUS["analyzed"] for t in names
     }
+
+
+def test_view_catalog_keeps_both_views_written_at_once(tmp_path):
+    """Two views of one database replay on two table threads: each call
+    records its view in `_views.json` without raising, and neither entry
+    is lost to the other's read-modify-write."""
+    import json
+    import sys
+
+    from tidb_lightning_spark.sinks.files_sink import FilesSink
+
+    sink = FilesSink(str(tmp_path / "wh"))
+    barrier = threading.Barrier(2)
+    errors = []
+
+    def replay(db: str, name: str) -> None:
+        try:
+            barrier.wait(timeout=10)
+            sink.write_view_meta(db, name, {"select": f"SELECT 1 AS {name}"})
+        except Exception as exc:
+            errors.append(exc)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    lost = []
+    try:
+        for i in range(200):
+            db = f"db{i}"
+            threads = [
+                threading.Thread(target=replay, args=(db, v))
+                for v in ("v1", "v2")
+            ]
+            for th in threads:
+                th.start()
+            for th in threads:
+                th.join(timeout=30)
+                assert not th.is_alive()
+            with open(os.path.join(sink.warehouse, db, "_views.json")) as f:
+                if set(json.load(f)) != {"v1", "v2"}:
+                    lost.append(db)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not errors, errors[:3]
+    assert not lost, lost[:10]

@@ -1,24 +1,30 @@
 """Checkpoint store (reference: lightning/checkpoints/checkpoints.go).
 
-The reference's 4-level protobuf/MySQL checkpoint machine collapses to a
-per-table JSON state file because our commit unit is a whole table (the
-files sink stages+renames atomically): statuses mirror
+One JSON record per table, because our commit unit is a whole table (the
+files sink stages+renames atomically); statuses mirror
 checkpoints.go:43-56 so `ctl` output reads the same.
 
     loaded(30) -> all_written(60) -> closed(90) -> imported(120) ->
     altered_auto_inc(150) -> checksummed(180) -> analyzed(210)
 
-Updates are atomic (write-temp + rename) and idempotent; a re-run skips
-tables at >= imported with a matching source signature and re-runs
-anything earlier — the exactly-once semantics the kill-and-resume tests
-pin (FIXTURES.md F12).
+Updates are atomic and idempotent; a re-run skips tables at >= imported
+with a matching source signature and re-runs anything earlier — the
+exactly-once semantics the kill-and-resume tests pin (FIXTURES.md F12).
+
+`CheckpointStore` is the one record machine, as the reference's
+`CheckpointsDB` is one interface over its file and MySQL drivers: each
+driver (JSON file, SQLite, a table in the JDBC target) supplies only its
+storage, `_get`, `_rmw`, `_remove` and `_all`.
 """
 
 from __future__ import annotations
 
+import copy
+import hashlib
 import json
 import os
 import tempfile
+import threading
 import time
 
 STATUS = {
@@ -31,54 +37,123 @@ STATUS = {
     "analyzed": 210,
 }
 
+# the task record (pinned timestamp, config fingerprint) rides the table
+# map under a pseudo-table key that `tables()` leaves out
+_TASK = ("__task__", "__meta__")
+
+
+def _now() -> str:
+    return time.strftime("%Y-%m-%d %H:%M:%S")
+
 
 class CheckpointStore:
-    def __init__(self, path: str, enabled: bool = True):
-        import threading
+    """The record machine, stored as `{"version": 1, "tables": {...}}` in
+    one JSON file rewritten atomically (temp file + rename). A flat
+    `{key: record}` file without the envelope reads as its tables.
+    In-process writers serialize on an RLock (table-concurrency > 1)."""
 
+    def __init__(self, path: str, enabled: bool = True):
         self.path = path
         self.enabled = enabled
-        # in-process mutual exclusion for table-concurrency > 1 (the
-        # SQLite driver additionally serializes across processes)
         self._lock = threading.RLock()
-        self._data: dict = {"version": 1, "tables": {}}
+        self._tables: dict = {}
         if enabled and os.path.exists(path):
             with open(path) as f:
-                self._data = json.load(f)
+                data = json.load(f)
+            self._tables = data.get("tables", data)
+
+    # -- storage primitives (every driver overrides these four) ---------
+    def _get(self, key: str) -> dict:
+        with self._lock:
+            return copy.deepcopy(self._tables.get(key, {}))
+
+    def _rmw(self, key: str, mutate) -> None:
+        """One atomic read-modify-write of `key`'s record. `mutate(rec)`
+        edits the record in place; when it returns False nothing is
+        written and no record is created."""
+        with self._lock:
+            rec = copy.deepcopy(self._tables.get(key, {}))
+            if mutate(rec) is False:
+                return
+            self._tables[key] = rec
+            self._save()
+
+    def _remove(self, key: str | None) -> int:
+        with self._lock:
+            if key is None:
+                n = len(self._tables)
+                self._tables = {}
+            else:
+                n = 0 if self._tables.pop(key, None) is None else 1
+            self._save()
+            return n
+
+    def _all(self) -> dict:
+        with self._lock:
+            return copy.deepcopy(self._tables)
 
     def _save(self) -> None:
-        if not self.enabled:
-            return
         os.makedirs(os.path.dirname(self.path) or ".", exist_ok=True)
         fd, tmp = tempfile.mkstemp(dir=os.path.dirname(self.path) or ".")
         with os.fdopen(fd, "w") as f:
-            json.dump(self._data, f, indent=2)
+            json.dump({"version": 1, "tables": self._tables}, f, indent=2)
         os.replace(tmp, self.path)
 
+    # -- keys -----------------------------------------------------------
     @staticmethod
     def table_key(db: str, table: str) -> str:
         return f"`{db}`.`{table}`"
 
+    @staticmethod
+    def _split_key(key: str) -> tuple[str, str]:
+        if key.startswith("`") and "`.`" in key:
+            return tuple(key[1:-1].split("`.`", 1))
+        return tuple(key.partition(".")[::2])  # a hand-written db.tbl key
+
+    # -- records --------------------------------------------------------
+    # A disabled store records nothing and reads empty, whatever the
+    # driver.
+
     def get(self, db: str, table: str) -> dict:
-        return self._data["tables"].get(self.table_key(db, table), {})
+        """A copy of the table's record ({} when there is none)."""
+        return self._get(self.table_key(db, table)) if self.enabled else {}
 
     def status(self, db: str, table: str) -> int:
         return self.get(db, table).get("status", 0)
 
+    def _write(self, db: str, table: str, mutate) -> None:
+        if self.enabled:
+            self._rmw(self.table_key(db, table), mutate)
+
     def update(self, db: str, table: str, status: str, **fields) -> None:
-        with self._lock:
-            key = self.table_key(db, table)
-            rec = self._data["tables"].setdefault(key, {})
-            rec["status"] = STATUS[status]
+        code = STATUS[status]
+
+        def mutate(rec):
+            rec["status"] = code
             rec["status_name"] = status
-            rec["updated_at"] = time.strftime("%Y-%m-%d %H:%M:%S")
+            rec["updated_at"] = _now()
             rec.update(fields)
-            self._save()
+
+        self._write(db, table, mutate)
+
+    def remove(self, db: str | None = None, table: str | None = None) -> int:
+        if not self.enabled:
+            return 0
+        return self._remove(None if db is None else self.table_key(db, table))
+
+    def dump(self) -> dict:
+        return {"version": 1, "tables": self._all() if self.enabled else {}}
+
+    def tables(self):
+        """(db, table, record) for every table record — the task record
+        is not a table and is left out."""
+        for key, rec in self.dump()["tables"].items():
+            db, tbl = self._split_key(key)
+            if (db, tbl) != _TASK:
+                yield db, tbl, rec
 
     def source_signature(self, data_files) -> str:
         """Change-detection key: (path, size) of every input file."""
-        import hashlib
-
         h = hashlib.sha256()
         for f in data_files:
             h.update(f"{f.path}:{f.file_size};".encode())
@@ -103,6 +178,20 @@ class CheckpointStore:
             and rec.get("signature") == signature
         )
 
+    # ----- task record ------------------------------------------------
+    # One per import task: the pinned CURRENT_TIMESTAMP default and the
+    # config fingerprint a resume is verified against (reference
+    # TaskCheckpoint). Written through update/remove like any record.
+
+    def task(self) -> dict:
+        return self.get(*_TASK)
+
+    def set_task(self, **fields) -> None:
+        self.update(*_TASK, "loaded", **fields)
+
+    def clear_task(self) -> None:
+        self.remove(*_TASK)
+
     # ----- engine-level (chunk) records -------------------------------
     # The reference resumes per chunk/engine (checkpoints.go:43-56,
     # tests/checkpoint_chunks); our engine = a deterministic group of a
@@ -116,46 +205,29 @@ class CheckpointStore:
     def engine_update(
         self, db: str, table: str, engine: int, status: str, **fields
     ) -> None:
-        with self._lock:
-            key = self.table_key(db, table)
-            rec = self._data["tables"].setdefault(key, {})
+        def mutate(rec):
             e = rec.setdefault("engines", {}).setdefault(str(engine), {})
             e["status"] = status
-            e["updated_at"] = time.strftime("%Y-%m-%d %H:%M:%S")
+            e["updated_at"] = _now()
             e.update(fields)
-            self._save()
+
+        self._write(db, table, mutate)
 
     def clear_engines(self, db: str, table: str) -> None:
-        with self._lock:
-            rec = self._data["tables"].get(self.table_key(db, table))
-            if rec and rec.pop("engines", None) is not None:
-                self._save()
-
-    def remove(self, db: str | None = None, table: str | None = None) -> int:
-        with self._lock:
-            if db is None:
-                n = len(self._data["tables"])
-                self._data["tables"] = {}
-            else:
-                key = self.table_key(db, table)
-                n = 1 if key in self._data["tables"] else 0
-                self._data["tables"].pop(key, None)
-            self._save()
-            return n
-
-    def dump(self) -> dict:
-        return self._data
+        self._write(
+            db, table, lambda rec: rec.pop("engines", None) is not None
+        )
 
 
 class SQLiteCheckpointStore(CheckpointStore):
     """Database-backed checkpoint driver (reference's MySQL driver analog,
     checkpoints.go:69-175 DDL templates; ours is stdlib sqlite3).
 
-    Same API and record shape as the JSON driver, but every operation is
-    its own transaction against the DB file, so concurrent processes —
-    a server-mode import and a `ctl` inspection, or two imports into the
-    same warehouse — see consistent state instead of clobbering a shared
-    JSON file. WAL mode keeps readers unblocked during updates."""
+    Every operation is its own transaction against the DB file, so
+    concurrent processes — a server-mode import and a `ctl` inspection,
+    or two imports into the same warehouse — see consistent state instead
+    of clobbering a shared JSON file. WAL mode keeps readers unblocked
+    during updates."""
 
     def __init__(self, path: str, enabled: bool = True):
         self.path = path
@@ -175,31 +247,18 @@ class SQLiteCheckpointStore(CheckpointStore):
         con.execute("PRAGMA journal_mode=WAL")
         return con
 
-    # -- storage primitives (everything else inherits) ------------------
-    def get(self, db: str, table: str) -> dict:
-        if not self.enabled:
-            return {}
+    def _get(self, key: str) -> dict:
         with self._conn() as con:
             row = con.execute(
-                "SELECT rec FROM checkpoints WHERE key = ?",
-                (self.table_key(db, table),),
+                "SELECT rec FROM checkpoints WHERE key = ?", (key,)
             ).fetchone()
         return json.loads(row[0]) if row else {}
-
-    def _put(self, key: str, rec: dict) -> None:
-        with self._conn() as con:
-            con.execute(
-                "INSERT INTO checkpoints (key, rec) VALUES (?, ?) "
-                "ON CONFLICT(key) DO UPDATE SET rec = excluded.rec",
-                (key, json.dumps(rec)),
-            )
 
     def _rmw(self, key: str, mutate) -> None:
         """Read-modify-write under ONE write transaction (BEGIN IMMEDIATE
         takes the write lock before the read), so a concurrent server-mode
         import and a ctl process cannot interleave get()/put() and lose
-        engine records. `mutate(rec) -> bool|None`: return False to skip
-        the write."""
+        engine records."""
         with self._conn() as con:
             con.execute("BEGIN IMMEDIATE")
             row = con.execute(
@@ -214,65 +273,20 @@ class SQLiteCheckpointStore(CheckpointStore):
                 (key, json.dumps(rec)),
             )
 
-    def update(self, db: str, table: str, status: str, **fields) -> None:
-        if not self.enabled:
-            return
-
-        def mutate(rec):
-            rec["status"] = STATUS[status]
-            rec["status_name"] = status
-            rec["updated_at"] = time.strftime("%Y-%m-%d %H:%M:%S")
-            rec.update(fields)
-
-        self._rmw(self.table_key(db, table), mutate)
-
-    def engine_update(
-        self, db: str, table: str, engine: int, status: str, **fields
-    ) -> None:
-        if not self.enabled:
-            return
-
-        def mutate(rec):
-            e = rec.setdefault("engines", {}).setdefault(str(engine), {})
-            e["status"] = status
-            e["updated_at"] = time.strftime("%Y-%m-%d %H:%M:%S")
-            e.update(fields)
-
-        self._rmw(self.table_key(db, table), mutate)
-
-    def clear_engines(self, db: str, table: str) -> None:
-        if not self.enabled:
-            return
-
-        def mutate(rec):
-            return rec.pop("engines", None) is not None
-
-        self._rmw(self.table_key(db, table), mutate)
-
-    def remove(self, db: str | None = None, table: str | None = None) -> int:
-        if not self.enabled:
-            return 0
+    def _remove(self, key: str | None) -> int:
         with self._conn() as con:
-            if db is None:
+            if key is None:
                 n = con.execute("SELECT count(*) FROM checkpoints").fetchone()[0]
                 con.execute("DELETE FROM checkpoints")
-            else:
-                cur = con.execute(
-                    "DELETE FROM checkpoints WHERE key = ?",
-                    (self.table_key(db, table),),
-                )
-                n = cur.rowcount
-        return n
+                return n
+            return con.execute(
+                "DELETE FROM checkpoints WHERE key = ?", (key,)
+            ).rowcount
 
-    def dump(self) -> dict:
-        if not self.enabled:
-            return {"version": 1, "tables": {}}
+    def _all(self) -> dict:
         with self._conn() as con:
             rows = con.execute("SELECT key, rec FROM checkpoints").fetchall()
-        return {
-            "version": 1,
-            "tables": {k: json.loads(r) for k, r in rows},
-        }
+        return {k: json.loads(r) for k, r in rows}
 
 
 class JDBCCheckpointStore(CheckpointStore):
@@ -288,17 +302,32 @@ class JDBCCheckpointStore(CheckpointStore):
     not concurrent import, matching the reference's usage."""
 
     SCHEMA = "lightning_checkpoints"  # reference default checkpoint schema
+    # every statement the driver runs; {k}/{rec} are the quoted columns
+    SQL = {
+        "get": "SELECT {rec} FROM {t} WHERE {k} = ?",
+        "all": "SELECT {k}, {rec} FROM {t}",
+        "count": "SELECT COUNT(*) FROM {t}",
+        "update": "UPDATE {t} SET {rec} = ? WHERE {k} = ?",
+        "insert": "INSERT INTO {t} ({k}, {rec}) VALUES (?, ?)",
+        "delete": "DELETE FROM {t} WHERE {k} = ?",
+        "clear": "DELETE FROM {t}",
+    }
 
     def __init__(self, spark, url: str, properties: dict | None = None,
                  enabled: bool = True):
-        import threading
-
         self.spark = spark
         self.url = url
         self.properties = dict(properties or {})
         self.enabled = enabled
         self.path = f"{url} [{self.SCHEMA}.checkpoint]"  # ctl display
         self.dialect = "derby" if url.startswith("jdbc:derby") else "mysql"
+        q = "`" if self.dialect == "mysql" else '"'
+        self._sql = {
+            name: sql.format(
+                t=f"{self.SCHEMA}.checkpoint", k=f"{q}k{q}", rec=f"{q}rec{q}"
+            )
+            for name, sql in self.SQL.items()
+        }
         self._lock = threading.RLock()
         if enabled:
             self._init_table()
@@ -334,153 +363,54 @@ class JDBCCheckpointStore(CheckpointStore):
                 ignore_exists=True,
             )
 
-    def _q(self, ident: str) -> str:
-        return f"`{ident}`" if self.dialect == "mysql" else f'"{ident}"'
-
-    # -- storage primitives (everything else inherits) ------------------
-    def get(self, db: str, table: str) -> dict:
-        if not self.enabled:
-            return {}
-        sql = (
-            f"SELECT {self._q('rec')} FROM {self.SCHEMA}.checkpoint "
-            f"WHERE {self._q('k')} = ?"
-        )
-        with self._conn() as conn:
-            ps = conn.prepareStatement(sql)
+    def _run(self, conn, stmt: str, *params: str, width: int = 0):
+        """Run one of `SQL` with string parameters: the update count, or
+        with `width` > 0 the result rows as lists of `width` strings."""
+        ps = conn.prepareStatement(self._sql[stmt])
+        try:
+            for i, p in enumerate(params, 1):
+                ps.setString(i, p)
+            if not width:
+                return int(ps.executeUpdate())
+            rs = ps.executeQuery()
             try:
-                ps.setString(1, self.table_key(db, table))
-                rs = ps.executeQuery()
-                try:
-                    if rs.next():
-                        return json.loads(rs.getString(1))
-                    return {}
-                finally:
-                    rs.close()
+                rows = []
+                while rs.next():
+                    rows.append([rs.getString(c) for c in range(1, width + 1)])
+                return rows
             finally:
-                ps.close()
+                rs.close()
+        finally:
+            ps.close()
+
+    def _get(self, key: str) -> dict:
+        with self._conn() as conn:
+            rows = self._run(conn, "get", key, width=1)
+        return json.loads(rows[0][0]) if rows else {}
 
     def _rmw(self, key: str, mutate) -> None:
         """Read-modify-write; in-process serialization via the RLock,
         UPDATE-else-INSERT upsert (portable across derby/mysql)."""
         with self._lock, self._conn() as conn:
-            ps = conn.prepareStatement(
-                f"SELECT {self._q('rec')} FROM {self.SCHEMA}.checkpoint "
-                f"WHERE {self._q('k')} = ?"
-            )
-            try:
-                ps.setString(1, key)
-                rs = ps.executeQuery()
-                try:
-                    rec = json.loads(rs.getString(1)) if rs.next() else {}
-                finally:
-                    rs.close()
-            finally:
-                ps.close()
+            rows = self._run(conn, "get", key, width=1)
+            rec = json.loads(rows[0][0]) if rows else {}
             if mutate(rec) is False:
                 return
-            up = conn.prepareStatement(
-                f"UPDATE {self.SCHEMA}.checkpoint SET {self._q('rec')} = ? "
-                f"WHERE {self._q('k')} = ?"
-            )
-            try:
-                up.setString(1, json.dumps(rec))
-                up.setString(2, key)
-                n = up.executeUpdate()
-            finally:
-                up.close()
-            if n == 0:
-                ins = conn.prepareStatement(
-                    f"INSERT INTO {self.SCHEMA}.checkpoint "
-                    f"({self._q('k')}, {self._q('rec')}) VALUES (?, ?)"
-                )
-                try:
-                    ins.setString(1, key)
-                    ins.setString(2, json.dumps(rec))
-                    ins.executeUpdate()
-                finally:
-                    ins.close()
+            if not self._run(conn, "update", json.dumps(rec), key):
+                self._run(conn, "insert", key, json.dumps(rec))
 
-    def update(self, db: str, table: str, status: str, **fields) -> None:
-        if not self.enabled:
-            return
-
-        def mutate(rec):
-            rec["status"] = STATUS[status]
-            rec["status_name"] = status
-            rec["updated_at"] = time.strftime("%Y-%m-%d %H:%M:%S")
-            rec.update(fields)
-
-        self._rmw(self.table_key(db, table), mutate)
-
-    def engine_update(
-        self, db: str, table: str, engine: int, status: str, **fields
-    ) -> None:
-        if not self.enabled:
-            return
-
-        def mutate(rec):
-            e = rec.setdefault("engines", {}).setdefault(str(engine), {})
-            e["status"] = status
-            e["updated_at"] = time.strftime("%Y-%m-%d %H:%M:%S")
-            e.update(fields)
-
-        self._rmw(self.table_key(db, table), mutate)
-
-    def clear_engines(self, db: str, table: str) -> None:
-        if not self.enabled:
-            return
-
-        def mutate(rec):
-            return rec.pop("engines", None) is not None
-
-        self._rmw(self.table_key(db, table), mutate)
-
-    def remove(self, db: str | None = None, table: str | None = None) -> int:
-        if not self.enabled:
-            return 0
+    def _remove(self, key: str | None) -> int:
         with self._lock, self._conn() as conn:
-            st = conn.createStatement()
-            try:
-                if db is None:
-                    rs = st.executeQuery(
-                        f"SELECT COUNT(*) FROM {self.SCHEMA}.checkpoint"
-                    )
-                    rs.next()
-                    n = int(rs.getLong(1))
-                    rs.close()
-                    st.execute(f"DELETE FROM {self.SCHEMA}.checkpoint")
-                    return n
-            finally:
-                st.close()
-            ps = conn.prepareStatement(
-                f"DELETE FROM {self.SCHEMA}.checkpoint "
-                f"WHERE {self._q('k')} = ?"
-            )
-            try:
-                ps.setString(1, self.table_key(db, table))
-                return int(ps.executeUpdate())
-            finally:
-                ps.close()
+            if key is not None:
+                return self._run(conn, "delete", key)
+            ((n,),) = self._run(conn, "count", width=1)
+            self._run(conn, "clear")
+            return int(n)
 
-    def dump(self) -> dict:
-        if not self.enabled:
-            return {"version": 1, "tables": {}}
+    def _all(self) -> dict:
         with self._conn() as conn:
-            st = conn.createStatement()
-            try:
-                rs = st.executeQuery(
-                    f"SELECT {self._q('k')}, {self._q('rec')} "
-                    f"FROM {self.SCHEMA}.checkpoint"
-                )
-                tables = {}
-                try:
-                    while rs.next():
-                        tables[rs.getString(1)] = json.loads(rs.getString(2))
-                finally:
-                    rs.close()
-            finally:
-                st.close()
-        return {"version": 1, "tables": tables}
+            rows = self._run(conn, "all", width=2)
+        return {k: json.loads(r) for k, r in rows}
 
 
 def open_checkpoint_store(

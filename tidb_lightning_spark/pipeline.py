@@ -375,6 +375,15 @@ def _checksum_from_record(rec: dict | None) -> Checksum | None:
     return Checksum(rec["kvs"], rec["bytes"], rec["value"])
 
 
+def _release(cached: list[DataFrame]) -> None:
+    """Unpersist and forget the parts a plan persisted (idempotent)."""
+    while cached:
+        try:
+            cached.pop().unpersist()
+        except Exception:
+            pass
+
+
 class _Target:
     """One table's side of a sink in `Restorer.restore_table`: the steps
     that differ between sinks. `replay_view` records a view definition;
@@ -489,10 +498,10 @@ class _FilesTarget(_Target):
         engine recorded none)."""
         r, tbl = self.r, self.tbl
         plans = []
-        for k, efiles, df_e, ebase in engines:
+        for k, efiles, df_e, ebase, cached in engines:
             esig = r.checkpoints.source_signature(efiles)
             done = r.checkpoints.engine_done(tbl.db, tbl.name, k, esig)
-            plans.append((k, efiles, df_e, ebase, esig, done))
+            plans.append((k, efiles, df_e, ebase, cached, esig, done))
         # pre-clean: keep only files of engines that are DONE under the
         # current plan; everything else (partial writes, output from a
         # previous non-engine import, engines of an older grouping) is
@@ -505,7 +514,7 @@ class _FilesTarget(_Target):
                 if fname.endswith((".parquet", ".orc")) and not fname.startswith(keep):
                     os.remove(os.path.join(final, fname))
         engine_cks: list[Checksum] | None = [] if aggs else None
-        for k, efiles, df_e, ebase, esig, done in plans:
+        for k, efiles, df_e, ebase, cached, esig, done in plans:
             r.pauser.wait_if_paused()
             if done:
                 # chunk-level resume: engine already in place; its ingest
@@ -544,14 +553,8 @@ class _FilesTarget(_Target):
                 files=[f.path for f in efiles], **ecks_field,
             )
             # bounded working set: any SQL-dump cache this engine
-            # materialized is dead once the engine commits (unpersist is
-            # idempotent; restore_table's finally sweep covers error paths)
-            lo, hi = r._engine_cache_slices.get(k, (0, 0))
-            for cached in r._table_caches[lo:hi]:
-                try:
-                    cached.unpersist()
-                except Exception:
-                    pass
+            # materialized is dead once the engine commits
+            _release(cached)
         if engine_cks is None:
             return None
         total = Checksum()
@@ -896,7 +899,7 @@ class Restorer:
         # COUNT(DISTINCT ts)=1 across five killed-and-resumed runs). The
         # task meta is retired when a run completes, so the next task
         # stamps fresh.
-        task_rec = self.checkpoints.get("__task__", "__meta__")
+        task_rec = self.checkpoints.task()
         self.pinned_ts = task_rec.get("pinned_ts")
         if self.pinned_ts:
             # resuming an interrupted task: the checkpoint was built for
@@ -910,40 +913,14 @@ class Restorer:
                 _verify_task_checkpoint(cfg, task_rec)
         else:
             self.pinned_ts = time.strftime("%Y-%m-%d %H:%M:%S")
-            if cfg.checkpoint_enable:
-                from tidb_lightning_spark import __version__
+            from tidb_lightning_spark import __version__
 
-                self.checkpoints.update(
-                    "__task__", "__meta__", "loaded",
-                    pinned_ts=self.pinned_ts,
-                    cfg_fingerprint=_task_fingerprint(cfg),
-                    version=__version__,
-                )
+            self.checkpoints.set_task(
+                pinned_ts=self.pinned_ts,
+                cfg_fingerprint=_task_fingerprint(cfg),
+                version=__version__,
+            )
         self.pauser = Pauser(cfg.target_dir)
-        # per-table caches released in restore_table's finally: only the
-        # SQL-dump branch registers here (see _read_and_transform — the
-        # Python statement parse is expensive enough that the range
-        # sampler re-executing it flips the cache-vs-rescan economics
-        # that keep the CSV path uncached). THREAD-LOCAL: with
-        # table_concurrency > 1 each restore_table runs wholly on one
-        # worker thread, and instance-level lists would let one table's
-        # engine-commit/finally sweep unpersist another in-flight
-        # table's caches (and engine index k collides across tables).
-        self._cache_tls = threading.local()
-
-    @property
-    def _table_caches(self) -> list[DataFrame]:
-        tc = getattr(self._cache_tls, "table_caches", None)
-        if tc is None:
-            tc = self._cache_tls.table_caches = []
-        return tc
-
-    @property
-    def _engine_cache_slices(self) -> dict[int, tuple[int, int]]:
-        sl = getattr(self._cache_tls, "engine_slices", None)
-        if sl is None:
-            sl = self._cache_tls.engine_slices = {}
-        return sl
 
     # ------------------------------------------------------------------
 
@@ -994,8 +971,6 @@ class Restorer:
             status="running", tables_total=len(tables), tables_done=0,
             bytes_total=total_bytes, bytes_done=0,
         )
-        import threading
-
         progress_lock = threading.Lock()
         state = {"done": 0, "bytes": 0}
 
@@ -1065,7 +1040,7 @@ class Restorer:
             # task finished: retire the task meta so the NEXT import
             # stamps a fresh CURRENT_TIMESTAMP default (only an
             # incomplete task's resume must reuse the old one)
-            self.checkpoints.remove("__task__", "__meta__")
+            self.checkpoints.clear_task()
         metrics.update_progress(
             status="ok" if report.ok else "failed", current=None,
             seconds=round(report.seconds, 3),
@@ -1189,13 +1164,6 @@ class Restorer:
                 metrics.TABLE_STATE_COMPLETED, metrics.TABLE_RESULT_FAILURE
             )
         finally:
-            for cached in self._table_caches:
-                try:
-                    cached.unpersist()
-                except Exception:
-                    pass
-            self._table_caches.clear()
-            self._engine_cache_slices.clear()
             rep.seconds = time.time() - t0
             metrics.IMPORT_SECONDS.observe(rep.seconds)
         return rep
@@ -1211,139 +1179,148 @@ class Restorer:
         from tidb_lightning_spark.sinks.jdbc_sink import apply_duplicate_policy
 
         # one plan per engine (file group), row ids chained across the
-        # groups like the reference's chunk allocation (region.go:208-286)
-        engines: list[tuple[int, list, DataFrame, int]] = []
+        # groups like the reference's chunk allocation (region.go:208-286).
+        # Each engine owns the list of parts its plan persisted (SQL dumps
+        # only, see _read_and_transform): released when the engine
+        # commits (_FilesTarget._write_engines) and, at the latest, when
+        # this call returns or raises.
+        engines: list[tuple[int, list, DataFrame, int, list]] = []
+        owned: list[list[DataFrame]] = []
         base = 0
-        for k, files in enumerate(target.groups):
-            c0 = len(self._table_caches)
-            df_k, next_base = self._read_and_transform(
-                tbl, info, files=files, rowid_base=base
-            )
-            self._engine_cache_slices[k] = (c0, len(self._table_caches))
-            engines.append((k, files, df_k, base))
-            base = next_base
-        df = engines[0][2]
-        if df is None:
-            return None
-        for _, _, df_k, _ in engines[1:]:
-            df = df.unionByName(df_k, allowMissingColumns=True)
+        try:
+            for k, files in enumerate(target.groups):
+                owned.append([])
+                df_k, next_base = self._read_and_transform(
+                    tbl, info, files, base, owned[-1]
+                )
+                engines.append((k, files, df_k, base, owned[-1]))
+                base = next_base
+            df = engines[0][2]
+            if df is None:
+                return None
+            for e in engines[1:]:
+                df = df.unionByName(e[2], allowMissingColumns=True)
 
-        # strict sql_mode. A single files write folds the violation check
-        # into the WRITE job: observe the error count below the ERR-column
-        # drop and check it before the staged commit (the sink's
-        # pre_commit), so strict mode costs no second source scan (the
-        # range sampler may double-fire the metric; only ==0 is checked,
-        # and 2x0 == 0). Engines and the JDBC sink probe up front, before
-        # anything is written to the target.
-        err_obs = None
-        if ERR_COL in df.columns:
-            if self.cfg.strict_sql_mode and target.folds_strict and len(engines) == 1:
-                err_obs = Observation()
-                df = df.observe(
-                    err_obs,
-                    F.sum(F.col(ERR_COL).isNotNull().cast("long")).alias("n_err"),
-                    F.first(ERR_COL, ignorenulls=True).alias("sample"),
-                )
-            elif self.cfg.strict_sql_mode:
-                bad = (
-                    df.filter(F.col(ERR_COL).isNotNull())
-                    .select(ERR_COL).limit(3).collect()
-                )
-                if bad:
+            # strict sql_mode. A single files write folds the violation check
+            # into the WRITE job: observe the error count below the ERR-column
+            # drop and check it before the staged commit (the sink's
+            # pre_commit), so strict mode costs no second source scan (the
+            # range sampler may double-fire the metric; only ==0 is checked,
+            # and 2x0 == 0). Engines and the JDBC sink probe up front, before
+            # anything is written to the target.
+            err_obs = None
+            if ERR_COL in df.columns:
+                strict = self.cfg.strict_sql_mode
+                if strict and target.folds_strict and len(engines) == 1:
+                    err_obs = Observation()
+                    df = df.observe(
+                        err_obs,
+                        F.sum(F.col(ERR_COL).isNotNull().cast("long")).alias("n_err"),
+                        F.first(ERR_COL, ignorenulls=True).alias("sample"),
+                    )
+                elif strict:
+                    bad = (
+                        df.filter(F.col(ERR_COL).isNotNull())
+                        .select(ERR_COL).limit(3).collect()
+                    )
+                    if bad:
+                        raise IngestError(
+                            f"strict sql_mode violations in "
+                            f"`{tbl.db}`.`{tbl.name}`: "
+                            f"columns {[r[0] for r in bad]}"
+                        )
+                df = df.drop(ERR_COL)
+
+            def strict_gate():
+                if err_obs is None:
+                    return
+                got = err_obs.get
+                if got["n_err"]:
                     raise IngestError(
                         f"strict sql_mode violations in "
-                        f"`{tbl.db}`.`{tbl.name}`: "
-                        f"columns {[r[0] for r in bad]}"
+                        f"`{tbl.db}`.`{tbl.name}`: {got['n_err']} rows "
+                        f"(e.g. column {got['sample']!r})"
                     )
-            df = df.drop(ERR_COL)
 
-        def strict_gate():
-            if err_obs is None:
-                return
-            got = err_obs.get
-            if got["n_err"]:
-                raise IngestError(
-                    f"strict sql_mode violations in "
-                    f"`{tbl.db}`.`{tbl.name}`: {got['n_err']} rows "
-                    f"(e.g. column {got['sample']!r})"
+            # PK-conflict resolution (tidb.go:80-88 policy names; the row id
+            # orders first/last) BEFORE the checksum observation, so the
+            # ingest checksum covers exactly the delivered rows
+            if self.duplicate_policy != "none" and info.primary_key:
+                df = apply_duplicate_policy(
+                    df, info.primary_key, self.duplicate_policy,
+                    order_col=ROWID_COL,
                 )
+            if ROWID_COL in df.columns and not (
+                target.keeps_rowid and info.has_auto_row_id()
+            ):
+                df = df.drop(ROWID_COL)
 
-        # PK-conflict resolution (tidb.go:80-88 policy names; the row id
-        # orders first/last) BEFORE the checksum observation, so the
-        # ingest checksum covers exactly the delivered rows
-        if self.duplicate_policy != "none" and info.primary_key:
-            df = apply_duplicate_policy(
-                df, info.primary_key, self.duplicate_policy,
-                order_col=ROWID_COL,
+            # ingest-side checksum accumulated DURING the write via
+            # df.observe() — the reference's accumulate-while-delivering
+            # (restore.go:2325-2332) with zero extra source scans. Its fields
+            # are the readback's: df's typed columns in df order.
+            want_cks = self.cfg.checksum != "off"
+            fields = df.schema.fields
+            written, ingest_cks = target.deliver(
+                df, engines, checksum_aggs(fields) if want_cks else None, strict_gate
             )
-        if ROWID_COL in df.columns and not (
-            target.keeps_rowid and info.has_auto_row_id()
-        ):
-            df = df.drop(ROWID_COL)
 
-        # ingest-side checksum accumulated DURING the write via
-        # df.observe() — the reference's accumulate-while-delivering
-        # (restore.go:2325-2332) with zero extra source scans. Its fields
-        # are the readback's: df's typed columns in df order.
-        want_cks = self.cfg.checksum != "off"
-        fields = df.schema.fields
-        written, ingest_cks = target.deliver(
-            df, engines, checksum_aggs(fields) if want_cks else None, strict_gate
-        )
-
-        # ONE readback aggregate serves the row count, the verification
-        # triple (L2), the warehouse's ANALYZE column stats (L3; a JDBC
-        # target runs its own ANALYZE) and the sink's extra aggregates
-        want_stats = target.column_stats and self.cfg.analyze != "off"
-        extra = target.readback_aggs()
-        if want_cks or want_stats or extra:
-            total, readback, column_stats, extra_values = _readback_pass(
-                written, fields, want_cks, want_stats, extra
-            )
-        else:  # footer-metadata count only — no data scan
-            total, readback, column_stats, extra_values = (
-                written.count(), None, None, {}
-            )
-        rows = target.delivered_rows(total)
-        if want_cks:
-
-            def recompute() -> Checksum:
-                return Checksum.from_row(checksum(df, fields).collect()[0])
-
-            if ingest_cks is None:
-                # no observed value available (resumed engines imported
-                # under checksum=off): one full recompute from source
-                ingest_cks = recompute()
-            elif ingest_cks != readback:
-                # disambiguate a real data mismatch from an observation
-                # anomaly (stage retries can re-fire metrics): recompute
-                # the ingest side from source once before deciding
-                recomputed = recompute()
-                if recomputed != ingest_cks:
-                    log.warning(
-                        "observed ingest checksum %s != recomputed %s "
-                        "(speculative/retried tasks?); using recomputed",
-                        ingest_cks, recomputed,
-                    )
-                ingest_cks = recomputed
-            if ingest_cks != readback:
-                msg = (
-                    f"checksum mismatch `{tbl.db}`.`{tbl.name}`: "
-                    f"ingest {ingest_cks} != readback {readback}"
-                    f"{target.mismatch_hint}"
+            # ONE readback aggregate serves the row count, the verification
+            # triple (L2), the warehouse's ANALYZE column stats (L3; a JDBC
+            # target runs its own ANALYZE) and the sink's extra aggregates
+            want_stats = target.column_stats and self.cfg.analyze != "off"
+            extra = target.readback_aggs()
+            if want_cks or want_stats or extra:
+                total, readback, column_stats, extra_values = _readback_pass(
+                    written, fields, want_cks, want_stats, extra
                 )
-                if self.cfg.checksum == "required":
-                    # never commit unverified rows, and downgrade below
-                    # `imported` so resume re-runs the table instead of
-                    # skipping a failed verification
-                    target.abort()
-                    self.checkpoints.update(
-                        tbl.db, tbl.name, "closed", signature=target.sig
+            else:  # footer-metadata count only — no data scan
+                total, readback, column_stats, extra_values = (
+                    written.count(), None, None, {}
+                )
+            rows = target.delivered_rows(total)
+            if want_cks:
+
+                def recompute() -> Checksum:
+                    return Checksum.from_row(checksum(df, fields).collect()[0])
+
+                if ingest_cks is None:
+                    # no observed value available (resumed engines imported
+                    # under checksum=off): one full recompute from source
+                    ingest_cks = recompute()
+                elif ingest_cks != readback:
+                    # disambiguate a real data mismatch from an observation
+                    # anomaly (stage retries can re-fire metrics): recompute
+                    # the ingest side from source once before deciding
+                    recomputed = recompute()
+                    if recomputed != ingest_cks:
+                        log.warning(
+                            "observed ingest checksum %s != recomputed %s "
+                            "(speculative/retried tasks?); using recomputed",
+                            ingest_cks, recomputed,
+                        )
+                    ingest_cks = recomputed
+                if ingest_cks != readback:
+                    msg = (
+                        f"checksum mismatch `{tbl.db}`.`{tbl.name}`: "
+                        f"ingest {ingest_cks} != readback {readback}"
+                        f"{target.mismatch_hint}"
                     )
-                    raise IngestError(msg)
-                log.warning(msg)
-        target.commit(rows, readback, extra_values)
-        return rows, readback, column_stats
+                    if self.cfg.checksum == "required":
+                        # never commit unverified rows, and downgrade below
+                        # `imported` so resume re-runs the table instead of
+                        # skipping a failed verification
+                        target.abort()
+                        self.checkpoints.update(
+                            tbl.db, tbl.name, "closed", signature=target.sig
+                        )
+                        raise IngestError(msg)
+                    log.warning(msg)
+            target.commit(rows, readback, extra_values)
+            return rows, readback, column_stats
+        finally:
+            for cached in owned:
+                _release(cached)
 
     # ------------------------------------------------------------------
     def _jdbc_readback_df(self, dbtable: str, info: TableInfo) -> DataFrame:
@@ -1603,12 +1580,16 @@ class Restorer:
         info: TableInfo,
         files=None,
         rowid_base: int = 0,
+        cached: list[DataFrame] | None = None,
     ) -> tuple[DataFrame | None, int]:
         """Lazy read+transform plan for `files` (default: all of the
         table's data files), with row-id allocation starting at
         `rowid_base`. Returns (df, next_rowid_base) so engine-granular
         callers can chain disjoint id ranges across file groups exactly
-        like the reference's chunk allocation (region.go:208-286)."""
+        like the reference's chunk allocation (region.go:208-286). When
+        the caller hands in `cached`, a list it releases with `_release`
+        once the rows are delivered, SQL-dump parts are persisted and
+        appended to it; without one nothing is persisted."""
         data_files = tbl.data_files if files is None else files
         if not data_files:
             return None, rowid_base
@@ -1943,25 +1924,22 @@ class Restorer:
                     # tuples / DEFAULT keyword); CSV never pays for it
                     sentinel_defaults=True,
                 )
-                # Persist the parsed+cast rows: unlike the CSV path
-                # (where the range sampler's re-scan is cheaper than a
-                # cache round-trip — files_sink.write_table docstring),
-                # the SQL-dump scan is a Python statement parse that
-                # costs 10-30x the downstream plan, and the sampler
-                # would run it TWICE. MEMORY_AND_DISK; released in
-                # restore_table's finally, so on an engine-granular
-                # import the cache footprint is the TABLE's parsed rows
-                # (engines materialize lazily but accumulate until the
-                # table commits) — spilled to executor disk, the same
-                # per-table on-disk footprint as the reference's SST
-                # intermediates (backend/local.go memtable->SST), not a
-                # new cost class. Tables restore concurrently (up to
-                # table_concurrency, default 6), so up to that many
-                # tables' parsed rows can be persisted at once.
-                from pyspark import StorageLevel
+                # The parsed-row cache policy. Only SQL-dump parts are
+                # persisted: every other source lets the range sampler
+                # re-scan (files_sink._range_sorted), but this scan is a
+                # Python statement parse that the sampler would run a
+                # second time. A 5-pair interleaved A/B on perfbench's
+                # sqldump_bulk (4 cores) made import_s slower in 5 of 5
+                # pairs without the persist: medians 4.52 -> 5.19 s
+                # (+15%). MEMORY_AND_DISK, and only when the caller hands
+                # in the list that releases it (_import_rows: when the
+                # engine commits, or when the table's import ends), so
+                # at most table_concurrency tables' rows are held at once.
+                if cached is not None:
+                    from pyspark import StorageLevel
 
-                part = part.persist(StorageLevel.MEMORY_AND_DISK)
-                self._table_caches.append(part)
+                    part = part.persist(StorageLevel.MEMORY_AND_DISK)
+                    cached.append(part)
                 parts.append(part)
 
         if parquet_files:

@@ -318,27 +318,34 @@ class _Handler(BaseHTTPRequestHandler):
         else:
             self._error(404, "not found")
 
-    def _progress_table(self, name: str) -> None:
+    def _table_records(self) -> list | None:
+        """(db, table, record) of every checkpointed table, or None when
+        no target dir is configured."""
         t = self.server.target_dir  # type: ignore[attr-defined]
         if not t:
-            return self._error(404, "no target dir configured")
-        try:
-            from tidb_lightning_spark.checkpoints import open_checkpoint_store
+            return None
+        from tidb_lightning_spark.checkpoints import open_checkpoint_store
 
-            cps = open_checkpoint_store(t, driver="auto").dump()
+        try:
+            return list(open_checkpoint_store(t, driver="auto").tables())
         except (OSError, ValueError):
-            cps = {}
-        tables = cps.get("tables", cps)
+            return []
+
+    def _progress_table(self, name: str) -> None:
+        recs = self._table_records()
+        if recs is None:
+            return self._error(404, "no target dir configured")
+        from tidb_lightning_spark.checkpoints import STATUS, CheckpointStore
+
         # accept both plain db.tbl and the store's backticked `db`.`tbl`
-        entry = tables.get(name)
-        if entry is None and "." in name and "`" not in name:
-            db, _, tbl = name.partition(".")
-            entry = tables.get(f"`{db}`.`{tbl}`")
+        entry = next(
+            (rec for db, tbl, rec in recs
+             if name in (f"{db}.{tbl}", CheckpointStore.table_key(db, tbl))),
+            None,
+        )
         if entry is None:
             return self._error(404, f"table {name!r} not found")
         if isinstance(entry, dict) and isinstance(entry.get("status"), int):
-            from tidb_lightning_spark.checkpoints import STATUS
-
             names = {v: k for k, v in STATUS.items()}
             entry = {**entry, "status": names.get(
                 entry["status"], entry["status"])}
@@ -348,26 +355,15 @@ class _Handler(BaseHTTPRequestHandler):
         """All tables' checkpoint status in one call — feeds the per-table
         rows of the web page (the reference web UI's table list,
         lightning/web/progress.go)."""
-        t = self.server.target_dir  # type: ignore[attr-defined]
-        if not t:
-            return self._json(200, {})
-        try:
-            from tidb_lightning_spark.checkpoints import (
-                STATUS,
-                open_checkpoint_store,
-            )
+        from tidb_lightning_spark.checkpoints import STATUS
 
-            cps = open_checkpoint_store(t, driver="auto").dump()
-        except (OSError, ValueError):
-            return self._json(200, {})
-        tables = cps.get("tables", cps)
         names = {v: k for k, v in STATUS.items()}
         out = {}
-        for key, entry in tables.items():
+        for db, tbl, entry in self._table_records() or []:
             if not isinstance(entry, dict):
                 continue
             st = entry.get("status")
-            out[key.replace("`", "")] = {
+            out[f"{db}.{tbl}"] = {
                 "status": names.get(st, st) if isinstance(st, int) else st,
                 "rows": (entry.get("staged") or {}).get("rows")
                 if entry.get("staged")

@@ -62,7 +62,7 @@ def get_spark(
         # stages (all the TPC-H plans) stay fused as before.
         .config("spark.sql.codegen.hugeMethodLimit", "8000")
         .config("spark.ui.enabled", "false")
-        # catalog tables (bucketed sink) should never litter the CWD
+        # catalog tables (saveAsTable) should never litter the CWD
         .config(
             "spark.sql.warehouse.dir",
             os.environ.get(

@@ -24,6 +24,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import threading
 import time
 import uuid
 from dataclasses import dataclass
@@ -65,12 +66,15 @@ def _range_sorted(
 
     One shuffle: Spark's external sort handles spill (the SST/pebble
     analog). repartitionByRange SAMPLES its input, re-executing the
-    read+transform chain once to pick bounds. That extra scan is
-    deliberately NOT avoided with persist(): measured at 37 MiB and
-    373 MiB, caching the parsed rows costs 2-3x more (cache build +
-    columnar re-read) than re-parsing, and at 100 TB a full-input
-    persist is a second copy of the dataset on executor disks while the
-    sampling scan remains a ~1x read with pruning intact."""
+    read+transform chain once to pick bounds. For CSV and parquet that
+    extra scan is deliberately NOT avoided with persist(): measured at
+    37 MiB and 373 MiB, caching the parsed rows costs 2-3x more (cache
+    build + columnar re-read) than re-parsing, and at 100 TB a
+    full-input persist is a second copy of the dataset on executor disks
+    while the sampling scan remains a ~1x read with pruning intact. The
+    one exception is the SQL-dump source, whose Python parse the caller
+    persists: the policy and its measurement are stated once, at the
+    persist in `Restorer._read_and_transform`."""
     out = df
     if sort_columns:
         n = n_ranges or _n_ranges(df.sparkSession, source_bytes)
@@ -99,6 +103,7 @@ class FilesSink:
     def __init__(self, warehouse: str, fmt: str = "parquet"):
         self.warehouse = warehouse
         self.fmt = fmt
+        self._views_lock = threading.Lock()
 
     def table_path(self, db: str, table: str) -> str:
         return os.path.join(self.warehouse, db, table)
@@ -107,18 +112,23 @@ class FilesSink:
         """Record a replayed view definition in the warehouse catalog
         (`<wh>/<db>/_views.json`) — the files-backend analog of the
         reference executing CREATE VIEW at the target
-        (restore.go:553-602). `cli sql` registers these after tables."""
+        (restore.go:553-602). `cli sql` registers these after tables.
+        Views of one database replay on concurrent table threads: the
+        read-modify-write holds the sink's lock, and the rewrite goes
+        through a uniquely named temp file + rename (opened normally, so
+        the catalog keeps the umask's mode; mkstemp would make it 0600)."""
         path = os.path.join(self.warehouse, db, "_views.json")
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        views = {}
-        if os.path.exists(path):
-            with open(path) as f:
-                views = json.load(f)
-        views[name] = meta
-        tmp = path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(views, f, indent=1)
-        os.replace(tmp, path)
+        with self._views_lock:
+            os.makedirs(os.path.dirname(path), exist_ok=True)
+            views = {}
+            if os.path.exists(path):
+                with open(path) as f:
+                    views = json.load(f)
+            views[name] = meta
+            tmp = f"{path}.{uuid.uuid4().hex}.tmp"
+            with open(tmp, "w") as f:
+                json.dump(views, f, indent=1)
+            os.replace(tmp, path)
         return path
 
     def list_views(self) -> dict[str, dict[str, dict]]:
@@ -338,51 +348,6 @@ class FilesSink:
         path = os.path.join(self.table_path(db, table), "_tls_meta.json")
         with open(path, "w") as f:
             json.dump(meta, f, indent=2, default=str)
-
-    def write_bucketed_table(
-        self,
-        df: DataFrame,
-        db: str,
-        table: str,
-        bucket_columns: list[str],
-        n_buckets: int,
-        sort_columns: list[str] | None = None,
-    ) -> str:
-        """Catalog-registered bucketed output (H: co-located joins).
-
-        `bucketBy(n, keys)` hash-partitions rows into a fixed bucket count
-        recorded in the catalog; two tables bucketed the same way join
-        WITHOUT a shuffle (no Exchange in the plan) — the Spark-native
-        equivalent of the reference pre-splitting the target key space
-        (SplitAndScatterRegionByRanges, localhelper.go:54-207) so ingest
-        lands co-located. At 100 TB this is the difference between a
-        full-fact shuffle per join and none; pick n_buckets ~ total_bytes
-        / 128 MiB, and the SAME n for every table sharing join keys.
-
-        Requires a catalog (saveAsTable); the plain path-based sink stays
-        the default. Returns the qualified table name.
-        """
-        spark = df.sparkSession
-        spark.sql(f"CREATE DATABASE IF NOT EXISTS `{db}`")
-        name = f"`{db}`.`{table}`"
-        writer = (
-            df.write.mode("overwrite")
-            .format(self.fmt)
-            # external table rooted in THIS sink's warehouse, not the
-            # session default (keeps all engine output under target_dir)
-            .option("path", self.table_path(db, table))
-            .bucketBy(n_buckets, *bucket_columns)
-        )
-        if sort_columns:
-            writer = writer.sortBy(*sort_columns)
-        writer.saveAsTable(f"{db}.{table}")
-        # ANALYZE (L3 full, restore.go:2215-2220): table + column stats
-        # into the catalog so Catalyst's CBO sizes joins/broadcasts from
-        # real row counts and NDVs instead of file-size guesses.
-        spark.sql(
-            f"ANALYZE TABLE {name} COMPUTE STATISTICS FOR ALL COLUMNS"
-        )
-        return name
 
 
 # ---------------------------------------------------------------------------

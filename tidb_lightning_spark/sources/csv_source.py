@@ -587,8 +587,11 @@ def read_csv_files(
         .option("mode", "FAILFAST" if strict else "PERMISSIVE")
         .option("header", "true" if cfg.header else "false")
         # we intentionally pass a positional _c* schema with header=true
-        # (names come from our own driver-side header read) — silence the
-        # per-file header-vs-schema warning
+        # (names come from our own driver-side header read): enforceSchema
+        # applies it by position, so a header whose names or count differ
+        # is not an error. It does not silence CSVHeaderChecker's warning:
+        # in PERMISSIVE mode the overflow probe column makes the schema
+        # one wider than the header, so Spark warns once per file
         .option("enforceSchema", "true")
     )
     if cfg.delimiter:
