@@ -83,7 +83,7 @@ raw, _names = None, None
 if fmt == "csv":
     from tidb_lightning_spark.sources import csv_source
     paths = [f.path for f in tbl.data_files]
-    raw, _names = csv_source.read_csv_files(
+    raw, _names, _fields = csv_source.read_csv_files(
         spark, paths, cfg.csv, n_columns=len(info.columns), strict=False
     )
     timeit("raw csv parse -> noop", lambda: (

@@ -6,9 +6,8 @@ from __future__ import annotations
 import decimal
 
 import pytest
-from pyspark.sql import functions as F
 
-from tidb_lightning_spark.operators.cast import cast_column, violation_flag
+from tidb_lightning_spark.operators.cast import cast_sql, violation_sql
 from tidb_lightning_spark.schema.ddl import parse_create_table
 
 
@@ -18,7 +17,7 @@ def col_info(ddl: str, name: str):
 
 def run_cast(spark, info, values, binary_encoding="UTF-8"):
     df = spark.createDataFrame([(v,) for v in values], "v string")
-    out = df.select(cast_column(F.col("v"), info, binary_encoding).alias("r"))
+    out = df.selectExpr(f"{cast_sql('v', info, binary_encoding)} AS r")
     return [r["r"] for r in out.collect()]
 
 
@@ -105,7 +104,7 @@ def test_violation_flags(spark):
     df = spark.createDataFrame(
         [("128",), ("12",), (None,), ("NaN",)], "v string"
     )
-    flags = df.select(
-        violation_flag(F.col("v"), cast_column(F.col("v"), info), info).alias("f")
+    flags = df.selectExpr(
+        f"{violation_sql('v', cast_sql('v', info), info)} AS f"
     ).collect()
     assert [r["f"] for r in flags] == ["v", None, "v", "v"]

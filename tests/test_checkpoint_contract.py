@@ -14,6 +14,7 @@ import hashlib
 import json
 import os
 import sqlite3
+import stat
 
 import pytest
 
@@ -237,3 +238,17 @@ def test_sqlite_checkpoint_in_established_format_resumes(spark, tmp_path):
     keys = [k for (k,) in con.execute("SELECT key FROM checkpoints")]
     con.close()
     assert keys == ["`fx`.`t`"]
+
+
+def test_checkpoint_file_mode_follows_umask(tmp_path):
+    """The JSON checkpoint file takes the umask's mode like every other
+    file the import writes, so a status server or `ctl` run as another
+    user can read it (a mkstemp temp file would leave it 0600)."""
+    path = tmp_path / "cp" / "_tls_checkpoints.json"
+    old = os.umask(0o022)
+    try:
+        CheckpointStore(str(path)).update("db", "t", "loaded")
+    finally:
+        os.umask(old)
+    assert stat.S_IMODE(os.stat(path).st_mode) == 0o644
+    assert sorted(os.listdir(path.parent)) == ["_tls_checkpoints.json"]

@@ -480,9 +480,7 @@ def test_review_fix_semantics(spark, tmp_path):
     (never Infinity), CONVERT tolerates space before '(', a leading ()
     row doesn't blind peek_arity, and BWList '~' rules are UNANCHORED
     (tidb-tools MatchString semantics)."""
-    from pyspark.sql import functions as F
-
-    from tidb_lightning_spark.operators.cast import cast_column
+    from tidb_lightning_spark.operators.cast import cast_sql
     from tidb_lightning_spark.schema.ddl import parse_create_table
     from tidb_lightning_spark.sources import sqldump_source as S
     from tidb_lightning_spark.sources.table_filter import BWListFilter
@@ -491,9 +489,9 @@ def test_review_fix_semantics(spark, tmp_path):
     info = parse_create_table("CREATE TABLE t (f FLOAT, d DOUBLE)")
     df = spark.createDataFrame([("1e39", "1e39"), ("-1e39", "3.5e308")],
                                "f string, d string")
-    out = df.select(
-        cast_column(F.col("f"), info.columns[0]).alias("f"),
-        cast_column(F.col("d"), info.columns[1]).alias("d"),
+    out = df.selectExpr(
+        f"{cast_sql('f', info.columns[0])} AS f",
+        f"{cast_sql('d', info.columns[1])} AS d",
     ).collect()
     import math
     assert all(math.isfinite(r["f"]) and math.isfinite(r["d"]) for r in out)

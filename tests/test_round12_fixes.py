@@ -18,9 +18,8 @@ import os
 import threading
 
 import pytest
-from pyspark.sql import functions as F
 
-from tidb_lightning_spark.operators.cast import cast_column
+from tidb_lightning_spark.operators.cast import cast_sql
 from tidb_lightning_spark.schema.ddl import parse_create_table
 
 
@@ -32,7 +31,7 @@ def _cast(spark, info, values):
     df = spark.createDataFrame([(v,) for v in values], "v string")
     return [
         r["r"]
-        for r in df.select(cast_column(F.col("v"), info).alias("r")).collect()
+        for r in df.selectExpr(f"{cast_sql('v', info)} AS r").collect()
     ]
 
 

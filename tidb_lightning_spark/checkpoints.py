@@ -23,9 +23,9 @@ import copy
 import hashlib
 import json
 import os
-import tempfile
 import threading
 import time
+import uuid
 
 STATUS = {
     "loaded": 30,
@@ -93,9 +93,12 @@ class CheckpointStore:
             return copy.deepcopy(self._tables)
 
     def _save(self) -> None:
+        # a uuid-named temp file opened normally, so the file takes the
+        # umask's mode like any other the import writes (mkstemp's is
+        # always 0600); the caller holds the lock
         os.makedirs(os.path.dirname(self.path) or ".", exist_ok=True)
-        fd, tmp = tempfile.mkstemp(dir=os.path.dirname(self.path) or ".")
-        with os.fdopen(fd, "w") as f:
+        tmp = f"{self.path}.{uuid.uuid4().hex}.tmp"
+        with open(tmp, "w") as f:
             json.dump({"version": 1, "tables": self._tables}, f, indent=2)
         os.replace(tmp, self.path)
 

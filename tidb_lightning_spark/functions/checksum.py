@@ -34,6 +34,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from tidb_lightning_spark.sqltext import ident
+
 HASH_KIND = "xxhash64-typed"
 
 # Spark's DataType.defaultSize for the flat scalar types the import
@@ -51,12 +53,8 @@ _WIDTHS = {
 }
 
 
-def _quote(name: str) -> str:
-    return "`" + name.replace("`", "``") + "`"
-
-
 def _width_sql(f: T.StructField) -> str:
-    c, t = _quote(f.name), f.dataType
+    c, t = ident(f.name), f.dataType
     if isinstance(t, (T.StringType, T.BinaryType)):
         return f"coalesce(octet_length({c}), 0)"
     if isinstance(t, T.DecimalType):
@@ -85,7 +83,7 @@ def checksum_aggs(fields: list[T.StructField]) -> list[Column]:
     write job, the exact accumulate-while-delivering shape of the
     reference's per-chunk checksum, restore.go:2325-2332, with no extra
     source scan)."""
-    names = [_quote(f.name) for f in fields]
+    names = [ident(f.name) for f in fields]
     masks = [
         _balanced("|", [
             f"if({c} IS NULL, {1 << j}L, 0L)" for j, c in enumerate(names[i:i + 63])

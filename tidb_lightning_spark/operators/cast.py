@@ -4,7 +4,16 @@ pinned by tests/sqlmode and tests/various_types — see FIXTURES.md F1/F3/F8).
 
 Input columns are STRINGS (both CSV and SQL-dump parsers emit string
 datums); this module produces typed columns per the table schema with
-MySQL's non-strict coercions expressed as Catalyst expressions (no UDFs):
+MySQL's non-strict coercions expressed as Catalyst expressions (no UDFs).
+
+Every function here takes its input as Spark SQL text (a quoted column or
+any expression) and returns Spark SQL text; operators/transform.py
+composes them into one projection per table and applies it with
+`selectExpr`, so a table's cast chain costs one parse in the JVM rather
+than one py4j round trip per Column method. Identifiers and literals are quoted only through
+`tidb_lightning_spark.sqltext` (regexes come out with their backslashes
+doubled; control characters, decimal bounds and the bit-63 SET mask as
+casts). The coercions:
 
   * numerics: numeric-prefix extraction, round-half-up at the integer
     boundary, clamp to the type's range ('NaN' -> 0, 128 -> TINYINT 127,
@@ -26,13 +35,15 @@ row at encode time).
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from tidb_lightning_spark.schema.ddl import ColumnInfo
+from tidb_lightning_spark.sqltext import dec, lit
 
 _NUM_PREFIX = r"^\s*([+-]?(?:[0-9]+\.?[0-9]*|\.[0-9]+)(?:[eE][+-]?[0-9]+)?)"
+_NUM_FULL = _NUM_PREFIX + r"\s*$"
+_INF_NAN = r"(?i)^\s*[+-]?(inf|nan)"
+_TIME = r"^-?\d{1,3}:\d{1,2}:\d{1,2}(\.\d+)?$"
 
 _INT_BOUNDS = {
     "tinyint": (-128, 127, 0, 255),
@@ -81,53 +92,66 @@ STRING_FAMILY_BASES = {
 }
 
 
-def mysql_unescape_expr(col: Column) -> Column:
+def mysql_unescape_sql(c: str) -> str:
     """Chained literal replace (StringReplace works on UTF8String directly
     — regexp_replace pays a String conversion + Matcher allocation per
     call per row, measured ~6x this chain's cost), guarded by one
     contains() so rows without a backslash — essentially all real data —
     skip even the cheap chain."""
-    u = col
+    u = c
     for pat, rep in MYSQL_CONTROL_UNESCAPES:
-        u = F.replace(u, F.lit(pat), F.lit(rep))
-    return F.when(col.contains("\\"), u).otherwise(col)
+        u = f"replace({u}, {lit(pat)}, {lit(rep)})"
+    return f"CASE WHEN contains({c}, {lit(chr(92))}) THEN {u} ELSE {c} END"
 
 
-def _dec_lit(v: int) -> Column:
-    return F.lit(str(v)).cast("decimal(38,9)")
-
-
-def _num(col: Column) -> Column:
+def _num(c: str) -> str:
     """MySQL numeric-prefix parse: '99.9x' -> 99.9, junk -> 0.
 
     Fast path first: try_cast handles clean numerics entirely in codegen;
     coalesce short-circuits, so the regexp fallback only ever evaluates on
     rows that are actually dirty — the ingest hot loop stays regex-free.
     """
-    fast = col.try_cast("decimal(38,9)")
-    prefix = F.regexp_extract(col, _NUM_PREFIX, 1)
-    slow = F.when(prefix == "", F.lit(0)).otherwise(prefix.cast("decimal(38,9)"))
-    return F.coalesce(fast, slow)
+    prefix = f"regexp_extract({c}, {lit(_NUM_PREFIX)}, 1)"
+    return (
+        f"coalesce(try_cast({c} AS decimal(38,9)), CASE WHEN {prefix} = '' "
+        f"THEN 0 ELSE cast({prefix} AS decimal(38,9)) END)"
+    )
 
 
-def cast_column(
-    col: Column, info: ColumnInfo, binary_encoding: str = "UTF-8"
-) -> Column:
-    """Non-strict MySQL cast of a string column to the schema type."""
+def _bounds(info: ColumnInfo) -> tuple[int, int]:
+    lo_s, hi_s, lo_u, hi_u = _INT_BOUNDS[info.mysql.base]
+    return (lo_u, hi_u) if info.mysql.unsigned else (lo_s, hi_s)
+
+
+def _clamp(v: str, lo: int, hi: int) -> str:
+    # bounds as decimal values: 2^64-1 exceeds a JVM long. greatest/least
+    # skip NULLs in Spark, so callers gate on the input being non-null.
+    return f"least(greatest({v}, {dec(lo)}), {dec(hi)})"
+
+
+def _null_or(c: str, v: str) -> str:
+    return f"CASE WHEN {c} IS NULL THEN NULL ELSE {v} END"
+
+
+def _members(info: ColumnInfo) -> str:
+    return "array(" + ", ".join(lit(m) for m in info.mysql.members) + ")"
+
+
+def cast_sql(c: str, info: ColumnInfo, binary_encoding: str = "UTF-8") -> str:
+    """Non-strict MySQL cast of the string expression `c` to the schema
+    type, as SQL text."""
     b = info.mysql.base
     spark_t = info.mysql.spark_type()
+    t = spark_t.simpleString()
 
     if b in _INT_BOUNDS and b != "bit":
-        lo_s, hi_s, lo_u, hi_u = _INT_BOUNDS[b]
-        lo, hi = (lo_u, hi_u) if info.mysql.unsigned else (lo_s, hi_s)
-        v = F.round(_num(col))  # MySQL rounds fractional inserts (99.999->100)
-        # bounds as decimal literals: 2^64-1 exceeds a JVM long. greatest/
-        # least skip NULLs in Spark, so gate on the input being non-null.
-        v = F.least(F.greatest(v, _dec_lit(lo)), _dec_lit(hi))
-        return F.when(col.isNull(), F.lit(None)).otherwise(v).cast(spark_t)
+        lo, hi = _bounds(info)
+        # MySQL rounds fractional inserts (99.999->100)
+        v = _clamp(f"round({_num(c)})", lo, hi)
+        return f"cast({_null_or(c, v)} AS {t})"
 
     if b in ("decimal", "numeric"):
-        return _num(col).cast(spark_t)
+        return f"cast({_num(c)} AS {t})"
 
     if b in ("float", "double", "real"):
         # parse DIRECTLY as double — the decimal(38,9) pipeline _num
@@ -138,38 +162,32 @@ def cast_column(
         # 'inf'/'nan' words are junk (no numeric prefix -> 0).
         # the saturation bound is the TARGET type's: a FLOAT column
         # clamps at ±FLT_MAX (MySQL stores 3.40282e38, never Infinity)
-        import pyspark.sql.types as _T
-
         fmax = (
             3.4028234663852886e38
-            if isinstance(spark_t, _T.FloatType)
+            if isinstance(spark_t, T.FloatType)
             else 1.7976931348623157e308
         )
-        wordy = col.rlike(r"(?i)^\s*[+-]?(inf|nan)")
-        fast = F.when(~wordy, col.try_cast("double"))
-        prefix = F.regexp_extract(col, _NUM_PREFIX, 1)
-        sat = F.when(
-            prefix.startswith("-"), F.lit(-fmax)
-        ).otherwise(F.lit(fmax))
-        slow = F.when(prefix == "", F.lit(0.0)).otherwise(
-            F.coalesce(prefix.try_cast("double"), sat)
+        hi, lo = lit(fmax), lit(-fmax)
+        wordy = f"{c} RLIKE {lit(_INF_NAN)}"
+        fast = f"CASE WHEN NOT ({wordy}) THEN try_cast({c} AS double) END"
+        prefix = f"regexp_extract({c}, {lit(_NUM_PREFIX)}, 1)"
+        sat = f"CASE WHEN startswith({prefix}, '-') THEN {lo} ELSE {hi} END"
+        slow = (
+            f"CASE WHEN {prefix} = '' THEN 0.0D "
+            f"ELSE coalesce(try_cast({prefix} AS double), {sat}) END"
         )
-        v = F.coalesce(fast, slow)
-        v = (
-            F.when(v > F.lit(fmax), F.lit(fmax))
-            .when(v < F.lit(-fmax), F.lit(-fmax))
-            .otherwise(v)
-        )
-        return F.when(col.isNull(), F.lit(None)).otherwise(v).cast(spark_t)
+        v = f"coalesce({fast}, {slow})"
+        v = f"CASE WHEN {v} > {hi} THEN {hi} WHEN {v} < {lo} THEN {lo} ELSE {v} END"
+        return f"cast({_null_or(c, v)} AS {t})"
 
     if b == "date":
-        return F.when(col.rlike(r"^0000-00-00"), F.lit(None)).otherwise(
-            F.try_to_timestamp(col).cast(spark_t)
+        return (
+            f"CASE WHEN {c} RLIKE '^0000-00-00' THEN NULL "
+            f"ELSE cast(try_to_timestamp({c}) AS {t}) END"
         )
 
     if b in ("datetime", "timestamp"):
-        zero = col.rlike(r"^0000-00-00")
-        tt = F.try_to_timestamp(col)
+        tt = f"try_to_timestamp({c})"
         # MySQL treats a bare DATETIME/TIMESTAMP as fsp=0 — fractional
         # seconds in the dump round half-up to whole seconds. The old
         # lossless-micros default for unspecified precision was a
@@ -181,8 +199,8 @@ def cast_column(
             # .843 — reference golden tests/various_types vt.datetime).
             # floor((us + q/2)/q)*q via pmod = half-up at any sign.
             q = 10 ** (6 - p)
-            shifted = F.unix_micros(tt) + F.lit(q // 2)
-            tt = F.timestamp_micros(shifted - F.pmod(shifted, F.lit(q)))
+            shifted = f"(unix_micros({tt}) + {lit(q // 2)})"
+            tt = f"timestamp_micros({shifted} - pmod({shifted}, {lit(q)}))"
         if b == "timestamp":
             # MySQL TIMESTAMP range is ['1970-01-01 00:00:01',
             # '2038-01-19 03:14:07.999999'] UTC — far narrower than
@@ -191,94 +209,85 @@ def cast_column(
             # golden tests/checkpoint_error_destroy feeds
             # '1111-11-11 11:11:11' into TIMESTAMP NOT NULL and expects
             # the import to fail.
-            us = F.unix_micros(tt)
-            tt = F.when(
-                (us >= F.lit(1_000_000))
-                & (us <= F.lit(2147483647_999999)),
-                tt,
+            us = f"unix_micros({tt})"
+            tt = (
+                f"CASE WHEN ({us} >= {lit(1_000_000)}) "
+                f"AND ({us} <= {lit(2147483647_999999)}) THEN {tt} END"
             )
-        return F.when(zero, F.lit(None)).otherwise(tt.cast(spark_t))
+        return (
+            f"CASE WHEN {c} RLIKE '^0000-00-00' THEN NULL "
+            f"ELSE cast({tt} AS {t}) END"
+        )
 
     if b in ("char", "varchar") and info.mysql.length:
-        return F.substring(col, 1, info.mysql.length)
+        return f"substring({c}, 1, {info.mysql.length})"
 
     if b == "enum":
-        members = list(info.mysql.members)
-        arr = F.array(*[F.lit(m) for m in members])
-        idx = col.cast("int")
-        by_ordinal = F.when(
-            (idx >= 1) & (idx <= len(members)), F.element_at(arr, idx)
+        arr = _members(info)
+        idx = f"cast({c} AS int)"
+        n = len(info.mysql.members)
+        by_ordinal = (
+            f"CASE WHEN ({idx} >= 1) AND ({idx} <= {n}) "
+            f"THEN element_at({arr}, {idx}) END"
         )
         return (
-            F.when(col.isNull(), F.lit(None))
-            .when(col.rlike(r"^[0-9]+$"), by_ordinal)
-            .when(F.array_contains(arr, col), col)
-            .otherwise(F.lit(None))
+            f"CASE WHEN {c} IS NULL THEN NULL "
+            f"WHEN {c} RLIKE '^[0-9]+$' THEN {by_ordinal} "
+            f"WHEN array_contains({arr}, {c}) THEN {c} ELSE NULL END"
         )
 
     if b == "set":
-        members = list(info.mysql.members)
-        arr = F.array(*[F.lit(m) for m in members])
-        parts = F.split(col, ",")
-        all_valid = F.forall(parts, lambda x: F.array_contains(arr, x))
-        canonical = F.array_join(F.array_intersect(arr, parts), ",")
+        arr = _members(info)
+        parts = f"split({c}, ',')"
+        all_valid = f"forall({parts}, _tls_m -> array_contains({arr}, _tls_m))"
+        canonical = f"array_join(array_intersect({arr}, {parts}), ',')"
         # MySQL dumps emit 64-member SET masks as UNSIGNED decimals: a
         # value >= 2^63 (bit 63 set) fails a signed long cast. Route
         # through decimal(20,0) and fold to signed two's-complement so
-        # bitwiseAND still tests the 64th member (r12 ADVICE).
-        dec = col.try_cast("decimal(20,0)")
-        _two63 = F.lit("9223372036854775808").cast("decimal(20,0)")
-        _two64 = F.lit("18446744073709551616").cast("decimal(21,0)")
-        mask = F.when(dec >= _two63, (dec - _two64).cast("long")).otherwise(
-            dec.cast("long")
+        # the bitwise AND still tests the 64th member (r12 ADVICE).
+        d = f"try_cast({c} AS decimal(20,0))"
+        two63 = "cast('9223372036854775808' AS decimal(20,0))"
+        two64 = "cast('18446744073709551616' AS decimal(21,0))"
+        mask = (
+            f"CASE WHEN {d} >= {two63} THEN cast({d} - {two64} AS bigint) "
+            f"ELSE cast({d} AS bigint) END"
         )
-        from_mask = F.concat_ws(
-            ",",
-            *[
-                # bit 63 (a full 64-member SET, MySQL's max) doesn't fit
-                # an unsigned py4j long literal: pass its SIGNED two's-
-                # complement form — bitwiseAND on the signed lane tests
-                # the same bit (reference golden vt.`enum-set` caught the
-                # overflow at plan-construction time)
-                F.when(
-                    mask.bitwiseAND(
-                        F.lit((1 << i) if i < 63 else -(1 << 63))
-                    )
-                    != 0,
-                    F.lit(m),
-                )
-                for i, m in enumerate(members)
-            ],
+        # bit 63 (a full 64-member SET, MySQL's max) is the SIGNED
+        # two's-complement Long.MinValue: AND on the signed lane tests
+        # the same bit (reference golden vt.`enum-set` caught the
+        # overflow at plan-construction time)
+        from_mask = ", ".join(
+            f"CASE WHEN ({mask} & {lit((1 << i) if i < 63 else -(1 << 63))}) != 0 "
+            f"THEN {lit(m)} END"
+            for i, m in enumerate(info.mysql.members)
         )
         return (
-            F.when(col.isNull(), F.lit(None))
-            .when(col == "", F.lit(""))
-            .when(col.rlike(r"^[0-9]+$"), from_mask)
-            .when(all_valid, canonical)
-            .otherwise(F.lit(None))
+            f"CASE WHEN {c} IS NULL THEN NULL WHEN {c} = '' THEN '' "
+            f"WHEN {c} RLIKE '^[0-9]+$' THEN concat_ws(',', {from_mask}) "
+            f"WHEN {all_valid} THEN {canonical} ELSE NULL END"
         )
 
     if b == "bit":
-        raw_bytes = F.encode(col, "ISO-8859-1")
-        from_bytes = F.conv(F.hex(raw_bytes), 16, 10).cast("long")
+        from_bytes = f"cast(conv(hex(encode({c}, 'ISO-8859-1')), 16, 10) AS bigint)"
         return (
-            F.when(col.isNull(), F.lit(None))
-            .when(col.rlike(r"^[0-9]+$"), col.cast("long"))
-            .otherwise(from_bytes)
+            f"CASE WHEN {c} IS NULL THEN NULL "
+            f"WHEN {c} RLIKE '^[0-9]+$' THEN cast({c} AS bigint) "
+            f"ELSE {from_bytes} END"
         )
 
     if isinstance(spark_t, T.BinaryType):
-        return F.encode(col, binary_encoding)
+        return f"encode({c}, {lit(binary_encoding)})"
 
     if b == "time":
-        return F.when(
-            col.rlike(r"^-?\d{1,3}:\d{1,2}:\d{1,2}(\.\d+)?$"), col
-        ).otherwise(F.lit(None))
+        return (
+            f"CASE WHEN {c} RLIKE {lit(_TIME)} "
+            f"THEN {c} ELSE NULL END"
+        )
 
     if b == "json":
-        return col  # validated string pass-through
+        return c  # validated string pass-through
 
-    return col.cast(spark_t)
+    return f"cast({c} AS {t})"
 
 
 _NUMERIC_SPARK_TYPES = (
@@ -287,7 +296,7 @@ _NUMERIC_SPARK_TYPES = (
 )
 
 
-def cast_typed_column(col: Column, src_type: T.DataType, info: ColumnInfo) -> Column:
+def cast_typed_sql(c: str, src_type: T.DataType, info: ColumnInfo) -> str:
     """MySQL-semantics cast of an already-typed (parquet) column.
 
     A plain Catalyst cast WRAPS on integer narrowing under non-ANSI
@@ -295,90 +304,86 @@ def cast_typed_column(col: Column, src_type: T.DataType, info: ColumnInfo) -> Co
     which neither MySQL mode does: strict errors, non-strict clamps to the
     type boundary (the reference's CastValue, sql2kv.go:306-326). Numeric
     sources therefore go through the same round+clamp as the string path's
-    `_num` pipeline; string sources reuse `cast_column` wholesale.
+    `_num` pipeline; string sources reuse `cast_sql` wholesale.
     """
     b = info.mysql.base
     spark_t = info.mysql.spark_type()
+    t = spark_t.simpleString()
     if isinstance(src_type, T.StringType):
-        return cast_column(col, info)
+        return cast_sql(c, info)
     if (
         b in _INT_BOUNDS
         and b != "bit"
         and isinstance(src_type, _NUMERIC_SPARK_TYPES)
     ):
-        lo_s, hi_s, lo_u, hi_u = _INT_BOUNDS[b]
-        lo, hi = (lo_u, hi_u) if info.mysql.unsigned else (lo_s, hi_s)
-        v = F.round(col.try_cast("decimal(38,9)"))
+        lo, hi = _bounds(info)
         # a double beyond decimal(38,9) range nulls the try_cast: clamp by
         # sign (MySQL saturates at the type boundary)
-        v = F.coalesce(
-            v, F.when(col > 0, _dec_lit(hi)).otherwise(_dec_lit(lo))
+        v = (
+            f"coalesce(round(try_cast({c} AS decimal(38,9))), "
+            f"CASE WHEN {c} > 0 THEN {dec(hi)} ELSE {dec(lo)} END)"
         )
-        v = F.least(F.greatest(v, _dec_lit(lo)), _dec_lit(hi))
-        return F.when(col.isNull(), F.lit(None)).otherwise(v).cast(spark_t)
+        return f"cast({_null_or(c, _clamp(v, lo, hi))} AS {t})"
     if (
         b in ("char", "varchar")
         and info.mysql.length
         and not isinstance(spark_t, T.BinaryType)
     ):
-        return F.substring(col.cast("string"), 1, info.mysql.length)
-    return col.cast(spark_t)
+        return f"substring(cast({c} AS string), 1, {info.mysql.length})"
+    return f"cast({c} AS {t})"
 
 
-def typed_violation_flag(
-    col: Column, casted: Column, info: ColumnInfo, src_type: T.DataType
-) -> Column:
+def typed_violation_sql(
+    c: str, casted: str, info: ColumnInfo, src_type: T.DataType
+) -> str:
     """Strict-mode indicator for typed (parquet) input — boolean fragment;
     the caller owns NULL-into-NOT-NULL / missing-column policy. Mirrors
-    `violation_flag`'s range and length checks so a negative value into an
+    `violation_sql`'s range and length checks so a negative value into an
     unsigned column or an overlong string is flagged exactly like on the
     CSV path (reference encode-path parity)."""
     if isinstance(src_type, T.StringType):
-        return _string_lossy_flag(col, casted, info)
-    flag = col.isNotNull() & casted.isNull()
+        return string_lossy_sql(c, casted, info)
+    flag = f"({c} IS NOT NULL AND {casted} IS NULL)"
     b = info.mysql.base
     if (
         b in _INT_BOUNDS
         and b != "bit"
         and isinstance(src_type, _NUMERIC_SPARK_TYPES)
     ):
-        lo_s, hi_s, lo_u, hi_u = _INT_BOUNDS[b]
-        lo, hi = (lo_u, hi_u) if info.mysql.unsigned else (lo_s, hi_s)
-        v = col.try_cast("decimal(38,9)")
-        oob = v.isNull() | (v < _dec_lit(lo)) | (v > _dec_lit(hi))
-        flag = flag | (col.isNotNull() & oob)
+        lo, hi = _bounds(info)
+        v = f"try_cast({c} AS decimal(38,9))"
+        oob = f"({v} IS NULL OR {v} < {dec(lo)} OR {v} > {dec(hi)})"
+        flag = f"({flag} OR ({c} IS NOT NULL AND {oob}))"
     if b in ("char", "varchar") and info.mysql.length:
-        flag = flag | (F.length(col.cast("string")) > info.mysql.length)
+        flag = f"({flag} OR length(cast({c} AS string)) > {info.mysql.length})"
     return flag
 
 
-def _string_lossy_flag(col: Column, casted: Column, info: ColumnInfo) -> Column:
+def string_lossy_sql(c: str, casted: str, info: ColumnInfo) -> str:
     """Lossy-input checks for string sources (boolean; excludes the
     NULL-into-NOT-NULL clause, which is policy layered on top)."""
-    flag = col.isNotNull() & casted.isNull()
+    flag = f"({c} IS NOT NULL AND {casted} IS NULL)"
     b = info.mysql.base
     if b in _INT_BOUNDS or b in ("decimal", "numeric", "float", "double", "real"):
-        parsed = F.regexp_extract(col, _NUM_PREFIX, 1)
-        full = F.regexp_extract(col, _NUM_PREFIX + r"\s*$", 1)
-        flag = flag | (col.isNotNull() & ((parsed == "") | (full == "")))
+        parsed = f"regexp_extract({c}, {lit(_NUM_PREFIX)}, 1)"
+        full = f"regexp_extract({c}, {lit(_NUM_FULL)}, 1)"
+        flag = f"({flag} OR ({c} IS NOT NULL AND ({parsed} = '' OR {full} = '')))"
         if b in _INT_BOUNDS:
-            lo_s, hi_s, lo_u, hi_u = _INT_BOUNDS[b]
-            lo, hi = (
-                (lo_u, hi_u) if info.mysql.unsigned else (lo_s, hi_s)
-            )
-            v = _num(col)
-            flag = flag | (
-                col.isNotNull() & ((v < _dec_lit(lo)) | (v > _dec_lit(hi)))
+            lo, hi = _bounds(info)
+            v = _num(c)
+            flag = (
+                f"({flag} OR ({c} IS NOT NULL "
+                f"AND ({v} < {dec(lo)} OR {v} > {dec(hi)})))"
             )
     if b in ("char", "varchar") and info.mysql.length:
-        flag = flag | (F.length(col) > info.mysql.length)
+        flag = f"({flag} OR length({c}) > {info.mysql.length})"
     return flag
 
 
-def violation_flag(col: Column, casted: Column, info: ColumnInfo) -> Column:
+def violation_sql(c: str, casted: str, info: ColumnInfo) -> str:
     """Strict-mode indicator: input the cast would lose data on
     (zero-date, bad enum/set, out-of-range, overlong, null into NOT NULL)."""
-    flag = _string_lossy_flag(col, casted, info)
+    flag = string_lossy_sql(c, casted, info)
     if not info.nullable:
-        flag = flag | col.isNull()
-    return F.when(flag, F.lit(info.name)).otherwise(F.lit(None))
+        flag = f"({flag} OR {c} IS NULL)"
+    return f"CASE WHEN {flag} THEN {lit(info.name)} ELSE NULL END"

@@ -4,12 +4,14 @@ surface = tests/generated_columns fixtures, FIXTURES.md F7).
 
 Token-level rewrite: identifiers/strings/numbers pass through with Spark
 quoting; function names are mapped where Spark's builtin differs. The
-result is evaluated by Catalyst via F.expr — no Python at runtime.
+result is evaluated by Catalyst as part of the table's typed projection
+(operators/transform.py) — no Python at runtime.
 """
 
 from __future__ import annotations
 
 from tidb_lightning_spark.schema.ddl import Tok, tokenize
+from tidb_lightning_spark.sqltext import ident, lit, string
 
 # MySQL @@block_encryption_mode analog (reference reads the target's
 # global at restore start, restore.go setGlobalVariables; the files
@@ -156,7 +158,7 @@ def _xlate_aes(fn: str, args: list[list[Tok]], mode_str: str) -> str:
             "derivation is applied at translate time"
         )
     folded = _fold_aes_key(key_toks[0].text.encode(), bits // 8)
-    key_sql = "X'" + folded.hex().upper() + "'"
+    key_sql = lit(folded)
     val = _xlate(args[0], mode_str)
     if fn == "aes_encrypt":
         # MySQL stringifies non-binary plaintext before encrypting
@@ -186,7 +188,7 @@ def _xlate_aes(fn: str, args: list[list[Tok]], mode_str: str) -> str:
 
 def _render(t: Tok) -> str:
     if t.kind == "ident":
-        return "`" + t.text.replace("`", "``") + "`"
+        return ident(t.text)
     if t.kind == "string":
-        return "'" + t.text.replace("\\", "\\\\").replace("'", "\\'") + "'"
+        return string(t.text)
     return t.text

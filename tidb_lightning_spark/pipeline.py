@@ -34,6 +34,7 @@ from tidb_lightning_spark.sources.parquet_source import read_table
 from tidb_lightning_spark.sources.router import FileRouter
 from tidb_lightning_spark.sources.table_filter import TableFilter
 from tidb_lightning_spark.sources.table_router import TableRouter
+from tidb_lightning_spark.sqltext import ident
 
 log = logging.getLogger("tidb_lightning_spark")
 
@@ -1623,15 +1624,6 @@ class Restorer:
                 self.spark.read.schema(schema)
                 .option("mode", "PERMISSIVE")
                 .json([f.path for f in jsonl_files])
-                # the transform chain's positional contract (_c{i} ->
-                # schema column i); the json reader already matched by
-                # name, so this is a straight rename in DDL order
-                .select(
-                    *[
-                        F.col(c.name).alias(f"_c{i}")
-                        for i, c in enumerate(info.columns)
-                    ]
-                )
             )
             group_bytes = 0
             for f in jsonl_files:
@@ -1648,6 +1640,9 @@ class Restorer:
                     strict=self.cfg.strict_sql_mode,
                     rowid_base=rowid_base,
                     keep_rowid=keep_rowid,
+                    # the json reader already matched fields by name: the
+                    # positional fields are the DDL columns in order
+                    fields=[ident(c.name) for c in info.columns],
                 )
             )
             rowid_base += group_bytes // max(1, len(info.columns)) + 1
@@ -1690,6 +1685,7 @@ class Restorer:
                         self.cfg.csv,
                         n_columns=len(info.columns),
                     )
+                    fields = [ident(c) for c in df.columns]
                     raw_read = True  # lexer output is latin-1-preserved
                 else:
                     raw_read = False
@@ -1709,7 +1705,7 @@ class Restorer:
                         csv_cfg = _dc.replace(
                             self.cfg.csv, character_set="iso-8859-1"
                         )
-                    df, names = csv_source.read_csv_files(
+                    df, names, fields = csv_source.read_csv_files(
                         self.spark,
                         paths,
                         csv_cfg,
@@ -1719,21 +1715,15 @@ class Restorer:
                 file_cols = list(header) if header else None
                 if raw_read:
                     srcs = file_cols or [c.name for c in info.columns]
-                    for i, cname in enumerate(srcs):
-                        if (
-                            f"_c{i}" in df.columns
-                            and cname.lower() not in bin_cols
-                        ):
-                            df = df.withColumn(
-                                f"_c{i}",
-                                F.decode(
-                                    F.encode(F.col(f"_c{i}"), "ISO-8859-1"),
-                                    "UTF-8",
-                                ),
+                    for i, cname in enumerate(srcs[: len(fields)]):
+                        if cname.lower() not in bin_cols:
+                            fields[i] = (
+                                f"decode(encode({fields[i]}, 'ISO-8859-1'), "
+                                "'UTF-8')"
                             )
                 # MySQL \n/\t/... escapes survive the CSV lexer as two
                 # chars; restore them inside the cast of string-family
-                # target columns (cast.mysql_unescape_expr rationale)
+                # target columns (cast.mysql_unescape_sql rationale)
                 esc_cols = None
                 if use_exact:
                     pass  # the exact lexer unescaped in its one pass
@@ -1784,6 +1774,7 @@ class Restorer:
                         binary_encoding=(
                             "ISO-8859-1" if raw_read else "UTF-8"
                         ),
+                        fields=fields,
                     )
                 )
                 # next group's ids start beyond this group's upper bound

@@ -147,7 +147,9 @@ def _jdbc_statement(spark, url: str, properties: dict | None = None):
 # SQLStates / messages that mean "object does not exist" — the ONLY
 # errors the existence probes may interpret; anything else (timeout,
 # deadlock, auth) must propagate rather than be read as "missing" and
-# route a live table into the drop-and-swap path.
+# route a live table into the drop-and-swap path. The probes ask the
+# catalog first (`table_exists`), so these only match a table dropped
+# between that check and the statement.
 _NOT_EXIST_MARKERS = (
     "42x05",  # Derby: table/view does not exist
     "42y07",  # Derby: schema does not exist
@@ -161,6 +163,43 @@ _NOT_EXIST_MARKERS = (
 def _is_not_exist(exc: Exception) -> bool:
     msg = str(exc).lower()
     return any(m in msg for m in _NOT_EXIST_MARKERS)
+
+
+def jdbc_dialect(url: str) -> str:
+    return "derby" if url.startswith("jdbc:derby") else "mysql"
+
+
+def table_exists(conn, url: str, dbtable: str) -> bool:
+    """Whether the unquoted `db.table` exists, asked of
+    java.sql.DatabaseMetaData.getTables (about 5 ms) rather than read off
+    a failed statement: each Java exception costs about 50 ms through
+    PySpark's exception conversion, and a fresh import would raise three
+    per table. Names fold as the database stores unquoted identifiers
+    (Derby: upper case); MySQL-family drivers take the database as the
+    catalog, Derby as the schema. getTables matches `_` and `%` as
+    wildcards, so the rows are compared exactly."""
+    meta = conn.getMetaData()
+    if meta.storesUpperCaseIdentifiers():
+        dbtable = dbtable.upper()
+    elif meta.storesLowerCaseIdentifiers():
+        dbtable = dbtable.lower()
+    db, _, name = dbtable.rpartition(".")
+    mysql = jdbc_dialect(url) == "mysql"
+    if not db:
+        db = conn.getCatalog() if mysql else conn.getSchema()
+    rs = (
+        meta.getTables(db, None, name, None)
+        if mysql
+        else meta.getTables(None, db, name, None)
+    )
+    try:
+        while rs.next():
+            owner = rs.getString("TABLE_CAT" if mysql else "TABLE_SCHEM")
+            if owner == db and rs.getString("TABLE_NAME") == name:
+                return True
+        return False
+    finally:
+        rs.close()
 
 
 def execute_ddl(spark, url: str, sql: str, properties: dict | None = None,
@@ -207,22 +246,29 @@ def table_row_probe(
     spark, url: str, dbtable: str, properties: dict | None = None
 ) -> int | None:
     """COUNT(*) of a target table, or None when the table DOES NOT EXIST
-    (drives the stage-and-swap vs append decision). Only a definite
-    object-not-found error maps to None; transient failures (timeout,
+    (drives the stage-and-swap vs append decision). Existence comes from
+    the catalog (`table_exists`); only a definite object-not-found error
+    from the count maps to None too; transient failures (timeout,
     connection) propagate — misreading one as "missing" would route a
     pre-populated live table into the drop-and-swap path."""
-    with _jdbc_statement(spark, url, properties) as st:
+    with _jdbc_connection(spark, url, properties) as conn:
+        if not table_exists(conn, url, dbtable):
+            return None
+        st = conn.createStatement()
         try:
-            rs = st.executeQuery(f"SELECT COUNT(*) FROM {dbtable}")
-        except Exception as exc:
-            if _is_not_exist(exc):
-                return None
-            raise
-        try:
-            rs.next()
-            return int(rs.getLong(1))
+            try:
+                rs = st.executeQuery(f"SELECT COUNT(*) FROM {dbtable}")
+            except Exception as exc:
+                if _is_not_exist(exc):
+                    return None
+                raise
+            try:
+                rs.next()
+                return int(rs.getLong(1))
+            finally:
+                rs.close()
         finally:
-            rs.close()
+            st.close()
 
 
 # JDBC TYPE_NAME -> MySQL base type, for building a TableInfo from the
@@ -440,19 +486,26 @@ class JDBCSink:
 
     @property
     def dialect(self) -> str:
-        return "derby" if self.url.startswith("jdbc:derby") else "mysql"
+        return jdbc_dialect(self.url)
 
     def drop_table(self, spark, dbtable: str) -> bool:
-        """DROP TABLE, swallowing does-not-exist. Returns True if dropped."""
-        try:
-            return execute_ddl(
-                spark, self.url, f"DROP TABLE {dbtable}", self.properties
-            )
-        except Exception as exc:
-            msg = str(exc).lower()
-            if "does not exist" in msg or "42y55" in msg or "unknown table" in msg:
+        """DROP TABLE when the catalog lists it (`table_exists`), also
+        swallowing does-not-exist for a table dropped since. Returns True
+        if dropped."""
+        with _jdbc_connection(spark, self.url, self.properties) as conn:
+            if not table_exists(conn, self.url, dbtable):
                 return False
-            raise
+            st = conn.createStatement()
+            try:
+                st.execute(f"DROP TABLE {dbtable}")
+                return True
+            except Exception as exc:
+                msg = str(exc).lower()
+                if "does not exist" in msg or "42y55" in msg or "unknown table" in msg:
+                    return False
+                raise
+            finally:
+                st.close()
 
     def rename_table(self, spark, db: str, old: str, new: str) -> None:
         """Rename within one schema (the swap step of staged JDBC commit).
@@ -534,9 +587,7 @@ class JDBCSink:
             mysql/tidb: ALTER TABLE t AUTO_INCREMENT = n
             derby:      ALTER TABLE t ALTER COLUMN c RESTART WITH n
         """
-        dialect = dialect or (
-            "derby" if url.startswith("jdbc:derby") else "mysql"
-        )
+        dialect = dialect or jdbc_dialect(url)
         if dialect == "derby":
             # quote the column with exact case: ensure_table creates
             # columns quoted, so unquoted (-> uppercased) would not match
@@ -571,9 +622,7 @@ class JDBCSink:
         other dialects have no auto-random analog, so the rebase is a
         logged no-op there (the Spark-side fill already owns id
         generation for them)."""
-        dialect = dialect or (
-            "derby" if url.startswith("jdbc:derby") else "mysql"
-        )
+        dialect = dialect or jdbc_dialect(url)
         if dialect != "mysql":
             log.info(
                 "auto-random rebase skipped for `%s`.`%s`: dialect %s "

@@ -37,6 +37,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from tidb_lightning_spark.sqltext import lit
+
 
 @dataclass(frozen=True)
 class CSVConfig:
@@ -523,12 +525,15 @@ def read_csv_files(
     cfg: CSVConfig,
     n_columns: int | None = None,
     strict: bool = False,
-) -> tuple[DataFrame, list[str] | None]:
+) -> tuple[DataFrame, list[str] | None, list[str]]:
     """Read data files as all-string columns.
 
-    Returns (df, header_names). With cfg.header, all `paths` must share one
-    header (the caller groups by header); header_names=None otherwise and
-    columns are positional `_c0.._cN`.
+    Returns (df, header_names, fields). With cfg.header, all `paths` must
+    share one header (the caller groups by header); header_names=None
+    otherwise. `df` is the raw scan; `fields` is the Spark SQL text of each
+    positional field over it (the MySQL null/empty mapping, the overflow
+    guard), which operators.transform.transform_table folds into the
+    table's reader projection.
     """
     paths = materialize_lz4(paths)
     header_names: list[str] | None = None
@@ -577,7 +582,7 @@ def read_csv_files(
         # telling Spark nullValue='\\N' silently turned every empty field
         # into NULL — MySQL semantics (csv_parser.go) are empty = ''
         # and only the literal null text = NULL. The distinction is
-        # restored in the projection below.
+        # restored by the field SQL below.
         .option("nullValue", "\u0000__never__")
         .option("emptyValue", "")
         # embedded newlines in quoted fields (F4) need multiLine, which
@@ -601,50 +606,35 @@ def read_csv_files(
         )
     else:
         reader = reader.option("quote", "\u0000")  # NUL char disables quoting
+    # the trailing empty field of trim_last_sep (`_c{width}`) is read but
+    # named by no field below, so the scan prunes it
     df = reader.load(paths)
-    if cfg.trim_last_sep:
-        df = df.drop(f"_c{width}")
     # Restore the MySQL null/empty distinction the sentinel preserved:
     # a parsed NULL here is an EMPTY unquoted field -> '' (only the
     # null text means NULL, csv_parser.go:108-117); the literal null
     # text (default '\N', reaching us verbatim since univocity only
     # unescapes around quote chars) -> NULL. Under not-null the null
     # text is ordinary data and empties are still ''.
-    from pyspark.sql import functions as F
-
-    # overflow guard: NULL (and a no-op under coalesce) unless the row
-    # really carried an extra field, in which case the task fails with
-    # the reference's column-count-mismatch error. Folded into the first
-    # kept column so the optimizer can't prune the probe read away.
-    overflow_check = (
-        F.when(
-            F.col(overflow).isNotNull(),
-            F.raise_error(
-                F.concat(
-                    F.lit(
-                        f"column count mismatch, expected {width}, got at "
-                        f"least {width + 1} (extra field: "
-                    ),
-                    F.col(overflow),
-                    F.lit(")"),
-                )
-            ),
-        )
-        if overflow
-        else None
-    )
-    out_cols = []
-    for c in df.columns:
-        if c == overflow:
-            continue
-        v = F.coalesce(F.col(c), F.lit(""))
+    fields = []
+    for i in range(width):
+        v = f"coalesce(_c{i}, '')"
         if not cfg.not_null:
-            v = F.when(v == cfg.null, F.lit(None)).otherwise(v)
-        if not out_cols and overflow_check is not None:
-            v = F.coalesce(overflow_check, v)
-        out_cols.append(v.alias(c))
-    df = df.select(*out_cols)
-    return df, header_names
+            v = f"CASE WHEN {v} = {lit(cfg.null)} THEN NULL ELSE {v} END"
+        fields.append(v)
+    if overflow:
+        # overflow guard: NULL (and a no-op under coalesce) unless the row
+        # really carried an extra field, in which case the task fails with
+        # the reference's column-count-mismatch error. Folded into the
+        # first field so the optimizer can't prune the probe read away.
+        msg = lit(
+            f"column count mismatch, expected {width}, got at least "
+            f"{width + 1} (extra field: "
+        )
+        fields[0] = (
+            f"coalesce(CASE WHEN {overflow} IS NOT NULL THEN "
+            f"raise_error(concat({msg}, {overflow}, ')')) END, {fields[0]})"
+        )
+    return df, header_names, fields
 
 
 # ---------------------------------------------------------------------------

@@ -189,7 +189,7 @@ class _Scanner:
         if u == "DEFAULT":
             # VALUES (1, DEFAULT): take the column's default
             # (tests/default-columns semantics; expanded per column by
-            # operators.transform.cast_columns)
+            # operators.transform.transform_table)
             from tidb_lightning_spark.operators.transform import (
                 DEFAULT_SENTINEL,
             )

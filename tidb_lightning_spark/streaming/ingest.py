@@ -38,6 +38,7 @@ from pyspark.sql import types as T
 
 from tidb_lightning_spark.schema.ddl import TableInfo
 from tidb_lightning_spark.sources.csv_source import CSVConfig
+from tidb_lightning_spark.sqltext import ident
 from tidb_lightning_spark.streaming.events import drain_available
 
 
@@ -109,22 +110,16 @@ def read_jsonl_stream(
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
     """File-stream JSONL source (same contract as the batch jsonl branch:
-    all-string DDL schema -> MySQL cast chain; missing key == SQL NULL),
-    renamed to the transform chain's positional _c{i} convention."""
-    from pyspark.sql import functions as F
-
+    all-string DDL schema -> MySQL cast chain; missing key == SQL NULL).
+    Its columns carry the DDL names: the transform takes them as its
+    positional fields (`transform_table(fields=...)`)."""
     schema = T.StructType(
         [T.StructField(c.name, T.StringType(), True) for c in info.columns]
     )
     reader = spark.readStream.schema(schema).option("mode", "PERMISSIVE")
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    return reader.json(source_glob).select(
-        *[
-            F.col(c.name).alias(f"_c{i}")
-            for i, c in enumerate(info.columns)
-        ]
-    )
+    return reader.json(source_glob)
 
 
 def stream_restore(
@@ -175,8 +170,10 @@ def stream_restore(
             spark, source_glob, info,
             max_files_per_trigger=max_files_per_trigger,
         )
-        file_columns = None  # positional rename already applied
+        file_columns = None
+        fields = [ident(c.name) for c in info.columns]
     else:
+        fields = None
         stream = read_csv_stream(
             spark, source_glob, info, csv=csv, file_columns=file_columns,
             max_files_per_trigger=max_files_per_trigger,
@@ -200,6 +197,7 @@ def stream_restore(
             # inside it (striped monotonic ids would collide with the
             # next batch's reservation)
             force_dense=True,
+            fields=fields,
         )
         if strict and ERR_COL in out.columns:
             bad = (
