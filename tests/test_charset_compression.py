@@ -39,6 +39,28 @@ def test_gb18030_csv(spark, tmp_path):
     assert rows == {1: "你好世界", 2: "数据库"}
 
 
+@pytest.mark.parametrize("encoding", ["utf-8", "gb18030"])
+def test_auto_charset_csv(spark, tmp_path, encoding):
+    """character-set='auto' detects the scan group's charset; a file
+    detected as utf-8 is read natively, with Spark handed the detected
+    name (its CSV reader rejects 'auto')."""
+    d = str(tmp_path / "dump")
+    write(f"{d}/cs-schema-create.sql", "CREATE DATABASE cs;")
+    write(f"{d}/cs.t-schema.sql", "CREATE TABLE t (id INT PRIMARY KEY, name TEXT);")
+    write(f"{d}/cs.t.csv", "id,name\n1,你好\n".encode(encoding))
+    target = str(tmp_path / "wh")
+    cfg = Config.from_toml(
+        None, source_dir=d, target_dir=target, checkpoint_enable=False
+    )
+    import dataclasses
+
+    cfg.csv = dataclasses.replace(cfg.csv, character_set="auto")
+    rep = Restorer(spark, cfg).run()
+    assert rep.ok, [t.error for t in rep.tables]
+    rows = spark.read.parquet(f"{target}/cs/t").collect()
+    assert [(r["id"], r["name"]) for r in rows] == [(1, "你好")]
+
+
 def test_gzip_csv_source(spark, tmp_path):
     d = str(tmp_path / "dump")
     write(f"{d}/gz-schema-create.sql", "CREATE DATABASE gz;")

@@ -171,6 +171,27 @@ def test_plain_sink_long_run_dir_count_bounded(spark, tmp_path):
     assert comp.compaction_stats["bytes_rewritten"] > 0
 
 
+def test_tiered_fold_merges_on_rows_not_footer_bytes(spark, tmp_path):
+    """13 equal batches, compact_every=4: the folds at batches 4 and 8
+    merge (no base yet, then a delta as large as the base), the fold at
+    12 writes a delta (4 batches' rows < the base's 8). Four small
+    per-batch dirs carry more footer bytes than the one snapshot, so a
+    byte rule merged all three."""
+    tbl = str(tmp_path / "t13")
+    comp = C.TieredCompactor(spark, [tbl], compact_every=4, track_rows=True)
+    for bid in range(13):
+        comp.run(bid)
+        spark.range(bid * 2, bid * 2 + 2).withColumnRenamed(
+            "id", "v"
+        ).write.mode("overwrite").parquet(f"{tbl}/_batch_id={bid}")
+    stats = comp.compaction_stats
+    assert (stats["folds"], stats["merges"]) == (3, 2), stats
+    assert stats["rows_rewritten"] == 8 + 16 + 8
+    assert {r["v"] for r in C.read_table(spark, tbl).collect()} == set(
+        range(26)
+    )
+
+
 def test_stream_restore_compacts_and_cli_sql_reads(spark, tmp_path, capsys):
     """Continuous restore folds its per-batch dirs too, and `cli sql`
     detects the folded layout and routes through the state-aware

@@ -7,7 +7,7 @@
    raise IngestError with remediation, not a raw JSONDecodeError.
 3. zorder_value: bit budget stays inside a signed long (auto-reduce),
    impossible budgets raise cleanly.
-4. _footer_num_rows: file:-scheme'd URIs normalize; foreign schemes get
+4. footer_num_rows: file:-scheme'd URIs normalize; foreign schemes get
    a Spark-side fallback instead of a bogus local-IO result; the footer
    helpers walk nested `k=v/` partition dirs.
 """
@@ -134,20 +134,20 @@ def test_zorder_impossible_budget_raises(spark):
 # 4. scheme-aware footer count
 # ---------------------------------------------------------------------------
 def test_footer_num_rows_file_scheme(spark):
-    from tidb_lightning_spark.plans.queries import _footer_num_rows
+    from tidb_lightning_spark.sources.parquet_source import footer_num_rows
 
     from .conftest import SF_SMOKE
 
-    local = _footer_num_rows(f"{SF_SMOKE}/documents.parquet")
-    schemed = _footer_num_rows(f"file://{SF_SMOKE}/documents.parquet")
+    local = footer_num_rows(f"{SF_SMOKE}/documents.parquet")
+    schemed = footer_num_rows(f"file://{SF_SMOKE}/documents.parquet")
     assert local == schemed > 0
 
 
 def test_footer_num_rows_foreign_scheme_needs_spark():
-    from tidb_lightning_spark.plans.queries import _footer_num_rows
+    from tidb_lightning_spark.sources.parquet_source import footer_num_rows
 
     with pytest.raises(ValueError, match="SparkSession"):
-        _footer_num_rows("s3a://bucket/t.parquet")
+        footer_num_rows("s3a://bucket/t.parquet")
 
 
 def test_footer_counts_walk_nested_partition_dirs(spark, tmp_path):
@@ -157,6 +157,7 @@ def test_footer_counts_walk_nested_partition_dirs(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
+    from tidb_lightning_spark.sources.parquet_source import footer_num_rows
     from tidb_lightning_spark.plans import queries as Q
 
     sf = tmp_path / "sf"
@@ -170,7 +171,7 @@ def test_footer_counts_walk_nested_partition_dirs(spark, tmp_path):
         )
     (tbl / "_SUCCESS").write_text("")
     assert Q._footer_num_row_groups(str(tbl)) == 6
-    assert Q._footer_num_rows(str(tbl)) == 60
+    assert footer_num_rows(str(tbl)) == 60
     assert Q._first_parquet_batch(str(tbl), ["v"]).num_rows == 1
 
     Q.widen(spark, str(sf), "t")

@@ -1,7 +1,8 @@
 """Per-table planning cost of an import: building a table's transform makes
-a bounded number of py4j calls, and a fresh JDBC import raises no Java
-exception (each costs about 50 ms through PySpark's exception
-conversion; the existence probes ask the catalog instead).
+a bounded number of py4j calls, and a JDBC import, fresh or into
+existing tables, raises no Java exception (each costs about 50 ms
+through PySpark's exception conversion; the existence probes ask the
+catalog instead).
 
 Model: the reference builds each table's encoder once (sql2kv.go:103-166,
 306-326) and replays schemas with CREATE TABLE IF NOT EXISTS
@@ -112,4 +113,25 @@ def test_fresh_jdbc_import_raises_no_java_exception(spark, tmp_path):
         rep = Restorer(spark, cfg).run()
     assert rep.ok, [t.error for t in rep.tables]
     assert len(rep.tables) == 3
+    assert len(calls) == 0
+
+    # a second import of new rows into the same target finds every
+    # table in place and appends to it: CREATE TABLE IF NOT EXISTS
+    # semantics must not raise either (checksum off: the readback of a
+    # pre-populated table cannot equal the ingest)
+    for name in ("a", "b", "c"):
+        _write(f"{d}/shop.{name}.csv", "id,v\n3,x\n4,y\n")
+    cfg = Config.from_toml(
+        None,
+        source_dir=d,
+        target_dir=str(tmp_path / "state2"),
+        backend="jdbc",
+        jdbc_url=f"jdbc:derby:{tmp_path}/fresh",
+        jdbc_driver=DERBY_DRIVER,
+        checksum="off",
+    )
+    with _counting(captured, "convert_exception") as calls:
+        rep = Restorer(spark, cfg).run()
+    assert rep.ok, [t.error for t in rep.tables]
+    assert [t.rows for t in rep.tables] == [2, 2, 2]
     assert len(calls) == 0

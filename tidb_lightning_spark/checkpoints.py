@@ -341,7 +341,10 @@ class JDBCCheckpointStore(CheckpointStore):
         return _jdbc_connection(self.spark, self.url, self.properties)
 
     def _init_table(self) -> None:
-        from tidb_lightning_spark.sinks.jdbc_sink import execute_ddl
+        from tidb_lightning_spark.sinks.jdbc_sink import (
+            create_table_if_missing,
+            execute_ddl,
+        )
 
         if self.dialect == "mysql":
             execute_ddl(
@@ -357,13 +360,12 @@ class JDBCCheckpointStore(CheckpointStore):
                 self.properties,
             )
         else:  # derby creates the schema implicitly on CREATE TABLE
-            execute_ddl(
-                self.spark, self.url,
+            create_table_if_missing(
+                self.spark, self.url, f"{self.SCHEMA}.checkpoint",
                 f"CREATE TABLE {self.SCHEMA}.checkpoint ("
                 ' "k" VARCHAR(512) NOT NULL PRIMARY KEY,'
                 ' "rec" CLOB NOT NULL)',
                 self.properties,
-                ignore_exists=True,
             )
 
     def _run(self, conn, stmt: str, *params: str, width: int = 0):

@@ -1605,26 +1605,10 @@ class Restorer:
         jsonl_files = [f for f in data_files if f.type == "jsonl"]
 
         if jsonl_files:
-            # JSONL (beyond-reference: the LLM-corpus dump format). Every
-            # DDL column is read AS STRING so rows flow through the same
-            # MySQL-cast chain as CSV — JSON's own number parsing must
-            # not diverge from the dialect semantics (clamping, zero
-            # dates, enum ordinals). A missing key surfaces as SQL NULL
-            # (a schema'd reader cannot distinguish absent from explicit
-            # null, so nullable columns keep NULL rather than taking
-            # DEFAULT); unknown fields are ignored by the explicit
-            # schema. Spark's json reader splits files and decompresses
-            # gz natively, same scan properties as the CSV source.
-            import pyspark.sql.types as T
-
-            schema = T.StructType(
-                [T.StructField(c.name, T.StringType()) for c in info.columns]
-            )
-            df = (
-                self.spark.read.schema(schema)
-                .option("mode", "PERMISSIVE")
-                .json([f.path for f in jsonl_files])
-            )
+            # Spark's json reader splits files and decompresses gz
+            # natively, same scan properties as the CSV source
+            reader, fields = csv_source.jsonl_reader(self.spark.read, info)
+            df = reader.load([f.path for f in jsonl_files])
             group_bytes = 0
             for f in jsonl_files:
                 if os.path.exists(f.path):
@@ -1640,9 +1624,7 @@ class Restorer:
                     strict=self.cfg.strict_sql_mode,
                     rowid_base=rowid_base,
                     keep_rowid=keep_rowid,
-                    # the json reader already matched fields by name: the
-                    # positional fields are the DDL columns in order
-                    fields=[ident(c.name) for c in info.columns],
+                    fields=fields,
                 )
             )
             rowid_base += group_bytes // max(1, len(info.columns)) + 1
@@ -1721,22 +1703,10 @@ class Restorer:
                                 f"decode(encode({fields[i]}, 'ISO-8859-1'), "
                                 "'UTF-8')"
                             )
-                # MySQL \n/\t/... escapes survive the CSV lexer as two
-                # chars; restore them inside the cast of string-family
-                # target columns (cast.mysql_unescape_sql rationale)
-                esc_cols = None
-                if use_exact:
-                    pass  # the exact lexer unescaped in its one pass
-                elif self.cfg.csv.delimiter and self.cfg.csv.backslash_escape:
-                    from tidb_lightning_spark.operators.cast import (
-                        STRING_FAMILY_BASES,
-                    )
-
-                    esc_cols = {
-                        c.name.lower()
-                        for c in info.columns
-                        if c.mysql.base in STRING_FAMILY_BASES
-                    }
+                # the exact lexer unescaped in its one pass
+                esc_cols = None if use_exact else csv_source.unescape_columns(
+                    info, self.cfg.csv
+                )
                 # DECOMPRESSED sizes (same fix as the SQL-dump path): a
                 # gz CSV's rows can exceed compressed_bytes // n_cols,
                 # overrunning the next group's row-id base. Remote-scheme

@@ -34,7 +34,9 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from tidb_lightning_spark.sources.parquet_source import read_table
+from tidb_lightning_spark.sources.parquet_source import (
+    footer_num_rows, part_files, read_table,
+)
 
 TABLES = (
     "region nation customer supplier part orders lineitem events "
@@ -100,7 +102,7 @@ def widen(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
 
         size = sum(sz for _, sz in _walk(path, spark=spark))
     else:
-        size = sum(os.path.getsize(p) for p in _part_files(path))
+        size = sum(os.path.getsize(p) for p in part_files(path))
 
     def conf_bytes(key: str, default: int) -> int:
         # unset size confs stringify with a unit suffix ("134217728b",
@@ -137,28 +139,6 @@ def widen(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     return df
 
 
-def _footer_num_rows(path: str, spark: SparkSession | None = None) -> int:
-    """Total row count from parquet footers — file OR directory layout
-    (read_table supports both), driver-side metadata only, no Spark job
-    for local paths. A scheme'd corpus (s3a://, hdfs://) has no os.path,
-    so it falls back to a Spark count — still footer-driven (parquet
-    count(*) reads row-group metadata, not data pages), just executed by
-    the cluster's filesystem connector instead of local pyarrow."""
-    import pyarrow.parquet as _pq
-
-    from tidb_lightning_spark.paths import file_uri_to_path
-
-    path = file_uri_to_path(path)
-    if "://" in path:
-        if spark is None:
-            raise ValueError(
-                f"scheme'd path {path} needs a SparkSession for the "
-                f"footer count"
-            )
-        return spark.read.parquet(path).count()
-    return sum(_pq.ParquetFile(p).metadata.num_rows for p in _part_files(path))
-
-
 def _footer_num_row_groups(path: str) -> int:
     """Total parquet row-group count — file OR directory layout, driver-
     side footer metadata only (the scan-parallelism cap widen() clamps
@@ -167,7 +147,7 @@ def _footer_num_row_groups(path: str) -> int:
     import pyarrow.parquet as _pq
 
     return sum(
-        _pq.ParquetFile(p).metadata.num_row_groups for p in _part_files(path)
+        _pq.ParquetFile(p).metadata.num_row_groups for p in part_files(path)
     ) or 1
 
 
@@ -175,25 +155,8 @@ def _first_parquet_batch(path: str, columns: list[str]):
     """One tiny record batch from the first part file (file or dir)."""
     import pyarrow.parquet as _pq
 
-    first = _part_files(path)[0]
+    first = part_files(path)[0]
     return next(_pq.ParquetFile(first).iter_batches(batch_size=1, columns=columns))
-
-
-def _part_files(path: str) -> list[str]:
-    """A local parquet table's data files in sorted order: the file
-    itself, or every `*.parquet` under a directory at any depth (Hive
-    `k=v/` partition dirs included), skipping the `_`/`.`-prefixed
-    names Spark's reader treats as hidden."""
-    if not os.path.isdir(path):
-        return [path]
-    out = []
-    for root, dirs, files in os.walk(path):
-        dirs[:] = sorted(d for d in dirs if not d.startswith(("_", ".")))
-        out += [
-            os.path.join(root, f) for f in sorted(files)
-            if f.endswith(".parquet") and not f.startswith(("_", "."))
-        ]
-    return out
 
 
 @dataclass(frozen=True)
@@ -731,7 +694,7 @@ def vocab_top_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     # corpus size from the parquet footers (driver-side metadata read, no
     # Spark job; file-or-directory layout) — the SQL twin gets it from a
     # CTE over the same footers
-    n_docs = _footer_num_rows(f"{sf_dir}/documents.parquet", spark)
+    n_docs = footer_num_rows(f"{sf_dir}/documents.parquet", spark)
     tok = d.select(
         "doc_id", F.explode(F.array_distinct(TX.tokens(F.col("text")))).alias("tok")
     )
@@ -3358,7 +3321,7 @@ def doc_top_terms_tficf(spark: SparkSession, sf_dir: str) -> DataFrame:
     tf = tok.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).alias("tf"))
     dfreq = tf.groupBy("tok").agg(F.count(F.lit(1)).alias("doc_freq"))
     # driver-side scalar from parquet footers — no Spark job
-    n_docs = _footer_num_rows(f"{sf_dir}/documents.parquet", spark)
+    n_docs = footer_num_rows(f"{sf_dir}/documents.parquet", spark)
     scored = tf.join(dfreq, "tok").select(
         "doc_id",
         "tok",

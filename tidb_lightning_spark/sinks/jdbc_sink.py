@@ -24,6 +24,7 @@ mirroring the reference's golden-SQL backend tests (tidb_test.go).
 from __future__ import annotations
 
 import logging
+import threading
 import time
 from dataclasses import dataclass, field
 
@@ -114,7 +115,7 @@ def create_table_sql(info, dbtable: str, dialect: str) -> str:
     return f"CREATE TABLE {dbtable} ({', '.join(cols)}{pk})"
 
 
-from contextlib import contextmanager
+from contextlib import contextmanager, nullcontext
 
 
 @contextmanager
@@ -169,6 +170,16 @@ def jdbc_dialect(url: str) -> str:
     return "derby" if url.startswith("jdbc:derby") else "mysql"
 
 
+# a Derby getTables racing another connection's CREATE TABLE waits out
+# the lock timeout and fails; the embedded Derby lives in this JVM, so one
+# process-wide lock around its catalog probes and DDL orders every party
+_DERBY_CATALOG = threading.RLock()
+
+
+def _catalog_lock(url: str):
+    return _DERBY_CATALOG if jdbc_dialect(url) == "derby" else nullcontext()
+
+
 def table_exists(conn, url: str, dbtable: str) -> bool:
     """Whether the unquoted `db.table` exists, asked of
     java.sql.DatabaseMetaData.getTables (about 5 ms) rather than read off
@@ -178,44 +189,47 @@ def table_exists(conn, url: str, dbtable: str) -> bool:
     (Derby: upper case); MySQL-family drivers take the database as the
     catalog, Derby as the schema. getTables matches `_` and `%` as
     wildcards, so the rows are compared exactly."""
-    meta = conn.getMetaData()
-    if meta.storesUpperCaseIdentifiers():
-        dbtable = dbtable.upper()
-    elif meta.storesLowerCaseIdentifiers():
-        dbtable = dbtable.lower()
-    db, _, name = dbtable.rpartition(".")
-    mysql = jdbc_dialect(url) == "mysql"
-    if not db:
-        db = conn.getCatalog() if mysql else conn.getSchema()
-    rs = (
-        meta.getTables(db, None, name, None)
-        if mysql
-        else meta.getTables(None, db, name, None)
-    )
-    try:
-        while rs.next():
-            owner = rs.getString("TABLE_CAT" if mysql else "TABLE_SCHEM")
-            if owner == db and rs.getString("TABLE_NAME") == name:
-                return True
-        return False
-    finally:
-        rs.close()
-
-
-def execute_ddl(spark, url: str, sql: str, properties: dict | None = None,
-                ignore_exists: bool = False) -> bool:
-    """Run one DDL statement over a raw JVM JDBC connection (Spark's
-    writer has no DDL surface). Returns False when ignore_exists
-    swallowed an already-exists error."""
-    with _jdbc_statement(spark, url, properties) as st:
+    with _catalog_lock(url):
+        meta = conn.getMetaData()
+        if meta.storesUpperCaseIdentifiers():
+            dbtable = dbtable.upper()
+        elif meta.storesLowerCaseIdentifiers():
+            dbtable = dbtable.lower()
+        db, _, name = dbtable.rpartition(".")
+        mysql = jdbc_dialect(url) == "mysql"
+        if not db:
+            db = conn.getCatalog() if mysql else conn.getSchema()
+        rs = (
+            meta.getTables(db, None, name, None)
+            if mysql
+            else meta.getTables(None, db, name, None)
+        )
         try:
-            st.execute(sql)
-            return True
-        except Exception as exc:
-            msg = str(exc).lower()
-            if ignore_exists and ("already exists" in msg or "x0y32" in msg):
-                return False
-            raise
+            while rs.next():
+                owner = rs.getString("TABLE_CAT" if mysql else "TABLE_SCHEM")
+                if owner == db and rs.getString("TABLE_NAME") == name:
+                    return True
+            return False
+        finally:
+            rs.close()
+
+
+def execute_ddl(spark, url: str, sql: str, properties: dict | None = None):
+    """Run one DDL statement over a raw JVM JDBC connection (Spark's
+    writer has no DDL surface)."""
+    with _jdbc_statement(spark, url, properties) as st, _catalog_lock(url):
+        st.execute(sql)
+
+
+def create_table_if_missing(spark, url: str, dbtable: str, sql: str,
+                            properties: dict | None = None) -> bool:
+    """CREATE TABLE IF NOT EXISTS for Derby, which lacks it: run `sql`
+    unless `table_exists`, so no Java exception. True if created now."""
+    with _jdbc_statement(spark, url, properties) as st, _catalog_lock(url):
+        if table_exists(st.getConnection(), url, dbtable):
+            return False
+        st.execute(sql)
+        return True
 
 
 def query_min_max(
@@ -492,7 +506,9 @@ class JDBCSink:
         """DROP TABLE when the catalog lists it (`table_exists`), also
         swallowing does-not-exist for a table dropped since. Returns True
         if dropped."""
-        with _jdbc_connection(spark, self.url, self.properties) as conn:
+        with _jdbc_connection(
+            spark, self.url, self.properties
+        ) as conn, _catalog_lock(self.url):
             if not table_exists(conn, self.url, dbtable):
                 return False
             st = conn.createStatement()
@@ -535,14 +551,16 @@ class JDBCSink:
 
     def ensure_table(self, spark, info, dbtable: str) -> bool:
         """CREATE TABLE IF NOT EXISTS semantics at the target (schema
-        replay, restore.go:553-602). Returns True if created now."""
+        replay, restore.go:553-602; restore/tidb.go:194-227). Returns
+        True if created now (always on mysql)."""
         sql = create_table_sql(info, dbtable, self.dialect)
-        if self.dialect == "mysql":
-            sql = sql.replace("CREATE TABLE", "CREATE TABLE IF NOT EXISTS", 1)
-            return execute_ddl(spark, self.url, sql, self.properties)
-        return execute_ddl(
-            spark, self.url, sql, self.properties, ignore_exists=True
-        )
+        if self.dialect != "mysql":
+            return create_table_if_missing(
+                spark, self.url, dbtable, sql, self.properties
+            )
+        sql = sql.replace("CREATE TABLE", "CREATE TABLE IF NOT EXISTS", 1)
+        execute_ddl(spark, self.url, sql, self.properties)
+        return True
 
     def write_table(
         self,

@@ -2,19 +2,19 @@
 
 The reference hand-rolls a byte-level CSV state machine; Spark's CSV reader
 covers that dialect surface natively (SURVEY.md §2.A7), so this module is
-option mapping, not parsing:
+option mapping, not parsing — one mapping (`csv_reader`) for batch and
+streaming restore alike:
 
   CSVConfig (config.go:382-390)      spark.read.csv option
   ---------------------------------  ---------------------------------
   separator (multi-char ok)          sep
-  delimiter                          quote ('' -> disable quoting)
+  delimiter                          quote ('' -> NUL: quoting off)
   backslash-escape                   escape='\\' (else escape=quote)
-  null sentinel (default '\\N')      nullValue (+ emptyValue='' so
-                                     quoted empty string != NULL,
-                                     csv_parser.go:108-117)
+  null sentinel (default '\\N')      field SQL (csv_parser.go:108-117:
+                                     only the null text is NULL)
   header                             header handled ourselves (below)
   trim-last-separator                synthetic trailing column dropped
-  character-set                      encoding
+  character-set                      encoding (or a driver transcode)
 
 Every column is read as STRING — exactly the reference's model (CSV parser
 emits only string/NULL datums, csv_parser.go:539-554); typing happens in
@@ -37,7 +37,9 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from tidb_lightning_spark.sqltext import lit
+from tidb_lightning_spark.operators.cast import STRING_FAMILY_BASES
+from tidb_lightning_spark.schema.ddl import TableInfo
+from tidb_lightning_spark.sqltext import ident, lit
 
 
 @dataclass(frozen=True)
@@ -331,16 +333,16 @@ def materialize_lz4(paths: list[str]) -> list[str]:
 
 def read_header(path: str, cfg: CSVConfig, spark=None) -> list[str]:
     """Driver-side first-line read -> column names (csv_parser.go:513-538)."""
-    with _decompress_open(path, spark) as f:
-        raw = f.read(1 << 20)
-    if len(raw) == 1 << 20:
-        raw = raw[:-3]  # drop a possibly-split trailing multibyte char
-    text = decode_file_bytes(raw, cfg.character_set, path)
-    line = io.StringIO(text).readline().rstrip("\r\n")
-    fields = _split_line(line, cfg)
+    fields = _split_line_first(path, cfg, spark)
     if cfg.trim_last_sep and fields and fields[-1] == "":
         fields = fields[:-1]
     return [f.strip().strip(cfg.delimiter) if cfg.delimiter else f for f in fields]
+
+
+def _split_line_first(path: str, cfg: CSVConfig, spark=None) -> list[str]:
+    """The first line's fields, from a bounded driver-side peek."""
+    text = decode_file_bytes(_peek(path, spark), cfg.character_set, path)
+    return _split_line(io.StringIO(text).readline().rstrip("\r\n"), cfg)
 
 
 def _split_line(line: str, cfg: CSVConfig) -> list[str]:
@@ -377,11 +379,13 @@ def _split_line(line: str, cfg: CSVConfig) -> list[str]:
     return out
 
 
-# charsets Spark 4's CSV reader accepts natively; anything else goes
-# through the transcode step (the reference transcodes at read time too:
-# lightning/mydump/reader.go:39-118)
+# charsets Spark 4's CSV reader decodes natively, codecs name -> the one
+# spelling Spark accepts; the rest take the strict transcode (reference:
+# lightning/mydump/reader.go:39-118), ascii and utf-16-le too, whose
+# invalid bytes Spark would silently read as U+FFFD (latin-1 has none)
 SPARK_NATIVE_CHARSETS = {
-    "iso-8859-1", "us-ascii", "utf-16", "utf-16be", "utf-16le", "utf-32", "utf-8",
+    "iso8859-1": "iso-8859-1", "utf-16": "utf-16", "utf-32": "utf-32",
+    "utf-8": "utf-8",
 }
 
 # bounded prefix used to auto-detect a DATA file's charset. The
@@ -391,6 +395,14 @@ SPARK_NATIVE_CHARSETS = {
 # the downstream STRICT decode still fails loudly (never corrupts) if
 # the tail disagrees with the detected charset.
 CHARSET_DETECT_SAMPLE = 1 << 20
+
+
+def _peek(path: str, spark=None) -> bytes:
+    """The file's first CHARSET_DETECT_SAMPLE bytes (decompressed), less a
+    possibly-split trailing multibyte char when the sample is full."""
+    with _decompress_open(path, spark) as f:
+        raw = f.read(CHARSET_DETECT_SAMPLE)
+    return raw[:-3] if len(raw) == CHARSET_DETECT_SAMPLE else raw
 
 
 def decode_file_bytes(raw: bytes, configured: str, path: str = "") -> str:
@@ -432,10 +444,7 @@ def detect_charset(path: str, spark=None) -> str:
     mydump/reader.go:43-55 strategy). The last 3 bytes of the sample are
     dropped so a multi-byte sequence cut by the sample bound can't fake
     an invalid file."""
-    with _decompress_open(path, spark) as f:
-        raw = f.read(CHARSET_DETECT_SAMPLE)
-    if len(raw) == CHARSET_DETECT_SAMPLE:
-        raw = raw[:-3]
+    raw = _peek(path, spark)
     for cs in ("utf-8", "gb18030"):
         try:
             raw.decode(cs)
@@ -455,7 +464,7 @@ def effective_charset(path: str, configured: str, spark=None) -> str:
     if low == "auto":
         return detect_charset(path, spark)
     if low == "binary":
-        return "iso-8859-1"
+        return "iso8859-1"
     return codecs.lookup(low).name
 
 
@@ -526,22 +535,22 @@ def read_csv_files(
     n_columns: int | None = None,
     strict: bool = False,
 ) -> tuple[DataFrame, list[str] | None, list[str]]:
-    """Read data files as all-string columns.
+    """Read data files as all-string columns: (df, header_names, fields),
+    the raw scan and its fields as `csv_reader` builds them. With
+    cfg.header, all `paths` must share one header (the caller groups by
+    header); header_names=None otherwise."""
+    paths, cfg, header_names, width = _scan_group(
+        spark, paths, cfg, n_columns, SPARK_NATIVE_CHARSETS
+    )
+    reader, fields = csv_reader(spark.read, cfg, width, strict)
+    return reader.load(paths), header_names, fields
 
-    Returns (df, header_names, fields). With cfg.header, all `paths` must
-    share one header (the caller groups by header); header_names=None
-    otherwise. `df` is the raw scan; `fields` is the Spark SQL text of each
-    positional field over it (the MySQL null/empty mapping, the overflow
-    guard), which operators.transform.transform_table folds into the
-    table's reader projection.
-    """
+
+def _scan_group(spark, paths, cfg: CSVConfig, n_columns, readable):
+    """(paths, cfg, header_names, width) of a scan group: lz4 unpacked,
+    a charset not in `readable` (codecs -> reader name) transcoded."""
     paths = materialize_lz4(paths)
-    header_names: list[str] | None = None
-    width = n_columns
-    if cfg.header:
-        header_names = read_header(paths[0], cfg, spark)
-        width = len(header_names)
-
+    header_names = read_header(paths[0], cfg, spark) if cfg.header else None
     # 'auto' resolves per scan group from the first file (reference
     # detects per file, reader.go:43-55; one table's files sharing a
     # charset is mydumper's invariant — a disagreeing file fails the
@@ -553,13 +562,23 @@ def read_csv_files(
         # utf-8 (the executor scan decompresses natively; a legacy
         # charset there requires an explicit character-set anyway)
         charset = "utf-8"
-    if charset not in SPARK_NATIVE_CHARSETS:
+    if charset not in readable:
         paths = transcode_to_utf8(paths, charset)
-        cfg = dataclasses.replace(cfg, character_set="utf-8")
-    if width is None:
-        # probe width from the first line of the first file
-        width = len(_split_line_first(paths[0], cfg, spark))
+        charset = "utf-8"
+    cfg = dataclasses.replace(cfg, character_set=readable[charset])
+    # the header's width, else the caller's, else the first line's
+    width = len(header_names) if header_names is not None else (
+        n_columns or len(_split_line_first(paths[0], cfg, spark)))
+    return paths, cfg, header_names, width
 
+
+def csv_reader(reader, cfg: CSVConfig, width: int, strict: bool = False):
+    """The MySQL CSV dialect of every CSV scan, batch or streaming:
+    (`reader`, fields), `reader` (`spark.read` or `spark.readStream`)
+    with the options and all-string `_c*` schema set, and the SQL text of
+    the `width` positional fields over its scan (null/empty mapping,
+    overflow guard) for transform_table's reader projection.
+    `cfg.character_set` is a SPARK_NATIVE_CHARSETS value."""
     n_read = width + (1 if cfg.trim_last_sep else 0)
     # one extra probe column (PERMISSIVE mode only): a row carrying MORE
     # fields than the table has columns must ERROR like the reference
@@ -574,7 +593,7 @@ def read_csv_files(
         [T.StructField(f"_c{i}", T.StringType(), True) for i in range(n_schema)]
     )
     reader = (
-        spark.read.format("csv")
+        reader.format("csv")
         .schema(schema)
         .option("sep", cfg.separator)
         # nullValue is a NEVER-MATCHING sentinel, not cfg.null: univocity
@@ -607,8 +626,7 @@ def read_csv_files(
     else:
         reader = reader.option("quote", "\u0000")  # NUL char disables quoting
     # the trailing empty field of trim_last_sep (`_c{width}`) is read but
-    # named by no field below, so the scan prunes it
-    df = reader.load(paths)
+    # named by no field below, so the scan prunes it.
     # Restore the MySQL null/empty distinction the sentinel preserved:
     # a parsed NULL here is an EMPTY unquoted field -> '' (only the
     # null text means NULL, csv_parser.go:108-117); the literal null
@@ -634,7 +652,32 @@ def read_csv_files(
             f"coalesce(CASE WHEN {overflow} IS NOT NULL THEN "
             f"raise_error(concat({msg}, {overflow}, ')')) END, {fields[0]})"
         )
-    return df, header_names, fields
+    return reader, fields
+
+
+def unescape_columns(info: TableInfo, cfg: CSVConfig) -> set[str] | None:
+    """The (lower-cased) string-family columns whose MySQL `\\n`/`\\t`/...
+    escapes survive the CSV lexer as two characters and are restored
+    inside their cast (cast.mysql_unescape_sql rationale); None when the
+    dialect has no backslash escapes."""
+    if not (cfg.delimiter and cfg.backslash_escape):
+        return None
+    return {c.name.lower() for c in info.columns
+            if c.mysql.base in STRING_FAMILY_BASES}
+
+
+def jsonl_reader(reader, info: TableInfo):
+    """The JSONL scan (the LLM-corpus dump format) as `csv_reader` gives
+    it. Every DDL column is read AS STRING, so JSON's own number parsing
+    cannot diverge from the MySQL-cast chain; a missing key is SQL NULL,
+    not DEFAULT; unknown keys are ignored; the fields are the DDL names."""
+    schema = T.StructType(
+        [T.StructField(c.name, T.StringType()) for c in info.columns]
+    )
+    return (
+        reader.format("json").schema(schema).option("mode", "PERMISSIVE"),
+        [ident(c.name) for c in info.columns],
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -855,22 +898,13 @@ def read_csv_files_exact(
     tasks, byte-preserving latin-1 text, one-pass MySQL unescape done IN
     the lexer (callers must NOT re-apply unescape_cols, and must
     re-decode text columns from the latin-1 preservation — the same
-    contract as the binary-column raw read). Legacy charsets are
-    transcoded first, exactly like the fast path."""
+    contract as the binary-column raw read). So every charset but utf-8
+    is transcoded first, Spark-readable ones included."""
     from tidb_lightning_spark import _shipping
 
-    paths = materialize_lz4(paths)
-    header_names: list[str] | None = None
-    width = n_columns
-    if cfg.header:
-        header_names = read_header(paths[0], cfg, spark)
-        width = len(header_names)
-    charset = effective_charset(paths[0], cfg.character_set, spark)
-    if charset not in SPARK_NATIVE_CHARSETS:
-        paths = transcode_to_utf8(paths, charset)
-    if width is None:
-        width = len(_split_line_first(paths[0], cfg, spark))
-    n_read = width
+    paths, cfg, header_names, n_read = _scan_group(
+        spark, paths, cfg, n_columns, {"utf-8": "utf-8"}
+    )
 
     _shipping.ensure_shipped(spark)
     meta = spark.createDataFrame(
@@ -900,15 +934,6 @@ def read_csv_files_exact(
                 )
 
     return meta.mapInPandas(parse, schema=out_schema), header_names
-
-
-def _split_line_first(path: str, cfg: CSVConfig, spark=None) -> list[str]:
-    with _decompress_open(path, spark) as f:
-        raw = f.read(1 << 20)
-    if len(raw) == 1 << 20:
-        raw = raw[:-3]
-    text = decode_file_bytes(raw, cfg.character_set, path)
-    return _split_line(io.StringIO(text).readline().rstrip("\r\n"), cfg)
 
 
 def group_files_by_header(

@@ -204,6 +204,43 @@ def _arrow_fallback_read(spark: SparkSession, paths: list[str]) -> DataFrame:
     return files_df.mapInPandas(scan, schema=out_schema)
 
 
+def part_files(path: str) -> list[str]:
+    """A local parquet table's data files in sorted order: the file
+    itself, or every `*.parquet` under a directory at any depth (Hive
+    `k=v/` partition dirs included), skipping the `_`/`.`-prefixed
+    names Spark's reader treats as hidden."""
+    if not os.path.isdir(path):
+        return [path]
+    out = []
+    for root, dirs, files in os.walk(path):
+        dirs[:] = sorted(d for d in dirs if not d.startswith(("_", ".")))
+        out += [
+            os.path.join(root, f) for f in sorted(files)
+            if f.endswith(".parquet") and not f.startswith(("_", "."))
+        ]
+    return out
+
+
+def footer_num_rows(path: str, spark: SparkSession | None = None) -> int:
+    """Total row count from parquet footers — file OR directory layout
+    (read_table supports both), driver-side metadata only, no Spark job
+    for local paths. A scheme'd corpus (s3a://, hdfs://) has no os.path,
+    so it falls back to a Spark count — still footer-driven (parquet
+    count(*) reads row-group metadata, not data pages), just executed by
+    the cluster's filesystem connector instead of local pyarrow."""
+    import pyarrow.parquet as _pq
+
+    path = file_uri_to_path(path)
+    if "://" in path:
+        if spark is None:
+            raise ValueError(
+                f"scheme'd path {path} needs a SparkSession for the "
+                f"footer count"
+            )
+        return spark.read.parquet(path).count()
+    return sum(_pq.ParquetFile(p).metadata.num_rows for p in part_files(path))
+
+
 def read_table(spark: SparkSession, path: str | list[str]) -> DataFrame:
     """Read a parquet table, normalizing nano timestamps to micros."""
     paths = [path] if isinstance(path, str) else list(path)

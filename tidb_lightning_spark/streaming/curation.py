@@ -28,6 +28,7 @@ from pyspark.sql import types as T
 
 from tidb_lightning_spark.functions import quality as QL
 from tidb_lightning_spark.functions import text as TX
+from tidb_lightning_spark.sources.parquet_source import footer_num_rows
 
 DOC_SCHEMA = T.StructType(
     [
@@ -259,8 +260,9 @@ class TieredCompactor:
     Tier rule per table: once `compact_every` per-batch dirs accumulate,
     fold them into ONE `_delta_w=current` dir (IO = just those batches);
     deltas merge into the full `_snapshot_w` only when they have grown
-    to the base's size or `max_deltas` count — geometric, so cumulative
-    rewrite IO is O(corpus * log batches), never quadratic.
+    to the base's row count (read from the footers) or `max_deltas`
+    count — geometric, so cumulative rewrite IO is O(corpus * log
+    batches), never quadratic.
 
     Crash contract (inherited unchanged from the r9 admitter audit):
     snapshots land via write-to-`._tmp` + os.rename (atomic on one
@@ -338,19 +340,23 @@ class TieredCompactor:
             and len(watermarks) == 1
         ):
             return
+        # rows, not bytes: small per-batch dirs are mostly parquet
+        # footers, so by bytes they outweigh the snapshot and every fold
+        # would merge
+        def rows(dirs: list[str]) -> int:
+            return sum(footer_num_rows(p, self.spark) for p in dirs)
+
         folded: list[str] = []
         for base in self.tables:
             st = sel[base]
             srcs_batches = [p for _, p in st.batches]
             if st.w_max == batch_id and not srcs_batches:
                 continue  # already folded to here (replay after crash)
-            delta_bytes = sum(_dir_bytes(p) for _, p in st.deltas)
-            new_bytes = sum(_dir_bytes(p) for p in srcs_batches)
-            full_bytes = _dir_bytes(st.full[1]) if st.full else 0
             merge = (
                 st.full is None
                 or len(st.deltas) >= self.max_deltas
-                or delta_bytes + new_bytes >= full_bytes
+                or rows([p for _, p in st.deltas] + srcs_batches)
+                >= rows([st.full[1]])
             )
             if merge:
                 srcs = st.dirs()  # full + deltas + pending batches

@@ -26,19 +26,26 @@ transform.py), with exactly-once delivery into the warehouse layout:
 Readers see ordinary partitioned parquet until the first tier-compaction
 fold; after that `streaming.curation.read_table` is the exact reader
 (`cli sql` detects folded tables and routes through it).
+
+Shared-reader rule: no reader option, schema or field SQL lives here; the
+CSV and JSONL scans are `Restorer.run()`'s own (sources/csv_source), so a
+file restores to the same rows either way. The exact-dialect lexer and
+charset transcoding or `auto` detection are batch-only (they need the
+files on the driver first): `stream_restore` rejects them. One gap
+remains: non-UTF-8 BLOB bytes, kept by the batch path's latin-1
+re-read, stream in as U+FFFD.
 """
 
 from __future__ import annotations
 
+import dataclasses
 import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
 
 from tidb_lightning_spark.schema.ddl import TableInfo
-from tidb_lightning_spark.sources.csv_source import CSVConfig
-from tidb_lightning_spark.sqltext import ident
+from tidb_lightning_spark.sources import csv_source
 from tidb_lightning_spark.streaming.events import drain_available
 
 
@@ -67,59 +74,26 @@ def _allocate_batch_base(checkpoint_dir: str, batch_id: int, n_rows: int) -> int
     return base
 
 
-def _reader_schema(info: TableInfo, file_columns: list[str] | None) -> T.StructType:
-    n = len(file_columns) if file_columns else sum(
-        1 for c in info.columns if c.generated_expr is None
+def _stream_dialect(csv: csv_source.CSVConfig) -> csv_source.CSVConfig:
+    """`csv` with the charset spelled as Spark decodes it, or ValueError
+    for what only the batch reader honors: files that have not arrived
+    yet can be neither transcoded nor sampled on the driver."""
+    low = csv.character_set.lower()
+    native = low != "auto" and csv_source.SPARK_NATIVE_CHARSETS.get(
+        csv_source.effective_charset("", low)
     )
-    return T.StructType(
-        [T.StructField(f"_c{i}", T.StringType(), True) for i in range(n)]
-    )
-
-
-def read_csv_stream(
-    spark: SparkSession,
-    source_glob: str,
-    info: TableInfo,
-    csv: CSVConfig | None = None,
-    file_columns: list[str] | None = None,
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    """File-stream CSV source with the MySQL dialect options of the batch
-    reader (csv_source.py option mapping) and an all-string schema — the
-    typed cast happens in the shared transform chain, identically to the
-    batch path."""
-    csv = csv or CSVConfig()
-    reader = (
-        spark.readStream.schema(_reader_schema(info, file_columns))
-        .option("sep", csv.separator)
-        .option("quote", csv.delimiter or '"')
-        .option("escape", "\\" if csv.backslash_escape else '"')
-        .option("nullValue", csv.null)
-        .option("header", str(bool(csv.header)).lower())
-        .option("mode", "PERMISSIVE")
-    )
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    return reader.csv(source_glob)
-
-
-def read_jsonl_stream(
-    spark: SparkSession,
-    source_glob: str,
-    info: TableInfo,
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    """File-stream JSONL source (same contract as the batch jsonl branch:
-    all-string DDL schema -> MySQL cast chain; missing key == SQL NULL).
-    Its columns carry the DDL names: the transform takes them as its
-    positional fields (`transform_table(fields=...)`)."""
-    schema = T.StructType(
-        [T.StructField(c.name, T.StringType(), True) for c in info.columns]
-    )
-    reader = spark.readStream.schema(schema).option("mode", "PERMISSIVE")
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    return reader.json(source_glob)
+    if not native:
+        raise ValueError(
+            f"character-set {csv.character_set!r} is transcoded or "
+            "detected on the driver, which a stream cannot do for files "
+            "that have not arrived; restore such dumps with `cli run`"
+        )
+    if csv.exact_dialect:
+        raise ValueError(
+            "exact-dialect needs the whole-file lexer, which a stream "
+            "cannot run; restore such dumps with `cli run`"
+        )
+    return dataclasses.replace(csv, character_set=native)
 
 
 def stream_restore(
@@ -128,7 +102,7 @@ def stream_restore(
     table_dir: str,
     checkpoint_dir: str,
     info: TableInfo,
-    csv: CSVConfig | None = None,
+    csv: csv_source.CSVConfig | None = None,
     file_columns: list[str] | None = None,
     pinned_timestamp: str = "1970-01-01 00:00:00",
     strict: bool = False,
@@ -166,18 +140,19 @@ def stream_restore(
         )
 
     if fmt == "jsonl":
-        stream = read_jsonl_stream(
-            spark, source_glob, info,
-            max_files_per_trigger=max_files_per_trigger,
-        )
-        file_columns = None
-        fields = [ident(c.name) for c in info.columns]
+        reader, fields = csv_source.jsonl_reader(spark.readStream, info)
+        file_columns, esc_cols = None, None
     else:
-        fields = None
-        stream = read_csv_stream(
-            spark, source_glob, info, csv=csv, file_columns=file_columns,
-            max_files_per_trigger=max_files_per_trigger,
+        csv = _stream_dialect(csv or csv_source.CSVConfig())
+        # the batch reader's width: positional field i is DDL column i
+        width = len(file_columns) if file_columns else len(info.columns)
+        reader, fields = csv_source.csv_reader(
+            spark.readStream, csv, width, strict
         )
+        esc_cols = csv_source.unescape_columns(info, csv)
+    if max_files_per_trigger:
+        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
+    stream = reader.load(source_glob)
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         # exact disjoint range per batch; the count pass is the same one
@@ -197,6 +172,7 @@ def stream_restore(
             # inside it (striped monotonic ids would collide with the
             # next batch's reservation)
             force_dense=True,
+            unescape_cols=esc_cols,
             fields=fields,
         )
         if strict and ERR_COL in out.columns:
