@@ -4,8 +4,9 @@
 reader (options, all-string schema, null/empty/overflow field SQL and
 the MySQL-escape columns) and one JSONL reader, so the same one-file
 dump restores to the same `(id, name)` rows through both, or fails the
-same way. Inputs a stream cannot honor (a charset the batch reader
-transcodes on the driver, the exact lexer) are rejected up front."""
+same way. Both keep the raw bytes of a BLOB column. Inputs a stream
+cannot honor (a charset the batch reader transcodes on the driver, the
+exact lexer) are rejected up front."""
 
 from __future__ import annotations
 
@@ -22,6 +23,9 @@ from tidb_lightning_spark.sources.parquet_source import read_table
 from tidb_lightning_spark.streaming.ingest import stream_restore
 
 DDL = "CREATE TABLE t (id INT PRIMARY KEY, name VARCHAR(20));"
+BLOB_DDL = "CREATE TABLE t (id INT PRIMARY KEY, name VARCHAR(20), b BLOB);"
+# a header line, then a text column and non-UTF-8 bytes in a BLOB field
+BLOB_CSV = b'id,name,b\n1,caf\xc3\xa9,"\xff\xfeok"\n'
 
 # (case id, data file bytes, CSVConfig overrides)
 CSV_CASES = [
@@ -43,11 +47,11 @@ JSONL_ROWS = [
 ]
 
 
-def _batch(spark, tmp_path, fname, data, csv):
+def _batch(spark, tmp_path, fname, data, csv, ddl=DDL, cols=("id", "name")):
     d = tmp_path / "dump"
     d.mkdir()
     (d / "d-schema-create.sql").write_text("CREATE DATABASE d;")
-    (d / "d.t-schema.sql").write_text(DDL)
+    (d / "d.t-schema.sql").write_text(ddl)
     (d / fname).write_bytes(data)
     target = str(tmp_path / "batch")
     cfg = Config.from_toml(
@@ -57,11 +61,14 @@ def _batch(spark, tmp_path, fname, data, csv):
     report = Restorer(spark, cfg).run()
     if not report.ok:
         return ("error", report.tables[0].error)
-    rows = read_table(spark, f"{target}/d/t").select("id", "name").collect()
+    rows = read_table(spark, f"{target}/d/t").select(*cols).collect()
     return ("rows", sorted(tuple(r) for r in rows))
 
 
-def _stream(spark, tmp_path, fname, data, csv, fmt, file_columns):
+def _stream(
+    spark, tmp_path, fname, data, csv, fmt, file_columns, ddl=DDL,
+    cols=("id", "name"),
+):
     src = tmp_path / "incoming"
     src.mkdir()
     (src / fname).write_bytes(data)
@@ -69,12 +76,12 @@ def _stream(spark, tmp_path, fname, data, csv, fmt, file_columns):
     try:
         stream_restore(
             spark, f"{src}/d.t.*.{fmt}", table_dir,
-            str(tmp_path / "ckpt"), parse_create_table(DDL),
+            str(tmp_path / "ckpt"), parse_create_table(ddl),
             csv=csv, file_columns=file_columns, fmt=fmt,
         )
     except Exception as exc:  # noqa: BLE001 - compared against batch
         return ("error", str(exc))
-    rows = spark.read.parquet(table_dir).select("id", "name").collect()
+    rows = spark.read.parquet(table_dir).select(*cols).collect()
     return ("rows", sorted(tuple(r) for r in rows))
 
 
@@ -110,6 +117,23 @@ def test_csv_parity_expected_rows(spark, tmp_path):
         ["id", "name"],
     )
     assert stream == ("rows", [(1, ""), (2, None), (3, "a\tb")])
+
+
+def test_csv_blob_bytes_batch_and_stream(spark, tmp_path):
+    """Both paths read a table with BLOB columns byte-preserving, and the
+    driver-side header read decodes only the header line, not the BLOB
+    bytes below it."""
+    cols = ("id", "name", "b")
+    batch = _batch(
+        spark, tmp_path, "d.t.000.csv", BLOB_CSV, CSVConfig(), BLOB_DDL, cols
+    )
+    stream = _stream(
+        spark, tmp_path, "d.t.000.csv", BLOB_CSV, CSVConfig(), "csv",
+        list(cols), BLOB_DDL, cols,
+    )
+    assert stream == batch == (
+        "rows", [(1, "café", bytearray(b"\xff\xfeok"))]
+    )
 
 
 def test_jsonl_batch_and_stream_read_the_same_rows(spark, tmp_path):

@@ -135,3 +135,49 @@ def test_fresh_jdbc_import_raises_no_java_exception(spark, tmp_path):
     assert rep.ok, [t.error for t in rep.tables]
     assert [t.rows for t in rep.tables] == [2, 2, 2]
     assert len(calls) == 0
+
+
+def test_jdbc_readback_reads_only_the_aggregated_columns(spark, tmp_path):
+    """With checksum off, a JDBC readback aggregates only the row count
+    and the AUTO_INCREMENT column's max, so its query fetches that one
+    column over JDBC, not the whole table."""
+    d = str(tmp_path / "dump")
+    _write(f"{d}/shop-schema-create.sql", "CREATE DATABASE shop;")
+    _write(
+        f"{d}/shop.a-schema.sql",
+        "CREATE TABLE a (id INT AUTO_INCREMENT PRIMARY KEY, "
+        "v VARCHAR(10), w VARCHAR(10));",
+    )
+    _write(f"{d}/shop.a.csv", "id,v,w\n1,x,p\n2,y,q\n")
+    cfg = Config.from_toml(
+        None,
+        source_dir=d,
+        target_dir=str(tmp_path / "state"),
+        backend="jdbc",
+        jdbc_url=f"jdbc:derby:{tmp_path}/rb;create=true",
+        jdbc_driver=DERBY_DRIVER,
+        checksum="off",
+    )
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def plans() -> dict[int, str]:
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+        execs = store.executionsList()
+        return {
+            execs.apply(i).executionId(): execs.apply(i).physicalPlanDescription()
+            for i in range(execs.size())
+        }
+
+    before = plans()
+    rep = Restorer(spark, cfg).run()
+    assert rep.ok, [t.error for t in rep.tables]
+    scans = [
+        line.strip()
+        for k, plan in plans().items()
+        if k not in before
+        for line in plan.splitlines()
+        if "External engine query" in line
+    ]
+    assert scans, "no JDBC readback scan recorded"
+    query = 'External engine query: SELECT "id" FROM'
+    assert all(q.startswith(query) for q in scans), scans

@@ -151,7 +151,12 @@ def _readback_pass(
     the verification checksum triple (L2) over the typed `fields`,
     ANALYZE column stats (L3) and the `extra` {name: aggregate Column}
     ride the same aggregate, so enabling checksum+analyze costs one pass,
-    not three. Returns (rows, checksum, stats, {name: extra value})."""
+    not three. Returns (rows, checksum, stats, {name: extra value}).
+
+    The aggregates are observed over a `noop` write of `df`: one result
+    stage with no exchange, where `df.agg` plans a partial aggregate, a
+    shuffle and a final one (two jobs under AQE). A result stage merges
+    each task's accumulator update once, so the values are exact."""
     from pyspark.sql import functions as SF
 
     from tidb_lightning_spark.functions.checksum import checksum_aggs
@@ -174,7 +179,13 @@ def _readback_pass(
                 aggs.append(SF.max(name).alias(f"max__{name}"))
     extra = extra or {}
     aggs += [c.alias(f"extra___{k}") for k, c in extra.items()]
-    row = df.agg(*aggs).collect()[0].asDict()
+    obs = Observation()
+    # the projection above the observation lets column pruning reach the
+    # scan: only the columns the aggregates read are fetched
+    df.observe(obs, *aggs).select(SF.lit(0)).write.format("noop").mode(
+        "overwrite"
+    ).save()
+    row = dict(obs.get)
     rows = row.pop("rows___")
     extra_values = {k: row.pop(f"extra___{k}") for k in extra}
     cks = (
@@ -1203,12 +1214,15 @@ class Restorer:
                 df = df.unionByName(e[2], allowMissingColumns=True)
 
             # strict sql_mode. A single files write folds the violation check
-            # into the WRITE job: observe the error count below the ERR-column
-            # drop and check it before the staged commit (the sink's
-            # pre_commit), so strict mode costs no second source scan (the
-            # range sampler may double-fire the metric; only ==0 is checked,
-            # and 2x0 == 0). Engines and the JDBC sink probe up front, before
-            # anything is written to the target.
+            # into the jobs it runs anyway: observe the error count below the
+            # ERR-column drop and check it before the staged commit (the
+            # sink's pre_commit), so strict mode costs no probe scan. An
+            # observation keeps the first action's values: for a
+            # range-written table that is the key sample, whose sample sits
+            # above this node, so the count still covers every row (the
+            # sample then parses every column, not just the key). Engines and
+            # the JDBC sink probe up front, before anything is written to the
+            # target.
             err_obs = None
             if ERR_COL in df.columns:
                 strict = self.cfg.strict_sql_mode
@@ -1630,23 +1644,6 @@ class Restorer:
             rowid_base += group_bytes // max(1, len(info.columns)) + 1
 
         if csv_files:
-            # BLOB-in-CSV byte preservation (reference tests/csv
-            # `escapes.b`): the reference parses CSV at the byte level,
-            # so raw non-utf-8 bytes inside a quoted blob field (0xFF,
-            # bare CR/LF) reach the table verbatim. A utf-8 Spark read
-            # would U+FFFD them first — so when the target schema has
-            # binary-family columns and the file bytes are utf-8/ascii,
-            # read byte-preserving (latin-1), re-decode the TEXT columns
-            # back to utf-8, and hand binary columns their raw bytes.
-            # (A legacy-charset CSV carrying blobs can't be both
-            # transcoded and byte-preserved — text wins, as before.)
-            import pyspark.sql.types as _T
-
-            bin_cols = {
-                c.name.lower()
-                for c in info.columns
-                if isinstance(c.mysql.spark_type(), _T.BinaryType)
-            }
             for header, paths in csv_source.group_files_by_header(
                 [f.path for f in csv_files], self.cfg.csv, self.spark
             ):
@@ -1668,25 +1665,12 @@ class Restorer:
                         n_columns=len(info.columns),
                     )
                     fields = [ident(c) for c in df.columns]
-                    raw_read = True  # lexer output is latin-1-preserved
+                    # lexer output is latin-1-preserved
+                    binary_encoding = csv_source.LATIN1
                 else:
-                    raw_read = False
-                    if bin_cols:
-                        try:
-                            eff0 = csv_source.effective_charset(
-                                paths[0], self.cfg.csv.character_set,
-                                self.spark,
-                            )
-                        except NotImplementedError:
-                            eff0 = "utf-8"  # compressed remote: no peek
-                        raw_read = eff0 in ("utf-8", "us-ascii", "ascii")
-                    csv_cfg = self.cfg.csv
-                    if raw_read:
-                        import dataclasses as _dc
-
-                        csv_cfg = _dc.replace(
-                            self.cfg.csv, character_set="iso-8859-1"
-                        )
+                    csv_cfg, binary_encoding = csv_source.blob_dialect(
+                        info, self.cfg.csv, paths[0], self.spark
+                    )
                     df, names, fields = csv_source.read_csv_files(
                         self.spark,
                         paths,
@@ -1695,14 +1679,9 @@ class Restorer:
                         strict=self.cfg.strict_sql_mode,
                     )
                 file_cols = list(header) if header else None
-                if raw_read:
-                    srcs = file_cols or [c.name for c in info.columns]
-                    for i, cname in enumerate(srcs[: len(fields)]):
-                        if cname.lower() not in bin_cols:
-                            fields[i] = (
-                                f"decode(encode({fields[i]}, 'ISO-8859-1'), "
-                                "'UTF-8')"
-                            )
+                fields = csv_source.text_fields(
+                    fields, file_cols, info, binary_encoding
+                )
                 # the exact lexer unescaped in its one pass
                 esc_cols = None if use_exact else csv_source.unescape_columns(
                     info, self.cfg.csv
@@ -1741,9 +1720,7 @@ class Restorer:
                         rowid_base=rowid_base,
                         keep_rowid=keep_rowid,
                         unescape_cols=esc_cols,
-                        binary_encoding=(
-                            "ISO-8859-1" if raw_read else "UTF-8"
-                        ),
+                        binary_encoding=binary_encoding,
                         fields=fields,
                     )
                 )
@@ -1886,10 +1863,11 @@ class Restorer:
                     sentinel_defaults=True,
                 )
                 # The parsed-row cache policy. Only SQL-dump parts are
-                # persisted: every other source lets the range sampler
-                # re-scan (files_sink._range_sorted), but this scan is a
-                # Python statement parse that the sampler would run a
-                # second time. A 5-pair interleaved A/B on perfbench's
+                # persisted: every other source lets the key sample
+                # (files_sink._range_partitioned) read just the key
+                # columns, but this scan is a Python statement parse that
+                # parses every row's every field for the sample too. A
+                # 5-pair interleaved A/B on perfbench's
                 # sqldump_bulk (4 cores) made import_s slower in 5 of 5
                 # pairs without the persist: medians 4.52 -> 5.19 s
                 # (+15%). MEMORY_AND_DISK, and only when the caller hands

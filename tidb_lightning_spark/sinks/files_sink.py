@@ -5,14 +5,21 @@ lightning/backend/local.go — SURVEY.md §2.K2).
 The reference's pipeline  encode -> memcache sort -> SST -> pebble ingest
 -> range-split -> scatter  collapses on Spark to:
 
-    df.repartitionByRange(N, pk).sortWithinPartitions(pk)
+    bounds = n-1 cut points of a key-only sample        # one small job
+    df.repartitionById(n, <range id of the row's key>)
+      .sortWithinPartitions(pk)
       .write.parquet(<staging>)          # executors write sorted files
     rename(<staging> -> <final>)         # atomic engine Import step
 
 * N is sized from the source bytes / 96 MiB — the reference's target
   region size (local.go:77, backend const) — so each output file is a
-  "region"-sized sorted run; range partitioning gives globally
+  "region"-sized sorted run; routing by the bounds gives globally
   non-overlapping key ranges exactly like its split-and-ingest.
+* The bounds come from a uniform sample of the KEY columns only, so the
+  sample job parses and casts nothing else; the reference cuts its ranges
+  from its SST writer's range properties and never re-reads its input
+  (local.go:877-950). The bounds decide only how even the files are,
+  never which rows are written.
 * The staging dir mirrors engine Close -> Import atomicity
   (backend.go:300-439): readers never observe a half-written table, and a
   retry wipes staging and re-runs (idempotent re-import).
@@ -31,8 +38,20 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 
+from tidb_lightning_spark.sqltext import ident, typed
+
 TARGET_FILE_BYTES = 96 * 1024 * 1024  # reference target region size
 ENGINE_MANIFEST = "_tls_engine.json"  # closed-engine marker inside staging
+
+# Key sample of a range-partitioned write: a range's size strays from
+# the mean by about 1/sqrt(keys per range), and with one range per core
+# the largest range sets the write's wall time.
+SAMPLE_KEYS_PER_RANGE = 256
+SAMPLE_MAX_KEYS = 1 << 16
+SAMPLE_SEED = 20150831
+RANGE_ID = "_tls_range"
+RANGE_KEY = "_tls_range_key"
+RANGE_BOUNDS = "_tls_range_bounds"
 
 
 def _n_ranges(spark, source_bytes: int) -> int:
@@ -61,34 +80,127 @@ def _range_sorted(
     n_ranges: int | None = None,
 ) -> DataFrame:
     """The write plan of a table or engine: range-partition on
-    `sort_columns`, then sort each partition, with `observation` (if
-    any) attached so that only the write job evaluates it.
+    `sort_columns` (`_range_partitioned`), then sort each partition,
+    with `observation` (if any) attached to the write plan only.
 
     One shuffle: Spark's external sort handles spill (the SST/pebble
-    analog). repartitionByRange SAMPLES its input, re-executing the
-    read+transform chain once to pick bounds. For CSV and parquet that
-    extra scan is deliberately NOT avoided with persist(): measured at
-    37 MiB and 373 MiB, caching the parsed rows costs 2-3x more (cache
-    build + columnar re-read) than re-parsing, and at 100 TB a
-    full-input persist is a second copy of the dataset on executor disks
-    while the sampling scan remains a ~1x read with pruning intact. The
-    one exception is the SQL-dump source, whose Python parse the caller
-    persists: the policy and its measurement are stated once, at the
-    persist in `Restorer._read_and_transform`."""
+    analog). The bounds cost one extra job that reads the source's key
+    columns only (column pruning keeps the other fields unparsed and
+    uncast). The one source whose parse cannot be pruned, the SQL dump's
+    Python statement parse, is persisted by the caller: that policy and
+    its measurement are stated once, at the persist in
+    `Restorer._read_and_transform`."""
     out = df
     if sort_columns:
         n = n_ranges or _n_ranges(df.sparkSession, source_bytes)
         if n > 1:
-            out = out.repartitionByRange(n, *sort_columns)
-    # metrics node ABOVE the exchange: the range sampler executes the
-    # exchange INPUT, so metrics attached below it would accumulate twice
-    # (count 2x, xor self-cancelling); above it, only the write job
-    # evaluates them — one exact accumulation with zero extra scans.
+            out = _range_partitioned(out, sort_columns, n)
+    # the key sample reads `df`, not this node: only the write job
+    # evaluates the metrics, one exact accumulation
     if observation is not None:
         out = out.observe(observation, *observe_aggs)
     if sort_columns:
         out = out.sortWithinPartitions(*sort_columns)
     return out
+
+
+def _range_partitioned(df: DataFrame, keys: list[str], n: int) -> DataFrame:
+    """`df` in at most `n` partitions of ascending, non-overlapping key
+    ranges, partition i holding range i (so part-file order is key
+    order), NULL keys first as in Spark's ascending sort.
+
+    The bounds are cut on the driver from a fixed-seed uniform sample
+    over every row, whatever its width: the keys of the
+    SAMPLE_KEYS_PER_RANGE * n (at most SAMPLE_MAX_KEYS) lowest of one
+    random draw per row, a top-k that runs in one job and keeps at most
+    that many rows on any task. Equal keys never straddle two ranges;
+    with fewer distinct sampled keys than `n`, fewer ranges are written.
+    Each row is routed by `with_range_id` and `repartitionById`, so Spark
+    does not sample the input a second time."""
+    key_sql = [ident(k) for k in keys]
+    types = [f.dataType.simpleString() for f in df.selectExpr(*key_sql).schema]
+    # a session-zoned timestamp travels as epoch micros (sqltext.typed)
+    drawn = [
+        f"unix_micros({k})" if t == "timestamp" else k
+        for k, t in zip(key_sql, types)
+    ]
+    want = min(SAMPLE_KEYS_PER_RANGE * n, SAMPLE_MAX_KEYS)
+    draws = df.selectExpr(*drawn, f"rand({SAMPLE_SEED}) AS _tls_draw")
+    sample = sorted(
+        (tuple(r)[:-1] for r in draws.orderBy("_tls_draw").limit(want).collect()),
+        key=_key_order,
+    )
+    bounds: list[tuple] = []
+    for i in range(1, n) if sample else ():
+        b = sample[i * len(sample) // n]
+        if not bounds or _key_order(b) > _key_order(bounds[-1]):
+            bounds.append(b)
+    return (
+        with_range_id(df, key_sql, types, bounds)
+        .repartitionById(len(bounds) + 1, RANGE_ID)
+        .drop(RANGE_ID)
+    )
+
+
+def _key_order(key: tuple) -> tuple:
+    """Python sort key giving a collected key tuple Spark's ascending
+    order: NULL first, NaN last, otherwise the value's own order (bytes
+    for strings and binary, as Spark compares them)."""
+    return tuple(
+        (0,) if v is None else (2,) if v != v else (1, v) for v in key
+    )
+
+
+def with_range_id(
+    df: DataFrame, key_sql: list[str], types: list[str], bounds: list[tuple]
+) -> DataFrame:
+    """`df` plus a RANGE_ID column: the number of `bounds` (ascending key
+    tuples, values as `_range_partitioned` collects them) that sort
+    strictly below the row's key, so a key equal to a bound joins the
+    lower range.
+
+    A binary search over the bounds as one array literal: the key and
+    each bound are structs of the key's types, whose comparison is
+    Spark's ascending order (NULL fields first, NaN last), and each of
+    the ceil(log2(len(bounds) + 1)) steps is one projection that adds
+    its step size when the bound `step` places further on still sorts
+    below the key (`get` is NULL past the end, so no step overshoots).
+    The generated code stays O(log n): a CASE tree over the bounds
+    compiles to one expression of O(n) code, which at ~1,000 ranges
+    exceeds the JVM's 64 KB method limit and drops the whole scan stage
+    out of whole-stage codegen."""
+    from pyspark.sql import functions as F
+
+    if not bounds:
+        return df.withColumn(RANGE_ID, F.lit(0))
+
+    # nullable struct fields on both sides: no per-row cast between them
+    struct = "struct<" + ",".join(
+        f"k{j}:{t}" for j, t in enumerate(types)
+    ) + ">"
+
+    def fields(values: list[str]) -> str:
+        return "named_struct(" + ", ".join(
+            f"'k{j}', {v}" for j, v in enumerate(values)
+        ) + ")"
+
+    literal = ", ".join(
+        fields([typed(v, t) for v, t in zip(b, types)]) for b in bounds
+    )
+    out = df.withColumns({
+        RANGE_KEY: F.expr(f"cast({fields(key_sql)} as {struct})"),
+        RANGE_BOUNDS: F.expr(f"cast(array({literal}) as array<{struct}>)"),
+        RANGE_ID: F.lit(0),
+    })
+    rid, key, arr = F.col(RANGE_ID), F.col(RANGE_KEY), F.col(RANGE_BOUNDS)
+    step = 1 << (len(bounds).bit_length() - 1)
+    while step:
+        out = out.withColumn(
+            RANGE_ID,
+            rid + F.when(key > F.get(arr, rid + (step - 1)), step).otherwise(0),
+        )
+        step >>= 1
+    return out.drop(RANGE_KEY, RANGE_BOUNDS)
 
 
 @dataclass
@@ -424,16 +536,11 @@ def write_zordered(
     parquet footer min/max prunes scans filtering on ANY of them — the
     multi-dimensional analog of the PK-sorted layout's single-key
     pruning. The curve column is dropped before writing; layout only."""
-    from pyspark.sql import functions as F
-
-    z = zorder_value(df, zorder_columns, bits=bits)
-    tagged = df.withColumn("_zv", z)
+    tagged = df.withColumn("_zv", zorder_value(df, zorder_columns, bits=bits))
     n = _n_ranges(df.sparkSession, source_bytes)
-    out = (
-        tagged.repartitionByRange(n, F.col("_zv"))
-        .sortWithinPartitions("_zv")
-        .drop("_zv")
-    )
+    if n == 1:  # one file sorted on the curve, not one per input split
+        tagged = tagged.repartition(1)
+    out = _range_sorted(tagged, ["_zv"], source_bytes, n_ranges=n).drop("_zv")
     # write through the staged-commit path with no extra sort
     return sink.write_table(
         out, db, table, sort_columns=None, source_bytes=source_bytes
@@ -653,12 +760,9 @@ def _upsert_partition_cow(
         os.path.getsize(os.path.join(final, n)) for n in dirty
     )
     n = max(1, (dirty_bytes + TARGET_FILE_BYTES - 1) // TARGET_FILE_BYTES)
-    out = merged
-    if n > 1:
-        out = out.repartitionByRange(n, *key_columns)
-    out.sortWithinPartitions(*key_columns).write.mode("overwrite").parquet(
-        staging
-    )
+    _range_sorted(
+        merged, key_columns, dirty_bytes, n_ranges=n
+    ).write.mode("overwrite").parquet(staging)
     # hardlink the pruned files in (collision-proof names: Spark's new
     # part files never carry the linked- prefix). Strip prior linked-
     # prefixes first — re-linking a linked file must not grow the name

@@ -340,8 +340,18 @@ def read_header(path: str, cfg: CSVConfig, spark=None) -> list[str]:
 
 
 def _split_line_first(path: str, cfg: CSVConfig, spark=None) -> list[str]:
-    """The first line's fields, from a bounded driver-side peek."""
-    text = decode_file_bytes(_peek(path, spark), cfg.character_set, path)
+    """The first line's fields, from a bounded driver-side peek. Only the
+    first line's bytes are decoded: a strict decode of the whole peek
+    would fail on bytes that are no text further down (a BLOB field). In
+    every charset but UTF-16/32 a 0x0A byte is a newline, never part of
+    a multibyte character."""
+    raw = _peek(path, spark)
+    low = (cfg.character_set or "utf-8").lower()
+    if low in ("auto", "binary") or not codecs.lookup(low).name.startswith(
+        ("utf-16", "utf-32")
+    ):
+        raw = raw.split(b"\n", 1)[0]
+    text = decode_file_bytes(raw, cfg.character_set, path)
     return _split_line(io.StringIO(text).readline().rstrip("\r\n"), cfg)
 
 
@@ -653,6 +663,61 @@ def csv_reader(reader, cfg: CSVConfig, width: int, strict: bool = False):
             f"raise_error(concat({msg}, {overflow}, ')')) END, {fields[0]})"
         )
     return reader, fields
+
+
+# the byte-preserving scan charset of a table with BLOB columns, and the
+# binary_encoding that hands those columns their raw bytes
+LATIN1 = "ISO-8859-1"
+
+
+def blob_dialect(
+    info: TableInfo, cfg: CSVConfig, path: str = "", spark=None
+) -> tuple[CSVConfig, str]:
+    """BLOB-in-CSV byte preservation (reference tests/csv `escapes.b`),
+    for every CSV scan, batch or streaming: (the dialect to scan `path`
+    with, transform_table's binary_encoding). The reference parses CSV
+    at the byte level, so raw non-UTF-8 bytes inside a quoted blob field
+    (0xFF, bare CR/LF) reach the table verbatim; a UTF-8 Spark read would
+    turn them into U+FFFD first. So when the table has binary-family
+    columns and the file's bytes are UTF-8 or ASCII, the scan reads
+    latin-1 (one char per byte) and `text_fields` re-decodes the TEXT
+    columns to UTF-8. A legacy-charset file carrying blobs cannot be
+    both transcoded and byte-preserved: text wins."""
+    if not _binary_columns(info):
+        return cfg, "UTF-8"
+    try:
+        charset = effective_charset(path, cfg.character_set, spark)
+    except NotImplementedError:
+        charset = "utf-8"  # compressed remote file: no driver peek
+    if charset not in ("utf-8", "ascii"):
+        return cfg, "UTF-8"
+    return dataclasses.replace(cfg, character_set=LATIN1.lower()), LATIN1
+
+
+def text_fields(
+    fields: list[str], names: list[str] | None, info: TableInfo,
+    binary_encoding: str,
+) -> list[str]:
+    """`fields` of a scan with the given binary_encoding, the text
+    columns of a byte-preserving (latin-1) one re-decoded to UTF-8.
+    `names` are the file's column names in field order (its header),
+    None for the DDL's order."""
+    if binary_encoding != LATIN1:
+        return fields
+    blobs = _binary_columns(info)
+    srcs = names or [c.name for c in info.columns]
+    return [
+        f if i >= len(srcs) or srcs[i].lower() in blobs
+        else f"decode(encode({f}, '{LATIN1}'), 'UTF-8')"
+        for i, f in enumerate(fields)
+    ]
+
+
+def _binary_columns(info: TableInfo) -> set[str]:
+    return {
+        c.name.lower() for c in info.columns
+        if isinstance(c.mysql.spark_type(), T.BinaryType)
+    }
 
 
 def unescape_columns(info: TableInfo, cfg: CSVConfig) -> set[str] | None:

@@ -31,9 +31,8 @@ Shared-reader rule: no reader option, schema or field SQL lives here; the
 CSV and JSONL scans are `Restorer.run()`'s own (sources/csv_source), so a
 file restores to the same rows either way. The exact-dialect lexer and
 charset transcoding or `auto` detection are batch-only (they need the
-files on the driver first): `stream_restore` rejects them. One gap
-remains: non-UTF-8 BLOB bytes, kept by the batch path's latin-1
-re-read, stream in as U+FFFD.
+files on the driver first): `stream_restore` rejects them. BLOB bytes
+are kept by the same latin-1 scan as in batch (csv_source.blob_dialect).
 """
 
 from __future__ import annotations
@@ -139,15 +138,20 @@ def stream_restore(
             sort_within=list(info.primary_key or []) or None,
         )
 
+    binary_encoding = "UTF-8"
     if fmt == "jsonl":
         reader, fields = csv_source.jsonl_reader(spark.readStream, info)
         file_columns, esc_cols = None, None
     else:
         csv = _stream_dialect(csv or csv_source.CSVConfig())
+        csv, binary_encoding = csv_source.blob_dialect(info, csv)
         # the batch reader's width: positional field i is DDL column i
         width = len(file_columns) if file_columns else len(info.columns)
         reader, fields = csv_source.csv_reader(
             spark.readStream, csv, width, strict
+        )
+        fields = csv_source.text_fields(
+            fields, file_columns, info, binary_encoding
         )
         esc_cols = csv_source.unescape_columns(info, csv)
     if max_files_per_trigger:
@@ -173,6 +177,7 @@ def stream_restore(
             # next batch's reservation)
             force_dense=True,
             unescape_cols=esc_cols,
+            binary_encoding=binary_encoding,
             fields=fields,
         )
         if strict and ERR_COL in out.columns:
