@@ -261,3 +261,51 @@ def test_restore_sqldump_exact_row_ids(spark, tmp_path, monkeypatch):
         172, 173,  # s.t.002.sql
         185, 186, 187, 188,  # s.t.003.sql, (`a`, `b`) group
     ]
+
+
+def test_restore_sqldump_blob_bytes(spark, tmp_path):
+    """A UTF-8 dump into a table with a BLOB column keeps each string
+    literal's raw bytes in the BLOB, as the CSV path does
+    (csv_source.byte_preserving): non-UTF-8 bytes and UTF-8 'é' land as
+    written, while text columns still read as UTF-8, including a hex
+    literal's bytes. One file takes the vectorized parse, the other
+    (hex literals) the scanner."""
+    import os as _os
+
+    from tidb_lightning_spark.config import Config
+    from tidb_lightning_spark.pipeline import Restorer
+
+    d = str(tmp_path / "dump")
+    _os.makedirs(d)
+    with open(f"{d}/s-schema-create.sql", "w") as f:
+        f.write("CREATE DATABASE s;")
+    with open(f"{d}/s.t-schema.sql", "w") as f:
+        f.write("CREATE TABLE t (a INT, s VARCHAR(20), b BLOB);")
+    with open(f"{d}/s.t.000.sql", "wb") as f:
+        f.write(
+            b"INSERT INTO t VALUES (1,'x','\xff\xfeok'),"
+            b"(2,'caf\xc3\xa9','caf\xc3\xa9'),(3,'it\\'s','a\\0b');\n"
+        )
+    with open(f"{d}/s.t.001.sql", "wb") as f:
+        f.write(
+            b"INSERT INTO t VALUES (4,X'636166c3a9',X'ff00'),"
+            b"(5,'\xc3\xa9',0x636166c3a9);\n"
+        )
+    target = str(tmp_path / "wh")
+    cfg = Config.from_toml(
+        None, source_dir=d, target_dir=target, checkpoint_enable=False
+    )
+    rep = Restorer(spark, cfg).run()
+    assert rep.ok, [t.error for t in rep.tables]
+    got = [
+        tuple(r)
+        for r in spark.read.parquet(f"{target}/s/t")
+        .select("a", "s", "b").orderBy("a").collect()
+    ]
+    assert got == [
+        (1, "x", bytearray(b"\xff\xfeok")),
+        (2, "café", bytearray(b"caf\xc3\xa9")),
+        (3, "it's", bytearray(b"a\x00b")),
+        (4, "café", bytearray(b"\xff\x00")),
+        (5, "é", bytearray(b"caf\xc3\xa9")),
+    ]

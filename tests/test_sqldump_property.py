@@ -73,6 +73,58 @@ def expect_cell(v):
     return repr(v)
 
 
+_PAD = st.sampled_from(["", "", " ", "  ", "\t", "\n", "\r\n"])
+
+
+def _any_case(draw, word: str) -> str:
+    return "".join(c.lower() if draw(st.booleans()) else c for c in word)
+
+
+@st.composite
+def loose_inserts(draw):
+    """(text, expected rows) in the loose shapes hand-written and
+    mysqldump --insert-ignore/--complete-insert dumps use: whitespace
+    around fields, NULL/TRUE/FALSE in any case, '+' on numbers, IGNORE
+    and a backticked column list."""
+    width = draw(st.integers(1, 5))
+    rows = draw(st.lists(
+        st.lists(st.one_of(cell, st.booleans()),
+                 min_size=width, max_size=width),
+        min_size=1, max_size=6,
+    ))
+
+    def lit(v):
+        """(literal text, the datum it parses to)"""
+        if v is None:
+            return _any_case(draw, "NULL"), None
+        if isinstance(v, bool):
+            return _any_case(draw, str(v).upper()), "1" if v else "0"
+        if isinstance(v, str):
+            return mysql_quote(v), v
+        r = repr(v)
+        plus = "+" if r[0] != "-" and draw(st.booleans()) else ""
+        return plus + r, r
+
+    text_rows, want = [], []
+    for r in rows:
+        pairs = [lit(v) for v in r]
+        text_rows.append("(" + ",".join(
+            draw(_PAD) + t + draw(_PAD) for t, _ in pairs
+        ) + ")")
+        want.append([w for _, w in pairs])
+    ignore = " IGNORE" if draw(st.booleans()) else ""
+    cols = ""
+    if draw(st.booleans()):
+        cols = " (" + ",".join(
+            draw(_PAD) + f"`c{i}`" + draw(_PAD) for i in range(width)
+        ) + ")"
+    text = (
+        f"INSERT{ignore} INTO `t`{cols} VALUES "
+        + ("," + draw(_PAD)).join(text_rows) + ";\n"
+    )
+    return text, want
+
+
 @settings(max_examples=300, deadline=None)
 @given(rows=rows_strategy)
 def test_insert_roundtrip(rows):
@@ -128,73 +180,55 @@ def test_chunk_split_preserves_statements(rows):
 
 
 def test_fast_row_path_matches_scanner_differentially():
-    """r7 regex fast path: on a statement mix covering every literal
-    class (clean + escaped strings, doubled quotes, signs, scientific,
-    hex/bit literals that force the bail), the parse must be identical
-    with the fast path enabled and disabled."""
+    """On a statement mix covering every literal class (clean + escaped
+    strings, doubled quotes, signs, scientific, and the hex/bit literals
+    and empty tuple that leave the chunk to the scanner), the parse must
+    be identical with the vectorized parse enabled and disabled."""
     from tidb_lightning_spark.sources import sqldump_source as S
 
-    text = (
+    rows = (
         "INSERT INTO `t` VALUES (1, 'plain', NULL, 2.5),"
         "(-3, '+esc\\n\\t\\0\\Z\\\\x', TRUE, 1e+16),"
         "(+7, 'double''quote', FALSE, .5),"
-        "(0x41424a, X'4243', b'1010', 0b11),"
         "(9, 'tail)par,en(', NULL, -1.5E-7);\n"
         "SET NAMES utf8;\n"
-        "INSERT INTO `t` (`a`,`b`) VALUES (), ('x', 'y')\n"  # no semi
     )
-    with_fast = [
-        (st.table, st.columns, st.rows)
-        for st in S.parse_insert_statements(text)
-    ]
-    orig = S._fast_rows
-    S._fast_rows = lambda *a: None
-    try:
-        scanner_only = [
-            (st.table, st.columns, st.rows)
-            for st in S.parse_insert_statements(text)
-        ]
-    finally:
-        S._fast_rows = orig
-    assert with_fast == scanner_only
+    rest = (
+        "INSERT INTO `t` VALUES (0x41424a, X'4243', b'1010', 0b11);\n"
+        "INSERT INTO `t` (`a`,`b`,`c`,`d`) VALUES (), ('x', 'y', 'z', 'w')\n"
+    )
+    assert S._vector_rows_table(rows, 4) is not None
+    assert S._vector_rows_table(rows + rest, 4) is None
+    for text in (rows, rows + rest):
+        got = _parse(S, text, 4)
+        assert got.equals(_parse(S, text, 4, vector=False)), text
     # sanity: escapes and hex actually decoded
-    rows = with_fast[0][2]
-    assert rows[1][1] == "+esc\n\t\0\x1a\\x"
-    assert rows[2][1] == "double'quote"
-    assert rows[3][0] == "ABJ" and rows[3][1] == "BC"
-    assert rows[3][2] == "10" and rows[3][3] == "3"
+    vals = got.drop(columns="_row_seq").values.tolist()
+    assert vals[1][1] == "+esc\n\t\0\x1a\\x" and vals[1][2] == "1"
+    assert vals[2][0] == "7" and vals[2][1] == "double'quote"
+    assert vals[4] == ["ABJ", "BC", "10", "3"]
+    assert vals[6] == ["x", "y", "z", "w"]
 
 
 @settings(max_examples=200, deadline=None)
-@given(rows=rows_strategy)
-def test_fast_path_differential_property(rows):
-    """r7 regex fast path vs char-at-a-time scanner on generated dumps:
-    byte-identical statements (the 300-example roundtrip above already
-    checks expected VALUES; this pins fast == slow even if both were
-    wrong the same way on some future literal class)."""
+@given(case=loose_inserts())
+def test_fast_path_differential_property(case):
+    """Loose generated dumps through _row_batches: the vectorized parse
+    and the scanner give identical frames, and both give the expected
+    values."""
     from tidb_lightning_spark.sources import sqldump_source as S
 
-    text = render_insert("t", rows)
-    with_fast = [
-        (st_.table, st_.columns, st_.rows)
-        for st_ in S.parse_insert_statements(text)
-    ]
-    orig = S._fast_rows
-    S._fast_rows = lambda *a: None
-    try:
-        scanner_only = [
-            (st_.table, st_.columns, st_.rows)
-            for st_ in S.parse_insert_statements(text)
-        ]
-    finally:
-        S._fast_rows = orig
-    assert with_fast == scanner_only
+    text, want = case
+    n_cols = len(want[0])
+    got = _parse(S, text, n_cols)
+    assert got.equals(_parse(S, text, n_cols, vector=False))
+    assert got.drop(columns="_row_seq").values.tolist() == want
 
 
 def _parse(S, text, n_cols, vector=True):
     """_row_batches (the production parse face) as one pandas frame,
-    rows numbered from 100. vector=False forces the scanner tiers by
-    disabling tier 0, the way the fast-path tests disable _fast_rows."""
+    rows numbered from 100. vector=False forces the scanner by disabling
+    the vectorized parse."""
     import pandas as pd
     import pyarrow as pa
 
@@ -212,7 +246,7 @@ def _parse(S, text, n_cols, vector=True):
 
 def test_vector_tier_engages_and_matches_scanner():
     """r10 vectorized tier: on a clean mydumper-shaped chunk the vector
-    path must (a) actually ENGAGE — the scanner tiers are never invoked
+    path must (a) actually ENGAGE — the scanner is never invoked
     — and (b) produce frames identical to the scanner's, including
     _row_seq continuity across statements."""
     from tidb_lightning_spark.sources import sqldump_source as S
@@ -240,35 +274,76 @@ def test_vector_tier_engages_and_matches_scanner():
     assert got.iloc[0, 2] is None or got.iloc[0, 2] != got.iloc[0, 2]
 
 
-def test_vector_tier_bails_to_scanner_on_transforming_literals():
-    """Literal classes the scanner TRANSFORMS (escapes, doubled quotes,
-    bools, hex/bit, leading '+', exotic NULL casing, padded values) must
-    fall back — identical frames with the vector tier on and off."""
+def test_vector_tier_takes_escapes_padding_and_header_forms():
+    """Escapes, doubled quotes, quoted text that looks like a literal,
+    padded rows with any-case words and '+' numbers, INSERT IGNORE and a
+    backticked column list all stay on the vectorized parse (the scanner
+    is never invoked) and give the scanner's frames."""
     from tidb_lightning_spark.sources import sqldump_source as S
 
     cases = [
-        "INSERT INTO t VALUES (1,'a\\nb'),(2,'c');",
-        "INSERT INTO t VALUES (1,'d''q'),(2,'c');",
-        "INSERT INTO t VALUES (TRUE,'x'),(FALSE,NULL);",
+        r"INSERT INTO t VALUES (1,'a\nb'),(2,'it\'s \\ \0\Z\x');",
+        "INSERT INTO t VALUES (1,'d''q'),(2,'''');",
+        "INSERT INTO t VALUES (1,'+1'),(2,'TRUE'),(3,'0x41'),"
+        "(4,'\"q\"'),(5,'null'),(6,'default');",
+        "INSERT INTO t VALUES ( +1 , 'x' ),\n( null ,\tTrUe ),"
+        "(+.5e+3,FALSE),(-1e-3 , NULL );",
+        "INSERT IGNORE INTO `t` VALUES (1,'x'),(2,'y');",
+        "INSERT INTO `t` (`a`, `b`) VALUES (1,'x'),(2,'y');",
+    ]
+    orig = S.parse_insert_statements
+
+    def boom(*a):  # pragma: no cover - failure path
+        raise AssertionError("the vectorized parse left a chunk to the scanner")
+
+    frames = []
+    for text in cases:
+        S.parse_insert_statements = boom
+        try:
+            got = _parse(S, text, 2)
+        finally:
+            S.parse_insert_statements = orig
+        assert got.equals(_parse(S, text, 2, vector=False)), text
+        frames.append(got.drop(columns="_row_seq").values.tolist())
+    assert frames[0] == [["1", "a\nb"], ["2", "it's \\ \0\x1ax"]]
+    assert frames[1] == [["1", "d'q"], ["2", "'"]]
+    assert [v for _, v in frames[2]] == [
+        "+1", "TRUE", "0x41", '"q"', "null", "default"
+    ]
+    assert frames[3] == [["1", "x"], [None, "1"], [".5e+3", "0"],
+                         ["-1e-3", None]]
+
+
+def test_vector_tier_bails_to_scanner_on_transforming_literals():
+    """Literal classes the vectorized parse does not take (hex/bit,
+    signed bools and literals, comments between rows, DEFAULT) leave the
+    whole chunk to the scanner: identical frames with the vectorized
+    parse on and off."""
+    from tidb_lightning_spark.sources import sqldump_source as S
+
+    cases = [
         "INSERT INTO t VALUES (0x41,'x'),(2,'y');",
         "INSERT INTO t VALUES (x'42','x'),(b'10','y');",
-        "INSERT INTO t VALUES (+5,'x'),(6,'y');",
-        "INSERT INTO t VALUES (null,'x'),(NuLL,'y');",
-        "INSERT INTO t VALUES ( 1 , 'x' ),(2,'y');",
         "INSERT INTO t VALUES (1,'x'), -- c\n(2,'y');",
-        # sign-prefixed transformed literals: _VFIELD's word alternative
-        # accepts '[+-]?' so these reach the _VBAD_FIELD screen, which
-        # must bail (scanner: -TRUE -> '-1', -FALSE -> '-0', -0x/-0b ->
-        # sign-folded decode)
+        "INSERT INTO t VALUES (1,'x'),(2,DEFAULT);",
+        # scanner: -TRUE -> '-1', -FALSE -> '-0', -0x/-0b -> sign-folded
+        # decode
         "INSERT INTO t VALUES (-TRUE,'x'),(2,'y');",
         "INSERT INTO t VALUES (-FALSE,'x'),(2,'y');",
         "INSERT INTO t VALUES (-0x41,'x'),(2,'y');",
         "INSERT INTO t VALUES (-0b11,'x'),(2,'y');",
     ]
     for text in cases:
+        assert S._vector_rows_table(text, 2) is None, text
         got = _parse(S, text, 2)
         want = _parse(S, text, 2, vector=False)
         assert got.equals(want), text
+    # a string splice and a signed NULL are scanner errors
+    for text in (
+        "INSERT INTO t VALUES (1,'a' 'b');",
+        "INSERT INTO t VALUES (-NULL,'x');",
+    ):
+        assert S._vector_rows_table(text, 2) is None, text
 
 
 def test_vector_tier_signed_null_raises_like_scanner():
@@ -288,8 +363,7 @@ def test_vector_tier_signed_null_raises_like_scanner():
 @given(rows=rows_strategy)
 def test_vector_tier_differential_property(rows):
     """Generated mydumper-style dumps through _row_batches with the
-    vector tier on vs off: frames must be identical whether the chunk
-    takes the vectorized, regex-token, or scanner tier."""
+    vectorized parse on vs off: frames must be identical."""
     from tidb_lightning_spark.sources import sqldump_source as S
 
     text = render_insert("t", rows)
@@ -329,8 +403,8 @@ def test_vector_tier_multi_statement_noise_differential(rows, n_stmts):
 def test_empty_tuple_and_default_keyword_take_defaults():
     """`VALUES ()` and the DEFAULT keyword produce DEFAULT_SENTINEL
     datums (expanded to column defaults by the transform), identically
-    with the vector tier on and off (DEFAULT bails tier-0; `()` never
-    matches the row grammar), and the scanner tier's direct-to-Arrow
+    with the vector tier on and off (DEFAULT and `()` leave the chunk to
+    the scanner), and the scanner's direct-to-Arrow
     buffering keeps NULLs, decoded literals and _row_seq alongside."""
     from tidb_lightning_spark.operators.transform import DEFAULT_SENTINEL
     from tidb_lightning_spark.sources import sqldump_source as S

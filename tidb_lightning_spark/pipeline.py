@@ -1818,12 +1818,16 @@ class Restorer:
                     spark=self.spark if is_remote else None,
                 )
                 # remote groups must share a charset too: the ranged
-                # reader decodes one encoding per scan
-                key = (
-                    tuple(cols) if cols else (),
-                    is_remote,
-                    eff[f.path] if is_remote else "utf-8",
-                )
+                # reader decodes one encoding per scan. Local files are
+                # UTF-8 by now, and decode latin-1 to keep a BLOB
+                # column's bytes (csv_source.byte_preserving)
+                if is_remote:
+                    cs = eff[f.path]
+                elif csv_source.byte_preserving(info, eff[f.path]):
+                    cs = csv_source.LATIN1
+                else:
+                    cs = "utf-8"
+                key = (tuple(cols) if cols else (), is_remote, cs)
                 groups.setdefault(key, []).append(f)
             for (key, is_remote, group_cs), files in groups.items():
                 file_cols = list(key) if key else None
@@ -1848,19 +1852,27 @@ class Restorer:
                         self.spark,
                         [actual[f.path] for f in files],
                         n_cols,
+                        group_cs,
                         rowid_base=rowid_base,
                     )
+                fields = csv_source.text_fields(
+                    [ident(c) for c in df.columns if c.startswith("_c")],
+                    file_cols,
+                    info,
+                    group_cs,
+                )
                 part = transform_table(
                     df,
                     info,
                     file_cols,
                     self.pinned_ts,
                     strict=self.cfg.strict_sql_mode,
-                    binary_encoding="ISO-8859-1",
+                    binary_encoding=csv_source.LATIN1,
                     keep_rowid=keep_rowid,
                     # only SQL dumps can emit DEFAULT_SENTINEL (empty
                     # tuples / DEFAULT keyword); CSV never pays for it
                     sentinel_defaults=True,
+                    fields=fields,
                 )
                 # The parsed-row cache policy. Only SQL-dump parts are
                 # persisted: every other source lets the key sample

@@ -681,17 +681,25 @@ def blob_dialect(
     turn them into U+FFFD first. So when the table has binary-family
     columns and the file's bytes are UTF-8 or ASCII, the scan reads
     latin-1 (one char per byte) and `text_fields` re-decodes the TEXT
-    columns to UTF-8. A legacy-charset file carrying blobs cannot be
-    both transcoded and byte-preserved: text wins."""
+    columns to UTF-8 (`byte_preserving`)."""
     if not _binary_columns(info):
         return cfg, "UTF-8"
     try:
         charset = effective_charset(path, cfg.character_set, spark)
     except NotImplementedError:
         charset = "utf-8"  # compressed remote file: no driver peek
-    if charset not in ("utf-8", "ascii"):
+    if not byte_preserving(info, charset):
         return cfg, "UTF-8"
     return dataclasses.replace(cfg, character_set=LATIN1.lower()), LATIN1
+
+
+def byte_preserving(info: TableInfo, charset: str) -> bool:
+    """Whether a file whose bytes are in the effective `charset` is
+    scanned latin-1 to keep BLOB bytes: the table has binary-family
+    columns and the file is UTF-8 or ASCII. A legacy-charset file
+    carrying blobs cannot be both transcoded and byte-preserved: text
+    wins."""
+    return charset in ("utf-8", "ascii") and bool(_binary_columns(info))
 
 
 def text_fields(

@@ -33,6 +33,10 @@ base `b` numbers its rows from `b + o // (n_columns + 2)`. The absolute
 number rides along as the `_row_seq` column, and the readers return the
 next free base for whatever the caller reads after them.
 
+Each chunk takes one of two parsers (`_row_batches`): the vectorized
+`_vector_rows_table`, or `_Scanner`, the char-at-a-time reference parse
+and the only one that reports errors.
+
 The statement column list (if any) is read driver-side via `peek_columns`
 — mydumper emits one form per file; the executor parser asserts
 consistency and fails the task on mixed forms.
@@ -41,7 +45,9 @@ consistency and fails the task on mixed forms.
 from __future__ import annotations
 
 import io as _io
+import itertools as _itertools
 import os
+import re as _re
 from collections.abc import Iterator
 from dataclasses import dataclass
 
@@ -55,6 +61,10 @@ class SQLDumpError(ValueError):
 
 
 _WS = set(" \t\r\n")
+# MySQL backslash escapes inside string literals (parser.go:270-316); any
+# other escaped character stands for itself
+_UNESC = {"0": "\0", "n": "\n", "t": "\t", "r": "\r", "b": "\b",
+          "Z": "\x1a"}
 
 
 @dataclass
@@ -150,10 +160,7 @@ class _Scanner:
             ch = t[self.pos]
             if ch == "\\" and self.pos + 1 < n:
                 nxt = t[self.pos + 1]
-                out.append(
-                    {"0": "\0", "n": "\n", "t": "\t", "r": "\r", "b": "\b",
-                     "Z": "\x1a"}.get(nxt, nxt)
-                )
+                out.append(_UNESC.get(nxt, nxt))
                 self.pos += 2
             elif ch == quote:
                 if self.pos + 1 < n and t[self.pos + 1] == quote:
@@ -278,6 +285,30 @@ class _Scanner:
             raise SQLDumpError(f"expected VALUES, got {kw!r}")
         return table, columns, kw
 
+    def row(self) -> list[str | None]:
+        """One `(v, ...)` tuple; `()` is the empty (all-defaults) row."""
+        self.expect("(")
+        row: list[str | None] = []
+        if self.try_char(")"):
+            return row
+        while True:
+            self.skip_ws_comments()
+            if self.peek() in ("+", "-"):
+                row.append(self.signed_number())
+            else:
+                row.append(self.value())
+            if self.try_char(","):
+                continue
+            self.expect(")")
+            return row
+
+    def skip_statement(self) -> bool:
+        """Skip a non-INSERT statement through its ';'; False when the
+        text ends before one."""
+        end = self.text.find(";", self.pos)
+        self.pos = len(self.text) if end < 0 else end + 1
+        return end >= 0
+
     def signed_number(self) -> str:
         self.skip_ws_comments()
         sign = ""
@@ -311,112 +342,6 @@ class Statement:
     rows: list[list[str | None]]
 
 
-import re as _re
-
-# Fast path for the VALUES tuple stream: one compiled-regex token scan
-# instead of the char-at-a-time _Scanner (measured ~6x on mydumper
-# dumps — the scanner costs ~9us/value in pure-Python dispatch). The
-# token set covers what mydumper actually emits (NULL, numbers incl.
-# signed/scientific, TRUE/FALSE, single-quoted strings with backslash +
-# doubled-quote escapes); ANY other shape (hex/bit literals, ANSI
-# double quotes, bare words) bails to the scanner for the WHOLE
-# statement, so semantics — including error messages — stay those of
-# the fuzz-tested slow path.
-_FAST_TOK = _re.compile(
-    r"""[ \t\r\n]*(?:
-      (?P<null>NULL)
-    | (?P<true>TRUE)
-    | (?P<false>FALSE)
-    | (?P<str>'(?:[^'\\]|\\.|'')*')
-    | (?P<num>[+-]?(?:[0-9]+\.?[0-9]*|\.[0-9]+)(?:[eE][+-]?[0-9]+)?)
-    | (?P<punct>[(),;])
-    )""",
-    _re.X | _re.I,
-)
-# same escape map as _Scanner.quoted_string, applied in one LTR pass
-_UNESC = {"0": "\0", "n": "\n", "t": "\t", "r": "\r", "b": "\b",
-          "Z": "\x1a"}
-_UNESC_RE = _re.compile(r"\\(.)|''", _re.S)
-_DELIMS = " \t\r\n,);"
-
-
-def _unesc_repl(m) -> str:
-    c = m.group(1)
-    return _UNESC.get(c, c) if c is not None else "'"
-
-
-def _fast_rows(text: str, pos: int):
-    """Parse `(v, ...)[, (...)...][;]` starting at `pos`. Returns
-    (rows, new_pos) or None to fall back to the scanner."""
-    rows: list[list[str | None]] = []
-    n = len(text)
-    match = _FAST_TOK.match
-    while True:
-        m = match(text, pos)
-        if m is None or m.group("punct") != "(":
-            return None
-        pos = m.end()
-        row: list[str | None] = []
-        m = match(text, pos)
-        if m is None:
-            return None
-        if m.group("punct") == ")":  # empty tuple
-            pos = m.end()
-        else:
-            while True:
-                kind = m.lastgroup
-                if kind == "punct":
-                    return None
-                end = m.end()
-                # the token must END at a delimiter, or the scanner
-                # would have lexed a longer word ('1.5NULL' is ONE
-                # value there) — bail rather than diverge
-                if end < n and text[end] not in _DELIMS:
-                    return None
-                if kind == "null":
-                    row.append(None)
-                elif kind == "true":
-                    row.append("1")
-                elif kind == "false":
-                    row.append("0")
-                elif kind == "num":
-                    v = m.group("num")
-                    row.append(v[1:] if v[0] == "+" else v)
-                else:
-                    body = m.group("str")[1:-1]
-                    if "\\" in body or "''" in body:
-                        body = _UNESC_RE.sub(_unesc_repl, body)
-                    row.append(body)
-                pos = end
-                m = match(text, pos)
-                if m is None:
-                    return None
-                p = m.group("punct")
-                if p == ",":
-                    pos = m.end()
-                    m = match(text, pos)
-                    if m is None:
-                        return None
-                    continue
-                if p == ")":
-                    pos = m.end()
-                    break
-                return None
-        rows.append(row)
-        m = match(text, pos)
-        if m is None:
-            # EOF or a following non-INSERT token: statement ends here
-            # (the scanner tolerates a missing trailing ';' the same way)
-            return rows, pos
-        p = m.group("punct")
-        if p == ",":
-            pos = m.end()
-            continue
-        if p == ";":
-            return rows, m.end()
-        return rows, pos
-
-
 def parse_insert_statements(text: str) -> Iterator[Statement]:
     """Yield INSERT/REPLACE statements (parser.go:346-412 dry-run grammar)."""
     sc = _Scanner(text)
@@ -426,37 +351,14 @@ def parse_insert_statements(text: str) -> Iterator[Statement]:
             table, columns, kw = sc.insert_header()
             if kw == "SET":
                 raise SQLDumpError("INSERT ... SET form not supported")
-            sc.skip_ws_comments()
-            fast = _fast_rows(sc.text, sc.pos)
-            if fast is not None:
-                frows, sc.pos = fast
-                yield Statement(table, columns, frows)
-                continue
-            rows: list[list[str | None]] = []
-            while True:
-                sc.expect("(")
-                row: list[str | None] = []
-                if not sc.try_char(")"):
-                    while True:
-                        sc.skip_ws_comments()
-                        if sc.peek() in ("+", "-"):
-                            row.append(sc.signed_number())
-                        else:
-                            row.append(sc.value())
-                        if sc.try_char(","):
-                            continue
-                        sc.expect(")")
-                        break
-                rows.append(row)
-                if sc.try_char(","):
-                    continue
-                break
+            rows = [sc.row()]
+            while sc.try_char(","):
+                rows.append(sc.row())
             sc.try_char(";")
             yield Statement(table, columns, rows)
         else:
-            # non-INSERT statement (SET, comments already skipped): skip to ';'
-            end = sc.text.find(";", sc.pos)
-            sc.pos = len(sc.text) if end < 0 else end + 1
+            # non-INSERT statement (SET, comments already skipped)
+            sc.skip_statement()
 
 
 class _Truncated(Exception):
@@ -476,12 +378,10 @@ def _peek_insert_header(text: str, complete: bool) -> list[str] | None:
             if w in ("INSERT", "REPLACE"):
                 return sc.insert_header()[1]
             # non-INSERT statement: skip to its terminator
-            end = sc.text.find(";", sc.pos)
-            if end < 0:
+            if not sc.skip_statement():
                 if complete:
                     return None
                 raise _Truncated()
-            sc.pos = end + 1
         if not complete:
             # the window may end inside a comment/whitespace run that
             # continues into an INSERT beyond it
@@ -542,11 +442,21 @@ def _peek_decode(head: bytes, encoding: str) -> str:
 
 
 def _first_arity(text: str, complete: bool) -> int | None:
+    """Arity of the first non-empty row, parsing only up to it."""
+    sc = _Scanner(text)
     try:
-        for stmt in parse_insert_statements(text):
-            for row in stmt.rows:
+        while not sc.eof():
+            if sc.word().upper() not in ("INSERT", "REPLACE"):
+                sc.skip_statement()
+                continue
+            sc.insert_header()
+            while True:
+                row = sc.row()
                 if row:  # skip () all-defaults rows: arity 0 says
                     return len(row)  # nothing about the table
+                if not sc.try_char(","):
+                    break
+            sc.try_char(";")
     except SQLDumpError:
         pass
     if complete:
@@ -747,13 +657,13 @@ def read_sql_files(
                 content = data.decode(encoding, errors="replace")
                 yield from _row_batches(content, n_columns, cbase, path)
 
-    # mapInArrow, not mapInPandas: tier-0 already produces an Arrow
-    # table, and the pandas hop converted every string cell to a Python
-    # object on the way OUT of the parser only for Spark to re-encode
-    # it to Arrow on the way back IN — two full copies of the parsed
-    # text per chunk for nothing (guide §4: shrink the Python boundary).
-    # The scanner fallback tiers still build rows in Python; they
-    # convert once, straight to Arrow.
+    # mapInArrow, not mapInPandas: the vectorized parse already produces
+    # an Arrow table, and the pandas hop converted every string cell to a
+    # Python object on the way OUT of the parser only for Spark to
+    # re-encode it to Arrow on the way back IN — two full copies of the
+    # parsed text per chunk for nothing (guide §4: shrink the Python
+    # boundary). The scanner fallback still builds rows in Python; it
+    # converts once, straight to Arrow.
     return (
         rdf.mapInArrow(parse_batches, schema=_out_schema(n_columns)),
         rowid_base,
@@ -761,18 +671,13 @@ def read_sql_files(
 
 
 # --------------------------------------------------------------------------
-# Vectorized VALUES tier (tier 0): whole-chunk row extraction with ONE
-# anchored regex match per ROW, then pyarrow's C++ CSV reader for field
-# splitting/unquoting — measured 8x over the per-token _fast_rows loop on
-# a mydumper lineitem dump (12.0s -> 1.5s for 600k rows, single thread).
-# The tier triggers only on the strict shape mydumper emits; ANY feature
-# the strict grammar can't prove identical to _Scanner (escapes, doubled
-# quotes, hex/bit/bool literals, leading '+', whitespace around values,
-# comments between rows, exotic NULL casing, unterminated comments) bails
-# to the existing tiers for the WHOLE chunk, so outputs — including error
-# surfaces — remain those of the fuzz-tested scanner. All-or-nothing per
-# chunk: nothing is yielded until the full chunk parses AND validates, so
-# a bail can never duplicate rows.
+# Vectorized VALUES parse: ONE anchored regex match per ROW, then
+# pyarrow's C++ CSV reader for fields. It takes escaped strings, NULL,
+# numbers and (in "loose" rows) padding, any-case NULL/TRUE/FALSE and a
+# leading '+'. Anything else (hex/bit, signed bools, DEFAULT, comments
+# between rows, ANSI strings, splices) leaves the WHOLE chunk to
+# _Scanner: nothing is yielded until the full chunk parses AND
+# validates, so falling back never duplicates rows.
 
 # gap between statements: whitespace and terminated comments, exactly the
 # set _Scanner.skip_ws_comments consumes (an UNTERMINATED /* stays
@@ -780,62 +685,68 @@ def read_sql_files(
 _VGAP = _re.compile(
     r"(?:[ \t\r\n]+|--[^\n]*(?:\n|$)|#[^\n]*(?:\n|$)|/\*.*?\*/)*", _re.S
 )
-# INSERT/REPLACE header through VALUES; simple idents/column lists only —
-# anything fancier (doubled backquotes, quotes in the list) fails to
+# INSERT/REPLACE [IGNORE] INTO header through VALUES, with an optional
+# column list of plain or backquoted names (mysqldump --complete-insert);
+# any fancier form (doubled backquotes, ANSI quotes, comments) fails to
 # match and the INSERT-word check below turns that into a bail
+_VID = r"(?:`[^`]*+`|[A-Za-z0-9_$.]++)"
 _VHDR = _re.compile(
-    r"(?:INSERT|REPLACE)[ \t\r\n]+INTO[ \t\r\n]+"
-    r"(?:`[^`]*`|[A-Za-z0-9_$.]+)"
-    r"(?:[ \t\r\n]*\.[ \t\r\n]*(?:`[^`]*`|[A-Za-z0-9_$.]+))?"
-    r"(?:[ \t\r\n]*\([^)`'\"]*\))?"
+    r"(?:INSERT|REPLACE)(?:[ \t\r\n]+IGNORE)?[ \t\r\n]+INTO[ \t\r\n]+"
+    + _VID + r"(?:[ \t\r\n]*\.[ \t\r\n]*" + _VID + r")?"
+    r"(?:[ \t\r\n]*\([ \t\r\n]*(?:" + _VID
+    + r"(?:[ \t\r\n]*,[ \t\r\n]*" + _VID + r")*)?[ \t\r\n]*\))?"
     r"[ \t\r\n]*VALUES?[ \t\r\n]*",
     _re.I,
 )
-# one row: '('  field (',' field)*  ')' with NO whitespace around fields.
-# A field is a fully-quoted escape-free string, or an unquoted run the
-# scanner would lex as ONE token: a signed-exponent number (mirroring
-# value()'s one-dot isdigit() check) or a bare word over the scanner's
-# word alphabet with an optional sign. Everything else fails the match
-# and bails — whitespace-padded values, `idents`, "ANSI strings",
-# adjacent-string splices, empty tuples, empty fields, expressions.
-_VFIELD = (
-    # possessive quantifiers: the alternatives' first chars are disjoint
-    # and each token ends at a delimiter, so backtracking inside a field
-    # can never change the outcome — pruning it halves the scan cost.
-    # The scientific alternative is digits-first (possessive [0-9]*+
-    # can't give digits back to the mandatory post-dot digit), which
-    # also covers the scanner-accepted "123.E+5" form.
-    r"(?:'[^']*+'"
-    r"|[+-]?+(?:[0-9]++\.?[0-9]*+|\.[0-9]++)[eE][+-][0-9]++"
-    r"|[+-]?+[0-9A-Za-z_$.]++)"
+# Field alternatives. Possessive quantifiers: the alternatives' first
+# chars are disjoint and each token ends at a delimiter, so backtracking
+# inside a field can never change the outcome. A number is what
+# _Scanner.value() passes through verbatim: digits with at most one dot
+# and an optional (signed) exponent.
+_VSTR = r"'(?:[^'\\]++|\\.|'')*+'"
+_VNUM = r"(?:[0-9]++\.?[0-9]*+|\.[0-9]++)(?:[eE][+-]?[0-9]++)?"
+# strict row: '(' field (',' field)* ')' with no whitespace, where every
+# unquoted field (exact-case NULL, -?number) reaches Arrow verbatim
+_VFIELD = r"(?:" + _VSTR + r"|NULL|-?" + _VNUM + r")"
+_VROW = _re.compile(r"\(" + _VFIELD + r"(?:," + _VFIELD + r")*+\)", _re.S)
+# loose row, tried when the strict one fails: whitespace around fields,
+# NULL/TRUE/FALSE in any case, a '+' before a number. _VTOK rewrites it to
+# the strict form before the join
+_VLFIELD = r"(?:" + _VSTR + r"|(?i:NULL|TRUE|FALSE)|[+-]?" + _VNUM + r")"
+_VLOOSE = _re.compile(
+    r"\([ \t\r\n]*" + _VLFIELD + r"(?:[ \t\r\n]*,[ \t\r\n]*" + _VLFIELD
+    + r")*+[ \t\r\n]*\)",
+    _re.S,
 )
-_VROW = _re.compile(r"\(" + _VFIELD + r"(?:," + _VFIELD + r")*\)")
+# a loose row's tokens, whitespace skipped; a number token is matched
+# whole, so an exponent's sign is never taken for a leading '+'
+# ('+.5e+3' -> '.5e+3')
+_VTOK = _re.compile(
+    r"[ \t\r\n]*\+?(" + _VSTR + "|" + _VNUM + r"|[A-Za-z]+|[,-])", _re.S
+)
+# every casing of the bare words a loose row may hold
+_VWORDS = {
+    "".join(cs): v
+    for w, v in (("NULL", "NULL"), ("TRUE", "1"), ("FALSE", "0"))
+    for cs in _itertools.product(*zip(w, w.lower()))
+}
 _VWS = _re.compile(r"[ \t\r\n]*")
 _VWORD = _re.compile(r"[A-Za-z0-9_$.]+")
-# post-parse per-column screen (RE2, vectorized): any surviving field the
-# scanner would have TRANSFORMED rather than passed through verbatim.
-# Exact-case unquoted NULL is already null by then (null_values), so a
-# match here is an exotic casing, a bool, a hex/bit literal, a stripped
-# '+', a backquoted ident, or an ANSI string -> bail. Quoted 'NULL'/'+x'
-# strings false-positive into a bail — correct, just slower. The
-# optional leading '-' matters: _VFIELD's word alternative accepts
-# '[+-]?' prefixes, so '-TRUE'/'-0x41'/'-0b11' (scanner: '-1'/decoded)
-# and '-NULL' (scanner: raises "sign before NULL") survive to this
-# screen and must bail to keep tier-0 output identical to the scanner.
-_VBAD_FIELD = r"^[+-]?(?i:null|true|false|default|0b[01]*$|0x)|^[+`\"]"
+# backslash escapes in the joined rows (a validated row holds '\' only
+# inside a string); '\'' becomes a doubled quote for the CSV reader
+_VESC = _re.compile(r"\\(.)", _re.S)
+_VUNESC = {**_UNESC, "'": "''"}
 
 
 def _vector_rows_table(content: str, n_columns: int):
-    """Whole-chunk strict-grammar parse -> pyarrow Table of n_columns
-    string columns, or None to bail to the scanner tiers.
+    """Whole-chunk parse -> pyarrow Table of n_columns string columns,
+    or None to leave the chunk to the scanner.
 
-    Peak task memory is ~2.5x the chunk text (bodies list + joined blob
-    + Arrow table coexist) — <=160 MB at the 64 MiB chunk cap, a
-    deliberate trade: yielding before the whole chunk validates would
-    break the all-or-nothing bail contract (a mid-chunk bail after a
+    Peak task memory is ~2.5x the chunk text (joined blob, its UTF-8
+    bytes and the Arrow table coexist) — <=160 MB at the 64 MiB chunk
+    cap, a deliberate trade: yielding before the whole chunk validates
+    would break the all-or-nothing contract (a mid-chunk bail after a
     yield would re-emit rows through the scanner)."""
-    if "\\" in content or "''" in content:
-        return None
     bodies: list[str] = []
     pos, n = 0, len(content)
     while True:
@@ -862,9 +773,14 @@ def _vector_rows_table(content: str, n_columns: int):
         pos = h.end()
         while True:  # VALUES tuples
             r = _VROW.match(content, pos)
-            if r is None:
-                return None
-            bodies.append(content[r.start() + 1 : r.end() - 1])
+            if r is not None:
+                bodies.append(content[r.start() + 1 : r.end() - 1])
+            else:
+                r = _VLOOSE.match(content, pos)
+                if r is None:
+                    return None
+                toks = _VTOK.findall(content, r.start() + 1, r.end() - 1)
+                bodies.append("".join([_VWORDS.get(t, t) for t in toks]))
             pos = _VWS.match(content, r.end()).end()
             if pos < n and content[pos] == ",":
                 pos = _VWS.match(content, pos + 1).end()
@@ -877,12 +793,17 @@ def _vector_rows_table(content: str, n_columns: int):
             # anything that isn't a clean boundary (the outer loop's
             # checks do exactly that)
             break
-    if not bodies:
+    n_rows = len(bodies)
+    if not n_rows:
         return None
     import pyarrow as _pa
     import pyarrow.csv as _pcsv
 
-    blob = "\n".join(bodies).encode("utf-8")
+    blob = "\n".join(bodies)
+    del bodies
+    if "\\" in blob:
+        blob = _VESC.sub(lambda m: _VUNESC.get(m[1], m[1]), blob)
+    blob = blob.encode("utf-8")
     names = [f"_c{i}" for i in range(n_columns)]
     try:
         tbl = _pcsv.read_csv(
@@ -891,7 +812,7 @@ def _vector_rows_table(content: str, n_columns: int):
             parse_options=_pcsv.ParseOptions(
                 delimiter=",",
                 quote_char="'",
-                double_quote=False,
+                double_quote=True,
                 escape_char=False,
                 newlines_in_values=True,
             ),
@@ -904,26 +825,20 @@ def _vector_rows_table(content: str, n_columns: int):
         )
     except _pa.lib.ArrowInvalid:
         return None  # arity/structure mismatch: scanner owns the error
-    if tbl.num_rows != len(bodies):
+    if tbl.num_rows != n_rows:
         return None
-    import pyarrow.compute as _pc
-
-    for i in range(n_columns):
-        if _pc.any(
-            _pc.match_substring_regex(tbl.column(i), _VBAD_FIELD)
-        ).as_py():
-            return None
     return tbl
 
 
 def _row_batches(content: str, n_columns: int, base: int, src: str):
     """Parse one chunk into pyarrow RecordBatches of `_c0.._cN` +
-    `_row_seq` (numbered from `base`). Tier 0's Arrow table is sliced
-    and shipped AS IS — zero pandas materialization. The scanner tiers
-    yield in bounded slices instead of one chunk-sized batch: the Arrow
-    stream ships each slice to the JVM while Python keeps parsing, so
-    the cast/persist work OVERLAPS the parse — and peak memory is a
-    slice, not the whole chunk. `src` only names the chunk in errors."""
+    `_row_seq` (numbered from `base`). The vectorized parse's Arrow
+    table is sliced and shipped AS IS — zero pandas materialization.
+    The scanner fallback yields in bounded slices instead of one
+    chunk-sized batch: the Arrow stream ships each slice to the JVM
+    while Python keeps parsing, so the cast/persist work OVERLAPS the
+    parse — and peak memory is a slice, not the whole chunk. `src` only
+    names the chunk in errors."""
     import numpy as np
     import pyarrow as pa
 
@@ -1032,8 +947,9 @@ def _read_sql_file_ranged(
                     stmt, n_columns, base + off // divisor, path
                 )
 
-    # mapInArrow for the same reason as read_sql_files: tier-0 output is
-    # already Arrow; the pandas hop double-copied every string cell
+    # mapInArrow for the same reason as read_sql_files: the vectorized
+    # parse's output is already Arrow; the pandas hop double-copied every
+    # string cell
     return sdf.mapInArrow(parse_batches, schema=_out_schema(n_columns))
 
 
