@@ -3,6 +3,17 @@ row is routed by a binary search over them, and the written files hold
 sorted, non-overlapping key ranges in part-file order. The import pays
 one sample job per range-written table and one readback job per table.
 
+Input whose partitions already hold disjoint key ranges skips the
+exchange: when at least `n` input partitions appear in the key sample
+with strictly disjoint leading-key intervals, and the table is
+unpartitioned parquet without maxRecordsPerFile, each partition is
+sorted and written as it is (sample, write, readback: 3 jobs and no
+shuffle bytes). The parquet footers must then prove the files disjoint,
+and the files are renamed into key order; if they overlap, the write is
+discarded and the table goes through the exchange. A table below one
+range is written as it is and rewritten as one sorted file when its
+footers overlap.
+
 Invariants are read from the files themselves (pyarrow, on-disk row
 order), for the key shapes that stress the bound literals: composite,
 quoted and escaped strings, decimals, dates and timestamps, binary,
@@ -191,6 +202,24 @@ def test_range_id_matches_bisect_at_1024(spark):
     assert max(got.values()) == len(bounds)
 
 
+def test_bounds_literal_is_carried_once_at_4095(spark):
+    """A range id over 4,095 composite bounds keeps the bounds array
+    literal once in the optimized plan, not once per search step (12
+    steps here), so each task binary carries it once."""
+    bounds = [(i // 3, f"b{i:05d}'x") for i in range(4095)]
+    probes = [(i // 3, f"b{i:05d}'x") for i in range(0, 4095, 91)] + [(9999, "")]
+    out = with_range_id(
+        spark.createDataFrame(probes, "a BIGINT, s STRING"),
+        [ident("a"), ident("s")], ["bigint", "string"], bounds,
+    )
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("b02047''x") + plan.count("b02047'x") == 1
+    order = [_key_order(b) for b in bounds]
+    for r in out.collect():
+        key = (r["a"], r["s"])
+        assert r[files_sink.RANGE_ID] == bisect.bisect_left(order, _key_order(key))
+
+
 # --- job budget -----------------------------------------------------------
 
 DDL = """CREATE TABLE t{i} (
@@ -205,31 +234,87 @@ def _job_ids(spark) -> set[int]:
     return {jobs.apply(i).jobId() for i in range(jobs.size())}
 
 
-def _dump(tmp_path, tables: int, files: int, rows: int) -> str:
+def _shuffle_bytes(spark, jobs: set[int]) -> int:
+    """Shuffle bytes written by the stages of `jobs`."""
+    sc = spark.sparkContext
+    store = sc._jsc.sc().statusStore()
+    stage_ids = set()
+    for j in jobs:
+        ids = store.job(j).stageIds()
+        stage_ids |= {ids.apply(k) for k in range(ids.size())}
+    stages = store.stageList(
+        None, False, False, sc._gateway.new_array(sc._jvm.double, 0), None
+    )
+    return sum(
+        stages.apply(i).shuffleWriteBytes()
+        for i in range(stages.size())
+        if stages.apply(i).stageId() in stage_ids
+    )
+
+
+def _disjoint_key(f: int, r: int, rows: int) -> tuple[int, int]:
+    # each file a disjoint key range, as mydumper splits a table
+    return f * rows + r // 3, r % 3
+
+
+def _dump(
+    tmp_path, tables: int, files: int, rows: int, key=_disjoint_key,
+    grow: int = 0, seed: int | None = None, fmt: str = "csv",
+) -> str:
+    """A dump of `tables` tables of `files` files each. File f holds
+    `rows + f * grow` rows, row r keyed `key(f, r, rows)`, in that order
+    or shuffled by `seed`; `fmt` is "csv" or "sql" (INSERT statements)."""
     d = tmp_path / "dump"
     d.mkdir()
     (d / "d-schema-create.sql").write_text("CREATE DATABASE d;")
     for i in range(tables):
         (d / f"d.t{i}-schema.sql").write_text(DDL.format(i=i))
         for f in range(files):
-            # each file a disjoint key range, as mydumper splits a table
-            lines = ["k,n,name,price"] + [
-                f"{f * rows + r // 3},{r % 3},n'{r},{r}.{r % 100:02d}"
-                for r in range(rows)
+            order = list(range(rows + f * grow))
+            if seed is not None:
+                random.Random(seed + f).shuffle(order)
+            values = [
+                (*key(f, r, rows), f"n'{r}", f"{r}.{r % 100:02d}")
+                for r in order
             ]
-            (d / f"d.t{i}.{f:03d}.csv").write_text("\n".join(lines) + "\n")
+            if fmt == "csv":
+                lines = ["k,n,name,price"] + [
+                    f"{k},{n},{name},{price}" for k, n, name, price in values
+                ]
+                (d / f"d.t{i}.{f:03d}.csv").write_text("\n".join(lines) + "\n")
+            else:
+                tuples = [
+                    f"({k},{n},'{name}',{price})"
+                    for k, n, name, price in (
+                        (k, n, name.replace("'", "''"), price)
+                        for k, n, name, price in values
+                    )
+                ]
+                stmts = [
+                    f"INSERT INTO `t{i}` VALUES {','.join(tuples[b:b + 500])};"
+                    for b in range(0, len(tuples), 500)
+                ]
+                (d / f"d.t{i}.{f:03d}.sql").write_text("\n".join(stmts) + "\n")
     return str(d)
 
 
-def _import_jobs(spark, tmp_path, src: str) -> tuple[int, str]:
-    target = str(tmp_path / "wh")
-    cfg = Config.from_toml(
-        None, source_dir=src, target_dir=target, checkpoint_enable=False
+def _import(spark, tmp_path, src: str, name: str = "wh", **cfg):
+    """Import `src` into a fresh target; returns (report, jobs run,
+    shuffle bytes written, target)."""
+    target = str(tmp_path / name)
+    config = Config.from_toml(
+        None, source_dir=src, target_dir=target, checkpoint_enable=False, **cfg
     )
     before = _job_ids(spark)
-    report = Restorer(spark, cfg).run()
+    report = Restorer(spark, config).run()
     assert report.ok, [t.error for t in report.tables]
-    return len(_job_ids(spark) - before), target
+    jobs = _job_ids(spark) - before
+    return report, len(jobs), _shuffle_bytes(spark, jobs), target
+
+
+def _import_jobs(spark, tmp_path, src: str) -> tuple[int, str]:
+    _, jobs, _, target = _import(spark, tmp_path, src)
+    return jobs, target
 
 
 def test_one_range_written_table_runs_four_jobs(spark, tmp_path, monkeypatch):
@@ -245,12 +330,149 @@ def test_one_range_written_table_runs_four_jobs(spark, tmp_path, monkeypatch):
     assert sum(map(len, parts)) == 12_000
 
 
+def test_disjoint_files_skip_the_exchange(spark, tmp_path, monkeypatch):
+    """Four files of disjoint key ranges: key sample, one unshuffled
+    sort+write stage and the readback. Spark packs the largest file,
+    here the one of the highest keys, into partition 0, so the part
+    files are in key order only because they were renamed."""
+    monkeypatch.setattr(files_sink, "_n_ranges", lambda spark, b: 4)
+    src = _dump(tmp_path, tables=1, files=4, rows=3000, grow=300, seed=1)
+    _, jobs, shuffled, target = _import(spark, tmp_path, src)
+    assert (jobs, shuffled) == (3, 0)
+    parts = _assert_range_layout(f"{target}/d/t0", ["k", "n"])
+    assert [len(p) for p in parts] == [3000, 3300, 3600, 3900]
+
+
+def _interleaved_key(f: int, r: int, rows: int) -> tuple[int, int]:
+    return (r // 3) * 4 + f, r % 3
+
+
+def test_interleaved_files_take_the_exchange(spark, tmp_path, monkeypatch):
+    monkeypatch.setattr(files_sink, "_n_ranges", lambda spark, b: 4)
+    src = _dump(tmp_path, tables=1, files=4, rows=3000, key=_interleaved_key)
+    _, jobs, shuffled, target = _import(spark, tmp_path, src)
+    assert jobs == 4
+    assert shuffled > 0
+    parts = _assert_range_layout(f"{target}/d/t0", ["k", "n"])
+    assert len(parts) == 4
+    assert sum(map(len, parts)) == 12_000
+
+
+def test_stray_key_the_sample_misses_fails_the_footer_check(
+    spark, tmp_path, monkeypatch
+):
+    """One row of file 0 carries a key inside file 3's range, and the
+    sample misses it: the kept write's footers overlap, so it is
+    discarded and the table goes through the exchange, with the same
+    rows and checksums as a straight exchange."""
+    monkeypatch.setattr(files_sink, "_n_ranges", lambda spark, b: 4)
+    stray = (3 * 3000 + 500, 7)
+    src = _dump(tmp_path, tables=1, files=4, rows=3000, seed=2)
+    with open(os.path.join(src, "d.t0.000.csv"), "a") as f:
+        f.write(f"{stray[0]},{stray[1]},x,1.00\n")
+    sample = files_sink._key_sample
+    monkeypatch.setattr(
+        files_sink, "_key_sample",
+        lambda *a: [s for s in sample(*a) if s[0] != stray],
+    )
+    kept, jobs, _, target = _import(spark, tmp_path, src)
+    assert jobs == 5  # sample, discarded write, shuffle map, write, readback
+    parts = _assert_range_layout(f"{target}/d/t0", ["k", "n"])
+    assert sum(map(len, parts)) == 12_001
+    monkeypatch.setattr(files_sink, "_disjoint_parts", lambda *a: False)
+    routed, jobs, _, _ = _import(spark, tmp_path, src, name="wh2")
+    assert jobs == 4
+    assert [(t.rows, t.checksum) for t in kept.tables] == [
+        (t.rows, t.checksum) for t in routed.tables
+    ]
+
+
+def test_multi_engine_table_keeps_each_engine(spark, tmp_path, monkeypatch):
+    """Two engines of two disjoint files each: every engine is written
+    unshuffled, its files in key order."""
+    monkeypatch.setattr(files_sink, "_n_ranges", lambda spark, b: 2)
+    src = _dump(tmp_path, tables=1, files=4, rows=3000, seed=3)
+    size = max(
+        os.path.getsize(os.path.join(src, f"d.t0.{f:03d}.csv")) for f in range(4)
+    )
+    report, _, shuffled, target = _import(
+        spark, tmp_path, src, engine_bytes=2 * size + 100
+    )
+    assert shuffled == 0
+    names = sorted(os.listdir(f"{target}/d/t0"))
+    assert {n[:10] for n in names if n.endswith(".parquet")} == {
+        "engine0000", "engine0001",
+    }
+    parts = _assert_range_layout(f"{target}/d/t0", ["k", "n"])
+    assert len(parts) == 4
+    assert report.tables[0].rows == sum(map(len, parts)) == 12_000
+
+
+def test_persisted_sql_dump_table_skips_the_exchange(
+    spark, tmp_path, monkeypatch
+):
+    """A SQL dump's parsed rows are persisted; the sample fills the cache
+    and the unshuffled write reads it."""
+    monkeypatch.setattr(files_sink, "_n_ranges", lambda spark, b: 4)
+    src = _dump(tmp_path, tables=1, files=4, rows=3000, seed=4, fmt="sql")
+    report, jobs, shuffled, target = _import(spark, tmp_path, src)
+    assert shuffled == 0
+    assert jobs <= 3
+    parts = _assert_range_layout(f"{target}/d/t0", ["k", "n"])
+    assert len(parts) == 4
+    assert report.tables[0].rows == 12_000
+
+
+def test_one_range_table_of_overlapping_files_is_rewritten(spark, tmp_path):
+    """Below one range the input partitions are written as they are; three
+    files whose keys interleave would give overlapping files, so the
+    footer check rewrites the table as one sorted file."""
+    src = _dump(
+        tmp_path, tables=1, files=3, rows=600,
+        key=lambda f, r, rows: (r * 3 + f, 0),
+    )
+    _, _, _, target = _import(spark, tmp_path, src)
+    parts = _assert_range_layout(f"{target}/d/t0", ["k", "n"])
+    assert [len(p) for p in parts] == [1800]
+
+
 def test_small_tables_run_two_jobs_each(spark, tmp_path):
     """An unshuffled write and a one-job readback per table."""
     jobs, _ = _import_jobs(
         spark, tmp_path, _dump(tmp_path, tables=3, files=1, rows=200)
     )
     assert jobs == 2 * 3
+
+
+def test_kept_write_orders_files_on_every_footer_key_type(
+    spark, tmp_path, monkeypatch
+):
+    """Four input partitions of disjoint ranges, the highest first, for
+    each leading-key type the footer check reads (a decimal of precision
+    up to 18 is stored as INT64, whose statistics are read raw): the
+    write is kept, and its files come out in key order. A double key
+    (NaN) and a timestamp key (INT96, no footer min/max) take the
+    exchange."""
+    monkeypatch.setattr(files_sink, "_n_ranges", lambda spark, b: 4)
+    base = spark.range(0, 4000, 1, 4).selectExpr("3999 - id AS i")
+    keys = {
+        "bigint": "i - 2000",
+        "decimal(10,2)": "cast(i as decimal(10,2)) - 2000",
+        "decimal(30,2)": "cast(i as decimal(30,2)) - 2000",
+        "date": "date_add(date'1969-06-01', cast(i as int))",
+        "string": "lpad(cast(i as string), 5, '0')",
+        "binary": "cast(lpad(cast(i as string), 5, '0') as binary)",
+    }
+    routed = {"double": "i / 8 - 100", "timestamp": "timestamp_seconds(i)"}
+    for j, (kind, expr) in enumerate({**keys, **routed}.items()):
+        df = base.selectExpr(f"{expr} AS k", "i AS v")
+        before = _job_ids(spark)
+        commit = FilesSink(str(tmp_path / str(j))).write_table(df, "d", "t", ["k"])
+        shuffled = _shuffle_bytes(spark, _job_ids(spark) - before)
+        assert (shuffled > 0) == (kind in routed), kind
+        parts = _assert_range_layout(commit.path, ["k"])
+        assert sum(map(len, parts)) == 4000, kind
+        assert kind in routed or [len(p) for p in parts] == [1000] * 4, kind
 
 
 def test_strict_mode_violation_fails_a_range_written_table(

@@ -480,17 +480,17 @@ class _FilesTarget(_Target):
                 1 for f in os.listdir(path) if f.endswith((".parquet", ".orc"))
             )
         else:
-            obs = Observation() if aggs else None
+            # the sink returns the values observed by the write it
+            # committed: a discarded write's observation never counts
             commit = r.sink.write_table(
                 df, tbl.db, tbl.name,
                 sort_columns=sort_cols,
                 source_bytes=tbl.total_size,
                 partition_columns=self.part_cols,
-                observation=obs,
                 observe_aggs=aggs,
                 pre_commit=pre_commit,
             )
-            ingest = Checksum.from_row(obs.get) if obs else None
+            ingest = Checksum.from_row(commit.observed) if aggs else None
             r.checkpoints.clear_engines(tbl.db, tbl.name)
             path, self.n_files = commit.path, commit.n_files
         # read back with the EXACT schema we wrote: directory-name
@@ -542,20 +542,19 @@ class _FilesTarget(_Target):
                         engine_cks.append(stored)
                 continue
             ebytes = sum(f.file_size for f in efiles)
-            obs = Observation() if aggs else None
-            r.sink.write_engine(
+            commit = r.sink.write_engine(
                 df_e.drop(ERR_COL) if ERR_COL in df_e.columns else df_e,
                 tbl.db, tbl.name, k,
                 sort_columns=sort_cols, source_bytes=ebytes,
-                observation=obs, observe_aggs=aggs,
+                observe_aggs=aggs,
                 manifest={
                     "signature": esig, "rowid_base": ebase, "bytes": ebytes,
                     "files": [f.path for f in efiles],
                 },
             )
             ecks_field = {}
-            if obs is not None:
-                ecks = Checksum.from_row(obs.get)
+            if aggs:
+                ecks = Checksum.from_row(commit.observed)
                 if engine_cks is not None:
                     engine_cks.append(ecks)
                 ecks_field = {"checksum": _checksum_record(ecks)}
@@ -1876,7 +1875,7 @@ class Restorer:
                 )
                 # The parsed-row cache policy. Only SQL-dump parts are
                 # persisted: every other source lets the key sample
-                # (files_sink._range_partitioned) read just the key
+                # (files_sink._key_sample) read just the key
                 # columns, but this scan is a Python statement parse that
                 # parses every row's every field for the sample too. A
                 # 5-pair interleaved A/B on perfbench's

@@ -5,7 +5,13 @@ lightning/backend/local.go — SURVEY.md §2.K2).
 The reference's pipeline  encode -> memcache sort -> SST -> pebble ingest
 -> range-split -> scatter  collapses on Spark to:
 
-    bounds = n-1 cut points of a key-only sample        # one small job
+    sample = keys + input partition ids of a key-only sample  # one small job
+    if >= n input partitions hold disjoint sampled key ranges:
+        df.observe(...).sortWithinPartitions(pk)   # one stage, no shuffle
+          .write.parquet(<staging>)
+        footers prove the files disjoint -> rename them into key order
+        (else discard staging and fall through)
+    bounds = n-1 cut points of the sample
     df.repartitionById(n, <range id of the row's key>)
       .sortWithinPartitions(pk)
       .write.parquet(<staging>)          # executors write sorted files
@@ -15,6 +21,16 @@ The reference's pipeline  encode -> memcache sort -> SST -> pebble ingest
   region size (local.go:77, backend const) — so each output file is a
   "region"-sized sorted run; routing by the bounds gives globally
   non-overlapping key ranges exactly like its split-and-ingest.
+* Input that already arrives in key ranges (Mydumper and Dumpling split
+  each table into files by primary-key range) is written as it is, one
+  sorted file per input partition: the reference likewise sorts only an
+  out-of-order batch (kvMemCache, local.go:2011-2046). It is kept only
+  when at least n input partitions appear in the sample (so Spark's
+  size-based packing of small files has not mixed ranges), the table
+  has no partition columns and no maxRecordsPerFile, and the output is
+  parquet; the footers, not the sample, decide whether it is committed.
+  Below one range the input is written as it is too, and rewritten as one
+  sorted file when the footers show overlapping files.
 * The bounds come from a uniform sample of the KEY columns only, so the
   sample job parses and casts nothing else; the reference cuts its ranges
   from its SST writer's range properties and never re-reads its input
@@ -36,8 +52,9 @@ import time
 import uuid
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 
+from tidb_lightning_spark.sources.parquet_source import footer_key_range
 from tidb_lightning_spark.sqltext import ident, typed
 
 TARGET_FILE_BYTES = 96 * 1024 * 1024  # reference target region size
@@ -71,70 +88,208 @@ def _n_ranges(spark, source_bytes: int) -> int:
     )
 
 
-def _range_sorted(
+def _range_sorted(df: DataFrame, keys: list[str], n: int) -> DataFrame:
+    """`df` routed into at most `n` key ranges (`_routed`, bounds from
+    `_key_sample`) and sorted within each: the exchange plan, which the
+    z-order write and the partition-level upsert always take."""
+    key_sql, types = _key_types(df, keys)
+    out = df
+    if n > 1:
+        sample = _key_sample(df, key_sql, types, n)
+        out = _routed(df, key_sql, types, _bounds(sample, n))
+    return out.sortWithinPartitions(*keys)
+
+
+def _sorted_write(
     df: DataFrame,
-    sort_columns: list[str] | None,
+    staging: str,
+    save,
+    keys: list[str] | None,
     source_bytes: int,
-    observation=None,
     observe_aggs: list | None = None,
     n_ranges: int | None = None,
-) -> DataFrame:
-    """The write plan of a table or engine: range-partition on
-    `sort_columns` (`_range_partitioned`), then sort each partition,
-    with `observation` (if any) attached to the write plan only.
+    checkable: bool = False,
+) -> dict | None:
+    """Write `df` sorted on `keys` into `staging` through `save(out)`, as
+    files of non-overlapping key ranges in part-file order (the plan in
+    the module docstring), and return the `observe_aggs` observed by the
+    write that stays in staging (None without aggs): a discarded write's
+    observation is dropped with it.
 
-    One shuffle: Spark's external sort handles spill (the SST/pebble
-    analog). The bounds cost one extra job that reads the source's key
-    columns only (column pruning keeps the other fields unparsed and
-    uncast). The one source whose parse cannot be pruned, the SQL dump's
-    Python statement parse, is persisted by the caller: that policy and
-    its measurement are stated once, at the persist in
-    `Restorer._read_and_transform`."""
-    out = df
-    if sort_columns:
-        n = n_ranges or _n_ranges(df.sparkSession, source_bytes)
-        if n > 1:
-            out = _range_partitioned(out, sort_columns, n)
-    # the key sample reads `df`, not this node: only the write job
-    # evaluates the metrics, one exact accumulation
-    if observation is not None:
-        out = out.observe(observation, *observe_aggs)
-    if sort_columns:
-        out = out.sortWithinPartitions(*sort_columns)
-    return out
+    `checkable` says the output can be proven from its parquet footers
+    (parquet, no partition columns, no maxRecordsPerFile); without it a
+    one-range table is sorted per input partition only, and a larger one
+    always takes the exchange. An explicit `n_ranges` above one asks for
+    exactly that many ranges, so it takes the exchange too."""
+
+    def write(out: DataFrame) -> dict | None:
+        obs = Observation() if observe_aggs else None
+        if obs is not None:
+            out = out.observe(obs, *observe_aggs)
+        save(out.sortWithinPartitions(*keys) if keys else out)
+        return obs.get if obs is not None else None
+
+    if not keys:
+        return write(df)
+    n = n_ranges or _n_ranges(df.sparkSession, source_bytes)
+    footer_key = _footer_key(df, keys[0]) if checkable else None
+    if n == 1:
+        got = write(df)
+        if not checkable or _order_parts(staging, footer_key):
+            return got
+        shutil.rmtree(staging)
+        return write(df.repartition(1))
+    key_sql, types = _key_types(df, keys)
+    sample = _key_sample(df, key_sql, types, n)
+    if footer_key and n_ranges is None and _disjoint_parts(sample, n):
+        got = write(df)
+        if _order_parts(staging, footer_key):
+            return got
+        shutil.rmtree(staging)
+    return write(_routed(df, key_sql, types, _bounds(sample, n)))
 
 
-def _range_partitioned(df: DataFrame, keys: list[str], n: int) -> DataFrame:
-    """`df` in at most `n` partitions of ascending, non-overlapping key
-    ranges, partition i holding range i (so part-file order is key
-    order), NULL keys first as in Spark's ascending sort.
-
-    The bounds are cut on the driver from a fixed-seed uniform sample
-    over every row, whatever its width: the keys of the
-    SAMPLE_KEYS_PER_RANGE * n (at most SAMPLE_MAX_KEYS) lowest of one
-    random draw per row, a top-k that runs in one job and keeps at most
-    that many rows on any task. Equal keys never straddle two ranges;
-    with fewer distinct sampled keys than `n`, fewer ranges are written.
-    Each row is routed by `with_range_id` and `repartitionById`, so Spark
-    does not sample the input a second time."""
+def _key_types(df: DataFrame, keys: list[str]) -> tuple[list[str], list[str]]:
+    """The key columns as quoted SQL and their Spark type names."""
     key_sql = [ident(k) for k in keys]
     types = [f.dataType.simpleString() for f in df.selectExpr(*key_sql).schema]
+    return key_sql, types
+
+
+def _footer_key(df: DataFrame, key: str) -> str | None:
+    """The column name under which parquet footers carry the leading key
+    `key` (its field of `df`, matched case-insensitively as Spark
+    resolves it), or None when their min/max cannot order it as Spark
+    sorts it: floating point (NaN), or a timestamp written as INT96,
+    whose footers carry no min/max."""
+    field = next(
+        (f for f in df.schema.fields if f.name.lower() == key.lower()), None
+    )
+    if field is None:
+        return None
+    kind = field.dataType.simpleString()
+    if kind in ("float", "double"):
+        return None
+    conf = df.sparkSession.conf
+    if kind == "timestamp" and (
+        conf.get("spark.sql.parquet.outputTimestampType") == "INT96"
+    ):
+        return None
+    return field.name
+
+
+def _key_sample(
+    df: DataFrame, key_sql: list[str], types: list[str], n: int
+) -> list[tuple[tuple, int]]:
+    """A fixed-seed uniform sample of `df`'s keys for `n` ranges, in key
+    order: (key tuple, input partition id) pairs.
+
+    The sample draws over every row, whatever its width: the keys of the
+    SAMPLE_KEYS_PER_RANGE * n (at most SAMPLE_MAX_KEYS) lowest of one
+    random draw per row, a top-k that runs in one job over the key
+    columns only and keeps at most that many rows on any task. The
+    partition id rides along in the same projection."""
     # a session-zoned timestamp travels as epoch micros (sqltext.typed)
     drawn = [
         f"unix_micros({k})" if t == "timestamp" else k
         for k, t in zip(key_sql, types)
     ]
     want = min(SAMPLE_KEYS_PER_RANGE * n, SAMPLE_MAX_KEYS)
-    draws = df.selectExpr(*drawn, f"rand({SAMPLE_SEED}) AS _tls_draw")
-    sample = sorted(
-        (tuple(r)[:-1] for r in draws.orderBy("_tls_draw").limit(want).collect()),
-        key=_key_order,
+    draws = df.selectExpr(
+        *drawn,
+        "spark_partition_id() AS _tls_part",
+        f"rand({SAMPLE_SEED}) AS _tls_draw",
     )
+    return sorted(
+        (
+            (tuple(r)[:-2], r[-2])
+            for r in draws.orderBy("_tls_draw").limit(want).collect()
+        ),
+        key=lambda s: _key_order(s[0]),
+    )
+
+
+def _bounds(sample: list[tuple[tuple, int]], n: int) -> list[tuple]:
+    """The at most n-1 ascending bounds cut from a `_key_sample`. Equal
+    keys never straddle two ranges; with fewer distinct sampled keys than
+    `n`, fewer ranges are written. The bounds decide only how even the
+    ranges are, never which rows are written."""
     bounds: list[tuple] = []
     for i in range(1, n) if sample else ():
-        b = sample[i * len(sample) // n]
+        b = sample[i * len(sample) // n][0]
         if not bounds or _key_order(b) > _key_order(bounds[-1]):
             bounds.append(b)
+    return bounds
+
+
+def _disjoint_parts(sample: list[tuple[tuple, int]], n: int) -> bool:
+    """Whether at least `n` input partitions appear in a `_key_sample` and
+    their sampled leading-key intervals are strictly disjoint: walked in
+    key order, each partition's keys form one run, and no leading key is
+    shared across two runs."""
+    seen: set[int] = set()
+    prev = None
+    for key, part in sample:
+        if key[0] is None:
+            return False
+        if prev is None or part != prev[1]:
+            if part in seen or (prev is not None and prev[0][0] == key[0]):
+                return False
+            seen.add(part)
+        prev = (key, part)
+    return len(seen) >= n
+
+
+def _order_parts(staging: str, key: str | None) -> bool:
+    """Whether the parquet part files in `staging` hold pairwise-disjoint
+    ranges of the leading key column `key`, proven from their footers
+    (`parquet_source.footer_key_range`); if so they are renamed into key
+    order (each file is sorted within itself). A single non-empty file
+    needs no proof. Nothing is renamed when the check fails: the key's
+    footers cannot order it (`key` None), a file lacks min/max or holds
+    a NULL key, or two ranges overlap."""
+    names = sorted(f for f in os.listdir(staging) if f.endswith(".parquet"))
+    if key is None:
+        return len(names) <= 1
+    spans, empty = [], []
+    for name in names:
+        got = footer_key_range(os.path.join(staging, name), key)
+        if got is not None and got[0] == 0:
+            empty.append(name)
+        else:
+            spans.append((got, name))
+    if len(spans) > 1:
+        if any(got is None for got, _ in spans):
+            return False
+        spans.sort(key=lambda s: s[0][1])
+        if any(a[2] >= b[1] for (a, _), (b, _) in zip(spans, spans[1:])):
+            return False
+    order = [name for _, name in spans] + empty
+    if order != names:
+        # Spark's names are part-<task>-<job uuid>-<ext>: renumber the
+        # task field in key order, through hidden names so that no
+        # rename lands on a name still in use; checksum sidecars follow
+        moves = []
+        for i, name in enumerate(order):
+            new = f"part-{i:05d}-{name.split('-', 2)[2]}"
+            moves += [(name, new), (f".{name}.crc", f".{new}.crc")]
+        for a, b in moves:
+            if os.path.exists(os.path.join(staging, a)):
+                os.replace(os.path.join(staging, a), os.path.join(staging, "_" + b))
+        for _, b in moves:
+            if os.path.exists(os.path.join(staging, "_" + b)):
+                os.replace(os.path.join(staging, "_" + b), os.path.join(staging, b))
+    return True
+
+
+def _routed(
+    df: DataFrame, key_sql: list[str], types: list[str], bounds: list[tuple]
+) -> DataFrame:
+    """`df` in `len(bounds) + 1` partitions of ascending, non-overlapping
+    key ranges, partition i holding range i (so part-file order is key
+    order), NULL keys first as in Spark's ascending sort. Each row is
+    routed by `with_range_id` and `repartitionById`, so Spark does not
+    sample the input a second time."""
     return (
         with_range_id(df, key_sql, types, bounds)
         .repartitionById(len(bounds) + 1, RANGE_ID)
@@ -155,7 +310,7 @@ def with_range_id(
     df: DataFrame, key_sql: list[str], types: list[str], bounds: list[tuple]
 ) -> DataFrame:
     """`df` plus a RANGE_ID column: the number of `bounds` (ascending key
-    tuples, values as `_range_partitioned` collects them) that sort
+    tuples, values as `_key_sample` collects them) that sort
     strictly below the row's key, so a key equal to a bound joins the
     lower range.
 
@@ -168,7 +323,10 @@ def with_range_id(
     The generated code stays O(log n): a CASE tree over the bounds
     compiles to one expression of O(n) code, which at ~1,000 ranges
     exceeds the JVM's 64 KB method limit and drops the whole scan stage
-    out of whole-stage codegen."""
+    out of whole-stage codegen. The bounds column is guarded by
+    `spark_partition_id()`, so it is not foldable: the optimizer then
+    neither copies the literal into each step nor collapses the steps,
+    and the plan and each task carry the bounds once."""
     from pyspark.sql import functions as F
 
     if not bounds:
@@ -189,7 +347,10 @@ def with_range_id(
     )
     out = df.withColumns({
         RANGE_KEY: F.expr(f"cast({fields(key_sql)} as {struct})"),
-        RANGE_BOUNDS: F.expr(f"cast(array({literal}) as array<{struct}>)"),
+        RANGE_BOUNDS: F.expr(
+            f"if(spark_partition_id() >= 0, "
+            f"cast(array({literal}) as array<{struct}>), NULL)"
+        ),
         RANGE_ID: F.lit(0),
     })
     rid, key, arr = F.col(RANGE_ID), F.col(RANGE_KEY), F.col(RANGE_BOUNDS)
@@ -207,8 +368,8 @@ def with_range_id(
 class CommitResult:
     path: str
     n_files: int
-    n_rows: int | None
     seconds: float
+    observed: dict | None = None  # the write's observe_aggs values
 
 
 class FilesSink:
@@ -291,26 +452,32 @@ class FilesSink:
         source_bytes: int = 0,
         partition_columns: list[str] | None = None,
         max_records_per_file: int = 0,
-        observation=None,
         observe_aggs: list | None = None,
         pre_commit=None,
         n_ranges: int | None = None,
     ) -> CommitResult:
+        """Write `df` sorted on `sort_columns` (`_sorted_write`) into a
+        staging dir, run `pre_commit`, and swap staging in as the table.
+        `n_ranges` asks for exactly that many key ranges; by default they
+        are sized from `source_bytes` (`_n_ranges`)."""
         t0 = time.time()
         final = self.table_path(db, table)
         staging = final + f"._staging_{uuid.uuid4().hex[:8]}"
-        if os.path.exists(staging):
-            shutil.rmtree(staging)
 
-        out = _range_sorted(
-            df, sort_columns, source_bytes, observation, observe_aggs, n_ranges
+        def save(out: DataFrame) -> None:
+            writer = out.write.mode("overwrite").format(self.fmt)
+            if partition_columns:
+                writer = writer.partitionBy(*partition_columns)
+            if max_records_per_file:
+                writer = writer.option("maxRecordsPerFile", max_records_per_file)
+            writer.save(staging)
+
+        observed = _sorted_write(
+            df, staging, save, sort_columns, source_bytes, observe_aggs,
+            n_ranges,
+            checkable=self.fmt == "parquet"
+            and not partition_columns and not max_records_per_file,
         )
-        writer = out.write.mode("overwrite").format(self.fmt)
-        if partition_columns:
-            writer = writer.partitionBy(*partition_columns)
-        if max_records_per_file:
-            writer = writer.option("maxRecordsPerFile", max_records_per_file)
-        writer.save(staging)
         # engine Close -> Import gate: a pre-commit check that raises
         # (e.g. strict-mode violations observed during the write) discards
         # staging — the warehouse never sees the bad table.
@@ -340,7 +507,7 @@ class FilesSink:
             for f in files
             if f.endswith((".parquet", ".orc"))
         )
-        return CommitResult(final, n_files, None, time.time() - t0)
+        return CommitResult(final, n_files, time.time() - t0, observed)
 
     def clear_engine_files(self, db: str, table: str, engine: int) -> None:
         """Remove a (possibly partial) engine's output — the analog of the
@@ -407,7 +574,6 @@ class FilesSink:
         engine: int,
         sort_columns: list[str] | None,
         source_bytes: int = 0,
-        observation=None,
         observe_aggs: list | None = None,
         manifest: dict | None = None,
     ) -> CommitResult:
@@ -424,13 +590,12 @@ class FilesSink:
         t0 = time.time()
         final = self.table_path(db, table)
         staging = final + f"._engine{engine}_{uuid.uuid4().hex[:8]}"
-        if os.path.exists(staging):
-            shutil.rmtree(staging)
-
-        out = _range_sorted(
-            df, sort_columns, source_bytes, observation, observe_aggs
+        observed = _sorted_write(
+            df, staging,
+            lambda out: out.write.mode("overwrite").format(self.fmt).save(staging),
+            sort_columns, source_bytes, observe_aggs,
+            checkable=self.fmt == "parquet",
         )
-        out.write.mode("overwrite").format(self.fmt).save(staging)
         if manifest is not None:
             # closed-engine manifest: written AFTER the data files, so a
             # staging dir holding one is a fully-written ("closed") engine
@@ -454,7 +619,7 @@ class FilesSink:
                 )
                 n_files += 1
         shutil.rmtree(staging, ignore_errors=True)
-        return CommitResult(final, n_files, None, time.time() - t0)
+        return CommitResult(final, n_files, time.time() - t0, observed)
 
     def write_meta(self, db: str, table: str, meta: dict) -> None:
         path = os.path.join(self.table_path(db, table), "_tls_meta.json")
@@ -540,7 +705,7 @@ def write_zordered(
     n = _n_ranges(df.sparkSession, source_bytes)
     if n == 1:  # one file sorted on the curve, not one per input split
         tagged = tagged.repartition(1)
-    out = _range_sorted(tagged, ["_zv"], source_bytes, n_ranges=n).drop("_zv")
+    out = _range_sorted(tagged, ["_zv"], n).drop("_zv")
     # write through the staged-commit path with no extra sort
     return sink.write_table(
         out, db, table, sort_columns=None, source_bytes=source_bytes
@@ -683,7 +848,6 @@ def _upsert_partition_cow(
     most files test dirty and the rewrite comes out PK-sorted — run
     `ctl --zorder` again to restore Morton clustering after upserting
     such a table."""
-    import pyarrow.parquet as _pq
     from pyspark.sql import functions as F
 
     if sink.fmt != "parquet":
@@ -700,24 +864,13 @@ def _upsert_partition_cow(
     dirty: set[str] = set()
     for name in files:
         try:
-            md = _pq.ParquetFile(os.path.join(final, name)).metadata
-            idx = md.schema.names.index(k)
-            lo = hi = None
-            ok = md.num_rows == 0
-            for rg in range(md.num_row_groups):
-                st = md.row_group(rg).column(idx).statistics
-                if st is None or not st.has_min_max or st.null_count:
-                    ok = False
-                    break
-                lo = st.min if lo is None else min(lo, st.min)
-                hi = st.max if hi is None else max(hi, st.max)
-                ok = True
-            if not ok or lo is None:
-                dirty.add(name)
-            else:
-                ranges.append((name, lo, hi))
+            got = footer_key_range(os.path.join(final, name), k)
         except Exception:
             return None
+        if got is None or got[1] is None:
+            dirty.add(name)
+        else:
+            ranges.append((name, got[1], got[2]))
     if ranges:
         try:
             rdf = updates.sparkSession.createDataFrame(
@@ -760,9 +913,7 @@ def _upsert_partition_cow(
         os.path.getsize(os.path.join(final, n)) for n in dirty
     )
     n = max(1, (dirty_bytes + TARGET_FILE_BYTES - 1) // TARGET_FILE_BYTES)
-    _range_sorted(
-        merged, key_columns, dirty_bytes, n_ranges=n
-    ).write.mode("overwrite").parquet(staging)
+    _range_sorted(merged, key_columns, n).write.mode("overwrite").parquet(staging)
     # hardlink the pruned files in (collision-proof names: Spark's new
     # part files never carry the linked- prefix). Strip prior linked-
     # prefixes first — re-linking a linked file must not grow the name
@@ -801,4 +952,4 @@ def _upsert_partition_cow(
     n_files = sum(
         1 for f in os.listdir(final) if f.endswith((".parquet", ".orc"))
     )
-    return CommitResult(final, n_files, None, time.time() - t0)
+    return CommitResult(final, n_files, time.time() - t0)

@@ -241,6 +241,38 @@ def footer_num_rows(path: str, spark: SparkSession | None = None) -> int:
     return sum(_pq.ParquetFile(p).metadata.num_rows for p in part_files(path))
 
 
+def footer_key_range(path: str, column: str) -> tuple | None:
+    """(rows, min, max) of a top-level `column` over one local parquet
+    file, from its footer alone: min and max are None for a file without
+    rows, and the result is None when a row group lacks min/max
+    statistics or holds a NULL in the column. A decimal stored as
+    INT32/INT64, whose statistics pyarrow cannot type, is scaled from the
+    raw unscaled values."""
+    from decimal import Decimal
+
+    import pyarrow.parquet as _pq
+
+    md = _pq.ParquetFile(path).metadata
+    idx = md.schema.names.index(column)
+    scale = md.schema.column(idx).scale
+    lo = hi = None
+    for rg in range(md.num_row_groups):
+        if md.row_group(rg).num_rows == 0:
+            continue
+        st = md.row_group(rg).column(idx).statistics
+        if st is None or not st.has_min_max or st.null_count:
+            return None
+        try:
+            a, b = st.min, st.max
+        except NotImplementedError:
+            if st.physical_type not in ("INT32", "INT64") or scale < 0:
+                return None
+            a, b = (Decimal(v).scaleb(-scale) for v in (st.min_raw, st.max_raw))
+        lo = a if lo is None else min(lo, a)
+        hi = b if hi is None else max(hi, b)
+    return md.num_rows, lo, hi
+
+
 def read_table(spark: SparkSession, path: str | list[str]) -> DataFrame:
     """Read a parquet table, normalizing nano timestamps to micros."""
     paths = [path] if isinstance(path, str) else list(path)

@@ -631,9 +631,13 @@ def read_sql_files(
     from tidb_lightning_spark._shipping import ensure_shipped
 
     ensure_shipped(spark)
+    # one task per range, in file and offset order, with no shuffle: a
+    # dump split by key range keeps its ranges in separate partitions,
+    # which lets the files sink skip its exchange
     rdf = spark.createDataFrame(
-        ranges, schema="path string, start long, end long, chunk_base long"
-    ).repartition(max(len(ranges), 1))
+        spark.sparkContext.parallelize(ranges, max(len(ranges), 1)),
+        schema="path string, start long, end long, chunk_base long",
+    )
 
     def parse_batches(batches):
         for rb in batches:
